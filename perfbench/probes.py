@@ -1,36 +1,79 @@
 """Measurement from outside the program: process memory from /proc, Spark's
 own event log, and in-process replays of the decode layers' public
-functions on the workload's image bytes."""
+functions on the workload's image bytes. Also ends the processes a run
+started, found through /proc."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import signal
 import statistics
 import threading
 import time
 
-# ------------------------------------------------------------ memory
+# ------------------------------------------------------------ processes
 
 
-def _descendants(root: int) -> list[int]:
-    children: dict[int, list[int]] = {}
+def _stat(pid: int | str) -> list[str] | None:
+    """Fields of /proc/<pid>/stat after the command name: state, ppid, ...,
+    start time at index 19."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except (OSError, IndexError):
+        return None
+
+
+def descendants(root: int) -> dict[int, str]:
+    """pid -> start time of every live process below `root`; the start time
+    tells a process from a later one that reuses its pid."""
+    children: dict[int, list[tuple[int, str]]] = {}
     for d in os.listdir("/proc"):
-        if not d.isdigit():
+        st = _stat(d) if d.isdigit() else None
+        if st is None or st[0] == "Z":
             continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-        children.setdefault(ppid, []).append(int(d))
-    out, todo = [], [root]
+        children.setdefault(int(st[1]), []).append((int(d), st[19]))
+    out, todo = {}, [root]
     while todo:
-        for c in children.get(todo.pop(), []):
-            out.append(c)
+        for c, start in children.get(todo.pop(), []):
+            out[c] = start
             todo.append(c)
     return out
+
+
+def alive(procs: dict[int, str]) -> dict[int, str]:
+    """The processes of `procs` that have not ended; reaps this process's
+    own children that have."""
+    out = {}
+    for pid, start in procs.items():
+        try:
+            os.waitpid(pid, os.WNOHANG)
+        except ChildProcessError:
+            pass
+        st = _stat(pid)
+        if st is not None and st[0] != "Z" and st[19] == start:
+            out[pid] = start
+    return out
+
+
+def end_processes(procs: dict[int, str], grace_s: float = 10.0) -> None:
+    """SIGTERM, then after `grace_s` SIGKILL, each process in `procs` that is
+    still running, and wait until every one has ended."""
+    for sig, wait_s in ((signal.SIGTERM, grace_s), (signal.SIGKILL, 30.0)):
+        left = alive(procs)
+        for pid in left:
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        t_end = time.monotonic() + wait_s
+        while left and time.monotonic() < t_end:
+            time.sleep(0.05)
+            left = alive(left)
+        if not left:
+            return
 
 
 def _rss_bytes(pid: int) -> int:
@@ -54,7 +97,7 @@ class RssSampler:
     def _run(self) -> None:
         me = os.getpid()
         while not self._stop.wait(0.25):
-            rss = sum(_rss_bytes(p) for p in _descendants(me))
+            rss = sum(_rss_bytes(p) for p in descendants(me))
             self.peak = max(self.peak, rss)
 
     def close(self) -> None:
