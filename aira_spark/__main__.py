@@ -58,8 +58,7 @@ def geoinfo(argv: list[str]) -> int:
     """Georeference summary per file/page: CRS geokeys, geotransform,
     world-space footprint (the engine-side GeoTIFF semantics the reference
     only carries as raw tags)."""
-    from .tiff import tags as T
-    from .tiff.meta import TiffError, decode_all_pages, entry_value, parse_geokeys
+    from .tiff.meta import TiffError, decode_all_pages, geotransform, parse_geokeys
 
     ap = argparse.ArgumentParser(prog="aira_spark geoinfo")
     ap.add_argument("files", nargs="+")
@@ -87,11 +86,9 @@ def geoinfo(argv: list[str]) -> int:
             try:
                 gk = parse_geokeys(m)
                 rec["geokeys"] = gk
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
+                gt = geotransform(m)
+                if gt is not None:
+                    sv, tv = gt
                     if len(sv) < 2 or len(tv) < 5:
                         raise TiffError("geotransform tags have too few values")
                     x0 = tv[3] - tv[0] * sv[0]

@@ -4,6 +4,14 @@ Everything here is Arrow-batched (pandas_udf / mapInPandas) per the
 input_hint mandate ("no per-row Python"); per-image numpy work inside a batch
 is the designed decode path (SURVEY.md §3.4). All downstream query logic
 stays in JVM column expressions.
+
+Raster-operator contract: an operator that reads pixels decodes through
+`map_decoded(frame, per_image, schema, max_bands)` and supplies only
+`per_image(rec, m, px) -> rows`. `max_bands` skips unneeded bands: planar
+chunks of a plane >= max_bands are never decompressed. An undecodable image
+(TiffError) is dropped there, in one place. Loops with another failure
+policy (dead-letter rows in full_decode_batches / verify_batches) or another
+output shape (the columnar warp/mosaic loops) keep their own.
 """
 
 from __future__ import annotations
@@ -17,7 +25,7 @@ from pyspark.sql import types as Ty
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..tiff import tags as T
-from ..tiff.meta import TiffError, decode_metadata, entry_value, pixel_chunks
+from ..tiff.meta import TiffError, decode_metadata, geotransform, pixel_chunks
 from ..tiff.pixels import decode_chunk, psnr
 from .cells import DEFAULT_RES, np_cell_from_xy
 
@@ -149,12 +157,9 @@ def _meta_dict_to_row(m: dict) -> dict:
             for tag, (d, c, raw) in m["custom"].items()
         },
     }
-    bo = m["byteorder"]
-    scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-    tie = m["custom"].get(T.MODEL_TIEPOINT)
-    if scale is not None and tie is not None:
-        sv = entry_value(*scale, bo)
-        tv = entry_value(*tie, bo)
+    gt = geotransform(m)
+    if gt is not None:
+        sv, tv = gt
         row.update(scale_x=sv[0], scale_y=sv[1], tie_i=tv[0], tie_j=tv[1],
                    tie_x=tv[3], tie_y=tv[4])
     return row
@@ -192,14 +197,19 @@ decode_meta_pages = decode_meta_pages.asNondeterministic()
 
 
 def _decode_full(buf: bytes, max_bands: int | None = None) -> tuple[dict, np.ndarray]:
-    """Decode and stitch the (h, w, n_bands) image.
+    """Parse the metadata and decode the stitched (h, w, n_bands) image."""
+    m = decode_metadata(bytes(buf))
+    return m, _stitch(buf, m, max_bands)
+
+
+def _stitch(buf: bytes, m: dict, max_bands: int | None) -> np.ndarray:
+    """Decode and stitch the (h, w, n_bands) image of already-parsed `m`.
 
     max_bands prunes the decode itself: planar files skip every chunk of a
     plane >= max_bands (band pruning pushed below the decode — a band-0
     consumer of a 3-plane file decompresses 1/3 of the bytes); chunky files
     are interleaved, so all chunks decode and the result is sliced.
     """
-    m = decode_metadata(bytes(buf))
     h, w, spp = m["height"], m["width"], m["spp"]
     n_bands = spp if max_bands is None else min(spp, max_bands)
     kind = {T.SAMPLE_UNSIGNED: "u", T.SAMPLE_SIGNED: "i", T.SAMPLE_FLOAT: "f"}[m["formats"][0]]
@@ -219,7 +229,38 @@ def _decode_full(buf: bytes, max_bands: int | None = None) -> tuple[dict, np.nda
             out[oy : oy + c["size_y"], ox : ox + c["size_x"], c["plane"] : c["plane"] + 1] = px
         else:
             out[oy : oy + c["size_y"], ox : ox + c["size_x"], :] = px[:, :, :n_bands]
-    return m, out
+    return out
+
+
+def _decoded_batches(per_image, columns: list[str], max_bands: int | None):
+    """The mapInPandas body behind map_decoded: decode each row's bytes,
+    drop undecodable images, collect per_image's rows into one frame per
+    batch. zonal_pixel_batches hands it out bare, for callers that apply
+    mapInPandas themselves."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            for rec in pdf.itertuples(index=False):
+                try:
+                    m, px = _decode_full(rec.bytes, max_bands)
+                except TiffError:
+                    continue  # the one drop point for undecodable images
+                out.extend(per_image(rec, m, px))
+            yield pd.DataFrame(out, columns=columns)
+
+    return fn
+
+
+def map_decoded(frame, per_image, schema: str, max_bands: int | None = None):
+    """frame.mapInPandas over decoded images: per_image(rec, m, px) returns
+    the output rows (tuples in DDL `schema` order) of one decoded image;
+    `rec` is the input row, `m` its metadata, `px` its (h, w, bands) pixels.
+    Images that fail to decode are dropped."""
+    columns = Ty.StructType.fromDDL(schema).fieldNames()
+    return frame.mapInPandas(
+        _decoded_batches(per_image, columns, max_bands), schema=schema
+    )
 
 
 def _phash64(px: np.ndarray) -> int:
@@ -302,12 +343,10 @@ def pixel_world_coords(m: dict, h: int, w: int):
     the half-pixel-center + tiepoint convention — the cell-zonal path and
     the exact-polygon path must agree on pixel world coordinates, so any
     future correction lands in both by construction."""
-    scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-    tie = m["custom"].get(T.MODEL_TIEPOINT)
-    if scale is None or tie is None:
+    gt = geotransform(m)
+    if gt is None:
         return None, None, None, None
-    sv = entry_value(*scale, m["byteorder"])
-    tv = entry_value(*tie, m["byteorder"])
+    sv, tv = gt
     xs = tv[3] + (np.arange(w, dtype=np.float64) + 0.5 - tv[0]) * sv[0]
     ys = tv[4] - (np.arange(h, dtype=np.float64) + 0.5 - tv[1]) * sv[1]
     return xs, ys, sv, tv
@@ -376,21 +415,11 @@ def zonal_pixel_batches(res: int = DEFAULT_RES):
     plain Catalyst groupBy(cell) hash aggregation.
     """
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    # band-0 consumer: planar plane>0 chunks are never decoded
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                out.extend(
-                    (rec.image_id, *p) for p in _zonal_partials(m, px, res)
-                )
-            yield pd.DataFrame(out, columns=ZONAL_PIX_SCHEMA.fieldNames())
+    def per_image(rec, m, px):
+        return [(rec.image_id, *p) for p in _zonal_partials(m, px, res)]
 
-    return fn
+    # band-0 consumer: planar plane>0 chunks are never decoded
+    return _decoded_batches(per_image, ZONAL_PIX_SCHEMA.fieldNames(), 1)
 
 
 FULL_DECODE_SCHEMA = Ty.StructType(
@@ -422,19 +451,22 @@ def full_decode_batches(res: int = DEFAULT_RES):
     At scale this halves the dominant cost of the combined pipeline — the
     bytes column crosses the JVM->Python Arrow boundary once instead of once
     per decode stage; everything downstream (chunk explode, cell cover, joins,
-    zonal reduce) runs on the compact output."""
+    zonal reduce) runs on the compact output. Each image's metadata is
+    parsed once; an undecodable header or chunk yields a dead-letter row
+    (meta.error set, empty zonal), never an exception (SURVEY.md S8/K3)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
             for rec in pdf.itertuples(index=False):
-                meta_row = _meta_row(rec.bytes)
-                if meta_row["error"] is not None:
-                    out.append((rec.image_id, meta_row, []))
-                    continue
                 try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                    zon = _zonal_partials(m, px, res)
+                    m = decode_metadata(bytes(rec.bytes))
+                except TiffError as exc:
+                    out.append((rec.image_id, dict(_META_NULL, error=str(exc)), []))
+                    continue
+                meta_row = _meta_dict_to_row(m)
+                try:
+                    zon = _zonal_partials(m, _stitch(rec.bytes, m, 1), res)
                 except TiffError as exc:
                     meta_row = dict(meta_row, error=str(exc))
                     zon = []

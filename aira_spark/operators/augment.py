@@ -20,15 +20,11 @@ cross Arrow, pixel buffers never do (unless bytes are requested).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import _decode_full
+from ..functions.udfs import _decode_full, map_decoded
 from ..tiff.encode import write_tiff
-from ..tiff.meta import TiffError
 
 # op -> band-0 transform (numpy view semantics; all pure index permutations)
 AUG_OPS = {
@@ -55,36 +51,23 @@ def augment_stats(
         if op not in AUG_OPS:
             raise ValueError(f"unknown augmentation op: {op}")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(bytes(rec.bytes), max_bands=1)
-                except TiffError:
-                    continue
-                band0 = px[:, :, 0]
-                for op in ops:
-                    out = np.ascontiguousarray(AUG_OPS[op](band0))
-                    buf = write_tiff(out[:, :, None], byteorder="<",
-                                     layout=("strips", 8))
-                    _, rx = _decode_full(buf, max_bands=1)
-                    a = rx[:, :, 0].astype(np.int64)
-                    h, w = a.shape
-                    weights = np.arange(1, h * w + 1, dtype=np.int64)
-                    wsum = int((weights * a.ravel()).sum() % WSUM_MOD)
-                    rows.append(
-                        (rec.image_id, op, w, h, int(a.sum()), wsum)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "op", "out_w", "out_h", "sum_px", "wsum"],
-            )
+    def per_image(rec, _m, px):
+        band0 = px[:, :, 0]
+        for op in ops:
+            out = np.ascontiguousarray(AUG_OPS[op](band0))
+            buf = write_tiff(out[:, :, None], byteorder="<", layout=("strips", 8))
+            _, rx = _decode_full(buf, max_bands=1)
+            a = rx[:, :, 0].astype(np.int64)
+            h, w = a.shape
+            weights = np.arange(1, h * w + 1, dtype=np.int64)
+            wsum = int((weights * a.ravel()).sum() % WSUM_MOD)
+            yield (rec.image_id, op, w, h, int(a.sum()), wsum)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema="image_id string, op string, out_w long, out_h long, "
-               "sum_px long, wsum long",
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, op string, out_w long, out_h long, "
+        "sum_px long, wsum long",
+        max_bands=1,
     )
 
 

@@ -29,8 +29,6 @@ a pure projection. Pixels never shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
 # r² thresholds as exact rationals: 0.99² = 9801/10000, 0.5² = 1/4
@@ -60,50 +58,31 @@ def band_correlation(images: DataFrame) -> DataFrame:
     for every unordered band pair (x < y) of every multi-band image;
     single-band images emit nothing."""
     import numpy as np
-    import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import map_decoded
 
-    cols = [
-        "image_id", "band_x", "band_y", "n_px",
-        "cov_n", "var_xn", "var_yn",
-    ]
+    def per_image(rec, m, px):
+        spp = px.shape[2]
+        if spp < 2:
+            return
+        flat = [px[:, :, s].astype(np.int64).ravel() for s in range(spp)]
+        n = int(flat[0].size)
+        s1 = [int(v.sum()) for v in flat]
+        s2 = [int((v * v).sum()) for v in flat]
+        for sx in range(spp):
+            for sy in range(sx + 1, spp):
+                sxy = int((flat[sx] * flat[sy]).sum())
+                yield (
+                    rec.image_id, sx, sy, n,
+                    n * sxy - s1[sx] * s1[sy],
+                    n * s2[sx] - s1[sx] * s1[sx],
+                    n * s2[sy] - s1[sy] * s1[sy],
+                )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                spp = px.shape[2]
-                if spp < 2:
-                    continue
-                flat = [
-                    px[:, :, s].astype(np.int64).ravel() for s in range(spp)
-                ]
-                n = int(flat[0].size)
-                s1 = [int(v.sum()) for v in flat]
-                s2 = [int((v * v).sum()) for v in flat]
-                for sx in range(spp):
-                    for sy in range(sx + 1, spp):
-                        sxy = int((flat[sx] * flat[sy]).sum())
-                        out.append((
-                            rec.image_id, sx, sy, n,
-                            n * sxy - s1[sx] * s1[sy],
-                            n * s2[sx] - s1[sx] * s1[sx],
-                            n * s2[sy] - s1[sy] * s1[sy],
-                        ))
-            yield pd.DataFrame(out, columns=cols)
-
-    raw = images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=(
-            "image_id string, band_x long, band_y long, n_px long,"
-            " cov_n long, var_xn long, var_yn long"
-        ),
+    raw = map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, band_x long, band_y long, n_px long,"
+        " cov_n long, var_xn long, var_yn long",
     )
     return raw.selectExpr(
         "image_id", "band_x", "band_y", "n_px",

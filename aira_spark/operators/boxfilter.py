@@ -38,58 +38,45 @@ CHECK_MOD = 1_000_003
 def box_filter_census(images: DataFrame, radius: int = 3) -> DataFrame:
     """(image_id, n_int, sum_box, min_box, max_box, checksum) — census of
     the (2*radius+1)^2 box sums over all interior band-0 pixels."""
-    from collections.abc import Iterator
+    from ..functions.udfs import map_decoded
 
-    import pandas as pd
-
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
-
-    cols = ["image_id", "n_int", "sum_box", "min_box", "max_box", "checksum"]
     R = radius
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                a = px[:, :, 0].astype(np.int64)
-                h, w = a.shape
-                if h < 2 * R + 1 or w < 2 * R + 1:
-                    continue
-                # summed-area table with a zero border: I[i, j] = sum of
-                # a[:i, :j]; shape (h+1, w+1)
-                sat = np.zeros((h + 1, w + 1), dtype=np.int64)
-                np.cumsum(np.cumsum(a, axis=0), axis=1, out=sat[1:, 1:])
-                box = (
-                    sat[2 * R + 1:, 2 * R + 1:]
-                    - sat[: h - 2 * R, 2 * R + 1:]
-                    - sat[2 * R + 1:, : w - 2 * R]
-                    + sat[: h - 2 * R, : w - 2 * R]
-                )  # (h-2R, w-2R) interior box sums
-                ri, ci = np.meshgrid(
-                    np.arange(R, h - R, dtype=np.int64),
-                    np.arange(R, w - R, dtype=np.int64),
-                    indexing="ij",
-                )
-                wts = (ri * w + ci) % CHECK_MOD
-                out.append((
-                    rec.image_id,
-                    int(box.size),
-                    int(box.sum()),
-                    int(box.min()),
-                    int(box.max()),
-                    int((box * wts).sum()),
-                ))
-            yield pd.DataFrame(out, columns=cols)
+    def per_image(rec, m, px):
+        a = px[:, :, 0].astype(np.int64)
+        h, w = a.shape
+        if h < 2 * R + 1 or w < 2 * R + 1:
+            return []
+        # summed-area table with a zero border: I[i, j] = sum of a[:i, :j];
+        # shape (h+1, w+1)
+        sat = np.zeros((h + 1, w + 1), dtype=np.int64)
+        np.cumsum(np.cumsum(a, axis=0), axis=1, out=sat[1:, 1:])
+        box = (
+            sat[2 * R + 1:, 2 * R + 1:]
+            - sat[: h - 2 * R, 2 * R + 1:]
+            - sat[2 * R + 1:, : w - 2 * R]
+            + sat[: h - 2 * R, : w - 2 * R]
+        )  # (h-2R, w-2R) interior box sums
+        ri, ci = np.meshgrid(
+            np.arange(R, h - R, dtype=np.int64),
+            np.arange(R, w - R, dtype=np.int64),
+            indexing="ij",
+        )
+        wts = (ri * w + ci) % CHECK_MOD
+        return [(
+            rec.image_id,
+            int(box.size),
+            int(box.sum()),
+            int(box.min()),
+            int(box.max()),
+            int((box * wts).sum()),
+        )]
 
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=("image_id string, n_int long, sum_box long, "
-                "min_box long, max_box long, checksum long"),
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        ("image_id string, n_int long, sum_box long, "
+         "min_box long, max_box long, checksum long"),
+        max_bands=1,
     )
 
 

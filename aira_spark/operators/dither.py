@@ -41,43 +41,28 @@ BAYER4 = np.array(
 def dither_census(images: DataFrame) -> DataFrame:
     """(image_id, n_px, n_on, checksum): ordered-dither binarization census
     of band 0 — checksum = sum((r*w + c) % CHECK_MOD) over ON pixels."""
-    from collections.abc import Iterator
+    from ..functions.udfs import map_decoded
 
-    import pandas as pd
+    def per_image(rec, m, px):
+        a = px[:, :, 0].astype(np.int64)
+        h, w = a.shape
+        thr = (
+            BAYER4[
+                np.arange(h, dtype=np.int64)[:, None] % 4,
+                np.arange(w, dtype=np.int64)[None, :] % 4,
+            ]
+            * 16
+            + 8
+        )
+        on = a >= thr
+        ri, ci = np.nonzero(on)
+        chk = int(((ri.astype(np.int64) * w + ci) % CHECK_MOD).sum())
+        return [(rec.image_id, h * w, int(on.sum()), chk)]
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
-
-    cols = ["image_id", "n_px", "n_on", "checksum"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                a = px[:, :, 0].astype(np.int64)
-                h, w = a.shape
-                thr = (
-                    BAYER4[
-                        np.arange(h, dtype=np.int64)[:, None] % 4,
-                        np.arange(w, dtype=np.int64)[None, :] % 4,
-                    ]
-                    * 16
-                    + 8
-                )
-                on = a >= thr
-                ri, ci = np.nonzero(on)
-                chk = int(
-                    ((ri.astype(np.int64) * w + ci) % CHECK_MOD).sum()
-                )
-                out.append((rec.image_id, h * w, int(on.sum()), chk))
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn, schema="image_id string, n_px long, n_on long, checksum long"
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, n_px long, n_on long, checksum long",
+        max_bands=1,
     )
 
 

@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bpe import WORD_RE_JAVA
+
 PPM = 1_000_000
-WORD_RE = "^[a-z]+$"
 
 def _bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) per adjacent pair of qualifying words, via pure JVM
@@ -42,7 +43,7 @@ def _bigrams(docs: DataFrame) -> DataFrame:
         "explode(arrays_zip(slice(ws, 1, size(ws) - 1), "
         "slice(ws, 2, size(ws) - 1))) AS z",
     ).selectExpr("doc_id", "z['0'] AS w1", "z['1'] AS w2")
-    return z.where(F.col("w1").rlike(WORD_RE) & F.col("w2").rlike(WORD_RE))
+    return z.where(F.col("w1").rlike(WORD_RE_JAVA) & F.col("w2").rlike(WORD_RE_JAVA))
 
 
 def train_bigram_lm(docs: DataFrame, max_bigrams: int | None = None) -> DataFrame:

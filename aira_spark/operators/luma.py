@@ -27,48 +27,34 @@ WR, WG, WB = 299, 587, 114  # BT.601 fixed-point, sums to 1000
 def luma_census(images: DataFrame) -> DataFrame:
     """(image_id, n_px, sum_y, min_y, max_y, checksum) over band 0/1/2 of
     every image that carries >= 3 bands."""
-    from collections.abc import Iterator
+    from ..functions.udfs import map_decoded
 
-    import pandas as pd
+    def per_image(rec, m, px):
+        if px.shape[2] < 3:
+            return []
+        b = px.astype(np.int64)
+        y = (WR * b[:, :, 0] + WG * b[:, :, 1] + WB * b[:, :, 2]) // 1000
+        h, w = y.shape
+        ri, ci = np.meshgrid(
+            np.arange(h, dtype=np.int64),
+            np.arange(w, dtype=np.int64),
+            indexing="ij",
+        )
+        wts = (ri * w + ci) % CHECK_MOD
+        return [(
+            rec.image_id,
+            h * w,
+            int(y.sum()),
+            int(y.min()),
+            int(y.max()),
+            int((y * wts).sum()),
+        )]
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
-
-    cols = ["image_id", "n_px", "sum_y", "min_y", "max_y", "checksum"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=3)
-                except TiffError:
-                    continue
-                if px.shape[2] < 3:
-                    continue
-                b = px.astype(np.int64)
-                y = (WR * b[:, :, 0] + WG * b[:, :, 1] + WB * b[:, :, 2]) // 1000
-                h, w = y.shape
-                ri, ci = np.meshgrid(
-                    np.arange(h, dtype=np.int64),
-                    np.arange(w, dtype=np.int64),
-                    indexing="ij",
-                )
-                wts = (ri * w + ci) % CHECK_MOD
-                out.append((
-                    rec.image_id,
-                    h * w,
-                    int(y.sum()),
-                    int(y.min()),
-                    int(y.max()),
-                    int((y * wts).sum()),
-                ))
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=("image_id string, n_px long, sum_y long, min_y long,"
-                " max_y long, checksum long"),
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        ("image_id string, n_px long, sum_y long, min_y long,"
+         " max_y long, checksum long"),
+        max_bands=3,
     )
 
 

@@ -37,8 +37,6 @@ the reference does not ship.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,44 +58,32 @@ def image_moments(images: DataFrame) -> DataFrame:
     orientation class per band. All-zero bands (m00 = 0) emit the raw
     row with NULL-free zero central moments and 'isotropic'."""
     import numpy as np
-    import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import map_decoded
 
     cols = ["image_id", "band", "m00", "m10", "m01", "m20", "m02", "m11"]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                h, w = px.shape[0], px.shape[1]
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                for s in range(px.shape[2]):
-                    v = px[:, :, s].astype(np.int64)
-                    vr = (v * r).sum(axis=1)  # per-row Σ_c v·r
-                    vc = v * c
-                    out.append((
-                        rec.image_id, s,
-                        int(v.sum()), int(vc.sum()),
-                        int(vr.sum()),
-                        int((vc * c).sum()),
-                        int((v * (r * r)).sum()),
-                        int((vc * r).sum()),
-                    ))
-            yield pd.DataFrame(out, columns=cols)
+    def per_image(rec, m, px):
+        h, w = px.shape[0], px.shape[1]
+        r = np.arange(h, dtype=np.int64)[:, None]
+        c = np.arange(w, dtype=np.int64)[None, :]
+        for s in range(px.shape[2]):
+            v = px[:, :, s].astype(np.int64)
+            vr = (v * r).sum(axis=1)  # per-row Σ_c v·r
+            vc = v * c
+            yield (
+                rec.image_id, s,
+                int(v.sum()), int(vc.sum()),
+                int(vr.sum()),
+                int((vc * c).sum()),
+                int((v * (r * r)).sum()),
+                int((vc * r).sum()),
+            )
 
-    raw = images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=(
-            "image_id string, band long, m00 long, m10 long, m01 long,"
-            " m20 long, m02 long, m11 long"
-        ),
+    raw = map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, band long, m00 long, m10 long, m01 long,"
+        " m20 long, m02 long, m11 long",
     )
     # images arrive pre-chunked per input split; the agg is a no-op fold
     # over one partial per (image, band) but keeps the shape correct if a

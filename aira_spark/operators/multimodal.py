@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as Ty
 
-from ..functions.udfs import _decode_full
+from ..functions.udfs import _decode_full, map_decoded
 from ..jpegio import JpegError
 from ..pngio import PngError
 from ..tiff.meta import TiffError
@@ -144,42 +144,29 @@ def resize_images(images: DataFrame, th: int, tw: int) -> DataFrame:
     geotransform rescaled so the footprint is preserved. Returns
     (image_id, bytes) — a derived images table (training-data thumbnailing).
     """
-    from ..tiff import tags as T
     from ..tiff.encode import write_tiff
-    from ..tiff.meta import entry_value
+    from ..tiff.meta import geotransform
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                buf = bytes(rec.bytes)
-                try:
-                    m, px = _decode_full(buf)
-                except TiffError:
-                    continue
-                small = _area_pool_floor(px, th, tw)
-                geo = None
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
-                    # re-anchor the tiepoint at pixel (0, 0): the source tie
-                    # may reference pixel (tie_i, tie_j) != (0, 0)
-                    tx0 = tv[3] - tv[0] * sv[0]
-                    ty0 = tv[4] + tv[1] * sv[1]
-                    geo = (
-                        (sv[0] * px.shape[1] / tw, sv[1] * px.shape[0] / th, 0.0),
-                        (0.0, 0.0, 0.0, tx0, ty0, 0.0),
-                    )
-                rows.append(
-                    (rec.image_id, write_tiff(small, byteorder="<",
-                                              layout=("strips", 8), geo=geo))
-                )
-            yield pd.DataFrame(rows, columns=["image_id", "bytes"])
+    def per_image(rec, m, px):
+        small = _area_pool_floor(px, th, tw)
+        geo = None
+        gt = geotransform(m)
+        if gt is not None:
+            sv, tv = gt
+            # re-anchor the tiepoint at pixel (0, 0): the source tie may
+            # reference pixel (tie_i, tie_j) != (0, 0)
+            tx0 = tv[3] - tv[0] * sv[0]
+            ty0 = tv[4] + tv[1] * sv[1]
+            geo = (
+                (sv[0] * px.shape[1] / tw, sv[1] * px.shape[0] / th, 0.0),
+                (0.0, 0.0, 0.0, tx0, ty0, 0.0),
+            )
+        return [(rec.image_id,
+                 write_tiff(small, byteorder="<", layout=("strips", 8), geo=geo))]
 
-    return images.select("image_id", "bytes").mapInPandas(
-        fn, schema="image_id string, bytes binary"
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, bytes binary",
     )
 
 
@@ -768,34 +755,22 @@ def patchify(images: DataFrame, patch: int = 16) -> DataFrame:
     patch STATISTICS cross Arrow, never pixel buffers — the 100 TB shape for
     corpus-level patch curation (filtering blank/low-variance patches before
     the expensive bytes are ever shipped)."""
-    cols = ["image_id", "patch_row", "patch_col", "ph", "pw",
-            "px_sum", "px_min", "px_max"]
+    def per_image(rec, _m, px):
+        a = px[:, :, 0].astype(np.int64)
+        h, w = a.shape
+        for pr in range((h + patch - 1) // patch):
+            r0, r1 = pr * patch, min((pr + 1) * patch, h)
+            for pc in range((w + patch - 1) // patch):
+                c0, c1 = pc * patch, min((pc + 1) * patch, w)
+                blk = a[r0:r1, c0:c1]
+                yield (rec.image_id, pr, pc, r1 - r0, c1 - c0,
+                       int(blk.sum()), int(blk.min()), int(blk.max()))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                a = px[:, :, 0].astype(np.int64)
-                h, w = a.shape
-                for pr in range((h + patch - 1) // patch):
-                    r0, r1 = pr * patch, min((pr + 1) * patch, h)
-                    for pc in range((w + patch - 1) // patch):
-                        c0, c1 = pc * patch, min((pc + 1) * patch, w)
-                        blk = a[r0:r1, c0:c1]
-                        out.append(
-                            (rec.image_id, pr, pc, r1 - r0, c1 - c0,
-                             int(blk.sum()), int(blk.min()), int(blk.max()))
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema="image_id string, patch_row int, patch_col int, ph int, pw int, "
-               "px_sum long, px_min long, px_max long",
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, patch_row int, patch_col int, ph int, pw int, "
+        "px_sum long, px_min long, px_max long",
+        max_bands=1,
     )
 
 
@@ -812,47 +787,26 @@ def transcode_stats(images: "DataFrame") -> "DataFrame":
 
     Scale shape: zero shuffles — decode+encode+decode+reduce inside one
     mapInPandas; 6 integer columns cross Arrow, never pixel buffers."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.udfs import _decode_full
     from ..pngio import write_png
-    from ..tiff.meta import TiffError
 
-    cols = ["image_id", "out_ch", "out_w", "out_h", "sum_px", "wsum"]
+    def per_image(rec, _m, px):
+        # synthetic values are exact 0..255 in every variant dtype
+        a8 = px.astype(np.uint8)
+        h, w, ch = a8.shape
+        buf = write_png(
+            a8 if ch > 1 else a8[:, :, 0],
+            filters=[r % 5 for r in range(h)],
+        )
+        dec = decode_image("png", buf).astype(np.int64)
+        weights = np.arange(1, dec.size + 1, dtype=np.int64)
+        return [(
+            rec.image_id, dec.shape[2], w, h,
+            int(dec.sum()),
+            int((weights * dec.ravel()).sum() % _PNG_WSUM_MOD),
+        )]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                # synthetic values are exact 0..255 in every variant dtype
-                a8 = px.astype(np.uint8)
-                h, w, ch = a8.shape
-                buf = write_png(
-                    a8 if ch > 1 else a8[:, :, 0],
-                    filters=[r % 5 for r in range(h)],
-                )
-                dec = decode_image("png", buf).astype(np.int64)
-                weights = np.arange(1, dec.size + 1, dtype=np.int64)
-                rows.append(
-                    (
-                        rec.image_id, dec.shape[2], w, h,
-                        int(dec.sum()),
-                        int((weights * dec.ravel()).sum() % _PNG_WSUM_MOD),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=(
-            "image_id string, out_ch long, out_w long, out_h long, "
-            "sum_px long, wsum long"
-        ),
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, out_ch long, out_w long, out_h long, "
+        "sum_px long, wsum long",
     )

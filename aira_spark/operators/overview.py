@@ -19,75 +19,57 @@ storage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .chunks import with_meta_pages
 
 
-def _pyramid_batches(levels: int):
-    from ..functions.udfs import _decode_full
-    from ..tiff import tags as T
-    from ..tiff.encode import concat_tiff_pages, write_tiff
-    from ..tiff.meta import TiffError, decode_metadata, entry_value, read_header
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                buf = bytes(rec.bytes)
-                try:
-                    m = decode_metadata(buf)
-                    _, px = _decode_full(buf)
-                except TiffError:
-                    continue
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                geo_base = None
-                if scale is not None and tie is not None:
-                    sv = entry_value(*scale, m["byteorder"])
-                    tv = entry_value(*tie, m["byteorder"])
-                    # re-anchor at pixel (0, 0) (source tie may be elsewhere)
-                    geo_base = (
-                        sv[0], sv[1],
-                        tv[3] - tv[0] * sv[0], tv[4] + tv[1] * sv[1],
-                    )
-                # all pages of a chain must share byteorder + version
-                bo, version, _ = read_header(buf)
-                bufs = [buf]
-                sub = px
-                for p in range(1, levels):
-                    sub = sub[::2, ::2, :]
-                    geo = None
-                    if geo_base is not None:
-                        sx, sy, tx, ty = geo_base
-                        geo = (
-                            (sx * (1 << p), sy * (1 << p), 0.0),
-                            (0.0, 0.0, 0.0, tx, ty, 0.0),
-                        )
-                    bufs.append(
-                        write_tiff(
-                            sub, byteorder=bo, layout=("strips", 8),
-                            big=(version == 43), geo=geo,
-                            # reduced-resolution marker, the COG convention
-                            # (reference crates/aira-tiff/src/subfile_type.rs:7-14)
-                            subfile_type=1,
-                        )
-                    )
-                out.append((rec.image_id, concat_tiff_pages(bufs)))
-            yield pd.DataFrame(out, columns=["image_id", "bytes"])
-
-    return fn
-
-
 def with_pyramid(images: DataFrame, levels: int = 3) -> DataFrame:
     """(image_id, bytes) -> (image_id, bytes) where bytes is a multi-page TIFF:
     page 0 = the original file, page p = 2x-strided overview with doubled GSD."""
-    return images.select("image_id", "bytes").mapInPandas(
-        _pyramid_batches(levels), schema="image_id string, bytes binary"
+    from ..functions.udfs import map_decoded
+    from ..tiff.encode import concat_tiff_pages, write_tiff
+    from ..tiff.meta import geotransform, read_header
+
+    def per_image(rec, m, px):
+        buf = bytes(rec.bytes)
+        gt = geotransform(m)
+        geo_base = None
+        if gt is not None:
+            sv, tv = gt
+            # re-anchor at pixel (0, 0) (source tie may be elsewhere)
+            geo_base = (
+                sv[0], sv[1],
+                tv[3] - tv[0] * sv[0], tv[4] + tv[1] * sv[1],
+            )
+        # all pages of a chain must share byteorder + version
+        bo, version, _ = read_header(buf)
+        bufs = [buf]
+        sub = px
+        for p in range(1, levels):
+            sub = sub[::2, ::2, :]
+            geo = None
+            if geo_base is not None:
+                sx, sy, tx, ty = geo_base
+                geo = (
+                    (sx * (1 << p), sy * (1 << p), 0.0),
+                    (0.0, 0.0, 0.0, tx, ty, 0.0),
+                )
+            bufs.append(
+                write_tiff(
+                    sub, byteorder=bo, layout=("strips", 8),
+                    big=(version == 43), geo=geo,
+                    # reduced-resolution marker, the COG convention
+                    # (reference crates/aira-tiff/src/subfile_type.rs:7-14)
+                    subfile_type=1,
+                )
+            )
+        return [(rec.image_id, concat_tiff_pages(bufs))]
+
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, bytes binary",
     )
 
 

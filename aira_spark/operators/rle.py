@@ -28,8 +28,6 @@ census rows to a (image_id, band) fold."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,43 +38,29 @@ def rle_census(images: DataFrame) -> DataFrame:
     """(image_id, band, n_px, n_runs, max_run, n_chunks, rle_ppm) from
     images carrying (image_id, bytes)."""
     import numpy as np
-    import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import map_decoded
 
-    cols = ["image_id", "band", "n_px", "n_runs", "max_run", "n_chunks"]
+    def per_image(rec, _m, px):
+        for s in range(px.shape[2]):
+            q = (px[:, :, s].astype(np.int64) >> 6).ravel()
+            n = q.size
+            if n == 0:
+                continue
+            # run starts: position 0 + every quantized change
+            starts = np.flatnonzero(np.diff(q)) + 1
+            bounds = np.concatenate(([0], starts, [n]))
+            lens = np.diff(bounds)
+            yield (
+                rec.image_id, s, int(n), int(lens.size),
+                int(lens.max()),
+                int(((lens + 254) // 255).sum()),
+            )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    _, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                for s in range(px.shape[2]):
-                    q = (px[:, :, s].astype(np.int64) >> 6).ravel()
-                    n = q.size
-                    if n == 0:
-                        continue
-                    # run starts: position 0 + every quantized change
-                    starts = np.flatnonzero(np.diff(q)) + 1
-                    bounds = np.concatenate(([0], starts, [n]))
-                    lens = np.diff(bounds)
-                    out.append((
-                        rec.image_id, s, int(n), int(lens.size),
-                        int(lens.max()),
-                        int(((lens + 254) // 255).sum()),
-                    ))
-            yield pd.DataFrame(out, columns=cols)
-
-    raw = images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=(
-            "image_id string, band long, n_px long, n_runs long,"
-            " max_run long, n_chunks long"
-        ),
+    raw = map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, band long, n_px long, n_runs long,"
+        " max_run long, n_chunks long",
     )
     agg = raw.groupBy("image_id", "band").agg(
         F.sum("n_px").cast("long").alias("n_px"),

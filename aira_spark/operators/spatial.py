@@ -549,7 +549,7 @@ def knn_join(
     handles = [pts, pending]  # every persisted frame, unpersisted on return
     results = None
     for round_i in range(ring_rounds):
-        ringed = pending.withColumn("cell", F.explode(k_ring(F.col("qcell"), radius, res)))
+        ringed = pending.withColumn("cell", F.explode(k_ring(F.col("qcell"), radius)))
         ranked = rank_candidates(ringed.join(pts, "cell")).persist()
         handles.append(ranked)
         if metric == "haversine":

@@ -30,8 +30,6 @@ is a pure projection. No join, no shuffle of pixel data."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
 SIMILAR_E6 = 900_000    # ssim >= 0.9: perceptually-duplicate band pair
@@ -58,46 +56,29 @@ def ssim_bands(images: DataFrame) -> DataFrame:
     The four integer factors ship alongside so any cross-engine diff
     localizes to input stats vs the final double chain."""
     import numpy as np
-    import pandas as pd
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import map_decoded
 
-    cols = ["image_id", "band_x", "band_y", "n_px",
-            "sx", "sy", "sxx", "syy", "sxy"]
+    def per_image(rec, m, px):
+        spp = px.shape[2]
+        if spp < 2:
+            return
+        flat = [px[:, :, s].astype(np.int64).ravel() for s in range(spp)]
+        n = int(flat[0].size)
+        s1 = [int(v.sum()) for v in flat]
+        s2 = [int((v * v).sum()) for v in flat]
+        for bx in range(spp):
+            for by in range(bx + 1, spp):
+                yield (
+                    rec.image_id, bx, by, n,
+                    s1[bx], s1[by], s2[bx], s2[by],
+                    int((flat[bx] * flat[by]).sum()),
+                )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                spp = px.shape[2]
-                if spp < 2:
-                    continue
-                flat = [
-                    px[:, :, s].astype(np.int64).ravel() for s in range(spp)
-                ]
-                n = int(flat[0].size)
-                s1 = [int(v.sum()) for v in flat]
-                s2 = [int((v * v).sum()) for v in flat]
-                for bx in range(spp):
-                    for by in range(bx + 1, spp):
-                        out.append((
-                            rec.image_id, bx, by, n,
-                            s1[bx], s1[by], s2[bx], s2[by],
-                            int((flat[bx] * flat[by]).sum()),
-                        ))
-            yield pd.DataFrame(out, columns=cols)
-
-    raw = images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=(
-            "image_id string, band_x long, band_y long, n_px long,"
-            " sx long, sy long, sxx long, syy long, sxy long"
-        ),
+    raw = map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, band_x long, band_y long, n_px long,"
+        " sx long, sy long, sxx long, syy long, sxy long",
     )
     return (
         raw.selectExpr(

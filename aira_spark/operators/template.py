@@ -38,52 +38,39 @@ def template_4x4() -> np.ndarray:
 def template_match(images: DataFrame) -> DataFrame:
     """(image_id, n_off, min_ssd, best_r, best_c, sum_ssd): best SSD match
     of the fixed 4x4 template over band 0; ties -> smallest (r, c)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import map_decoded
 
     T = template_4x4()
-    cols = ["image_id", "n_off", "min_ssd", "best_r", "best_c", "sum_ssd"]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                a = px[:, :, 0].astype(np.int64)
-                h, w = a.shape
-                if h < TH or w < TW:
-                    continue
-                oh, ow = h - TH + 1, w - TW + 1
-                ssd = np.zeros((oh, ow), dtype=np.int64)
-                for u in range(TH):
-                    for v in range(TW):
-                        d = a[u:u + oh, v:v + ow] - T[u, v]
-                        ssd += d * d
-                best = int(ssd.min())
-                # lexicographically smallest (r, c) among ties
-                ri, ci = np.nonzero(ssd == best)
-                k = np.lexsort((ci, ri))[0]
-                out.append((
-                    rec.image_id,
-                    oh * ow,
-                    best,
-                    int(ri[k]),
-                    int(ci[k]),
-                    int(ssd.sum()),
-                ))
-            yield pd.DataFrame(out, columns=cols)
+    def per_image(rec, m, px):
+        a = px[:, :, 0].astype(np.int64)
+        h, w = a.shape
+        if h < TH or w < TW:
+            return []
+        oh, ow = h - TH + 1, w - TW + 1
+        ssd = np.zeros((oh, ow), dtype=np.int64)
+        for u in range(TH):
+            for v in range(TW):
+                d = a[u:u + oh, v:v + ow] - T[u, v]
+                ssd += d * d
+        best = int(ssd.min())
+        # lexicographically smallest (r, c) among ties
+        ri, ci = np.nonzero(ssd == best)
+        k = np.lexsort((ci, ri))[0]
+        return [(
+            rec.image_id,
+            oh * ow,
+            best,
+            int(ri[k]),
+            int(ci[k]),
+            int(ssd.sum()),
+        )]
 
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema=("image_id string, n_off long, min_ssd long, best_r long,"
-                " best_c long, sum_ssd long"),
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        ("image_id string, n_off long, min_ssd long, best_r long,"
+         " best_c long, sum_ssd long"),
+        max_bands=1,
     )
 
 

@@ -68,8 +68,7 @@ def warp_cell_values(
     every scene inverse-map resampled onto the common (X0, Y0, tsx, tsy)
     grid. tx/ty index target pixels east/north of the grid origin."""
     from ..functions.udfs import _decode_full
-    from ..tiff import tags as T
-    from ..tiff.meta import TiffError, entry_value
+    from ..tiff.meta import TiffError, geotransform
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -79,12 +78,10 @@ def warp_cell_values(
                     m, px = _decode_full(rec.bytes, max_bands=1)
                 except TiffError:
                     continue
-                scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
-                tie = m["custom"].get(T.MODEL_TIEPOINT)
-                if scale is None or tie is None:
+                gt = geotransform(m)
+                if gt is None:
                     continue
-                sv = entry_value(*scale, m["byteorder"])
-                tv = entry_value(*tie, m["byteorder"])
+                sv, tv = gt
                 h, w = px.shape[:2]
                 # left/bottom edges and top edge from the decoded transform
                 # (tv[0]/tv[1] are the tie pixel indices — 0 for this writer,

@@ -37,49 +37,32 @@ H8 = (1 - 2 * (_POP % 2)).astype(np.int64)
 
 def wht_block_features(images: DataFrame, max_uv: int = 4) -> DataFrame:
     """(image_id, bx, by, u, v, coef) for every full 8x8 block of band 0."""
-    from collections.abc import Iterator
+    from ..functions.udfs import map_decoded
 
-    import pandas as pd
+    def per_image(rec, m, px):
+        a = px[:, :, 0].astype(np.int64)
+        nby, nbx = a.shape[0] // BLOCK, a.shape[1] // BLOCK
+        if not nby or not nbx:
+            return
+        blocks = (
+            a[: nby * BLOCK, : nbx * BLOCK]
+            .reshape(nby, BLOCK, nbx, BLOCK)
+            .transpose(0, 2, 1, 3)
+        )  # (by, bx, r, c)
+        # C[u,v] = sum_rc H[u,r] * B[r,c] * H[v,c], exact int64
+        coef = np.einsum(
+            "ur,yxrc,vc->yxuv", H8, blocks, H8, optimize=True
+        )[:, :, :max_uv, :max_uv]
+        for by in range(nby):
+            for bx in range(nbx):
+                for u in range(max_uv):
+                    for v in range(max_uv):
+                        yield (rec.image_id, bx, by, u, v, int(coef[by, bx, u, v]))
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
-
-    cols = ["image_id", "bx", "by", "u", "v", "coef"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                a = px[:, :, 0].astype(np.int64)
-                nby, nbx = a.shape[0] // BLOCK, a.shape[1] // BLOCK
-                if not nby or not nbx:
-                    continue
-                blocks = (
-                    a[: nby * BLOCK, : nbx * BLOCK]
-                    .reshape(nby, BLOCK, nbx, BLOCK)
-                    .transpose(0, 2, 1, 3)
-                )  # (by, bx, r, c)
-                # C[u,v] = sum_rc H[u,r] * B[r,c] * H[v,c], exact int64
-                coef = np.einsum(
-                    "ur,yxrc,vc->yxuv", H8, blocks, H8, optimize=True
-                )[:, :, :max_uv, :max_uv]
-                for by in range(nby):
-                    for bx in range(nbx):
-                        for u in range(max_uv):
-                            for v in range(max_uv):
-                                out.append(
-                                    (rec.image_id, bx, by, u, v,
-                                     int(coef[by, bx, u, v]))
-                                )
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn,
-        schema="image_id string, bx long, by long, u long, v long, coef long",
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, bx long, by long, u long, v long, coef long",
+        max_bands=1,
     )
 
 

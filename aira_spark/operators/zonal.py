@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from ..functions.udfs import ZONAL_PIX_SCHEMA, zonal_pixel_batches
+from ..functions.udfs import ZONAL_PIX_SCHEMA, map_decoded, zonal_pixel_batches
 from .spatial import polygon_cells
 
 
@@ -42,35 +42,16 @@ def zonal_stats_bands(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     max_px) — every sample channel aggregated independently over the same
     cell grid (satellite-band semantics). Map side decodes once per image and
     emits per-(cell, band) partials; reduce is one hash agg on (cell, band)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from ..functions.udfs import _decode_full, _zonal_partials_bands
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import _zonal_partials_bands
 
     # no image_id in the partials: the reduce groups on (cell, band) only, so
     # shipping the id across Arrow would be dead weight
-    schema = (
-        "cell long, band int, px_cnt long, px_sum long, px_min long, px_max long"
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                out.extend(_zonal_partials_bands(m, px, res))
-            yield pd.DataFrame(
-                out,
-                columns=["cell", "band", "px_cnt", "px_sum", "px_min", "px_max"],
-            )
-
     return (
-        images.select("bytes")
-        .mapInPandas(fn, schema=schema)
+        map_decoded(
+            images.select("bytes"),
+            lambda rec, m, px: _zonal_partials_bands(m, px, res),
+            "cell long, band int, px_cnt long, px_sum long, px_min long, px_max long",
+        )
         .groupBy("cell", "band")
         .agg(
             F.sum("px_cnt").alias("n_px"),
@@ -93,66 +74,53 @@ def band_index_stats(
     pixels whose band sum is 0 (nodata in both bands) are excluded — their
     ratio is undefined.
     """
-    import pandas as pd
-    from collections.abc import Iterator
-
     import numpy as np
 
-    from ..functions.udfs import _decode_full, pixel_cell_groups, reduce_by_cell
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import pixel_cell_groups, reduce_by_cell
 
-    schema = "cell long, px_cnt long, px_sum long, px_min long, px_max long"
     need = max(b0, b1) + 1
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    # prune planar decode to the bands the index reads
-                    m, px = _decode_full(rec.bytes, max_bands=need)
-                except TiffError:
-                    continue
-                if px.shape[2] < need:
-                    continue
-                groups = pixel_cell_groups(m, px, res)
-                if groups is None:
-                    continue
-                order, uniq, starts, ends = groups
-                v0 = px[:, :, b0].astype(np.float64).ravel()
-                v1 = px[:, :, b1].astype(np.float64).ravel()
-                valid = (v0 + v1) > 0.0
-                # same expression order as the oracle SQL text
-                idx = np.zeros(len(v0), dtype=np.int64)
-                idx[valid] = np.floor(
-                    1000.0 * (v1[valid] - v0[valid]) / (v1[valid] + v0[valid])
-                ).astype(np.int64)
-                if valid.all():
-                    # the shared order-aligned reduceat fold (one home for
-                    # the per-cell reduction — udfs.reduce_by_cell)
-                    out.extend(reduce_by_cell(idx, groups))
-                else:
-                    # zero-sum pixels break the contiguous reduceat groups:
-                    # fall back to a masked pandas-style group per image
-                    cells = np.empty(len(v0), dtype=np.int64)
-                    cells[order] = np.repeat(uniq, ends - starts)
-                    cm, vm = cells[valid], idx[valid]
-                    o2 = np.argsort(cm, kind="stable")
-                    cs, vs = cm[o2], vm[o2]
-                    u2, s2 = np.unique(cs, return_index=True)
-                    e2 = np.append(s2[1:], len(cs))
-                    out.extend(
-                        (int(u), int(e0 - s0), int(np.add.reduce(vs[s0:e0])),
-                         int(vs[s0:e0].min()), int(vs[s0:e0].max()))
-                        for u, s0, e0 in zip(u2, s2, e2)
-                    )
-            yield pd.DataFrame(
-                out, columns=["cell", "px_cnt", "px_sum", "px_min", "px_max"]
-            )
+    def per_image(rec, m, px):
+        if px.shape[2] < need:
+            return []
+        groups = pixel_cell_groups(m, px, res)
+        if groups is None:
+            return []
+        order, uniq, starts, ends = groups
+        v0 = px[:, :, b0].astype(np.float64).ravel()
+        v1 = px[:, :, b1].astype(np.float64).ravel()
+        valid = (v0 + v1) > 0.0
+        # same expression order as the oracle SQL text
+        idx = np.zeros(len(v0), dtype=np.int64)
+        idx[valid] = np.floor(
+            1000.0 * (v1[valid] - v0[valid]) / (v1[valid] + v0[valid])
+        ).astype(np.int64)
+        if valid.all():
+            # the shared order-aligned reduceat fold (one home for the
+            # per-cell reduction — udfs.reduce_by_cell)
+            return reduce_by_cell(idx, groups)
+        # zero-sum pixels break the contiguous reduceat groups: fall back
+        # to a masked pandas-style group per image
+        cells = np.empty(len(v0), dtype=np.int64)
+        cells[order] = np.repeat(uniq, ends - starts)
+        cm, vm = cells[valid], idx[valid]
+        o2 = np.argsort(cm, kind="stable")
+        cs, vs = cm[o2], vm[o2]
+        u2, s2 = np.unique(cs, return_index=True)
+        e2 = np.append(s2[1:], len(cs))
+        return [
+            (int(u), int(e0 - s0), int(np.add.reduce(vs[s0:e0])),
+             int(vs[s0:e0].min()), int(vs[s0:e0].max()))
+            for u, s0, e0 in zip(u2, s2, e2)
+        ]
 
     return (
-        images.select("bytes")
-        .mapInPandas(fn, schema=schema)
+        map_decoded(
+            images.select("bytes"), per_image,
+            "cell long, px_cnt long, px_sum long, px_min long, px_max long",
+            # prune planar decode to the bands the index reads
+            max_bands=need,
+        )
         .groupBy("cell")
         .agg(
             F.sum("px_cnt").alias("n_px"),
@@ -205,8 +173,8 @@ def zonal_exact_by_polygon(
     per-(image, polygon) partials shuffle into the final hash agg.
     """
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
+
+    from ..functions.udfs import pixel_world_coords
 
     polys_one = F.broadcast(
         polygons.select(
@@ -220,79 +188,65 @@ def zonal_exact_by_polygon(
         .crossJoin(polys_one)
     )
 
-    schema = "poly_id string, n_px long, sum_px long, min_px long, max_px long"
+    polys_np = None  # identical in every row (broadcast single-row side)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.udfs import _decode_full, pixel_world_coords
-        from ..tiff.meta import TiffError
-
-        polys_np = None  # identical in every row (broadcast single-row side)
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                if polys_np is None:
-                    polys_np = []
-                    for p in rec.polys:
-                        ring = p["ring"]
-                        ax = np.array([v["x"] for v in ring[:-1]])
-                        ay = np.array([v["y"] for v in ring[:-1]])
-                        bx = np.array([v["x"] for v in ring[1:]])
-                        by = np.array([v["y"] for v in ring[1:]])
-                        bb = (
-                            min(ax.min(), bx.min()), min(ay.min(), by.min()),
-                            max(ax.max(), bx.max()), max(ay.max(), by.max()),
-                        )
-                        polys_np.append((p["poly_id"], ax, ay, bx, by, bb))
-                try:
-                    # band-0 consumer: prune planar decode to the first plane
-                    mm, px = _decode_full(bytes(rec.bytes), max_bands=1)
-                except TiffError:
-                    continue
-                h, w = px.shape[:2]
-                xs, ys, sv, _tv = pixel_world_coords(mm, h, w)
-                if xs is None:
-                    continue
-                fxmin, fxmax = xs.min() - 0.5 * sv[0], xs.max() + 0.5 * sv[0]
-                fymin, fymax = ys.min() - 0.5 * sv[1], ys.max() + 0.5 * sv[1]
-                pxx = pyy = vals = None  # lazy: most images match no polygon
-                for poly_id, ax, ay, bx, by, bb in polys_np:
-                    if not (fxmin <= bb[2] and fxmax >= bb[0]
-                            and fymin <= bb[3] and fymax >= bb[1]):
+    def per_image(rec, mm, px):
+        nonlocal polys_np
+        if polys_np is None:
+            polys_np = []
+            for p in rec.polys:
+                ring = p["ring"]
+                ax = np.array([v["x"] for v in ring[:-1]])
+                ay = np.array([v["y"] for v in ring[:-1]])
+                bx = np.array([v["x"] for v in ring[1:]])
+                by = np.array([v["y"] for v in ring[1:]])
+                bb = (
+                    min(ax.min(), bx.min()), min(ay.min(), by.min()),
+                    max(ax.max(), bx.max()), max(ay.max(), by.max()),
+                )
+                polys_np.append((p["poly_id"], ax, ay, bx, by, bb))
+        h, w = px.shape[:2]
+        xs, ys, sv, _tv = pixel_world_coords(mm, h, w)
+        if xs is None:
+            return
+        fxmin, fxmax = xs.min() - 0.5 * sv[0], xs.max() + 0.5 * sv[0]
+        fymin, fymax = ys.min() - 0.5 * sv[1], ys.max() + 0.5 * sv[1]
+        pxx = pyy = vals = None  # lazy: most images match no polygon
+        for poly_id, ax, ay, bx, by, bb in polys_np:
+            if not (fxmin <= bb[2] and fxmax >= bb[0]
+                    and fymin <= bb[3] and fymax >= bb[1]):
+                continue
+            if pxx is None:
+                pxx = np.broadcast_to(xs[None, :], (h, w)).ravel()
+                pyy = np.broadcast_to(ys[:, None], (h, w)).ravel()
+                vals = px[:, :, 0].astype(np.int64).ravel()
+            # vectorized ray-cast, accumulated EDGE-BY-EDGE: the pixels x
+            # edges matrix form builds O(h*w*n_edges) float64 temporaries
+            # (a 2048^2 image x 64-edge ring is ~2 GB per temporary —
+            # executor OOM); per-edge passes bound memory at O(h*w) and
+            # evaluate the identical expression text as point_in_ring / the
+            # DuckDB oracle, elementwise on the same operands, so every
+            # crossing count is bit-identical
+            crossings = np.zeros(pxx.size, dtype=np.int64)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                for j in range(ax.size):
+                    cond = (ay[j] > pyy) != (by[j] > pyy)
+                    if not cond.any():
                         continue
-                    if pxx is None:
-                        pxx = np.broadcast_to(xs[None, :], (h, w)).ravel()
-                        pyy = np.broadcast_to(ys[:, None], (h, w)).ravel()
-                        vals = px[:, :, 0].astype(np.int64).ravel()
-                    # vectorized ray-cast, accumulated EDGE-BY-EDGE: the
-                    # pixels x edges matrix form builds O(h*w*n_edges)
-                    # float64 temporaries (a 2048^2 image x 64-edge ring is
-                    # ~2 GB per temporary — executor OOM); per-edge passes
-                    # bound memory at O(h*w) and evaluate the identical
-                    # expression text as point_in_ring / the DuckDB oracle,
-                    # elementwise on the same operands, so every crossing
-                    # count is bit-identical
-                    crossings = np.zeros(pxx.size, dtype=np.int64)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        for j in range(ax.size):
-                            cond = (ay[j] > pyy) != (by[j] > pyy)
-                            if not cond.any():
-                                continue
-                            t = (bx[j] - ax[j]) * (pyy - ay[j]) / (
-                                by[j] - ay[j]
-                            ) + ax[j]
-                            crossings += cond & (pxx < t)
-                    mask = (crossings % 2) == 1
-                    if not mask.any():
-                        continue
-                    mv = vals[mask]
-                    out.append(
-                        (poly_id, int(mv.size), int(mv.sum()), int(mv.min()), int(mv.max()))
-                    )
-            yield pd.DataFrame(
-                out, columns=["poly_id", "n_px", "sum_px", "min_px", "max_px"]
-            )
+                    t = (bx[j] - ax[j]) * (pyy - ay[j]) / (by[j] - ay[j]) + ax[j]
+                    crossings += cond & (pxx < t)
+            mask = (crossings % 2) == 1
+            if not mask.any():
+                continue
+            mv = vals[mask]
+            yield (poly_id, int(mv.size), int(mv.sum()), int(mv.min()), int(mv.max()))
 
-    partials = cand.mapInPandas(fn, schema=schema)
+    # band-0 consumer: prune planar decode to the first plane
+    partials = map_decoded(
+        cand, per_image,
+        "poly_id string, n_px long, sum_px long, min_px long, max_px long",
+        max_bands=1,
+    )
     return partials.groupBy("poly_id").agg(
         F.sum("n_px").alias("n_px"),
         F.sum("sum_px").alias("sum_px"),
@@ -330,39 +284,24 @@ def band_histogram(images: DataFrame) -> DataFrame:
     groupBy(band, value) hash agg over this output. All synthetic-variant
     dtypes hold integer values 0..255 (the float variant stores exact
     integers), so counts are exact in every engine."""
-    import pandas as pd
-    from collections.abc import Iterator
-
     import numpy as np
 
-    from ..functions.udfs import _decode_full
-    from ..tiff.meta import TiffError
+    def per_image(rec, m, px):
+        for band in range(px.shape[2]):
+            vals = px[:, :, band].astype(np.int64).ravel()
+            if vals.size and (vals.min() < 0 or vals.max() > 65535):
+                # signed/float raster outside the histogram domain: bincount
+                # would raise (negatives) or allocate a value-range-sized
+                # array — dead-letter the band, matching the decode-failure
+                # contract
+                continue
+            bc = np.bincount(vals)
+            for v in np.flatnonzero(bc):
+                yield (rec.image_id, band, int(v), int(bc[v]))
 
-    cols = ["image_id", "band", "value", "cnt"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes)
-                except TiffError:
-                    continue
-                for band in range(px.shape[2]):
-                    vals = px[:, :, band].astype(np.int64).ravel()
-                    if vals.size and (vals.min() < 0 or vals.max() > 65535):
-                        # signed/float raster outside the histogram domain:
-                        # bincount would raise (negatives) or allocate a
-                        # value-range-sized array — dead-letter the band,
-                        # matching the decode-failure contract
-                        continue
-                    bc = np.bincount(vals)
-                    for v in np.flatnonzero(bc):
-                        out.append((rec.image_id, band, int(v), int(bc[v])))
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.select("image_id", "bytes").mapInPandas(
-        fn, schema="image_id string, band int, value int, cnt long"
+    return map_decoded(
+        images.select("image_id", "bytes"), per_image,
+        "image_id string, band int, value int, cnt long",
     )
 
 
@@ -377,38 +316,28 @@ def _cell_value_counts(images: DataFrame, res: int) -> DataFrame:
     count array and kill the whole task. Out-of-domain images DROP, like
     undecodable ones, honoring the repo's never-raise-per-row contract;
     the histogram family is defined over categorical/8-16-bit rasters."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
+    from ..functions.udfs import pixel_cell_groups
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                groups = pixel_cell_groups(m, px, res)
-                if groups is None:
-                    continue
-                order, uniq, starts, ends = groups
-                vals = px[:, :, 0].astype(np.int64).ravel()[order]
-                if vals.size and (vals.min() < 0 or vals.max() > 65535):
-                    continue  # out of the histogram family's value domain
-                for cell, s0, e0 in zip(uniq, starts, ends):
-                    bc = np.bincount(vals[s0:e0])
-                    for v in np.flatnonzero(bc):
-                        out.append((int(cell), int(v), int(bc[v])))
-            yield pd.DataFrame(out, columns=["cell", "value", "cnt"])
+    def per_image(rec, m, px):
+        groups = pixel_cell_groups(m, px, res)
+        if groups is None:
+            return
+        order, uniq, starts, ends = groups
+        vals = px[:, :, 0].astype(np.int64).ravel()[order]
+        if vals.size and (vals.min() < 0 or vals.max() > 65535):
+            return  # out of the histogram family's value domain
+        for cell, s0, e0 in zip(uniq, starts, ends):
+            bc = np.bincount(vals[s0:e0])
+            for v in np.flatnonzero(bc):
+                yield (int(cell), int(v), int(bc[v]))
 
     return (
-        images.select("bytes")
-        .mapInPandas(fn, schema="cell long, value long, cnt long")
+        map_decoded(
+            images.select("bytes"), per_image, "cell long, value long, cnt long",
+            max_bands=1,
+        )
         .groupBy("cell", "value")
         .agg(F.sum("cnt").alias("cnt"))
     )

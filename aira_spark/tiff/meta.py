@@ -245,6 +245,17 @@ def entry_value(dtype: int, count: int, raw: bytes, bo: str) -> Any:
     raise TiffError(f"Unknown entry dtype {dtype}")
 
 
+def geotransform(m: dict) -> tuple[Any, Any] | None:
+    """(scale, tiepoint) values of the GeoTIFF ModelPixelScale /
+    ModelTiepoint pair of a decoded directory, or None when either tag is
+    absent. Value counts are not checked: callers index what they need."""
+    scale = m["custom"].get(T.MODEL_PIXEL_SCALE)
+    tie = m["custom"].get(T.MODEL_TIEPOINT)
+    if scale is None or tie is None:
+        return None
+    return entry_value(*scale, m["byteorder"]), entry_value(*tie, m["byteorder"])
+
+
 # tag -> (field name, decoder fn); everything else becomes a custom entry
 _STRING_TAGS = {
     T.ARTIST: "artist",

@@ -58,3 +58,13 @@ def test_quality_signal_orders_garbled_below_natural(spark):
     got = {r["doc_id"]: r["mean_ppm"]
            for r in lm_scores(_docs(spark, base + [garbled])).collect()}
     assert min(got[i] for i in range(3)) > got[3]
+
+
+def test_trailing_newline_token_is_not_a_word(spark):
+    # Java's `$` also matches before a final '\n'; the word filter must use
+    # the absolute end-of-text anchor, as the RE2 oracle does
+    docs = _docs(spark, ["abc\n def ghi"])
+    lm = {(r["w1"], r["w2"]) for r in train_bigram_lm(docs).collect()}
+    assert lm == {("def", "ghi")}
+    got = {r["doc_id"]: r["n_bigrams"] for r in lm_scores(docs).collect()}
+    assert got == {0: 1}
