@@ -72,7 +72,8 @@ docs AS (
 )
 """
 
-_ORACLE_EVENTS_HOURLY = """
+def _oracle_events_hourly() -> str:
+    return """
 SELECT event_type, CAST(date_trunc('hour', ts) AS VARCHAR) AS hour,
   CAST(COUNT(*) AS BIGINT) AS n_events,
   CAST(SUM(CAST(FLOOR(value * 100.0) AS BIGINT)) AS BIGINT) AS value_cents
@@ -3426,10 +3427,7 @@ def q_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.expr(_QUANT)
     )
-    # SPARK_GRAFT_PCA_ROUNDS: bench-only round trim (the pagerank knob);
-    # driver correctness runs leave it unset, matching the 8-round oracle
-    rounds = int(os.environ.get("SPARK_GRAFT_PCA_ROUNDS", "8"))
-    return pca_top1(emb, dim=64, rounds=rounds)
+    return pca_top1(emb, dim=64, rounds=8)
 
 
 def q_hog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4708,7 +4706,7 @@ WHERE bit_count(xor(a.phash, b.phash)) <= 2
 """
 
 
-def _oracle_cross_modal() -> str:
+def _oracle_cross_modal_dedup() -> str:
     # phash closed-form as in _oracle_phash_dedup, plus the caption formula
     # 'img-' || k || ' synthetic raster caption' and the x/y/z/w injections;
     # both arms brute-forced (popcount all-pairs, caption equality), full
@@ -5107,7 +5105,8 @@ def _oracle_interval_overlap() -> str:
     return oracle_interval_sql("events", top_k=40)
 
 
-_ORACLE_ROLLING_ACTIVITY = """
+def _oracle_rolling_activity() -> str:
+    return """
 WITH daily AS (
   SELECT event_type,
     CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
@@ -6963,9 +6962,10 @@ def _oracle_hillshade() -> str:
     return oracle_hillshade_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
 
 
-from aira_spark.streaming.events import (
-    ORACLE_STREAM_STREAM_JOIN as _ORACLE_SSJOIN,
-)
+def _oracle_stream_stream_join() -> str:
+    from aira_spark.streaming.events import ORACLE_STREAM_STREAM_JOIN
+
+    return ORACLE_STREAM_STREAM_JOIN
 
 
 def _oracle_dsir_scores() -> str:
@@ -7589,7 +7589,7 @@ FROM r WHERE rn <= 10
 """
 
 
-def _oracle_ann() -> str:
+def _oracle_ann_cosine_topk() -> str:
     # shared snippet builders: the quant/dot/cos text is load-bearing for
     # Spark<->DuckDB float parity and must not fork per query
     return f"""
@@ -7860,245 +7860,20 @@ def _oracle_cover_morph() -> str:
     return oracle_morph_sql(base, k=1, res=CELL_RES, pack=7 * (1 << 58))
 
 
-def oracle_sql() -> dict[str, str]:
-    from aira_spark.functions import textfns as tf
-
-    eng = "duckdb"
-    exact_dedup_oracle = f"""
-WITH {_DUP_CTE}
-SELECT md5(text) AS text_hash, CAST(COUNT(*) AS BIGINT) AS n_dups,
-       CAST(MIN(doc_id) AS BIGINT) AS keeper_id
-FROM docs GROUP BY 1
-"""
-    return {
-        "meta_decode": _oracle_meta_decode(),
-        "ratio_sort": _oracle_ratio_sort(),
-        "verify_invariants": _oracle_verify_invariants(),
-        "tile_assign": _oracle_tile_assign(),
-        "cell_cover": _oracle_cell_cover(),
-        "cell_compact": _oracle_cell_compact(),
-        "raster_regions": _oracle_raster_regions(),
-        "decontaminate": _oracle_decontaminate(),
-        "pack_sequences": _oracle_pack_sequences(),
-        "corpus_sample": _oracle_corpus_sample(),
-        "bm25": _oracle_bm25(),
-        "inverted_index": _oracle_inverted_index(),
-        "png_decode": _oracle_png_decode(),
-        "jpeg_decode": _oracle_jpeg_decode(),
-        "bpe_tokens": _oracle_bpe_tokens(),
-        "kmeans": _oracle_kmeans(),
-        "lm_score": _oracle_lm_score(),
-        "cover_morph": _oracle_cover_morph(),
-        "poly_metrics": _oracle_poly_metrics(),
-        "point_density": _oracle_point_density(),
-        "grid_dbscan": _oracle_grid_dbscan(),
-        "hll_setops": _oracle_hll_setops(),
-        "pyramid": _oracle_pyramid(),
-        "contours": _oracle_contours(),
-        "autocorr": _oracle_autocorr(),
-        "od_flows": _oracle_od_flows(),
-        "pmi": _oracle_pmi(),
-        "pq_ann": _oracle_pq_ann(),
-        "terrain": _oracle_terrain(),
-        "funnel": _oracle_funnel(),
-        "vocab_census": _oracle_vocab_census(),
-        "upsample": _oracle_upsample(),
-        "tfidf": _oracle_tfidf(),
-        "equalize": _oracle_equalize(),
-        "bfs_hops": _oracle_bfs_hops(),
-        "retention": _oracle_retention(),
-        "focal_median": _oracle_focal_median(),
-        "wht": _oracle_wht(),
-        "fuzzy_join": _oracle_fuzzy_join(),
-        "change_census": _oracle_change_census(),
-        "transitions": _oracle_transitions(),
-        "flow_dir": _oracle_flow_dir(),
-        "skyline": _oracle_skyline(),
-        "coverage_gaps": _oracle_coverage_gaps(),
-        "containment": _oracle_containment(),
-        "cell_trends": _oracle_cell_trends(),
-        "exact_quantiles": _oracle_exact_quantiles(),
-        "cell_anomalies": _oracle_cell_anomalies(),
-        "gram_matrix": _oracle_gram_matrix(),
-        "transcode": _oracle_transcode(),
-        "knn_classify": _oracle_knn_classify(),
-        "trajectory_lengths": _oracle_trajectory_lengths(),
-        "basins": _oracle_basins(),
-        "co_location": _oracle_co_location(),
-        "jsonl_ingest": _oracle_jsonl_ingest(),
-        "mixture_weights": _oracle_mixture_weights(),
-        "quality_deciles": _oracle_quality_deciles(),
-        "cms_join_size": _oracle_cms_join_size(),
-        "triangles": _oracle_triangles(),
-        "bloom_probe": _oracle_bloom_probe(),
-        "scd2": _oracle_scd2(),
-        "morton_ranges": _oracle_morton_ranges(),
-        "occupancy": _oracle_occupancy(),
-        "texture_stats": _oracle_texture_stats(),
-        "basket_pairs": _oracle_basket_pairs(),
-        "profile": _oracle_profile(),
-        "rank_fusion": _oracle_rank_fusion(),
-        "streaming_enrich": _oracle_streaming_enrich(),
-        "sorted_neighborhood": _oracle_sorted_neighborhood(),
-        "conversion_lag": _oracle_conversion_lag(),
-        "rfm": _oracle_rfm(),
-        "wht_sig": _oracle_wht_sig(),
-        "sssp": _oracle_sssp(),
-        "interval_overlap": _oracle_interval_overlap(),
-        "source_quota": _oracle_source_quota(),
-        "line_dedup": _oracle_line_dedup(),
-        "hilbert_layout": _oracle_hilbert_layout(),
-        "streaming_sliding": _oracle_streaming_sliding(),
-        "convex_hulls": _oracle_convex_hulls(),
-        "adaptive_partitions": _oracle_adaptive_partitions(),
-        "segment_intersections": _oracle_segment_intersections(),
-        "route_proximity": _oracle_route_proximity(),
-        "rolling_activity": _ORACLE_ROLLING_ACTIVITY,
-        "event_pivot": _oracle_event_pivot(),
-        "sales_rollup": _oracle_sales_rollup(),
-        "flow_acc": _oracle_flow_acc(),
-        "hotspots": _oracle_hotspots(),
-        "box_filter": _oracle_box_filter(),
-        "k_core": _oracle_k_core(),
-        "proximity": _oracle_proximity(),
-        "hillshade": _oracle_hillshade(),
-        "dsir_scores": _oracle_dsir_scores(),
-        "map_match": _oracle_map_match(),
-        "hist_match": _oracle_hist_match(),
-        "otsu": _oracle_otsu(),
-        "viewshed": _oracle_viewshed(),
-        "hausdorff": _oracle_hausdorff(),
-        "moments": _oracle_moments(),
-        "stay_points": _oracle_stay_points(),
-        "areal_interp": _oracle_areal_interp(),
-        "xyz_tiles": _oracle_xyz_tiles(),
-        "zonal_majority": _oracle_zonal_majority(),
-        "dp_simplify": _oracle_dp_simplify(),
-        "band_corr": _oracle_band_corr(),
-        "heading_census": _oracle_heading_census(),
-        "ngram_novelty": _oracle_ngram_novelty(),
-        "ann_recall": _oracle_ann_recall(),
-        "stretch": _oracle_stretch(),
-        "strahler": _oracle_strahler(),
-        "mrl_recall": _oracle_mrl_recall(),
-        "stream_stream_join": _ORACLE_SSJOIN,
-        "link_pred": _oracle_link_pred(),
-        "dither": _oracle_dither(),
-        "geohash": _oracle_geohash(),
-        "mosaic_blend": _oracle_mosaic_blend(),
-        "gap_fill": _oracle_gap_fill(),
-        "pii_scrub": _oracle_pii_scrub(),
-        "heavy_hitters": _oracle_heavy_hitters(),
-        "twa": _oracle_twa(),
-        "rgb_luma": _oracle_rgb_luma(),
-        "allpairs_cosine": _oracle_allpairs_cosine(),
-        "cusum": _oracle_cusum(),
-        "itemsets3": _oracle_itemsets3(),
-        "template_match": _oracle_template_match(),
-        "convoy": _oracle_convoy(),
-        "ripley_k": _oracle_ripley_k(),
-        "theilsen": _oracle_theilsen(),
-        "ks_drift": _oracle_ks_drift(),
-        "joincount": _oracle_joincount(),
-        "variogram": _oracle_variogram(),
-        "qa_flags": _oracle_qa_flags(),
-        "emd_drift": _oracle_emd_drift(),
-        "simpson": _oracle_simpson(),
-        "gini": _oracle_gini(),
-        "kendall": _oracle_kendall(),
-        "mann_kendall": _oracle_mann_kendall(),
-        "hits": _oracle_hits(),
-        "acf": _oracle_acf(),
-        "track_raster": _oracle_track_raster(),
-        "rle_census": _oracle_rle_census(),
-        "emerging_hotspots": _oracle_emerging_hotspots(),
-        "std_ellipse": _oracle_std_ellipse(),
-        "benford": _oracle_benford(),
-        "mwu_drift": _oracle_mwu_drift(),
-        "lisa": _oracle_lisa(),
-        "chi2": _oracle_chi2(),
-        "flesch": _oracle_flesch(),
-        "gyration": _oracle_gyration(),
-        "focal_majority": _oracle_focal_majority(),
-        "ccf": _oracle_ccf(),
-        "hull_diameter": _oracle_hull_diameter(),
-        "dist_transform": _oracle_dist_transform(),
-        "harris": _oracle_harris(),
-        "patch_entropy": _oracle_patch_entropy(),
-        "kde": _oracle_kde(),
-        "label_prop": _oracle_label_prop(),
-        "ssim": _oracle_ssim(),
-        "pca": _oracle_pca(),
-        "hog": _oracle_hog(),
-        "textrank": _oracle_textrank(),
-        "mad_outliers": _oracle_mad_outliers(),
-        "lbp": _oracle_lbp(),
-        "dispersion": _oracle_dispersion(),
-        "adamic_adar": _oracle_adamic_adar(),
-        "tophat": _oracle_tophat(),
-        "exact_substr": _oracle_exact_substr(),
-        "spearman": _oracle_spearman(),
-        "hough": _oracle_hough(),
-        "modularity": _oracle_modularity(),
-        "clustering": _oracle_clustering(),
-        "voronoi": _oracle_voronoi(),
-        "runs_test": _oracle_runs_test(),
-        "canny": _oracle_canny(),
-        "lacunarity": _oracle_lacunarity(),
-        "obb": _oracle_obb(),
-        "perm_entropy": _oracle_perm_entropy(),
-        "cross_k": _oracle_cross_k(),
-        "skeleton": _oracle_skeleton(),
-        "glcm": _oracle_glcm(),
-        "silhouette": _oracle_silhouette(),
-        "euler": _oracle_euler(),
-        "dow_season": _oracle_dow_season(),
-        "prop_test": _oracle_prop_test(),
-        "nearest_edge": _oracle_nearest_edge(),
-        "kappa": _oracle_kappa(),
-        "bilateral": _oracle_bilateral(),
-        "audio_decode": _oracle_audio_decode(),
-        "video_decode": _oracle_video_decode(),
-        "warp": _oracle_warp(),
-        # streaming path == batch point_density bit-for-bit: same oracle
-        "streaming_density": _oracle_point_density(),
-        "semantic_dedup": _oracle_semantic_dedup(),
-        "streaming_cover": _oracle_cell_cover(modulo=16),
-        "zonal_stats": _oracle_zonal_stats(),
-        "zonal_by_polygon": _oracle_zonal_by_polygon(),
-        "pip": _oracle_pip(),
-        "knn": _oracle_knn(),
-        "idw": _oracle_idw(),
-        "pagerank": _oracle_pagerank(),
-        "resize_thumbs": _oracle_resize_thumbs(),
-        "zonal_exact": _oracle_zonal_exact(),
-        "mosaic": _oracle_mosaic(),
-        "focal_mean": _oracle_focal_mean(),
-        "focal_gradient": _oracle_focal_gradient(),
-        "approx_distinct": _oracle_approx_distinct(),
-        "streaming_hll": _oracle_streaming_hll(),
-        "streaming_cms": _oracle_streaming_cms(),
-        "classifier_scores": _oracle_classifier_scores(),
-        "augment_stats": _oracle_augment_stats(),
-        "cms_counts": _oracle_cms_counts(),
-        "zonal_bands": _oracle_zonal_bands(),
-        "band_index": _oracle_band_index(),
-        "zonal_rollup": _oracle_zonal_rollup(),
-        "overview_select": _oracle_overview_select(),
-        "within_distance": _oracle_within_distance(),
-        "crs_info": f"""
+def _oracle_crs_info() -> str:
+    return f"""
 WITH {_IMG_CTE}
 SELECT image_id, CAST(2 AS BIGINT) AS model_type, CAST(1 AS BIGINT) AS raster_type,
        CAST(4326 AS BIGINT) AS epsg, 'EPSG:4326' AS citation
 FROM dims WHERE k % 16 = 0
-""",
-        "footprint_poly": _oracle_footprint_poly(),
-        "window_read": _oracle_window_read(),
-        "sessionize": _oracle_sessionize(),
-        # independent method: the naive range-join + row_number formulation
-        # (the Spark side is the union + last(ignorenulls) backfill), so a
-        # backfill ordering bug fails the compare instead of being mirrored
-        "asof_join": f"""
+"""
+
+
+def _oracle_asof_join() -> str:
+    # independent method: the naive range-join + row_number formulation
+    # (the Spark side is the union + last(ignorenulls) backfill), so a
+    # backfill ordering bug fails the compare instead of being mirrored
+    return f"""
 WITH l AS (
   SELECT user_id, event_id, ts, value FROM events WHERE event_type = 'click'
 ),
@@ -8127,12 +7902,11 @@ SELECT CAST(user_id AS BIGINT) AS user_id, CAST(event_id AS BIGINT) AS event_id,
   CASE WHEN ok THEN CAST(view_value AS DOUBLE) END AS r_view_value,
   CASE WHEN ok THEN epoch_us(ts) - epoch_us(r_ts) END AS gap_us
 FROM best
-""",
-        "stateful_totals": _oracle_stateful_totals(),
-        "rasterize_cells": _oracle_rasterize_cells(),
-        "dissolve": _oracle_dissolve(),
-        "rasterize_tiles": _oracle_rasterize_tiles(),
-        "ifd_dump": f"""
+"""
+
+
+def _oracle_ifd_dump() -> str:
+    return f"""
 WITH {_IMG_CTE}
 SELECT image_id,
   CAST(19 + CASE WHEN v IN (2,4,7,11) THEN 4 ELSE 3 END
@@ -8143,15 +7917,21 @@ SELECT image_id,
             WHEN v = 7 THEN 32946 ELSE 1 END AS BIGINT) AS compression,
   CAST(2 AS BIGINT) AS n_geo
 FROM dims WHERE k % 4 = 0
-""",
-        "q1_pricing": f"""
+"""
+
+
+def _oracle_q1_pricing() -> str:
+    return f"""
 SELECT l_returnflag, l_linestatus,
   CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
   CAST(SUM({_Q1_CENTS}) AS BIGINT) AS sum_disc_cents,
   CAST(COUNT(*) AS BIGINT) AS count_order
 FROM lineitem GROUP BY 1, 2
-""",
-        "top_customers": f"""
+"""
+
+
+def _oracle_top_customers() -> str:
+    return f"""
 WITH rev AS (
   SELECT o_custkey, CAST(SUM({_PRICE_CENTS}) AS BIGINT) AS revenue_cents
   FROM orders GROUP BY 1
@@ -8165,24 +7945,23 @@ j AS (
 SELECT c_mktsegment, CAST(c_custkey AS BIGINT) AS c_custkey, revenue_cents,
        CAST(rn AS BIGINT) AS rnk
 FROM j WHERE rn <= 5
-""",
-        "events_hourly": _ORACLE_EVENTS_HOURLY,
-        # stream==batch: the streaming run's final table equals the batch
-        # rollup exactly (pinned by tests/test_streaming.py), so the batch
-        # oracle applies verbatim
-        "streaming_hourly": _ORACLE_EVENTS_HOURLY,
-        # pip_salted is a PHYSICAL variant of pip (salt spreads only the
-        # distribution, never the join key — results pinned identical by
-        # tests/test_spatial.py), so pip's oracle applies verbatim
-        "pip_salted": _oracle_pip(),
-        "patch_stats": _oracle_patch_stats(),
-        "phash_dedup": _oracle_phash_dedup(),
-        "cross_modal_dedup": _oracle_cross_modal(),
-        "zonal_quantiles": _oracle_zonal_quantiles(),
-        "corpus_clean": _oracle_corpus_clean(),
-        "band_histogram": _oracle_band_histogram(),
-        "repetition_filter": _oracle_repetition_filter(),
-        "text_features": f"""
+"""
+
+
+def _oracle_dedup_exact() -> str:
+    return f"""
+WITH {_DUP_CTE}
+SELECT md5(text) AS text_hash, CAST(COUNT(*) AS BIGINT) AS n_dups,
+       CAST(MIN(doc_id) AS BIGINT) AS keeper_id
+FROM docs GROUP BY 1
+"""
+
+
+def _oracle_text_features() -> str:
+    from aira_spark.functions import textfns as tf
+
+    eng = "duckdb"
+    return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
   CAST({tf.n_tokens('text', eng)} AS BIGINT) AS n_tokens,
   CAST({tf.n_bpe_tokens('text', eng)} AS BIGINT) AS n_bpe_tokens,
@@ -8190,8 +7969,14 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
   {tf.lang_guess('text', eng)} AS lang_guess,
   {tf.h64('text', eng)} AS fingerprint
 FROM documents
-""",
-        "fingerprints": f"""
+"""
+
+
+def _oracle_fingerprints() -> str:
+    from aira_spark.functions import textfns as tf
+
+    eng = "duckdb"
+    return f"""
 WITH g AS (
   SELECT doc_id, {tf.rolling_hash('text', eng)} AS doc_hash,
          {tf.kgram_hashes('text', 8, eng)} AS g
@@ -8200,20 +7985,18 @@ WITH g AS (
 SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(doc_hash AS BIGINT) AS doc_hash,
        CAST(unnest({tf.winnow_from_grams('g', 4, eng)}) AS BIGINT) AS fp
 FROM g
-""",
-        "dedup_exact": exact_dedup_oracle,
-        # identical to dedup_exact BY CONSTRUCTION (same binding): the
-        # streaming state machine's final emissions must equal the batch
-        # aggregate (min/count are order-independent) — pinned by the
-        # stream==batch pytest as well
-        "streaming_dedup": exact_dedup_oracle,
-        "dedup_minhash": _oracle_dedup_minhash(),
-        "dedup_clusters": _oracle_dedup_clusters(),
-        # composite: 'sig' arm is formula parity; 'pair' arm is brute force
-        # (no blocking) — the oracle intentionally uses a DIFFERENT method
-        # than the Spark pigeonhole-band path, so a blocking recall hole
-        # would fail the hash compare instead of being mirrored
-        "simhash": f"""
+"""
+
+
+def _oracle_simhash() -> str:
+    from aira_spark.functions import textfns as tf
+
+    eng = "duckdb"
+    # composite: 'sig' arm is formula parity; 'pair' arm is brute force
+    # (no blocking) — the oracle intentionally uses a DIFFERENT method
+    # than the Spark pigeonhole-band path, so a blocking recall hole
+    # would fail the hash compare instead of being mirrored
+    return f"""
 WITH {_DUP_CTE},
 s AS (SELECT doc_id, {tf.simhash(tf.words('text', eng), 64, eng)} AS sh FROM docs)
 SELECT 'sig' AS tag, CAST(doc_id AS BIGINT) AS a, CAST(NULL AS BIGINT) AS b,
@@ -8224,10 +8007,34 @@ SELECT 'pair' AS tag, CAST(a.doc_id AS BIGINT) AS a, CAST(b.doc_id AS BIGINT) AS
   CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS v
 FROM s a JOIN s b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.sh, b.sh)) <= 3
-""",
-        "ngram_jaccard": _oracle_ngram_jaccard(),
-        "ann_cosine_topk": _oracle_ann(),
-        "lsh_ann": _oracle_lsh_ann(),
-        "embedding_near_dup": _oracle_embedding_near_dup(),
-        "ivf_ann": _oracle_ivf_ann(),
+"""
+
+
+def oracle_sql() -> dict[str, str]:
+    # queries that share another query's oracle (every other query `x` is
+    # checked against its own `_oracle_x`)
+    shared = {
+        # streaming path == batch point_density bit-for-bit: same oracle
+        "streaming_density": _oracle_point_density,
+        "streaming_cover": lambda: _oracle_cell_cover(modulo=16),
+        # pip_salted is a PHYSICAL variant of pip (salt spreads only the
+        # distribution, never the join key — results pinned identical by
+        # tests/test_spatial.py), so pip's oracle applies verbatim
+        "pip_salted": _oracle_pip,
+        # identical to dedup_exact BY CONSTRUCTION (same binding): the
+        # streaming state machine's final emissions must equal the batch
+        # aggregate (min/count are order-independent) — pinned by the
+        # stream==batch pytest as well
+        "streaming_dedup": _oracle_dedup_exact,
+        # stream==batch: the streaming run's final table equals the batch
+        # rollup exactly (pinned by tests/test_streaming.py), so the batch
+        # oracle applies verbatim
+        "streaming_hourly": _oracle_events_hourly,
     }
+    out = {}
+    for name in queries():
+        build = shared.get(name) or globals().get(f"_oracle_{name}")
+        if build is None:
+            raise KeyError(f"query {name!r} has no oracle builder _oracle_{name}")
+        out[name] = build()
+    return out

@@ -365,6 +365,11 @@ def ivf_train_centroids(
     ok = np.fromiter(
         (x is not None and len(x) == dim for x in vv), dtype=bool, count=len(vv)
     )
+    if not ok.any():
+        raise ValueError(
+            f"ivf_train_centroids: none of the {len(vv)} sampled embeddings is a "
+            f"non-NULL {dim}-dim vector; cannot train centroids"
+        )
     sample = sample[ok]  # a NULL/wrong-dim sample row would crash vstack
     mat = np.vstack(sample["embedding"].to_numpy()).astype(np.float64)
     mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)

@@ -75,7 +75,10 @@ def decompress(data: bytes, compression: int) -> bytes:
     if compression == T.COMPRESSION_PACKBITS:
         return unpackbits(data)
     if compression in (T.COMPRESSION_DEFLATE, T.COMPRESSION_LEGACY_DEFLATE):
-        return zlib.decompress(data)
+        try:
+            return zlib.decompress(data)
+        except zlib.error as e:
+            raise TiffError(f"Corrupt Deflate chunk: {e}") from e
     raise TiffError(f"Unsupported compression {compression}")
 
 

@@ -22,6 +22,23 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# queries() entries the per-query pass does not time: cheap metadata/tail ops
+# and per-family duplicates stay out to keep the suite's burst exposure flat
+SKIP = frozenset(
+    {
+        "verify_invariants", "pyramid", "contours", "od_flows", "pmi", "terrain",
+        "vocab_census", "upsample", "knn_classify", "basins", "jsonl_ingest",
+        "mixture_weights", "quality_deciles", "cms_join_size", "triangles",
+        "bloom_probe", "scd2", "texture_stats", "basket_pairs", "streaming_enrich",
+        "conversion_lag", "wht_sig", "ratio_sort", "cell_cover", "streaming_hourly",
+        "streaming_cover", "streaming_dedup", "embedding_near_dup", "zonal_bands",
+        "fingerprints", "dedup_exact", "zonal_exact", "stateful_totals",
+        "sessionize", "events_hourly", "zonal_by_polygon", "ngram_jaccard",
+        "meta_decode", "overview_select", "crs_info", "ifd_dump", "top_customers",
+    }
+)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(
@@ -142,227 +159,14 @@ def main() -> None:
     )
     print(f"[bench] flagship (n_chunks, rows, n_px)={n_chunks_seen}", file=sys.stderr)
 
-    per_query = {
-        "tile_assign": lambda: em.q_tile_assign(spark, sf_dir).count(),
-        "zonal_stats": lambda: em.q_zonal_stats(spark, sf_dir).count(),
-        "pip": lambda: em.q_pip(spark, sf_dir).count(),
-        "knn": lambda: em.q_knn(spark, sf_dir).count(),
-        "rasterize_cells": lambda: em.q_rasterize_cells(spark, sf_dir).count(),
-        "dedup_minhash": lambda: em.q_dedup_minhash(spark, sf_dir).count(),
-        "ann_cosine_topk": lambda: em.q_ann_cosine_topk(spark, sf_dir).count(),
-        "text_features": lambda: em.q_text_features(spark, sf_dir).count(),
-        "q1_pricing": lambda: em.q_q1_pricing(spark, sf_dir).count(),
-        "within_distance": lambda: em.q_within_distance(spark, sf_dir).count(),
-        "footprint_poly": lambda: em.q_footprint_poly(spark, sf_dir).count(),
-        "window_read": lambda: em.q_window_read(spark, sf_dir).count(),
-        "zonal_rollup": lambda: em.q_zonal_rollup(spark, sf_dir).count(),
-        "dedup_clusters": lambda: em.q_dedup_clusters(spark, sf_dir).count(),
-        "band_index": lambda: em.q_band_index(spark, sf_dir).count(),
-        "pip_salted": lambda: em.q_pip_salted(spark, sf_dir).count(),
-        "simhash": lambda: em.q_simhash(spark, sf_dir).count(),
-        "asof_join": lambda: em.q_asof_join(spark, sf_dir).count(),
-        "phash_dedup": lambda: em.q_phash_dedup(spark, sf_dir).count(),
-        "repetition_filter": lambda: em.q_repetition_filter(spark, sf_dir).count(),
-        "lsh_ann": lambda: em.q_lsh_ann(spark, sf_dir).count(),
-        "ivf_ann": lambda: em.q_ivf_ann(spark, sf_dir).count(),
-        "rasterize_tiles": lambda: em.q_rasterize_tiles(spark, sf_dir).count(),
-        "band_histogram": lambda: em.q_band_histogram(spark, sf_dir).count(),
-        "zonal_quantiles": lambda: em.q_zonal_quantiles(spark, sf_dir).count(),
-        "patch_stats": lambda: em.q_patch_stats(spark, sf_dir).count(),
-        "corpus_clean": lambda: em.q_corpus_clean(spark, sf_dir).count(),
-        "mosaic": lambda: em.q_mosaic(spark, sf_dir).count(),
-        "resize_thumbs": lambda: em.q_resize_thumbs(spark, sf_dir).count(),
-        "cell_compact": lambda: em.q_cell_compact(spark, sf_dir).count(),
-        "raster_regions": lambda: em.q_raster_regions(spark, sf_dir).count(),
-        "decontaminate": lambda: em.q_decontaminate(spark, sf_dir).count(),
-        "pack_sequences": lambda: em.q_pack_sequences(spark, sf_dir).count(),
-        "semantic_dedup": lambda: em.q_semantic_dedup(spark, sf_dir).count(),
-        "corpus_sample": lambda: em.q_corpus_sample(spark, sf_dir).count(),
-        "bm25": lambda: em.q_bm25(spark, sf_dir).count(),
-        "focal_mean": lambda: em.q_focal_mean(spark, sf_dir).count(),
-        "approx_distinct": lambda: em.q_approx_distinct(spark, sf_dir).count(),
-        "classifier_scores": lambda: em.q_classifier_scores(spark, sf_dir).count(),
-        "augment_stats": lambda: em.q_augment_stats(spark, sf_dir).count(),
-        "streaming_hll": lambda: em.q_streaming_hll(spark, sf_dir).count(),
-        "cms_counts": lambda: em.q_cms_counts(spark, sf_dir).count(),
-        "focal_gradient": lambda: em.q_focal_gradient(spark, sf_dir).count(),
-        "inverted_index": lambda: em.q_inverted_index(spark, sf_dir).count(),
-        "png_decode": lambda: em.q_png_decode(spark, sf_dir).count(),
-        "jpeg_decode": lambda: em.q_jpeg_decode(spark, sf_dir).count(),
-        "warp": lambda: em.q_warp(spark, sf_dir).count(),
-        "audio_decode": lambda: em.q_audio_decode(spark, sf_dir).count(),
-        "video_decode": lambda: em.q_video_decode(spark, sf_dir).count(),
-        "bpe_tokens": lambda: em.q_bpe_tokens(spark, sf_dir).count(),
-        "kmeans": lambda: em.q_kmeans(spark, sf_dir).count(),
-        "lm_score": lambda: em.q_lm_score(spark, sf_dir).count(),
-        "cover_morph": lambda: em.q_cover_morph(spark, sf_dir).count(),
-        "poly_metrics": lambda: em.q_poly_metrics(spark, sf_dir).count(),
-        "point_density": lambda: em.q_point_density(spark, sf_dir).count(),
-        "grid_dbscan": lambda: em.q_grid_dbscan(spark, sf_dir).count(),
-        "hll_setops": lambda: em.q_hll_setops(spark, sf_dir).count(),
-        "streaming_density": lambda: em.q_streaming_density(spark, sf_dir).count(),
-        "cross_modal_dedup": lambda: em.q_cross_modal_dedup(spark, sf_dir).count(),
-        "dissolve": lambda: em.q_dissolve(spark, sf_dir).count(),
-        "idw": lambda: em.q_idw(spark, sf_dir).count(),
-        "streaming_cms": lambda: em.q_streaming_cms(spark, sf_dir).count(),
-        "pagerank": lambda: em.q_pagerank(spark, sf_dir).count(),
-        # round-4b additions (all bounded-exchange shapes; see SURVEY §8)
-        "tfidf": lambda: em.q_tfidf(spark, sf_dir).count(),
-        "equalize": lambda: em.q_equalize(spark, sf_dir).count(),
-        "bfs_hops": lambda: em.q_bfs_hops(spark, sf_dir).count(),
-        "retention": lambda: em.q_retention(spark, sf_dir).count(),
-        "focal_median": lambda: em.q_focal_median(spark, sf_dir).count(),
-        "wht": lambda: em.q_wht(spark, sf_dir).count(),
-        "fuzzy_join": lambda: em.q_fuzzy_join(spark, sf_dir).count(),
-        "change_census": lambda: em.q_change_census(spark, sf_dir).count(),
-        "transitions": lambda: em.q_transitions(spark, sf_dir).count(),
-        "flow_dir": lambda: em.q_flow_dir(spark, sf_dir).count(),
-        "skyline": lambda: em.q_skyline(spark, sf_dir).count(),
-        "coverage_gaps": lambda: em.q_coverage_gaps(spark, sf_dir).count(),
-        "containment": lambda: em.q_containment(spark, sf_dir).count(),
-        "cell_trends": lambda: em.q_cell_trends(spark, sf_dir).count(),
-        "exact_quantiles": lambda: em.q_exact_quantiles(spark, sf_dir).count(),
-        "cell_anomalies": lambda: em.q_cell_anomalies(spark, sf_dir).count(),
-        "sssp": lambda: em.q_sssp(spark, sf_dir).count(),
-        "interval_overlap": lambda: em.q_interval_overlap(spark, sf_dir).count(),
-        "source_quota": lambda: em.q_source_quota(spark, sf_dir).count(),
-        "line_dedup": lambda: em.q_line_dedup(spark, sf_dir).count(),
-        "hilbert_layout": lambda: em.q_hilbert_layout(spark, sf_dir).count(),
-        "streaming_sliding": lambda: em.q_streaming_sliding(spark, sf_dir).count(),
-        "convex_hulls": lambda: em.q_convex_hulls(spark, sf_dir).count(),
-        "adaptive_partitions": lambda: em.q_adaptive_partitions(spark, sf_dir).count(),
-        "segment_intersections": lambda: em.q_segment_intersections(spark, sf_dir).count(),
-        "route_proximity": lambda: em.q_route_proximity(spark, sf_dir).count(),
-        "rolling_activity": lambda: em.q_rolling_activity(spark, sf_dir).count(),
-        "event_pivot": lambda: em.q_event_pivot(spark, sf_dir).count(),
-        "sales_rollup": lambda: em.q_sales_rollup(spark, sf_dir).count(),
-        # round-4c/4d additions (bounded-exchange shapes; see SURVEY §8).
-        # Cheap metadata/tail ops and per-family duplicates stay out to keep
-        # the suite's burst exposure flat.
-        "autocorr": lambda: em.q_autocorr(spark, sf_dir).count(),
-        "hotspots": lambda: em.q_hotspots(spark, sf_dir).count(),
-        "box_filter": lambda: em.q_box_filter(spark, sf_dir).count(),
-        "flow_acc": lambda: em.q_flow_acc(spark, sf_dir).count(),
-        "k_core": lambda: em.q_k_core(spark, sf_dir).count(),
-        "hillshade": lambda: em.q_hillshade(spark, sf_dir).count(),
-        "proximity": lambda: em.q_proximity(spark, sf_dir).count(),
-        "dsir_scores": lambda: em.q_dsir_scores(spark, sf_dir).count(),
-        "map_match": lambda: em.q_map_match(spark, sf_dir).count(),
-        "hist_match": lambda: em.q_hist_match(spark, sf_dir).count(),
-        "otsu": lambda: em.q_otsu(spark, sf_dir).count(),
-        "viewshed": lambda: em.q_viewshed(spark, sf_dir).count(),
-        "hausdorff": lambda: em.q_hausdorff(spark, sf_dir).count(),
-        "moments": lambda: em.q_moments(spark, sf_dir).count(),
-        "trajectory_lengths": lambda: em.q_trajectory_lengths(spark, sf_dir).count(),
-        "sorted_neighborhood": lambda: em.q_sorted_neighborhood(spark, sf_dir).count(),
-        "rank_fusion": lambda: em.q_rank_fusion(spark, sf_dir).count(),
-        "profile": lambda: em.q_profile(spark, sf_dir).count(),
-        "pq_ann": lambda: em.q_pq_ann(spark, sf_dir).count(),
-        "transcode": lambda: em.q_transcode(spark, sf_dir).count(),
-        "stream_stream_join": lambda: em.q_stream_stream_join(spark, sf_dir).count(),
-        "rfm": lambda: em.q_rfm(spark, sf_dir).count(),
-        "funnel": lambda: em.q_funnel(spark, sf_dir).count(),
-        "gram_matrix": lambda: em.q_gram_matrix(spark, sf_dir).count(),
-        "morton_ranges": lambda: em.q_morton_ranges(spark, sf_dir).count(),
-        "occupancy": lambda: em.q_occupancy(spark, sf_dir).count(),
-        "co_location": lambda: em.q_co_location(spark, sf_dir).count(),
-        "stay_points": lambda: em.q_stay_points(spark, sf_dir).count(),
-        "areal_interp": lambda: em.q_areal_interp(spark, sf_dir).count(),
-        "xyz_tiles": lambda: em.q_xyz_tiles(spark, sf_dir).count(),
-        "zonal_majority": lambda: em.q_zonal_majority(spark, sf_dir).count(),
-        "dp_simplify": lambda: em.q_dp_simplify(spark, sf_dir).count(),
-        "band_corr": lambda: em.q_band_corr(spark, sf_dir).count(),
-        "heading_census": lambda: em.q_heading_census(spark, sf_dir).count(),
-        "ngram_novelty": lambda: em.q_ngram_novelty(spark, sf_dir).count(),
-        "ann_recall": lambda: em.q_ann_recall(spark, sf_dir).count(),
-        "stretch": lambda: em.q_stretch(spark, sf_dir).count(),
-        "strahler": lambda: em.q_strahler(spark, sf_dir).count(),
-        "mrl_recall": lambda: em.q_mrl_recall(spark, sf_dir).count(),
-        "link_pred": lambda: em.q_link_pred(spark, sf_dir).count(),
-        "dither": lambda: em.q_dither(spark, sf_dir).count(),
-        "geohash": lambda: em.q_geohash(spark, sf_dir).count(),
-        "mosaic_blend": lambda: em.q_mosaic_blend(spark, sf_dir).count(),
-        "gap_fill": lambda: em.q_gap_fill(spark, sf_dir).count(),
-        "pii_scrub": lambda: em.q_pii_scrub(spark, sf_dir).count(),
-        "heavy_hitters": lambda: em.q_heavy_hitters(spark, sf_dir).count(),
-        "twa": lambda: em.q_twa(spark, sf_dir).count(),
-        "rgb_luma": lambda: em.q_rgb_luma(spark, sf_dir).count(),
-        "allpairs_cosine": lambda: em.q_allpairs_cosine(spark, sf_dir).count(),
-        "cusum": lambda: em.q_cusum(spark, sf_dir).count(),
-        "itemsets3": lambda: em.q_itemsets3(spark, sf_dir).count(),
-        "template_match": lambda: em.q_template_match(spark, sf_dir).count(),
-        "convoy": lambda: em.q_convoy(spark, sf_dir).count(),
-        "ripley_k": lambda: em.q_ripley_k(spark, sf_dir).count(),
-        "theilsen": lambda: em.q_theilsen(spark, sf_dir).count(),
-        "ks_drift": lambda: em.q_ks_drift(spark, sf_dir).count(),
-        "joincount": lambda: em.q_joincount(spark, sf_dir).count(),
-        "variogram": lambda: em.q_variogram(spark, sf_dir).count(),
-        "qa_flags": lambda: em.q_qa_flags(spark, sf_dir).count(),
-        "emd_drift": lambda: em.q_emd_drift(spark, sf_dir).count(),
-        "simpson": lambda: em.q_simpson(spark, sf_dir).count(),
-        "gini": lambda: em.q_gini(spark, sf_dir).count(),
-        "kendall": lambda: em.q_kendall(spark, sf_dir).count(),
-        "mann_kendall": lambda: em.q_mann_kendall(spark, sf_dir).count(),
-        "hits": lambda: em.q_hits(spark, sf_dir).count(),
-        "acf": lambda: em.q_acf(spark, sf_dir).count(),
-        "track_raster": lambda: em.q_track_raster(spark, sf_dir).count(),
-        "rle_census": lambda: em.q_rle_census(spark, sf_dir).count(),
-        "emerging_hotspots": lambda: em.q_emerging_hotspots(spark, sf_dir).count(),
-        "std_ellipse": lambda: em.q_std_ellipse(spark, sf_dir).count(),
-        "benford": lambda: em.q_benford(spark, sf_dir).count(),
-        "mwu_drift": lambda: em.q_mwu_drift(spark, sf_dir).count(),
-        "lisa": lambda: em.q_lisa(spark, sf_dir).count(),
-        "chi2": lambda: em.q_chi2(spark, sf_dir).count(),
-        "flesch": lambda: em.q_flesch(spark, sf_dir).count(),
-        "gyration": lambda: em.q_gyration(spark, sf_dir).count(),
-        "focal_majority": lambda: em.q_focal_majority(spark, sf_dir).count(),
-        "ccf": lambda: em.q_ccf(spark, sf_dir).count(),
-        "hull_diameter": lambda: em.q_hull_diameter(spark, sf_dir).count(),
-        "dist_transform": lambda: em.q_dist_transform(spark, sf_dir).count(),
-        "harris": lambda: em.q_harris(spark, sf_dir).count(),
-        "patch_entropy": lambda: em.q_patch_entropy(spark, sf_dir).count(),
-        "kde": lambda: em.q_kde(spark, sf_dir).count(),
-        "label_prop": lambda: em.q_label_prop(spark, sf_dir).count(),
-        "ssim": lambda: em.q_ssim(spark, sf_dir).count(),
-        "pca": lambda: em.q_pca(spark, sf_dir).count(),
-        "hog": lambda: em.q_hog(spark, sf_dir).count(),
-        "textrank": lambda: em.q_textrank(spark, sf_dir).count(),
-        "mad_outliers": lambda: em.q_mad_outliers(spark, sf_dir).count(),
-        "lbp": lambda: em.q_lbp(spark, sf_dir).count(),
-        "dispersion": lambda: em.q_dispersion(spark, sf_dir).count(),
-        "adamic_adar": lambda: em.q_adamic_adar(spark, sf_dir).count(),
-        "tophat": lambda: em.q_tophat(spark, sf_dir).count(),
-        "exact_substr": lambda: em.q_exact_substr(spark, sf_dir).count(),
-        "spearman": lambda: em.q_spearman(spark, sf_dir).count(),
-        "hough": lambda: em.q_hough(spark, sf_dir).count(),
-        "modularity": lambda: em.q_modularity(spark, sf_dir).count(),
-        "clustering": lambda: em.q_clustering(spark, sf_dir).count(),
-        "voronoi": lambda: em.q_voronoi(spark, sf_dir).count(),
-        "runs_test": lambda: em.q_runs_test(spark, sf_dir).count(),
-        "canny": lambda: em.q_canny(spark, sf_dir).count(),
-        "lacunarity": lambda: em.q_lacunarity(spark, sf_dir).count(),
-        "obb": lambda: em.q_obb(spark, sf_dir).count(),
-        "perm_entropy": lambda: em.q_perm_entropy(spark, sf_dir).count(),
-        "cross_k": lambda: em.q_cross_k(spark, sf_dir).count(),
-        "skeleton": lambda: em.q_skeleton(spark, sf_dir).count(),
-        "glcm": lambda: em.q_glcm(spark, sf_dir).count(),
-        "silhouette": lambda: em.q_silhouette(spark, sf_dir).count(),
-        "euler": lambda: em.q_euler(spark, sf_dir).count(),
-        "dow_season": lambda: em.q_dow_season(spark, sf_dir).count(),
-        "prop_test": lambda: em.q_prop_test(spark, sf_dir).count(),
-        "nearest_edge": lambda: em.q_nearest_edge(spark, sf_dir).count(),
-        "kappa": lambda: em.q_kappa(spark, sf_dir).count(),
-        "bilateral": lambda: em.q_bilateral(spark, sf_dir).count(),
-    }
     # SPARK_GRAFT_BENCH_QUERIES: comma list to restrict the per-query pass,
     # or "none" for pipeline-only runs (the scaling sweeps time the headline
     # at many widths; rerunning all 27 queries at local[1] adds no signal)
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    selected = (
-        per_query
-        if only is None
-        else {n: f for n, f in per_query.items() if n in only.split(",")}
-    )
+    roster = em.queries()
+    selected = [
+        n for n in roster if n not in SKIP and (only is None or n in only.split(","))
+    ]
     # bench-only cost trims for the entries whose wall time is dominated by
     # fixed synchronous overhead, not data (pagerank: 10 synchronous rounds;
     # streaming sketches: per-microbatch session overhead). The ORACLE and
@@ -374,15 +178,11 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_SEG_MOD", "60")
     os.environ.setdefault("SPARK_GRAFT_HAUS_MOD", "5")
     os.environ.setdefault("SPARK_GRAFT_ALLPAIRS_MOD", "3")
-    # (KCORE_ROUNDS trim retired: k_core now early-exits at the PROVEN
-    # fixpoint — exact at full rounds, so the bench runs the real query)
     os.environ.setdefault("SPARK_GRAFT_LP_ROUNDS", "4")
-    # (PCA_ROUNDS trim retired: the power iteration now runs driver-side
-    # on the bounded dim^2 moment state — full 8 rounds cost ~nothing)
     os.environ.setdefault("SPARK_GRAFT_TEXTRANK_ROUNDS", "4")
     os.environ.setdefault("SPARK_GRAFT_STREAM_BATCHES", "2")
-    for name, fn in selected.items():
-        timed(name, fn)
+    for name in selected:
+        timed(name, lambda: roster[name](spark, sf_dir).count())
 
     # ---- partition-pruning payoff: same window read over a cell-partitioned
     # layout (one-time materialization, synth-excluded like the base table) ----
@@ -410,8 +210,8 @@ def main() -> None:
     # queries; the full map is ~7 KB of JSON). The stdout contract line keeps
     # only as many entries as fit the driver's bounded tail-capture window —
     # BENCH_r04 recorded `parsed: null` because the full map pushed the line
-    # past that window, so the line is now trimmed newest-entries-first to a
-    # conservative 1900 chars (round-3's parsed line was 1393).
+    # past that window, so the line is now trimmed last-timed-entries-first to
+    # a conservative 1900 chars (round-3's parsed line was 1393).
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH",
@@ -460,7 +260,9 @@ def main() -> None:
             full_path, os.path.dirname(os.path.abspath(__file__))
         )
         while len(line) > max_line and qkeys:
-            qkeys.pop()  # drop newest-added entries first; headline set survives
+            # drop the last-timed entries first: the pipeline timings and the
+            # head of queries() survive, the roster tail is in the side file
+            qkeys.pop()
             out["queries"] = {k: timings[k] for k in qkeys}
             out["queries_truncated"] = len(timings) - len(qkeys)
             line = json.dumps(out)

@@ -16,9 +16,9 @@ RES = 7
 N_VALID = 12  # one image per synthetic variant: every layout/codec/band count
 
 
-def _corrupt_chunk() -> bytes:
-    """A valid header whose first (PackBits) chunk is garbage."""
-    buf = bytearray(synthesize_row(3)[1])
+def _corrupt_chunk(variant: int) -> bytes:
+    """A valid header whose first chunk is garbage."""
+    buf = bytearray(synthesize_row(variant)[1])
     m = decode_metadata(bytes(buf))
     o, n = m["offsets"][0], m["byte_counts"][0]
     buf[o : o + n] = b"\xff" * n
@@ -27,7 +27,8 @@ def _corrupt_chunk() -> bytes:
 
 VALID = [synthesize_row(k)[:2] for k in range(N_VALID)]
 BAD_HEADER = ("bad_header", b"not a tiff at all")
-BAD_CHUNK = ("bad_chunk", _corrupt_chunk())
+BAD_CHUNK = ("bad_chunk", _corrupt_chunk(3))  # PackBits
+BAD_DEFLATE = ("bad_deflate", _corrupt_chunk(5))
 
 
 def _zonal_exact(images):
@@ -93,7 +94,8 @@ def test_undecodable_images_drop_without_touching_other_rows(spark, name):
     op = OPERATORS[name]
     want = _rows(op(_frame(spark, VALID)))
     assert want, f"{name}: no output over the valid images"
-    got = _rows(op(_frame(spark, [*VALID[:4], BAD_HEADER, *VALID[4:8], BAD_CHUNK, *VALID[8:]])))
+    bad = [*VALID[:4], BAD_HEADER, *VALID[4:8], BAD_CHUNK, BAD_DEFLATE, *VALID[8:]]
+    got = _rows(op(_frame(spark, bad)))
     assert got == want
 
 

@@ -381,6 +381,21 @@ def test_lsh_and_ivf_survive_null_embeddings(spark):
     assert {r.vec_id for r in got.collect()} == {1, 3}
 
 
+def test_ivf_train_rejects_sample_without_usable_embeddings(spark):
+    """A sample of only NULL / wrong-dimension embeddings raises a
+    ValueError that names the cause instead of failing inside np.vstack."""
+    from aira_spark.operators.similarity import ivf_train_centroids
+
+    rows = [(1, None), (2, [1.0, 2.0, 3.0]), (3, None)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="none of the 3 sampled embeddings"):
+        ivf_train_centroids(emb, n_centroids=2, dim=64)
+    # one usable row is enough to train
+    rows.append((4, [float(i % 3) for i in range(64)]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assert ivf_train_centroids(emb, n_centroids=2, dim=64).shape == (1, 64)
+
+
 def test_hamming_pairs_accepts_zero_budget(spark):
     """max_hamming=0 with 64-bit hashes (exact-duplicate banding) previously
     failed at plan build: the single-band all-ones mask overflowed LongType."""

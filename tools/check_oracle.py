@@ -97,9 +97,6 @@ def main(argv: list[str]) -> int:
             srows = [tuple(r) for r in sdf.collect()]
             scols = sdf.columns
             t_spark = time.time() - t0
-            if name not in oracles:
-                print(f"{name:20s} rows-only: {len(srows)} rows  ({t_spark:.1f}s)")
-                continue
             t1 = time.time()
             res = con.sql(oracles[name])
             dcols = [d[0] for d in res.description]
