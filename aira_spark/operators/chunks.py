@@ -9,7 +9,7 @@ chunks. Stays entirely inside whole-stage codegen; no Python in the loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES, cover_rect
@@ -32,25 +32,37 @@ def with_meta_pages(images: DataFrame) -> DataFrame:
     ).drop("_pages")
 
 
-def chunks_df(with_meta_df: DataFrame) -> DataFrame:
-    """One row per (image, chunk): origin/size/offset/nbytes.
+def chunk_rect(i: Column, m: Column) -> tuple[Column, Column, Column, Column]:
+    """(origin_x, origin_y, size_x, size_y) of chunk index `i` of the image
+    whose `meta` struct is `m`.
 
     div_ceil(a, d) is expressed as floor((a + d - 1) / d) in exact integer
     arithmetic (metadata.rs:190-198); sizes clip to >= 0 so planar overflow
     chunks degenerate to zero-size rectangles (SURVEY.md §1.1.4).
     """
-    m = F.col("meta")
-    df = with_meta_df.filter(m["error"].isNull())
     nx = F.floor((m["width"] + m["chunk_w"] - F.lit(1)) / m["chunk_w"]).cast("long")
-    df = df.withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), m["n_chunks"] - 1)))
-    i = F.col("chunk_idx").cast("long")
+    i = i.cast("long")
     ox = (i % nx) * m["chunk_w"]
     oy = F.floor(i / nx) * m["chunk_h"]
     return (
+        ox,
+        oy,
+        F.greatest(F.lit(0), F.least(m["chunk_w"], m["width"] - ox)),
+        F.greatest(F.lit(0), F.least(m["chunk_h"], m["height"] - oy)),
+    )
+
+
+def chunks_df(with_meta_df: DataFrame) -> DataFrame:
+    """One row per (image, chunk): origin/size/offset/nbytes."""
+    m = F.col("meta")
+    df = with_meta_df.filter(m["error"].isNull())
+    df = df.withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), m["n_chunks"] - 1)))
+    ox, oy, size_x, size_y = chunk_rect(F.col("chunk_idx"), m)
+    return (
         df.withColumn("origin_x", ox)
         .withColumn("origin_y", oy)
-        .withColumn("size_x", F.greatest(F.lit(0), F.least(m["chunk_w"], m["width"] - ox)))
-        .withColumn("size_y", F.greatest(F.lit(0), F.least(m["chunk_h"], m["height"] - oy)))
+        .withColumn("size_x", size_x)
+        .withColumn("size_y", size_y)
         .withColumn("offset", F.element_at(m["offsets"], F.col("chunk_idx") + 1))
         .withColumn("nbytes", F.element_at(m["byte_counts"], F.col("chunk_idx") + 1))
     )

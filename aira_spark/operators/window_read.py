@@ -4,16 +4,16 @@ The reference exposes chunk-level random access — `Metadata::chunks()` +
 `Seek` lets a caller read just the chunks intersecting a requested window
 (/root/reference/crates/aira-tiff/src/metadata.rs:138-144,246-255; SURVEY.md
 §4 "chunk-level random access / windowed reads"). In Spark that becomes
-*plan-level pruning*: the chunk grid is enumerated as pure column arithmetic
-(operators/chunks.py), the world-space window predicate is a JVM filter over
-the derived chunk rectangles, and only the surviving (image, chunk) rows are
-sent to the Arrow decode UDF — so the expensive Python stage touches exactly
-the bytes a windowed read would seek to.
+*plan-level pruning*: the chunk rectangles are pure column arithmetic
+(operators/chunks.py), the world-space window predicate filters each image's
+chunk ids in the JVM, and only images with a selected chunk are sent to the
+Arrow decode UDF, each once with its selected ids — so the expensive Python
+stage decodes exactly the chunks a windowed read would seek to.
 
 At 100 TB scale this is the difference between decoding the full archive and
-decoding the window: the filter is pushed below the decode (the decode UDF
-sees only selected chunk rows), and with the images table partitioned by cell
-range the scan itself partition-prunes on the same predicate.
+decoding the window: the selection runs below the decode (the decode UDF sees
+only images the window touches), and with the images table partitioned by
+cell range the scan itself partition-prunes on the same predicate.
 """
 
 from __future__ import annotations
@@ -21,11 +21,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from .chunks import chunks_df, footprint
+from .chunks import chunk_rect, footprint
 
 WINDOW_READ_SCHEMA = Ty.StructType(
     [
@@ -37,60 +37,25 @@ WINDOW_READ_SCHEMA = Ty.StructType(
 )
 
 
-def window_chunks(
-    with_meta_df: DataFrame, x0: float, y0: float, x1: float, y1: float
-) -> DataFrame:
-    """One row per (image, chunk) whose world-space rectangle intersects the
-    window [x0, x1) x [y0, y1). Pure column arithmetic — no decode.
-
-    Only band-0 chunks are kept (chunk_idx < expected_chunks): for planar
-    files the extra per-plane chunk sets cover the same footprint, and the
-    window semantics are defined on the image grid, not the sample planes.
-    """
-    m = F.col("meta")
-    ch = chunks_df(footprint(with_meta_df))
-    cxmin = F.col("fp_xmin") + F.col("origin_x").cast("double") * m["scale_x"]
-    cxmax = F.col("fp_xmin") + (F.col("origin_x") + F.col("size_x")).cast("double") * m["scale_x"]
-    cymax = F.col("fp_ymax") - F.col("origin_y").cast("double") * m["scale_y"]
-    cymin = F.col("fp_ymax") - (F.col("origin_y") + F.col("size_y")).cast("double") * m["scale_y"]
-    return (
-        ch.filter(
-            (F.col("size_x") > 0)
-            & (F.col("size_y") > 0)
-            & (F.col("chunk_idx") < m["expected_chunks"])
-        )
-        .withColumn("cxmin", cxmin)
-        .withColumn("cxmax", cxmax)
-        .withColumn("cymin", cymin)
-        .withColumn("cymax", cymax)
-        .filter(
-            (F.col("cxmin") < F.lit(x1))
-            & (F.col("cxmax") > F.lit(x0))
-            & (F.col("cymin") < F.lit(y1))
-            & (F.col("cymax") > F.lit(y0))
-        )
-    )
-
-
 def _decode_selected_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(image_id, bytes, chunk_idx, size_x, size_y) -> per-chunk band-0 pixel
-    count + sum. Metadata is decoded once per image within the batch; each
-    selected chunk's payload is sliced and decoded independently (the Spark
-    analog of seek-to-chunk)."""
+    """(image_id, bytes, chunk_ids) -> per-chunk band-0 pixel count + sum.
+    One row per image: its metadata is decoded once and each selected chunk's
+    payload is sliced and decoded independently (the Spark analog of
+    seek-to-chunk)."""
     from ..tiff.meta import TiffError, decode_metadata, pixel_chunks
     from ..tiff.pixels import decode_chunk
 
     for pdf in batches:
         out: list[tuple] = []
-        for image_id, grp in pdf.groupby("image_id", sort=False):
-            buf = bytes(grp["bytes"].iloc[0])
+        for image_id, raw, ids in zip(pdf["image_id"], pdf["bytes"], pdf["chunk_ids"]):
+            buf = bytes(raw)
             # buffer per image so a mid-image failure drops the WHOLE image
             # (dead-letter contract: all-or-nothing, never a partial result)
             img_rows: list[tuple] = []
             try:
                 m = decode_metadata(buf)
                 chunk_info = {c["chunk_idx"]: c for c in pixel_chunks(m)}
-                for idx in grp["chunk_idx"]:
+                for idx in ids:
                     c = chunk_info.get(int(idx))
                     if c is None:  # driver/executor meta disagree (truncated)
                         raise TiffError(f"chunk {int(idx)} missing at decode")
@@ -139,10 +104,34 @@ def window_read(
 ) -> DataFrame:
     """Decode only the window's chunks: (image_id, chunk_idx, n_px, sum_px).
 
-    The decode UDF runs strictly after the window filter, so Python sees only
-    the selected (image, chunk) rows.
+    A chunk is selected when its world-space rectangle overlaps the open
+    window (x0, x1) x (y0, y1): the tests are strict `<`/`>`, so a chunk that
+    only touches a window edge is not selected. Only band-0 chunks count (chunk_idx <
+    expected_chunks): for planar files the extra per-plane chunk sets cover
+    the same footprint, and the window semantics are defined on the image
+    grid, not the sample planes.
+
+    The selection is pure JVM column arithmetic over one row per image: the
+    selected chunk ids become an array column, images with none are dropped,
+    and the decode UDF receives each remaining image's bytes once.
     """
-    sel = window_chunks(with_meta_df, x0, y0, x1, y1).select(
-        "image_id", "bytes", "chunk_idx", "size_x", "size_y"
+    m = F.col("meta")
+
+    def hit(i: Column) -> Column:
+        ox, oy, size_x, size_y = chunk_rect(i, m)
+        return (
+            (F.col("fp_xmin") + ox.cast("double") * m["scale_x"] < F.lit(x1))
+            & (F.col("fp_xmin") + (ox + size_x).cast("double") * m["scale_x"] > F.lit(x0))
+            & (F.col("fp_ymax") - (oy + size_y).cast("double") * m["scale_y"] < F.lit(y1))
+            & (F.col("fp_ymax") - oy.cast("double") * m["scale_y"] > F.lit(y0))
+        )
+
+    # decode_metadata guarantees 1 <= expected_chunks <= n_chunks, and every
+    # band-0 chunk of the grid has a non-empty rectangle
+    ids = F.filter(F.sequence(F.lit(0), m["expected_chunks"] - 1), hit)
+    sel = (
+        footprint(with_meta_df)
+        .select("image_id", "bytes", ids.alias("chunk_ids"))
+        .filter(F.size("chunk_ids") > 0)
     )
     return sel.mapInPandas(_decode_selected_batches, schema=WINDOW_READ_SCHEMA)

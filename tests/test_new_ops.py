@@ -144,25 +144,19 @@ def test_rect_intersects_ring_cases(spark):
 # ---------------------------------------------------------------- window read
 
 
-def test_window_read_matches_serial(spark, images):
+def _serial_window(rows, x0, y0, x1, y1) -> dict:
+    """Serial mirror of window_read over (image_id, bytes) rows: every band-0
+    chunk whose world rectangle meets the window, from a full decode."""
     from aira_spark.functions.udfs import _decode_full
-    from aira_spark.operators.window_read import window_read
-    from aira_spark.tiff.meta import decode_metadata, pixel_chunks
+    from aira_spark.tiff.meta import decode_metadata, geotransform, pixel_chunks
 
-    x0, y0, x1, y1 = -60.0, -30.0, 60.0, 30.0
-    got = {
-        (r.image_id, r.chunk_idx): (r.n_px, r.sum_px)
-        for r in window_read(with_meta(images), x0, y0, x1, y1).collect()
-    }
     expected = {}
-    for rec in images.select("image_id", "bytes").collect():
-        buf = bytes(rec.bytes)
+    for image_id, raw in rows:
+        buf = bytes(raw)
         m = decode_metadata(buf)
         _, px = _decode_full(buf)
-        scale = derive_params(int(rec.image_id.removeprefix("img")))
-        fx, sy_ = scale["corner_x"], scale["scale_y"]
-        fy_top = scale["corner_y"] + scale["h"] * sy_
-        sx_ = scale["scale_x"]
+        (sx_, sy_, *_), (ti, tj, _, tx, ty, *_) = geotransform(m)
+        fx, fy_top = tx - ti * sx_, ty + tj * sy_
         for c in pixel_chunks(m):
             if c["size_x"] == 0 or c["size_y"] == 0:
                 continue
@@ -179,9 +173,103 @@ def test_window_read_matches_serial(spark, images):
                 c["origin_x"] : c["origin_x"] + c["size_x"],
                 0,
             ].astype("int64")
-            expected[(rec.image_id, c["chunk_idx"])] = (blk.size, int(blk.sum()))
+            expected[(image_id, c["chunk_idx"])] = (blk.size, int(blk.sum()))
+    return expected
+
+
+def _window_got(df, x0, y0, x1, y1) -> dict:
+    from aira_spark.operators.window_read import window_read
+
+    return {
+        (r.image_id, r.chunk_idx): (r.n_px, r.sum_px)
+        for r in window_read(with_meta(df), x0, y0, x1, y1).collect()
+    }
+
+
+def test_window_read_matches_serial(spark, images):
+    win = (-60.0, -30.0, 60.0, 30.0)
+    got = _window_got(images, *win)
+    rows = [(r.image_id, r.bytes) for r in images.select("image_id", "bytes").collect()]
+    expected = _serial_window(rows, *win)
     assert got == expected
     assert len(expected) > 0
+
+
+def _chunk_rects(k: int):
+    """(image row, metadata, {chunk_idx: (xmin, ymin, xmax, ymax)}) of
+    synthetic image k, with the world rectangles computed as window_read does."""
+    from aira_spark.sources.images import synthesize_row
+    from aira_spark.tiff.meta import decode_metadata, geotransform, pixel_chunks
+
+    row = synthesize_row(k)
+    m = decode_metadata(row[1])
+    (sx, sy, *_), (ti, tj, _, tx, ty, *_) = geotransform(m)
+    fx, fy = tx - ti * sx, ty + tj * sy
+    rects = {
+        c["chunk_idx"]: (
+            fx + float(c["origin_x"]) * sx,
+            fy - float(c["origin_y"] + c["size_y"]) * sy,
+            fx + float(c["origin_x"] + c["size_x"]) * sx,
+            fy - float(c["origin_y"]) * sy,
+        )
+        for c in pixel_chunks(m)
+    }
+    return row, m, rects
+
+
+def _one_image_df(spark, row):
+    from aira_spark.sources.images import IMAGE_SCHEMA
+
+    return spark.createDataFrame([row], IMAGE_SCHEMA)
+
+
+def test_window_read_strict_subset_of_one_image(spark):
+    """A window inside one middle tile selects that tile and nothing else."""
+    row, m, rects = _chunk_rects(4)  # tiled, 3 x 3 chunks at IMG_SCALE=1
+    mid = m["expected_chunks"] // 2
+    xmin, ymin, xmax, ymax = rects[mid]
+    dx, dy = (xmax - xmin) / 4, (ymax - ymin) / 4
+    win = (xmin + dx, ymin + dy, xmax - dx, ymax - dy)
+    got = _window_got(_one_image_df(spark, row), *win)
+    assert set(got) == {(row[0], mid)}
+    assert m["expected_chunks"] > 1
+    assert got == _serial_window([row[:2]], *win)
+
+
+def test_window_read_edges_on_chunk_edges_are_strict(spark):
+    """A window edge lying exactly on a chunk edge does not select the chunk
+    on the far side of it: the intersection test is strict (`<`/`>`)."""
+    row, m, rects = _chunk_rects(4)
+    nx = -(-m["width"] // m["chunk_w"])
+    c = 0  # top-left tile; its right neighbour is 1, the one below it is nx
+    xmin, ymin, xmax, ymax = rects[c]
+    dy = (ymax - ymin) / 4
+    df = _one_image_df(spark, row)
+    # x0 on the tile's right edge: only the right neighbour is selected
+    win = (xmax, ymin + dy, xmax + (xmax - xmin) / 2, ymax - dy)
+    got = _window_got(df, *win)
+    assert set(got) == {(row[0], c + 1)}
+    assert got == _serial_window([row[:2]], *win)
+    # y1 on the tile's bottom edge: only the tile below is selected
+    dx = (xmax - xmin) / 4
+    win = (xmin + dx, ymin - (ymax - ymin) / 2, xmax - dx, ymin)
+    got = _window_got(df, *win)
+    assert set(got) == {(row[0], c + nx)}
+    assert got == _serial_window([row[:2]], *win)
+
+
+@pytest.mark.parametrize("k", [9, 10])
+def test_window_read_planar_selects_band0_chunks_only(spark, k):
+    """Planar multi-plane images carry one chunk set per plane over the same
+    footprint; a window over the whole image selects the band-0 set only."""
+    row, m, rects = _chunk_rects(k)
+    assert m["planar"] == 2 and len(rects) > m["expected_chunks"]
+    xs = [v for r in rects.values() for v in (r[0], r[2])]
+    ys = [v for r in rects.values() for v in (r[1], r[3])]
+    win = (min(xs) - 1.0, min(ys) - 1.0, max(xs) + 1.0, max(ys) + 1.0)
+    got = _window_got(_one_image_df(spark, row), *win)
+    assert {i for _, i in got} == set(range(m["expected_chunks"]))
+    assert got == _serial_window([row[:2]], *win)
 
 
 def test_cell_partitioned_layout_prunes(spark, images, tmp_path_factory):
@@ -233,6 +321,9 @@ def test_window_filter_precedes_decode(spark, images):
     i_udf = plan.index("MapInPandas")
     i_filter = plan.index("< 10.0")
     assert i_udf < i_filter
+    # chunks are selected per image as an array column: no exploded
+    # (image, chunk) rows, each carrying the image's bytes, reach the UDF
+    assert "Generate" not in plan[i_udf:]
 
 
 def _hav_km(lat1, lon1, lat2, lon2):

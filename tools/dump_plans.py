@@ -39,8 +39,9 @@ def main() -> None:
                         "shuffle (final cell agg)"),
         ("within_distance", "broadcast closed disk-bbox cover; planar + "
                             "geodesic arms in one plan, filters as projections"),
-        ("window_read", "world-window filter BELOW MapInPandas: the decode UDF "
-                        "sees only selected chunks"),
+        ("window_read", "world-window chunk selection BELOW MapInPandas, one "
+                        "row per image (no Generate): the decode UDF gets each "
+                        "touched image's bytes once, with its selected chunk ids"),
         ("zonal_rollup", "cell_parent bit arithmetic on partials; single "
                          "shuffle to the coarse grid"),
         ("dedup_minhash", "band buckets shuffle doc-ids only, never text"),
