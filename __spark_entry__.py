@@ -1239,9 +1239,7 @@ def q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = salted.repartition(F.col("cell"), F.col("salt")).join(
         F.broadcast(poly), ["cell", "salt"]
     )
-    return cand.filter(point_in_ring(F.col("x"), F.col("y"), F.col("ring"))).select(
-        "point_id", "poly_id"
-    )
+    return cand.where(point_in_ring("x", "y", "ring")).select("point_id", "poly_id")
 
 
 def q_streaming_cover(spark: SparkSession, sf_dir: str) -> DataFrame:

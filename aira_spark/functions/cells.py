@@ -8,8 +8,10 @@ non-negative int64:
 
 This keeps parent/child/k-ring arithmetic to pure integer ops, so every
 operation exists in three equivalent forms: numpy (serial oracle library),
-Spark Column expressions (JVM-side, whole-stage-codegen friendly — the scale
-path; no UDFs anywhere), and ANSI SQL (DuckDB correctness oracle). The north
+a Spark form that runs JVM-side (whole-stage-codegen friendly — the scale
+path; no UDFs anywhere), and ANSI SQL (DuckDB correctness oracle). The Spark
+form of the hot builders (k_ring, the cover_rect family, cell bounds) is
+Spark SQL text for one F.expr; the rest are Column expressions. The north
 rule's "H3/S2 index" semantics (hierarchy, k-ring, cover) follow standard
 definitions; the square grid replaces hexagons since no h3 lib exists here
 (SURVEY.md §7).
@@ -157,41 +159,65 @@ def cell_parent(cell: Column, steps: int = 1) -> Column:
     )
 
 
-def k_ring(cell: Column, k: int) -> Column:
+# ---------- Spark SQL-text forms (hot builders: one F.expr per expression) ----------
+#
+# Inputs are SQL fragments (column names or expressions), the result is Spark
+# SQL text for one F.expr / selectExpr. A Column tree costs py4j round trips
+# per node at plan-build time; text crosses once. Doubles carry the D suffix
+# (a bare 1.5 is DECIMAL), lambda variables a per-builder prefix (a plain `x`
+# would shadow an input column), and the operation order and BIGINT casts are
+# fixed: float results must stay bit-identical to the numpy twins and to the
+# DuckDB oracle text.
+
+
+def sql_double(v: float) -> str:
+    """Spark SQL DOUBLE literal (a bare 1.5 parses as DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _res_sql(cell: str) -> str:
+    return f"shiftrightunsigned({cell}, {RES_SHIFT})"
+
+
+def _ix_sql(cell: str) -> str:
+    return f"(shiftrightunsigned({cell}, {IX_SHIFT}) & {COORD_MASK})"
+
+
+def _iy_sql(cell: str) -> str:
+    return f"({cell} & {COORD_MASK})"
+
+
+def _pack_sql(packed_res: str, ix: str, iy: str) -> str:
+    return (
+        f"({packed_res} + CAST({ix} AS BIGINT) * CAST({1 << IX_SHIFT} AS BIGINT)"
+        f" + CAST({iy} AS BIGINT))"
+    )
+
+
+def k_ring(cell: str, k: int) -> str:
     """array<long> of cells within Chebyshev distance k; pure sequence+transform.
 
     The ring is computed at the CELL'S OWN encoded resolution (extracted
     per row, exactly like the numpy twin np_k_ring), so mixed-resolution
-    columns (compact covers) ring correctly per row. All ops stay
-    codegen-friendly built-ins."""
-    cres = cell_res(cell)
-    # python-api shiftleft() only takes an int literal for numBits;
-    # call_function passes the per-row res column through to the SQL form
-    hi = F.call_function(
-        "shiftleft", F.lit(1).cast("long"), cres.cast("int")
-    ) - F.lit(1).cast("long")
-    cx, cy = cell_ix(cell), cell_iy(cell)
+    columns (compact covers) ring correctly per row."""
+    cres = _res_sql(cell)
+    hi = f"(shiftleft(CAST(1 AS BIGINT), CAST({cres} AS INT)) - CAST(1 AS BIGINT))"
 
-    def clamp_col(c: Column) -> Column:
-        return F.least(F.greatest(c, F.lit(0).cast("long")), hi)
-
-    xs = F.sequence(clamp_col(cx - k), clamp_col(cx + k))
-    ys = F.sequence(clamp_col(cy - k), clamp_col(cy + k))
-    packed_res = cres * F.lit(1 << RES_SHIFT).cast("long")
-    return F.flatten(
-        F.transform(
-            ys,
-            lambda iy: F.transform(
-                xs,
-                lambda ix: packed_res
-                + ix.cast("long") * F.lit(1 << IX_SHIFT).cast("long")
-                + iy.cast("long"),
-            ),
+    def span(c: str) -> str:
+        return (
+            f"sequence(LEAST(GREATEST(({c} - {k}), CAST(0 AS BIGINT)), {hi}), "
+            f"LEAST(GREATEST(({c} + {k}), CAST(0 AS BIGINT)), {hi}))"
         )
+
+    pack = _pack_sql(f"({cres} * CAST({1 << RES_SHIFT} AS BIGINT))", "kr_ix", "kr_iy")
+    return (
+        f"flatten(transform({span(_iy_sql(cell))}, kr_iy -> "
+        f"transform({span(_ix_sql(cell))}, kr_ix -> {pack})))"
     )
 
 
-def _cover(xmin, ymin, xmax, ymax, res: int, closed: bool, touch_lo: bool = False) -> Column:
+def _cover(xmin: str, ymin: str, xmax: str, ymax: str, res: int, closed: bool,
+           touch_lo: bool = False) -> str:
     """Shared cover builder: half-open (ceil-1 upper bound) or closed (floor
     upper bound — the boundary point's own cell is included). touch_lo
     additionally extends the LOWER bound one cell when it sits exactly on a
@@ -199,40 +225,43 @@ def _cover(xmin, ymin, xmax, ymax, res: int, closed: bool, touch_lo: bool = Fals
     that merely touches this one (see cover_rect_touch)."""
     n = 1 << res
 
-    def lo(v, origin, span):
-        t = (v - F.lit(origin)) / F.lit(span) * F.lit(float(n))
-        idx = F.floor(t)
+    def t(v: str, origin: float, span: float) -> str:
+        return f"((({v}) - {sql_double(origin)}) / {sql_double(span)} * {sql_double(n)})"
+
+    def clamp(idx: str) -> str:
+        return f"LEAST(GREATEST({idx}, 0), {n - 1})"
+
+    def lo(v: str, origin: float, span: float) -> str:
+        idx = f"FLOOR({t(v, origin, span)})"
         if touch_lo:
-            idx = idx - F.when(t == idx.cast("double"), F.lit(1)).otherwise(F.lit(0))
-        return _clamp(idx, 0, n - 1)
+            idx = (
+                f"({idx} - CASE WHEN {t(v, origin, span)} = CAST({idx} AS DOUBLE)"
+                " THEN 1 ELSE 0 END)"
+            )
+        return clamp(idx)
 
-    def hi(v, origin, span, lo_idx):
-        t = (v - F.lit(origin)) / F.lit(span) * F.lit(float(n))
-        idx = F.floor(t) if closed else F.ceil(t) - 1
-        return F.greatest(_clamp(idx, 0, n - 1), lo_idx)
+    def hi(v: str, origin: float, span: float, lo_idx: str) -> str:
+        tv = t(v, origin, span)
+        idx = f"FLOOR({tv})" if closed else f"(CEIL({tv}) - 1)"
+        return f"GREATEST({clamp(idx)}, {lo_idx})"
 
-    ix0 = lo(xmin, X0, SPAN_X)
-    iy0 = lo(ymin, Y0, SPAN_Y)
-    ix1 = hi(xmax, X0, SPAN_X, ix0)
-    iy1 = hi(ymax, Y0, SPAN_Y, iy0)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(F.sequence(ix0, ix1), lambda ix: cell_pack(res, ix, iy)),
-        )
+    ix0, iy0 = lo(xmin, X0, SPAN_X), lo(ymin, Y0, SPAN_Y)
+    ix1, iy1 = hi(xmax, X0, SPAN_X, ix0), hi(ymax, Y0, SPAN_Y, iy0)
+    pack = _pack_sql(f"CAST({int(res) << RES_SHIFT} AS BIGINT)", "cv_ix", "cv_iy")
+    return (
+        f"flatten(transform(sequence({iy0}, {iy1}), cv_iy -> "
+        f"transform(sequence({ix0}, {ix1}), cv_ix -> {pack})))"
     )
 
 
-def cover_rect(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+def cover_rect(xmin: str, ymin: str, xmax: str, ymax: str, res: int = DEFAULT_RES) -> str:
     """array<long> cell cover of a half-open rect — JVM-side, explode-ready."""
     return _cover(xmin, ymin, xmax, ymax, res, closed=False)
 
 
 def cover_rect_closed(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+    xmin: str, ymin: str, xmax: str, ymax: str, res: int = DEFAULT_RES
+) -> str:
     """Cell cover of the CLOSED rect [xmin, xmax] x [ymin, ymax].
 
     Unlike cover_rect (half-open: a rect ending exactly on a cell boundary
@@ -245,8 +274,8 @@ def cover_rect_closed(
 
 
 def cover_rect_touch(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: int = DEFAULT_RES
-) -> Column:
+    xmin: str, ymin: str, xmax: str, ymax: str, res: int = DEFAULT_RES
+) -> str:
     """Touch-inclusive cover: closed upper bound AND a lower bound extended one
     cell when it lies exactly on a grid line.
 
@@ -261,14 +290,17 @@ def cover_rect_touch(
     return _cover(xmin, ymin, xmax, ymax, res, closed=True, touch_lo=True)
 
 
-def cell_bounds_xmin(cell: Column) -> Column:
-    n = F.pow(F.lit(2.0), cell_res(cell).cast("double"))
-    return F.lit(X0) + cell_ix(cell).cast("double") * (F.lit(SPAN_X) / n)
+def cell_span(cell: str, span: float) -> str:
+    """Cell extent along a world axis of `span` degrees, at the cell's own res."""
+    return f"({sql_double(span)} / power(2.0D, CAST({_res_sql(cell)} AS DOUBLE)))"
 
 
-def cell_bounds_ymin(cell: Column) -> Column:
-    n = F.pow(F.lit(2.0), cell_res(cell).cast("double"))
-    return F.lit(Y0) + cell_iy(cell).cast("double") * (F.lit(SPAN_Y) / n)
+def cell_bounds_xmin(cell: str) -> str:
+    return f"({sql_double(X0)} + CAST({_ix_sql(cell)} AS DOUBLE) * {cell_span(cell, SPAN_X)})"
+
+
+def cell_bounds_ymin(cell: str) -> str:
+    return f"({sql_double(Y0)} + CAST({_iy_sql(cell)} AS DOUBLE) * {cell_span(cell, SPAN_Y)})"
 
 
 # ---------- SQL fragment builders (DuckDB oracle parity) ----------

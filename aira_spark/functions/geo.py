@@ -2,8 +2,8 @@
 
 The grid index (functions/cells.py) is planar lat/lon; for km-accurate
 semantics the distance itself must be spherical. The haversine expression is
-kept textually identical between the Spark Column form and the DuckDB oracle
-SQL so both engines evaluate the same IEEE double formula.
+kept in the same operation order between the Spark SQL-text form and the
+DuckDB oracle SQL so both engines evaluate the same IEEE double formula.
 
 Antimeridian: the CELL GRID is the bounded plane [-180, 180) x [-90, 90)
 without longitude wrapping, but the haversine itself wraps (sin^2(dlon/2)
@@ -16,21 +16,21 @@ wrapped-close points (knn_join's haversine finalization does, via the
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .cells import sql_double
 
 EARTH_RADIUS_KM = 6371.0088  # IUGG mean radius
 
 
-def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle distance in km (haversine; exact on the sphere)."""
-    dlat = F.radians(lat2 - lat1) / 2.0
-    dlon = F.radians(lon2 - lon1) / 2.0
+def haversine_km(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """Great-circle distance in km (haversine; exact on the sphere), as Spark
+    SQL text over SQL-fragment inputs (one F.expr; see functions/cells.py)."""
+    dlat = f"(radians(({lat2}) - ({lat1})) / 2.0D)"
+    dlon = f"(radians(({lon2}) - ({lon1})) / 2.0D)"
     h = (
-        F.sin(dlat) * F.sin(dlat)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon) * F.sin(dlon)
+        f"(sin({dlat}) * sin({dlat}) + cos(radians({lat1})) * cos(radians({lat2}))"
+        f" * sin({dlon}) * sin({dlon}))"
     )
-    return 2.0 * F.lit(EARTH_RADIUS_KM) * F.asin(F.sqrt(h))
+    return f"({sql_double(EARTH_RADIUS_KM)} * 2.0D * asin(sqrt({h})))"
 
 
 def sql_haversine_km(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
@@ -44,7 +44,7 @@ def sql_haversine_km(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     return f"(2.0 * {EARTH_RADIUS_KM} * ASIN(SQRT({h})))"
 
 
-def disk_margins_deg(qy: Column, d_km: float) -> tuple[Column, Column]:
+def disk_margins_deg(qy: str, d_km: float) -> tuple[str, str]:
     """Conservative (superset) lat/lon half-extents in degrees of a d_km
     great-circle disk centered at latitude qy.
 
@@ -56,12 +56,15 @@ def disk_margins_deg(qy: Column, d_km: float) -> tuple[Column, Column]:
          cos bound degenerates, so the margin switches to the FULL longitude
          range (360) — an arbitrary clamp there would silently drop
          near-pole pairs; full cover is conservative, never lossy.
+
+    Both margins are Spark SQL text (qy a SQL fragment).
     """
     import math
 
     dlat = math.degrees(d_km / EARTH_RADIUS_KM)
-    phi_max = F.abs(qy) + F.lit(dlat)
-    dlon = F.when(phi_max >= F.lit(89.9), F.lit(360.0)).otherwise(
-        F.lit(90.0 * d_km / EARTH_RADIUS_KM) / F.cos(F.radians(phi_max))
+    phi_max = f"(abs({qy}) + {sql_double(dlat)})"
+    dlon = (
+        f"CASE WHEN {phi_max} >= 89.9D THEN 360.0D ELSE "
+        f"{sql_double(90.0 * d_km / EARTH_RADIUS_KM)} / cos(radians({phi_max})) END"
     )
-    return F.lit(dlat), dlon
+    return sql_double(dlat), dlon

@@ -88,12 +88,6 @@ def footprint(with_meta_df: DataFrame) -> DataFrame:
 
 def cell_cover(with_meta_df: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """+ exploded `cell` column: every grid cell the footprint intersects."""
-    fp = footprint(with_meta_df)
-    return fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect(
-                F.col("fp_xmin"), F.col("fp_ymin"), F.col("fp_xmax"), F.col("fp_ymax"), res
-            )
-        ),
+    return footprint(with_meta_df).withColumn(
+        "cell", F.expr(f"explode({cover_rect('fp_xmin', 'fp_ymin', 'fp_xmax', 'fp_ymax', res)})")
     )

@@ -43,8 +43,8 @@ def _neighborhood_counts(points: DataFrame, res: int) -> DataFrame:
         .groupBy("cell")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    scattered = counts.select(
-        "cell", "cnt", F.explode(k_ring(F.col("cell"), 1)).alias("tgt")
+    scattered = counts.selectExpr(
+        "cell", "cnt", f"explode({k_ring('cell', 1)}) AS tgt"
     ).select(
         F.col("tgt").alias("cell2"),
         "cnt",
@@ -110,8 +110,8 @@ def grid_dbscan(points: DataFrame, res: int, min_pts: int) -> DataFrame:
     )
 
     # border: non-core occupied cell adjacent to >= 1 core -> MIN core label
-    reach = core_lab.select(
-        F.explode(k_ring(F.col("cell"), 1)).alias("cell"),
+    reach = core_lab.selectExpr(
+        f"explode({k_ring('cell', 1)}) AS cell",
         "cluster",
     ).groupBy("cell").agg(F.min("cluster").alias("bcluster"))
     rest_lab = rest.join(reach, "cell", "left").selectExpr(

@@ -9,17 +9,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_bounds_xmin, cell_bounds_ymin, cell_res
+from ..functions.cells import (
+    DEFAULT_RES,
+    SPAN_X,
+    SPAN_Y,
+    cell_bounds_xmin,
+    cell_bounds_ymin,
+    cell_span,
+)
 from .spatial import point_in_ring, polygon_cells
 
 
 def rasterize_to_cells(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(poly_id, cell) for every cell whose center lies inside the polygon."""
-    cov = polygon_cells(polygons, res)
-    n = F.pow(F.lit(2.0), cell_res(F.col("cell")).cast("double"))
-    cx = cell_bounds_xmin(F.col("cell")) + F.lit(360.0) / n / 2.0
-    cy = cell_bounds_ymin(F.col("cell")) + F.lit(180.0) / n / 2.0
-    return cov.filter(point_in_ring(cx, cy, F.col("ring"))).select("poly_id", "cell")
+    cx = f"({cell_bounds_xmin('cell')} + {cell_span('cell', SPAN_X)} / 2.0D)"
+    cy = f"({cell_bounds_ymin('cell')} + {cell_span('cell', SPAN_Y)} / 2.0D)"
+    return polygon_cells(polygons, res).where(point_in_ring(cx, cy, "ring")).select(
+        "poly_id", "cell"
+    )
 
 
 def rasterize_to_tiles(

@@ -18,7 +18,9 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import (
@@ -28,48 +30,52 @@ from ..functions.cells import (
     cell_from_xy,
     cover_rect,
     k_ring,
+    sql_double,
 )
 
-
-def ring_bbox(ring: Column) -> tuple[Column, Column, Column, Column]:
-    xs = F.transform(ring, lambda v: v["x"])
-    ys = F.transform(ring, lambda v: v["y"])
-    return F.array_min(xs), F.array_min(ys), F.array_max(xs), F.array_max(ys)
+# The geometry predicates below are Spark SQL text over SQL-fragment inputs
+# (column names or expressions), applied through one F.expr / selectExpr /
+# where each — see functions/cells.py for why and for the spelling rules.
 
 
-def _ring_edges(ring: Column) -> Column:
+def _fold(op: str, *terms: str) -> str:
+    """`t1 op t2 op ...` grouped left to right. Spark's SQL parser rebalances
+    an unparenthesized AND/OR chain into a different tree than the left-deep
+    one, which is the evaluation order these predicates were written in."""
+    return reduce(lambda a, b: f"({a} {op} {b})", terms)
+
+
+def ring_bbox(ring: str) -> tuple[str, str, str, str]:
+    xs = f"transform({ring}, rb_v -> rb_v.x)"
+    ys = f"transform({ring}, rb_v -> rb_v.y)"
+    return f"array_min({xs})", f"array_min({ys})", f"array_max({xs})", f"array_max({ys})"
+
+
+def _ring_edges(ring: str) -> str:
     """array<struct<x,y>> closed ring -> array<struct<ax,ay,bx,by>> edges —
     the one edge construction every geometry predicate shares (a fix to
     edge handling must not be able to diverge between predicates)."""
-    n = F.size(ring)
-    return F.zip_with(
-        F.slice(ring, 1, n - 1),
-        F.slice(ring, 2, n - 1),
-        lambda a, b: F.struct(
-            a["x"].alias("ax"), a["y"].alias("ay"), b["x"].alias("bx"), b["y"].alias("by")
-        ),
+    return (
+        f"zip_with(slice({ring}, 1, size({ring}) - 1), slice({ring}, 2, size({ring}) - 1), "
+        "(re_a, re_b) -> struct(re_a.x AS ax, re_a.y AS ay, re_b.x AS bx, re_b.y AS by))"
     )
 
 
-def point_in_ring(px: Column, py: Column, ring: Column) -> Column:
-    """Exact ray-casting (odd crossings) as a pure column expression.
+def point_in_ring(px: str, py: str, ring: str) -> str:
+    """Exact ray-casting (odd crossings) as one boolean SQL expression.
 
     ring: array<struct<x,y>> closed (first == last vertex). An edge (a, b)
     crosses the rightward ray from (px, py) iff (a.y > py) != (b.y > py) and
     px < (b.x - a.x) * (py - a.y) / (b.y - a.y) + a.x.
     """
-    edges = _ring_edges(ring)
-    crossings = F.aggregate(
-        edges,
-        F.lit(0),
-        lambda acc, e: acc
-        + F.when(
-            ((e["ay"] > py) != (e["by"] > py))
-            & (px < (e["bx"] - e["ax"]) * (py - e["ay"]) / (e["by"] - e["ay"]) + e["ax"]),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
+    crosses = (
+        f"((pr_e.ay > ({py})) != (pr_e.by > ({py}))) AND (({px}) < "
+        f"(pr_e.bx - pr_e.ax) * (({py}) - pr_e.ay) / (pr_e.by - pr_e.ay) + pr_e.ax)"
     )
-    return crossings % 2 == 1
+    return (
+        f"(aggregate({_ring_edges(ring)}, 0, (pr_acc, pr_e) -> "
+        f"pr_acc + CASE WHEN {crosses} THEN 1 ELSE 0 END) % 2 = 1)"
+    )
 
 
 def polygon_cells(
@@ -89,40 +95,32 @@ def polygon_cells(
     polygon-intersection prefilter (SIGMOD 2023, see PAPERS.md). A false
     'partial' only costs a ray-cast, never correctness; interior cells (the
     ones that dominate as resolution grows) stay full."""
-    from ..functions.cells import SPAN_X, SPAN_Y, cell_bounds_xmin, cell_bounds_ymin
+    from ..functions.cells import cell_bounds_xmin, cell_bounds_ymin
 
-    xmin, ymin, xmax, ymax = ring_bbox(F.col("ring"))
     out = polygons.withColumn(
-        "cell", F.explode(cover_rect(xmin, ymin, xmax, ymax, res))
+        "cell", F.expr(f"explode({cover_rect(*ring_bbox('ring'), res)})")
     )
     if not classify_full:
         return out
     n = 1 << res
-    cw, chh = SPAN_X / n, SPAN_Y / n
-    cx0 = cell_bounds_xmin(F.col("cell"))
-    cy0 = cell_bounds_ymin(F.col("cell"))
-    cx1, cy1 = cx0 + F.lit(cw), cy0 + F.lit(chh)
-    ring = F.col("ring")
-    all_corners_in = (
-        point_in_ring(cx0, cy0, ring)
-        & point_in_ring(cx0, cy1, ring)
-        & point_in_ring(cx1, cy0, ring)
-        & point_in_ring(cx1, cy1, ring)
-    )
-    edges = _ring_edges(ring)
+    cx0, cy0 = cell_bounds_xmin("cell"), cell_bounds_ymin("cell")
+    cx1, cy1 = f"({cx0} + {sql_double(SPAN_X / n)})", f"({cy0} + {sql_double(SPAN_Y / n)})"
+    corners_in = [
+        point_in_ring(px, py, "ring")
+        for px, py in ((cx0, cy0), (cx0, cy1), (cx1, cy0), (cx1, cy1))
+    ]
     # conservative boundary test: an edge whose bbox overlaps the cell MIGHT
     # touch it (covers proper crossings, vertices inside, and degenerate
     # corner/collinear contact) -> cell stays partial and gets the exact
     # ray-cast. No edge bbox overlapping + a corner inside => whole cell
     # interior (the boundary cannot enter without an edge point in the cell).
-    edge_near_cell = F.exists(
-        edges,
-        lambda e: (F.least(e["ax"], e["bx"]) <= cx1)
-        & (F.greatest(e["ax"], e["bx"]) >= cx0)
-        & (F.least(e["ay"], e["by"]) <= cy1)
-        & (F.greatest(e["ay"], e["by"]) >= cy0),
+    edge_overlaps_cell = _fold(
+        "AND",
+        f"LEAST(pf_e.ax, pf_e.bx) <= {cx1}", f"GREATEST(pf_e.ax, pf_e.bx) >= {cx0}",
+        f"LEAST(pf_e.ay, pf_e.by) <= {cy1}", f"GREATEST(pf_e.ay, pf_e.by) >= {cy0}",
     )
-    return out.withColumn("full", all_corners_in & ~edge_near_cell)
+    edge_near_cell = f"exists({_ring_edges('ring')}, pf_e -> {edge_overlaps_cell})"
+    return out.withColumn("full", F.expr(_fold("AND", *corners_in, f"NOT {edge_near_cell}")))
 
 
 def point_in_polygon_join(
@@ -152,9 +150,7 @@ def point_in_polygon_join(
     if broadcast_polygons:
         poly = F.broadcast(poly)
     cand = pts.join(poly, "cell")
-    return cand.filter(
-        F.col("full") | point_in_ring(F.col(x), F.col(y), F.col("ring"))
-    ).drop("cell", "ring", "full")
+    return cand.where(f"full OR {point_in_ring(x, y, 'ring')}").drop("cell", "ring", "full")
 
 
 def within_distance_join(
@@ -181,26 +177,17 @@ def within_distance_join(
 
     # closed cover: the predicate is inclusive (dist <= d), so a point at
     # exactly x == qx + d must have its cell in the prefilter
-    q = queries.select(
-        "query_id", F.col(x).alias("qx"), F.col(y).alias("qy")
-    ).withColumn(
-        "cell",
-        F.explode(
-            cover_rect_closed(
-                F.col("qx") - F.lit(d), F.col("qy") - F.lit(d),
-                F.col("qx") + F.lit(d), F.col("qy") + F.lit(d), res,
-            )
-        ),
+    dd = sql_double(d)
+    disk = cover_rect_closed(f"qx - {dd}", f"qy - {dd}", f"qx + {dd}", f"qy + {dd}", res)
+    q = queries.selectExpr("query_id", f"{x} AS qx", f"{y} AS qy").withColumn(
+        "cell", F.expr(f"explode({disk})")
     )
     pts = points.withColumn("cell", cell_from_xy(F.col(x), F.col(y), res))
-    dist = F.sqrt(
-        (F.col(x) - F.col("qx")) * (F.col(x) - F.col("qx"))
-        + (F.col(y) - F.col("qy")) * (F.col(y) - F.col("qy"))
-    )
+    dist = f"sqrt(({x} - qx) * ({x} - qx) + ({y} - qy) * ({y} - qy))"
     return (
         pts.join(F.broadcast(q), "cell")
-        .withColumn("dist", dist)
-        .filter(F.col("dist") <= F.lit(d))
+        .selectExpr("*", f"{dist} AS dist")
+        .where(f"dist <= {dd}")
         .drop("cell", "qx", "qy")
     )
 
@@ -226,55 +213,51 @@ def within_distance_km_join(
     from ..functions.cells import cover_rect_closed
     from ..functions.geo import disk_margins_deg, haversine_km
 
-    dlat, dlon = disk_margins_deg(F.col("qy"), d_km)
-    qx, qy = F.col("qx"), F.col("qy")
-    ylo, yhi = qy - dlat, qy + dlat
+    dlat, dlon = disk_margins_deg("qy", d_km)
+    ylo, yhi = f"qy - {dlat}", f"qy + {dlat}"
     # antimeridian wrap: the haversine's sin^2(dlon/2) term has period 360,
     # so a disk crossing +-180 continues on the far side of the x domain —
     # the cover is the clamped primary interval plus the wrapped remainder(s)
-    empty = F.array().cast("array<bigint>")
-    primary = cover_rect_closed(qx - dlon, ylo, qx + dlon, yhi, res)
-    wrap_w = F.when(
-        qx - dlon < F.lit(-180.0),
-        cover_rect_closed(qx - dlon + F.lit(360.0), ylo, F.lit(180.0), yhi, res),
-    ).otherwise(empty)
-    wrap_e = F.when(
-        qx + dlon > F.lit(180.0),
-        cover_rect_closed(F.lit(-180.0), ylo, qx + dlon - F.lit(360.0), yhi, res),
-    ).otherwise(empty)
-    q = queries.select(
-        "query_id", F.col(x).alias("qx"), F.col(y).alias("qy")
-    ).withColumn(
+    west, east = f"(qx - ({dlon}))", f"(qx + ({dlon}))"
+    primary = cover_rect_closed(west, ylo, east, yhi, res)
+    wrap_w = cover_rect_closed(f"{west} + 360.0D", ylo, "180.0D", yhi, res)
+    wrap_e = cover_rect_closed("-180.0D", ylo, f"{east} - 360.0D", yhi, res)
+    empty = "CAST(array() AS ARRAY<BIGINT>)"
+    q = queries.selectExpr("query_id", f"{x} AS qx", f"{y} AS qy").withColumn(
         "cell",
-        F.explode(F.array_distinct(F.concat(primary, wrap_w, wrap_e))),
+        F.expr(
+            f"explode(array_distinct(concat({primary}, "
+            f"CASE WHEN {west} < -180.0D THEN {wrap_w} ELSE {empty} END, "
+            f"CASE WHEN {east} > 180.0D THEN {wrap_e} ELSE {empty} END)))"
+        ),
     )
     pts = points.withColumn("cell", cell_from_xy(F.col(x), F.col(y), res))
     return (
         pts.join(F.broadcast(q), "cell")
-        .withColumn("dist_km", haversine_km(F.col("qy"), F.col("qx"), F.col(y), F.col(x)))
-        .filter(F.col("dist_km") <= F.lit(d_km))
+        .selectExpr("*", f"{haversine_km('qy', 'qx', y, x)} AS dist_km")
+        .where(f"dist_km <= {sql_double(d_km)}")
         .drop("cell", "qx", "qy")
     )
 
 
-def _orient(ax, ay, bx, by, px, py) -> Column:
-    """Signed area orientation of (a -> b -> p); same expression text as the
+def _orient(ax: str, ay: str, bx: str, by: str, px: str, py: str) -> str:
+    """Signed area orientation of (a -> b -> p); same operation order as the
     DuckDB oracle so float results are bit-identical."""
-    return (bx - ax) * (py - ay) - (by - ay) * (px - ax)
+    return f"(({bx} - {ax}) * ({py} - {ay}) - ({by} - {ay}) * ({px} - {ax}))"
 
 
-def _seg_cross(ax, ay, bx, by, cx, cy, dx, dy) -> Column:
+def _seg_cross(ax, ay, bx, by, cx, cy, dx, dy) -> str:
     """Proper (strict) segment intersection of (a,b) x (c,d): each segment's
     endpoints lie strictly on opposite sides of the other's line."""
     o1 = _orient(ax, ay, bx, by, cx, cy)
     o2 = _orient(ax, ay, bx, by, dx, dy)
     o3 = _orient(cx, cy, dx, dy, ax, ay)
     o4 = _orient(cx, cy, dx, dy, bx, by)
-    return (o1 * o2 < 0) & (o3 * o4 < 0)
+    return f"({o1} * {o2} < 0 AND {o3} * {o4} < 0)"
 
 
-def rect_intersects_ring(xmin, ymin, xmax, ymax, ring: Column) -> Column:
-    """Exact rect x simple-polygon intersection as a pure column expression.
+def rect_intersects_ring(xmin: str, ymin: str, xmax: str, ymax: str, ring: str) -> str:
+    """Exact rect x simple-polygon intersection as one boolean SQL expression.
 
     True iff (a) any polygon vertex is inside the closed rect (covers
     polygon-in-rect and partial overlap), or (b) any rect corner is inside
@@ -289,47 +272,34 @@ def rect_intersects_ring(xmin, ymin, xmax, ymax, ring: Column) -> Column:
     for simple polygons including touch-degenerate contact. The DuckDB
     oracle states the identical four cases with the same expression text.
     """
-    vert_in_rect = F.exists(
-        ring,
-        lambda v: (v["x"] >= xmin) & (v["x"] <= xmax)
-        & (v["y"] >= ymin) & (v["y"] <= ymax),
+    xmin, ymin, xmax, ymax = (f"({v})" for v in (xmin, ymin, xmax, ymax))
+    corners = ((xmin, ymin), (xmin, ymax), (xmax, ymin), (xmax, ymax))
+    vert_in_rect = _fold(
+        "AND", f"ri_v.x >= {xmin}", f"ri_v.x <= {xmax}", f"ri_v.y >= {ymin}", f"ri_v.y <= {ymax}"
     )
-    corner_in_poly = (
-        point_in_ring(xmin, ymin, ring)
-        | point_in_ring(xmin, ymax, ring)
-        | point_in_ring(xmax, ymin, ring)
-        | point_in_ring(xmax, ymax, ring)
+    corner_in_poly = _fold("OR", *(point_in_ring(px, py, ring) for px, py in corners))
+    e = ("ri_e.ax", "ri_e.ay", "ri_e.bx", "ri_e.by")
+    rect_edges = (
+        (xmin, ymin, xmax, ymin), (xmax, ymin, xmax, ymax),
+        (xmax, ymax, xmin, ymax), (xmin, ymax, xmin, ymin),
     )
+    crosses_rect_edge = _fold("OR", *(_seg_cross(*e, *r) for r in rect_edges))
+
+    def on(px: str, py: str) -> str:
+        return _fold(
+            "AND", f"{_orient(*e, px, py)} = 0",
+            f"{px} >= LEAST(ri_e.ax, ri_e.bx)", f"{px} <= GREATEST(ri_e.ax, ri_e.bx)",
+            f"{py} >= LEAST(ri_e.ay, ri_e.by)", f"{py} <= GREATEST(ri_e.ay, ri_e.by)",
+        )
+
+    corner_on_edge = _fold("OR", *(on(px, py) for px, py in corners))
     edges = _ring_edges(ring)
-
-    def crosses_rect_edge(e) -> Column:
-        ax, ay, bx, by = e["ax"], e["ay"], e["bx"], e["by"]
-        return (
-            _seg_cross(ax, ay, bx, by, xmin, ymin, xmax, ymin)
-            | _seg_cross(ax, ay, bx, by, xmax, ymin, xmax, ymax)
-            | _seg_cross(ax, ay, bx, by, xmax, ymax, xmin, ymax)
-            | _seg_cross(ax, ay, bx, by, xmin, ymax, xmin, ymin)
-        )
-
-    def corner_on_edge(e) -> Column:
-        ax, ay, bx, by = e["ax"], e["ay"], e["bx"], e["by"]
-
-        def on(px, py) -> Column:
-            return (
-                (_orient(ax, ay, bx, by, px, py) == 0)
-                & (px >= F.least(ax, bx)) & (px <= F.greatest(ax, bx))
-                & (py >= F.least(ay, by)) & (py <= F.greatest(ay, by))
-            )
-
-        return (
-            on(xmin, ymin) | on(xmin, ymax) | on(xmax, ymin) | on(xmax, ymax)
-        )
-
-    return (
-        vert_in_rect
-        | corner_in_poly
-        | F.exists(edges, crosses_rect_edge)
-        | F.exists(edges, corner_on_edge)
+    return _fold(
+        "OR",
+        f"exists({ring}, ri_v -> {vert_in_rect})",
+        corner_in_poly,
+        f"exists({edges}, ri_e -> {crosses_rect_edge})",
+        f"exists({edges}, ri_e -> {corner_on_edge})",
     )
 
 
@@ -355,23 +325,13 @@ def footprint_polygon_join(
     from ..functions.cells import cover_rect_touch
     from .chunks import footprint
 
-    fp = footprint(images_with_meta)
-    fp_cells = fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect_touch(
-                F.col("fp_xmin"), F.col("fp_ymin"), F.col("fp_xmax"), F.col("fp_ymax"), res
-            )
-        ),
-    ).select("image_id", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax", "cell")
+    bbox = ("fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax")
+    fp_cells = footprint(images_with_meta).withColumn(
+        "cell", F.expr(f"explode({cover_rect_touch(*bbox, res)})")
+    ).select("image_id", *bbox, "cell")
     poly = F.broadcast(polygon_cells(polygons, res).select("cell", "poly_id", "ring"))
     cand = fp_cells.join(poly, "cell").dropDuplicates(["image_id", "poly_id"])
-    return cand.filter(
-        rect_intersects_ring(
-            F.col("fp_xmin"), F.col("fp_ymin"), F.col("fp_xmax"), F.col("fp_ymax"),
-            F.col("ring"),
-        )
-    ).select("image_id", "poly_id")
+    return cand.where(rect_intersects_ring(*bbox, "ring")).select("image_id", "poly_id")
 
 
 def footprint_overlap_join(
@@ -406,52 +366,32 @@ def footprint_overlap_join(
     fp = footprint(images_with_meta).select(
         "image_id", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"
     )
-    p = F.lit(float(pad))
-    a = fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect(
-                F.col("fp_xmin") - p, F.col("fp_ymin") - p,
-                F.col("fp_xmax") + p, F.col("fp_ymax") + p, res,
-            )
-        ),
-    ).select(
-        "cell", F.col("image_id").alias("image_a"),
-        F.col("fp_xmin").alias("ax0"), F.col("fp_ymin").alias("ay0"),
-        F.col("fp_xmax").alias("ax1"), F.col("fp_ymax").alias("ay1"),
+    p = sql_double(pad)
+    padded = cover_rect(f"fp_xmin - {p}", f"fp_ymin - {p}", f"fp_xmax + {p}", f"fp_ymax + {p}", res)
+    a = fp.selectExpr(
+        f"explode({padded}) AS cell", "image_id AS image_a",
+        "fp_xmin AS ax0", "fp_ymin AS ay0", "fp_xmax AS ax1", "fp_ymax AS ay1",
     )
-    b = fp.withColumn(
-        "cell",
-        F.explode(
-            cover_rect(
-                F.col("fp_xmin"), F.col("fp_ymin"),
-                F.col("fp_xmax"), F.col("fp_ymax"), res,
-            )
-        ),
-    ).select(
-        "cell", F.col("image_id").alias("image_b"),
-        F.col("fp_xmin").alias("bx0"), F.col("fp_ymin").alias("by0"),
-        F.col("fp_xmax").alias("bx1"), F.col("fp_ymax").alias("by1"),
+    b = fp.selectExpr(
+        f"explode({cover_rect('fp_xmin', 'fp_ymin', 'fp_xmax', 'fp_ymax', res)}) AS cell",
+        "image_id AS image_b",
+        "fp_xmin AS bx0", "fp_ymin AS by0", "fp_xmax AS bx1", "fp_ymax AS by1",
     )
     cand = (
         a.join(b, "cell")
-        .filter(F.col("image_a") < F.col("image_b"))
+        .where("image_a < image_b")
         .drop("cell")
         .dropDuplicates(["image_a", "image_b"])
     )
     # exact refine (pad applied once per axis: ax0 - pad/2 < bx1 + pad/2
     # <=> ax0 < bx1 + pad) + overlap extent, computed in a pinned op order
     # (least(max) - greatest(min)) mirrored verbatim by the oracle
-    olap_w = F.least("ax1", "bx1") - F.greatest("ax0", "bx0")
-    olap_h = F.least("ay1", "by1") - F.greatest("ay0", "by0")
-    return (
-        cand.filter(
-            (F.col("ax0") < F.col("bx1") + p) & (F.col("bx0") < F.col("ax1") + p)
-            & (F.col("ay0") < F.col("by1") + p) & (F.col("by0") < F.col("ay1") + p)
-        )
-        .withColumn("olap_w", olap_w)
-        .withColumn("olap_h", olap_h)
-        .select("image_a", "image_b", "olap_w", "olap_h")
+    return cand.where(
+        _fold("AND", f"ax0 < bx1 + {p}", f"bx0 < ax1 + {p}", f"ay0 < by1 + {p}", f"by0 < ay1 + {p}")
+    ).selectExpr(
+        "image_a", "image_b",
+        "least(ax1, bx1) - greatest(ax0, bx0) AS olap_w",
+        "least(ay1, by1) - greatest(ay0, by0) AS olap_h",
     )
 
 
@@ -499,8 +439,6 @@ def knn_join(
     """
     import math
 
-    from pyspark.sql import Window
-
     n = 1 << res
     cell_w, cell_h = SPAN_X / n, SPAN_Y / n
     safe_per_ring = min(cell_w, cell_h)
@@ -510,14 +448,12 @@ def knn_join(
     # point side is many splits already and this is a no-op cost-wise
     par = points.sparkSession.sparkContext.defaultParallelism
     pts = points.select(
-        F.col("point_id").alias("neighbor_id"),
-        F.col("x").alias("px"),
-        F.col("y").alias("py"),
+        F.expr("point_id AS neighbor_id"), F.expr("x AS px"), F.expr("y AS py"),
         cell_from_xy(F.col("x"), F.col("y"), res).alias("cell"),
     ).repartition(par).persist()
     n_points = pts.count()
     pending = queries.select(
-        "query_id", F.col("x").alias("qx"), F.col("y").alias("qy"),
+        "query_id", F.expr("x AS qx"), F.expr("y AS qy"),
         cell_from_xy(F.col("x"), F.col("y"), res).alias("qcell"),
     ).persist()
 
@@ -528,28 +464,26 @@ def knn_join(
     aspect = min(cell_w, cell_h) / max(cell_w, cell_h)
     radius = max(1, min(n, math.ceil(math.sqrt(3.0 * k / (math.pi * aspect * density)))))
 
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
     if metric == "haversine":
         from ..functions.geo import haversine_km
 
-        dist = haversine_km(F.col("qy"), F.col("qx"), F.col("py"), F.col("px"))
+        dist = haversine_km("qy", "qx", "py", "px")
     else:
-        dist = F.sqrt(
-            (F.col("px") - F.col("qx")) * (F.col("px") - F.col("qx"))
-            + (F.col("py") - F.col("qy")) * (F.col("py") - F.col("qy"))
-        )
+        dist = "sqrt((px - qx) * (px - qx) + (py - qy) * (py - qy))"
 
     def rank_candidates(cand: DataFrame) -> DataFrame:
         return (
-            cand.withColumn("dist", dist)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            cand.selectExpr("*", f"{dist} AS dist")
+            .selectExpr(
+                "*", "row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank"
+            )
+            .where(f"rank <= {k}")
         )
 
     handles = [pts, pending]  # every persisted frame, unpersisted on return
     results = None
     for round_i in range(ring_rounds):
-        ringed = pending.withColumn("cell", F.explode(k_ring(F.col("qcell"), radius)))
+        ringed = pending.withColumn("cell", F.expr(f"explode({k_ring('qcell', radius)})"))
         ranked = rank_candidates(ringed.join(pts, "cell")).persist()
         handles.append(ranked)
         if metric == "haversine":
@@ -569,16 +503,11 @@ def knn_join(
             # clamp at 90 (not an arbitrary 89.9): points can sit above any
             # sub-90 clamp, and cos(90) -> 0 bound -> no certification ->
             # exact fallback, which is the sound behavior at the pole
-            phi_max = F.least(
-                F.abs(F.col("qy_")) + F.lit((radius + 1) * cell_h), F.lit(90.0)
-            )
-            lon_excl_deg = F.least(
-                F.lit(float(radius * cell_w)), F.lit(180.0) - F.abs(F.col("qx_"))
-            )
+            phi_max = f"least(abs(qy_) + {sql_double((radius + 1) * cell_h)}, 90.0D)"
+            lon_excl_deg = f"least({sql_double(radius * cell_w)}, 180.0D - abs(qx_))"
             lon_bound = (
-                F.lit(2.0 * _R / math.pi)
-                * F.cos(F.radians(phi_max))
-                * F.radians(lon_excl_deg)
+                f"{sql_double(2.0 * _R / math.pi)} * cos(radians({phi_max}))"
+                f" * radians({lon_excl_deg})"
             )
             # STRICT bound: an outside-ring point can sit at distance exactly
             # equal to the exclusion bound, and with kth_dist == bound it
@@ -587,18 +516,18 @@ def knn_join(
             # top-k. Strict < also closes the pole case: lon_bound -> 0 at
             # |lat| = 90, and 0 < 0 is false, so co-located polar points fall
             # back to the exact scan instead of certifying unsoundly.
-            safe_cond = F.col("kth_dist") < F.least(F.lit(lat_bound), lon_bound)
+            safe_cond = f"kth_dist < least({sql_double(lat_bound)}, {lon_bound})"
         else:
-            safe_cond = F.col("kth_dist") < F.lit(float(radius) * safe_per_ring)
+            safe_cond = f"kth_dist < {sql_double(float(radius) * safe_per_ring)}"
         done_ids = (
             ranked.groupBy("query_id")
             .agg(
-                F.count("*").alias("n_found"),
-                F.max("dist").alias("kth_dist"),
-                F.min("qy").alias("qy_"),
-                F.min("qx").alias("qx_"),
+                F.expr("count(*) AS n_found"),
+                F.expr("max(dist) AS kth_dist"),
+                F.expr("min(qy) AS qy_"),
+                F.expr("min(qx) AS qx_"),
             )
-            .filter((F.col("n_found") >= k) & safe_cond)
+            .where(f"n_found >= {k} AND {safe_cond}")
             .select("query_id")
             .persist()
         )

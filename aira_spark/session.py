@@ -50,6 +50,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark wraps every functions.* call and Column method to record its
+        # Python call site: ~10 py4j round trips per call, which made plan
+        # building the largest driver cost. Errors from DataFrame-API
+        # expressions lose the Python call site; SQL-text expressions keep
+        # their fragment context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -132,9 +132,7 @@ def test_rect_intersects_ring_cases(spark):
         r.id: r.hit
         for r in df.select(
             "id",
-            rect_intersects_ring(
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), F.col("ring")
-            ).alias("hit"),
+            F.expr(rect_intersects_ring("xmin", "ymin", "xmax", "ymax", "ring")).alias("hit"),
         ).collect()
     }
     for i, c in enumerate(cases):

@@ -620,3 +620,37 @@ def test_gap_fill_and_twa_single_entity_exchange_class(spark, sf_dir):
         assert "CartesianProduct" not in s, s
         assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s, s
     assert "Generate" in plan_string(gap_fill_hourly(ev))
+
+
+def _py4j_calls(spark, build) -> int:
+    """py4j commands sent while `build()` runs, not counting the
+    memory-release commands Python's garbage collector interleaves."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        n += not command.startswith("m\nd\n")
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n
+
+
+def test_spatial_join_plans_build_in_few_py4j_calls(spark, sf_dir):
+    """Building the spatial-join plans (q_knn includes its internal count)
+    stays within a py4j budget: the geometry builders are SQL text behind one
+    F.expr each, and the session turns off PySpark's per-call origin capture
+    (~10 round trips per Column call). Bounds are the counts at the time of
+    writing plus ~20%; per-node Column building costs thousands."""
+    import __spark_entry__ as em
+
+    budgets = {"q_pip": 435, "q_knn": 1090, "q_within_distance": 440}
+    for q, budget in budgets.items():
+        n = _py4j_calls(spark, lambda: getattr(em, q)(spark, sf_dir))
+        assert n <= budget, f"{q}: {n} py4j calls > {budget}"

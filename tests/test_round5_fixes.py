@@ -222,10 +222,9 @@ def test_rect_tangency_corner_on_edge(spark):
         got = (
             df.filter(F.col("id") == i)
             .select(
-                rect_intersects_ring(
-                    F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-                    F.expr(ring_sql(pts)),
-                ).alias("hit")
+                F.expr(rect_intersects_ring(
+                    "xmin", "ymin", "xmax", "ymax", ring_sql(pts),
+                )).alias("hit")
             )
             .first()["hit"]
         )
@@ -262,7 +261,7 @@ def test_knn_pole_matches_brute_force(spark):
         for r in queries.crossJoin(
             points.select(F.col("point_id"), F.col("x").alias("px"), F.col("y").alias("py"))
         )
-        .withColumn("dist", haversine_km(F.col("y"), F.col("x"), F.col("py"), F.col("px")))
+        .withColumn("dist", F.expr(haversine_km("y", "x", "py", "px")))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
         .collect()
@@ -307,7 +306,7 @@ def test_k_ring_uses_cell_encoded_res(spark):
     df = spark.createDataFrame([(c,) for c in cells], "cell long")
     got = {
         r.cell: sorted(r.ring)
-        for r in df.select("cell", k_ring(F.col("cell"), 1).alias("ring")).collect()
+        for r in df.select("cell", F.expr(k_ring("cell", 1)).alias("ring")).collect()
     }
     for c in cells:
         assert got[c] == sorted(int(x) for x in np_k_ring(c, 1)), f"cell {c}"
