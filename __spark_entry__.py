@@ -122,13 +122,20 @@ def _sql_cover(xmin: str, ymin: str, xmax: str, ymax: str) -> str:
     return f"{ix0} AS ix0, {ix1} AS ix1, {iy0} AS iy0, {iy1} AS iy1"
 
 
+def _fine_xy_sql(nf: int) -> tuple[str, str]:
+    """DuckDB (fx, fy) of the point (x, y) on the nf x nf fine grid."""
+    return (
+        f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)",
+        f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)",
+    )
+
+
 def _fine_cte_sql(modulo: int = 8, patch_bits: int = 4) -> str:
     """Full WITH prefix ending in `fine(fx, fy, val)` — the max-composited
     mosaic fine grid recomputed from first principles (pixel formula
     (r*7 + c*13 + k) % 256), shared by the raster-stack oracles."""
     nf = 1 << (CELL_RES + patch_bits)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % {modulo} = 0),
@@ -5372,8 +5379,7 @@ FROM vals GROUP BY 1, 2
 
 def _oracle_mosaic() -> str:
     nf = 1 << (CELL_RES + 4)  # fine grid: 16x16 subcells per cell
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -5394,24 +5400,10 @@ FROM fine GROUP BY 1, 2, 3
 
 
 def _oracle_focal_mean() -> str:
-    # same fine grid as the mosaic oracle, then the 9-offset scatter + agg;
+    # the shared fine grid, then the 9-offset scatter + agg;
     # HAVING bool_or(is_center) mirrors the Spark max(is_center) filter
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
-fine AS (SELECT {fix} AS fx, {fiy} AS fy, CAST(MAX(val) AS BIGINT) AS val
-         FROM vals GROUP BY 1, 2),
+    return _fine_cte_sql() + f""",
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty, val,
          (o.dx = 0 AND o.dy = 0) AS is_center
@@ -5528,24 +5520,10 @@ def _oracle_approx_distinct() -> str:
 
 
 def _oracle_focal_gradient() -> str:
-    # fine-grid CTE as in the mosaic/focal oracles; scatter weights mirror
-    # operators/focal.py GRAD_OFFSETS with the sign flip applied there
+    # the shared fine grid; scatter weights mirror operators/focal.py
+    # GRAD_OFFSETS with the sign flip applied there
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
-fine AS (SELECT {fix} AS fx, {fiy} AS fy, CAST(MAX(val) AS BIGINT) AS val
-         FROM vals GROUP BY 1, 2),
+    return _fine_cte_sql() + f""",
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty,
          o.wx * val AS cx, o.wy * val AS cy,
@@ -6665,8 +6643,7 @@ def _oracle_gap_fill() -> str:
 
 def _oracle_mosaic_blend() -> str:
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_IMG_CTE},
 sel AS (SELECT * FROM meta WHERE k % 8 = 0),
@@ -7007,8 +6984,7 @@ def _fine2_cte_sql() -> str:
     cross-epoch framing — it uses _fine_cte_sql(modulo=8) to compare two
     classifiers on ONE epoch; see kappa.py's docstring)."""
     nf = 1 << (CELL_RES + 4)
-    fix = f"CAST(LEAST(GREATEST(FLOOR((x - (-180.0)) / 360.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
-    fiy = f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}), 0), {nf - 1}) AS BIGINT)"
+    fix, fiy = _fine_xy_sql(nf)
     fine2 = f"""{_IMG_CTE},
 sel AS (SELECT *, (k % 16) // 8 AS epoch FROM meta WHERE k % 8 = 0),
 rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),

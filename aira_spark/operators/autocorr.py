@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 ROOK = [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)]
 
@@ -79,13 +79,8 @@ def spatial_autocorr(
 ) -> DataFrame:
     """One row: (n, s_v, s_v2, w_pairs, s_wvv, s_wvp, s_wd2, moran_e6,
     geary_e6) — global Moran's I / Geary's C of the mosaic fine grid."""
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
         f"'is_center', {str(dx == 0 and dy == 0).lower()})"
@@ -237,13 +232,8 @@ def gi_hotspots(
     """
     from .focal import OFFSETS
 
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
         f"'is_center', {str(dx == 0 and dy == 0).lower()})"
@@ -361,13 +351,8 @@ def lisa_clusters(
     classification pure projection. Cells never pair with cells."""
     from .focal import OFFSETS
 
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
         f"'is_center', {str(dx == 0 and dy == 0).lower()})"

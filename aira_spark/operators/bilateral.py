@@ -33,8 +33,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 SIGMA_R = 50
 
@@ -59,11 +59,9 @@ def bilateral(
     images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
 ) -> DataFrame:
     """(fx, fy, val, smoothed) for every complete-window fine cell."""
-    pb = 1 << patch_bits
     tab = "array({})".format(", ".join(str(v) for v in range_table()))
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
+    fine = fine_grid(images, res, patch_bits).select(
+        "fx", "fy",
         # loud in-row guard (zero extra jobs): the 256-entry Gaussian range
         # table can only index |v_i - v11| for u8 values — a band value
         # outside [0,255] must raise, not silently NULL the element_at

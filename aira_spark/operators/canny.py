@@ -38,8 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 # tan(22.5 deg) quantized to the literal rational 53/128
 TAN_NUM, TAN_DEN = 53, 128
@@ -70,12 +70,7 @@ def canny_edges(
     mag2 >= LO2; edge_class in 'strong' (>= HI2), 'linked' (weak,
     reached from a strong cell within K_ROUNDS 8-steps through weak),
     'dropped' (weak, unreached)."""
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     # stage 1+2: gradient + direction via one 5-arm scatter
     arms5 = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, 'tag', '{tag}')"

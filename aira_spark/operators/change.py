@@ -19,17 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 
 def _fine(images: DataFrame, res: int, patch_bits: int, epoch: int) -> DataFrame:
-    vals = mosaic_cell_values(images, res, patch_bits)
-    return vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-        F.lit(epoch).alias("epoch"),
+    return fine_grid(images, res, patch_bits).select(
+        "fx", "fy", "val", F.lit(epoch).alias("epoch")
     )
 
 

@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 # corner offset (dx, dy) from the block anchor -> marching-squares bit
 # (SW=1, SE=2, NE=4, NW=8; anchor = SW corner, y-up grid)
@@ -49,12 +49,7 @@ def contour_cases(
     """(threshold, case_id, n_cells, n_segments): marching-squares census
     of the mosaic fine grid at each iso level; n_segments counts contour
     segments crossing blocks of that case."""
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('ax', fx - {dx}, 'ay', fy - {dy}, "
         f"'bit', CAST({bit} AS BIGINT))"

@@ -44,16 +44,11 @@ def distance_transform(
     """(fx, fy, val, dist10): chamfer distance (x10 fixed point) from
     every occupied fine-grid cell to its nearest seed cell (val >=
     seed_min_val), -1 where no seed is reachable within `rounds`."""
-    from .mosaic import mosaic_cell_values
-    from ..functions.cells import cell_ix, cell_iy
+    from .mosaic import fine_grid
 
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    ).localCheckpoint(eager=True)  # static: re-joined every round
+    # static: re-joined every round
+    fine = fine_grid(images, res, patch_bits).localCheckpoint(eager=True)
     occupied = fine.select("fx", "fy")
     dist = fine.selectExpr(
         "fx", "fy",

@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 MASK_MIN = 128
 
@@ -44,12 +44,9 @@ def euler_census(
     components - holes for the whole-mask row."""
     pb = 1 << patch_bits
     mask = (
-        mosaic_cell_values(images, res, patch_bits)
+        fine_grid(images, res, patch_bits)
         .where(F.col("val") >= MASK_MIN)
-        .select(
-            (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-            (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        )
+        .select("fx", "fy")
     )
     arms = ", ".join(
         f"named_struct('tx', fx - {dx}, 'ty', fy - {dy}, 'tag', '{t}')"

@@ -23,6 +23,13 @@ same aggregation replaces a second shuffle/join).
 Plan shape (pinned by tests/test_plans.py): decode mapInPandas -> mosaic
 hash agg -> offset explode (projection) -> ONE more hash agg; no join, no
 cartesian, no Python nodes past the decode.
+
+Contract for every raster neighbourhood operator in the engine (focal,
+terrain, texture, morphology, density): read the grid through
+`mosaic.fine_grid` (or a points-to-cells count), and move values to the
+neighbours through `scatter` with SQL-text arms — it owns the explode, the
+target arithmetic and the [0, n)^2 edge clip. A caller states only its
+value columns, its arms and its aggregate.
 """
 
 from __future__ import annotations
@@ -31,9 +38,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from .mosaic import fine_grid
 
 OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+# the 3x3 window as scatter arms; is_center marks the (0, 0) arm
+WINDOW_ARMS = ", ".join(
+    f"named_struct('dx', {dx}, 'dy', {dy}, "
+    f"'is_center', {str(dx == 0 and dy == 0).lower()})"
+    for dx, dy in OFFSETS
+)
+
+
+def scatter(
+    df: DataFrame, arms: str, n: int, x: str = "fx", y: str = "fy"
+) -> DataFrame:
+    """df's rows once per arm, plus the arm struct `o` and its target
+    tx = x + o.dx, ty = y + o.dy; rows whose target falls outside the
+    [0, n)^2 grid are dropped. `arms` is the SQL text of comma-separated
+    named_struct('dx', .., 'dy', .., <carried fields>) arms — the caller
+    reads its carried fields from `o`."""
+    return (
+        df.select("*", F.expr(f"explode(array({arms}))").alias("o"))
+        .selectExpr("*", f"{x} + o.dx AS tx", f"{y} + o.dy AS ty")
+        .where(f"tx >= 0 AND tx < {n} AND ty >= 0 AND ty < {n}")
+    )
 
 
 def focal_mean(
@@ -43,26 +71,9 @@ def focal_mean(
     max-composited mosaic at the fine grid (res + patch_bits), mean taken
     over the filled neighbors present in each window."""
     nf = 1 << (res + patch_bits)
-    vals = mosaic_cell_values(images, res, patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-    )
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
-    scattered = fine.select(
-        "fx", "fy", "val", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "val",
-        ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_center"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
+    scattered = scatter(
+        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+    ).selectExpr("tx", "ty", "val", "o.is_center")
     return (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -89,6 +100,10 @@ DENSITY_KERNEL = {
     (1, 0): 2, (-1, 0): 2, (0, 1): 2, (0, -1): 2,
     (1, 1): 1, (1, -1): 1, (-1, 1): 1, (-1, -1): 1,
 }
+DENSITY_ARMS = ", ".join(
+    f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w})"
+    for (dx, dy), w in sorted(DENSITY_KERNEL.items())
+)
 
 
 def point_density(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
@@ -119,19 +134,8 @@ def point_density(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
             "cnt",
         )
     )
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w})"
-        for (dx, dy), w in sorted(DENSITY_KERNEL.items())
-    )
-    scattered = counts.select(
-        "gx", "gy", "cnt", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("gx") + F.col("o.dx")).alias("tx"),
-        (F.col("gy") + F.col("o.dy")).alias("ty"),
-        (F.col("cnt") * F.col("o.w")).alias("contrib"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
+    scattered = scatter(counts, DENSITY_ARMS, nf, "gx", "gy").selectExpr(
+        "tx", "ty", "cnt * o.w AS contrib"
     )
     return (
         scattered.groupBy("tx", "ty")
@@ -156,6 +160,14 @@ GRAD_OFFSETS = {
     (0, 1): (0, 1),
     (0, -1): (0, -1),
 }
+# a source at s contributes to target t = s + (dx, dy) with the weight the
+# stencil assigns to the RELATIVE offset t - s = (dx, dy) negated:
+# val(t + (1,0)) means the source EAST of t, which scatters via (-1, 0)
+GRAD_ARMS = ", ".join(
+    f"named_struct('dx', {dx}, 'dy', {dy}, 'wx', {-wx}, 'wy', {-wy}, "
+    f"'is_center', {str(dx == 0 and dy == 0).lower()})"
+    for (dx, dy), (wx, wy) in GRAD_OFFSETS.items()
+)
 
 
 def focal_gradient(
@@ -172,31 +184,13 @@ def focal_gradient(
     subcell scatters (weighted) contributions to the 5 stencil targets, one
     hash agg folds them map-side; the required-neighbor check is a counter
     folded in the same agg — no join against the filled set."""
-    vals = mosaic_cell_values(images, res, patch_bits)
     nf = 1 << (res + patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-    )
-    # a source at s contributes to target t = s + (dx, dy) with the weight
-    # the stencil assigns to the RELATIVE offset t - s = (dx, dy) negated:
-    # val(t + (1,0)) means the source EAST of t, which scatters via (-1, 0)
-    arms = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy}, 'wx', {-wx}, 'wy', {-wy})"
-        for (dx, dy), (wx, wy) in GRAD_OFFSETS.items()
-    )
-    scattered = fine.select(
-        "fx", "fy", "val", F.expr(f"explode(array({arms}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        (F.col("o.wx").cast("long") * F.col("val")).alias("cx"),
-        (F.col("o.wy").cast("long") * F.col("val")).alias("cy"),
-        ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_center"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
+    scattered = scatter(
+        fine_grid(images, res, patch_bits), GRAD_ARMS, nf
+    ).selectExpr(
+        "tx", "ty",
+        "CAST(o.wx AS BIGINT) * val AS cx", "CAST(o.wy AS BIGINT) * val AS cy",
+        "o.is_center",
     )
     return (
         scattered.groupBy("tx", "ty")
@@ -232,26 +226,9 @@ def focal_median(
     odd n); med_x2 = med_lo + med_hi is twice the textbook median, kept in
     exact integers so every engine agrees bit-for-bit (no .5 floats)."""
     nf = 1 << (res + patch_bits)
-    vals = mosaic_cell_values(images, res, patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-    )
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
-    scattered = fine.select(
-        "fx", "fy", "val", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "val",
-        ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_center"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
+    scattered = scatter(
+        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+    ).selectExpr("tx", "ty", "val", "o.is_center")
     return (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -291,25 +268,11 @@ def focal_majority(
     exchange payload is <= 4 small rows per target cell regardless of
     data volume; two chained hash aggs, no window, no Python."""
     nf = 1 << (res + patch_bits)
-    vals = mosaic_cell_values(images, res, patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        F.expr("val DIV 64").alias("cls"),
+    fine = fine_grid(images, res, patch_bits).selectExpr(
+        "fx", "fy", "val DIV 64 AS cls"
     )
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
-    scattered = fine.select(
-        "fx", "fy", "cls", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "cls",
-        ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_center"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
+    scattered = scatter(fine, WINDOW_ARMS, nf).selectExpr(
+        "tx", "ty", "cls", "o.is_center"
     )
     per_cls = scattered.groupBy("tx", "ty", "cls").agg(
         F.count("*").cast("long").alias("cnt"),

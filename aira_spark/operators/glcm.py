@@ -34,8 +34,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 N_LEVELS = 8  # val DIV 32
 HOM_LCM = math.lcm(*[1 + d * d for d in range(N_LEVELS)])  # 408850
@@ -53,10 +53,8 @@ def glcm_census(
     cell over horizontally adjacent fine-cell 8-level pairs; only cells
     with >= 1 adjacent pair emit."""
     pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        (F.col("val") / 32).cast("long").alias("g"),
+    fine = fine_grid(images, res, patch_bits).select(
+        "fx", "fy", (F.col("val") / 32).cast("long").alias("g"),
     )
     arms = (
         "array(named_struct('tx', fx, 'ty', fy, 'tag', 'c'), "

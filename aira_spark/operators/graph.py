@@ -36,8 +36,7 @@ TELEPORT = INIT_MICROS * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
 
 
 def pagerank_fixed(
-    edges: DataFrame, out_degree: int, rounds: int = 10,
-    checkpoint_every: int = 4,
+    edges: DataFrame, out_degree: int, rounds: int = 10
 ) -> DataFrame:
     """(node, rank_micros) after `rounds` synchronous iterations.
 
@@ -76,7 +75,7 @@ def pagerank_fixed(
             .groupBy("node")
             .agg(F.sum("c").cast("long").alias("inflow"))
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % 4 == 0:
             # same device as duplicate_clusters: each round's plan embeds the
             # previous round's subtree; truncate before it compounds
             inflow = inflow.localCheckpoint(eager=True)
@@ -262,8 +261,7 @@ SELECT CAST(-1 AS BIGINT), CAST(COALESCE(SUM(n_tri), 0) // 3 AS BIGINT) FROM per
 
 
 def sssp_fixed(
-    edges: DataFrame, seeds: DataFrame, rounds: int = 6,
-    checkpoint_every: int = 1,
+    edges: DataFrame, seeds: DataFrame, rounds: int = 6
 ) -> DataFrame:
     """(node, dist): minimum WEIGHTED distance from the seed set after
     `rounds` synchronous Bellman-Ford relaxations — the weighted companion
@@ -276,8 +274,8 @@ def sssp_fixed(
 
     Scale shape per round: one equi-join on src + one min hash-agg on
     node — only (node, BIGINT) rows shuffle, edges stream map-side; the
-    running distance table localCheckpoints every `checkpoint_every`
-    rounds so lineage stays flat (the duplicate_clusters device). The
+    running distance table localCheckpoints every round so lineage stays
+    flat (the duplicate_clusters device). The
     edge table is materialized ONCE up front: every round re-reads it,
     and dist's union arm additionally doubles lineage per round, so an
     expensive upstream edge build (e.g. a kNN join) would otherwise be
@@ -287,7 +285,7 @@ def sssp_fixed(
         seeds.select("node").distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    for i in range(rounds):
+    for _ in range(rounds):
         relaxed = edges.join(dist, edges.src == dist.node).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).cast("long").alias("dist"),
@@ -296,9 +294,8 @@ def sssp_fixed(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").cast("long").alias("dist"))
+            .localCheckpoint(eager=True)
         )
-        if (i + 1) % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
     return dist
 
 
@@ -446,7 +443,7 @@ HITS_SCALE = 1_000_000
 
 
 def hits_fixed(
-    edges: DataFrame, rounds: int = 5, checkpoint_every: int = 2,
+    edges: DataFrame, rounds: int = 5
 ) -> DataFrame:
     """(node, hub_micros, auth_micros) after `rounds` synchronous HITS
     iterations (Kleinberg 1999) — hubs point at good authorities,
@@ -468,11 +465,11 @@ def hits_fixed(
     Scale shape per round: two (equi-join + hash agg) passes — the
     pagerank round shape run once per side — plus ONE single-row global
     sum cross-joined back with an explicit broadcast (never a shuffle);
-    scores are (node, BIGINT) rows; localCheckpoint every
-    `checkpoint_every` rounds bounds lineage (the duplicate_clusters
-    device). Edges are materialized ONCE up front (the sssp_fixed rule:
-    both per-round joins re-read them, so an expensive upstream build —
-    here the kNN join — would otherwise re-execute 2x per round)."""
+    scores are (node, BIGINT) rows; localCheckpoint every second round
+    bounds lineage (the duplicate_clusters device). Edges are materialized
+    ONCE up front (the sssp_fixed rule: both per-round joins re-read them,
+    so an expensive upstream build — here the kNN join — would otherwise
+    re-execute 2x per round)."""
     if rounds < 1:
         # auth scores only exist after a half-round; the oracle's unroll has
         # no a0 CTE either, so rounds=0 is outside the operator's domain
@@ -512,7 +509,7 @@ def hits_fixed(
             .withColumnRenamed("src", "node")
         )
         hubs = _norm(hraw, "h")
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % 2 == 0:
             hubs = hubs.localCheckpoint(eager=True)
             auth = auth.localCheckpoint(eager=True)
     return (

@@ -32,9 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .focal import GRAD_OFFSETS, OFFSETS
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .focal import GRAD_ARMS, GRAD_OFFSETS, OFFSETS, WINDOW_ARMS, scatter
+from .mosaic import fine_grid
 
 
 def harris_corners(
@@ -44,36 +44,15 @@ def harris_corners(
     Harris response (x20 fixed point, k = 1/20) with strict 3x3 non-max
     suppression over the mosaic fine grid."""
     nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
-
-    def _in_grid(df: DataFrame) -> DataFrame:
-        return df.where(
-            (F.col("tx") >= 0) & (F.col("tx") < nf)
-            & (F.col("ty") >= 0) & (F.col("ty") < nf)
-        )
 
     # stage 1: central-difference gradient (focal_gradient's stencil)
-    grad_arms = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy}, 'wx', {-wx}, 'wy', {-wy})"
-        for (dx, dy), (wx, wy) in GRAD_OFFSETS.items()
-    )
     grad = (
-        _in_grid(
-            fine.select(
-                "fx", "fy", "val",
-                F.expr(f"explode(array({grad_arms}))").alias("o"),
-            ).select(
-                (F.col("fx") + F.col("o.dx")).alias("tx"),
-                (F.col("fy") + F.col("o.dy")).alias("ty"),
-                (F.col("o.wx").cast("long") * F.col("val")).alias("cx"),
-                (F.col("o.wy").cast("long") * F.col("val")).alias("cy"),
-                ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_c"),
-            )
+        scatter(fine_grid(images, res, patch_bits), GRAD_ARMS, nf)
+        .selectExpr(
+            "tx", "ty",
+            "CAST(o.wx AS BIGINT) * val AS cx",
+            "CAST(o.wy AS BIGINT) * val AS cy",
+            "o.is_center AS is_c",
         )
         .groupBy("tx", "ty")
         .agg(
@@ -87,22 +66,11 @@ def harris_corners(
     )
 
     # stage 2: 3x3 structure-tensor sums + the k=1/20 integer response
-    win_arms = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
     tensor = (
-        _in_grid(
-            grad.select(
-                "fx", "fy", "gx", "gy",
-                F.expr(f"explode(array({win_arms}))").alias("o"),
-            ).select(
-                (F.col("fx") + F.col("o.dx")).alias("tx"),
-                (F.col("fy") + F.col("o.dy")).alias("ty"),
-                (F.col("gx") * F.col("gx")).alias("xx"),
-                (F.col("gy") * F.col("gy")).alias("yy"),
-                (F.col("gx") * F.col("gy")).alias("xy"),
-                ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_c"),
-            )
+        scatter(grad, WINDOW_ARMS, nf)
+        .selectExpr(
+            "tx", "ty", "gx * gx AS xx", "gy * gy AS yy", "gx * gy AS xy",
+            "o.is_center AS is_c",
         )
         .groupBy("tx", "ty")
         .agg(
@@ -127,16 +95,10 @@ def harris_corners(
 
     # stage 3: strict 3x3 non-max suppression on r20
     return (
-        _in_grid(
-            tensor.select(
-                "fx", "fy", "n_win", "sxx", "syy", "sxy", "r20",
-                F.expr(f"explode(array({win_arms}))").alias("o"),
-            ).select(
-                (F.col("fx") + F.col("o.dx")).alias("tx"),
-                (F.col("fy") + F.col("o.dy")).alias("ty"),
-                "n_win", "sxx", "syy", "sxy", "r20",
-                ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_c"),
-            )
+        scatter(tensor, WINDOW_ARMS, nf)
+        .selectExpr(
+            "tx", "ty", "n_win", "sxx", "syy", "sxy", "r20",
+            "o.is_center AS is_c",
         )
         .groupBy("tx", "ty")
         .agg(

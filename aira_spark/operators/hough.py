@@ -33,8 +33,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 E6 = 1_000_000
 ENC = 1 << 32
@@ -67,7 +67,6 @@ def hough_lines(
     min_votes, is_peak = 1 on each theta's arg-max bin (smallest-bin tie
     break); peak bins ship even below min_votes so every theta with any
     vote emits exactly one peak row."""
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
     # encode bound, CHECKED not assumed (the voronoi rule): the encoded
     # argmax votes*2^32 + (2^32-1-bin) overflows int64 at votes >= 2^31,
@@ -81,11 +80,7 @@ def hough_lines(
             "int64; widen the encode or coarsen the grid"
         )
     off = 2 * nf * E6  # |rho_fp| <= 2*(nf-1)*1e6 < off: shift is total
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('t', CAST({t} AS BIGINT), 'rb', "
         f"(fx * CAST({c} AS BIGINT) + fy * CAST({s} AS BIGINT) + {off})"

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 N_CLS_DIV = 64  # 4 classes
 
@@ -45,12 +45,7 @@ def agreement_census(
     """(class_a, class_b, cnt, kappa_num, kappa_den): one confusion row
     per observed (pointwise, focal-mean) class pair over complete-window
     cells, plus the fold row (-1, -1, N, N*diag - pe, N^2 - pe)."""
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
         f"'is_c', {str(dx == 0 and dy == 0).lower()})"

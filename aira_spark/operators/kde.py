@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES, cell_from_xy, cell_ix, cell_iy
+from .focal import scatter
 
 RADIUS = 3
 H2 = RADIUS * RADIUS + 1    # h^2 in cell^2: rim cells keep weight >= 1
@@ -56,15 +57,8 @@ def kde_quartic(points: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
         f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w}L)"
         for (dx, dy), w in sorted(KDE_KERNEL.items())
     )
-    scattered = counts.select(
-        "gx", "gy", "cnt", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("gx") + F.col("o.dx")).alias("tx"),
-        (F.col("gy") + F.col("o.dy")).alias("ty"),
-        (F.col("cnt") * F.col("o.w")).alias("contrib"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
+    scattered = scatter(counts, offs, nf, "gx", "gy").selectExpr(
+        "tx", "ty", "cnt * o.w AS contrib"
     )
     return (
         scattered.groupBy("tx", "ty")

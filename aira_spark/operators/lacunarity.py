@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 SCALES = (1, 2, 4, 8)
 E6 = 1_000_000
@@ -49,11 +49,7 @@ def lacunarity_census(
     """(box_size, n_boxes, occ_boxes, sum_m, sum_m2, lac_e6) — one row
     per dyadic scale over the occupancy mask of the fine grid."""
     nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-    )
+    fine = fine_grid(images, res, patch_bits).select("fx", "fy")
     # derive the guard from nf instead of trusting the fixed default: the
     # worst case at scale r is 1e6 * N * sum_m2 <= 1e6 * (nf/r)^2 * occ * r^2
     # = 1e6 * nf^2 * occ, so occ must stay under 2^63 / (1e6 * nf^2) —

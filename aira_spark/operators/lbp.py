@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .focal import scatter
+from .mosaic import fine_grid
 
 # bit k -> offset from the CENTER to the neighbor (compass CCW from east)
 LBP_OFFS = [
@@ -39,27 +40,14 @@ def lbp_census(
     codes of its fine subcells with complete 8-neighborhoods."""
     nf = 1 << (res + patch_bits)
     pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
     # source s reaches target t = s - off_k carrying arm k; arm 8 = center
     arms = ", ".join(
         f"named_struct('dx', {-dx}, 'dy', {-dy}, 'k', {k})"
         for k, (dx, dy) in enumerate(LBP_OFFS)
     ) + ", named_struct('dx', 0, 'dy', 0, 'k', 8)"
-    scattered = fine.select(
-        "fx", "fy", "val", F.expr(f"explode(array({arms}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "val",
-        F.col("o.k").alias("k"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
+    scattered = scatter(
+        fine_grid(images, res, patch_bits), arms, nf
+    ).selectExpr("tx", "ty", "val", "o.k")
     slots = [
         F.max(F.when(F.col("k") == kk, F.col("val"))).alias(f"v{kk}")
         for kk in range(9)

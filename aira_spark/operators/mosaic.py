@@ -14,6 +14,12 @@ across images — pixels never shuffle, only (cell, subcell, val) rows. Patch
 assembly is a grouped-map applyInPandas per cell (the one UDF shape the
 input_hint allows beyond scalar/map batches), emitting the packed binary
 patch + fill count.
+
+Contract for the raster neighbourhood operators (focal, terrain, texture,
+morphology): they read the composited raster through `fine_grid` — one
+(fx, fy, val) row per filled fine cell at res + patch_bits — and move
+values between neighbours through `focal.scatter`; only `mosaic_patches`
+and the mosaic query itself need the (cell, pr, pc) split.
 """
 
 from __future__ import annotations
@@ -25,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES
+from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
 
 
 def mosaic_cell_values(
@@ -82,6 +88,21 @@ def mosaic_cell_values(
         fn, schema="cell long, pr int, pc int, val long"
     )
     return partials.groupBy("cell", "pr", "pc").agg(F.max("val").alias("val"))
+
+
+def fine_grid(
+    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
+) -> DataFrame:
+    """(fx, fy, val): mosaic_cell_values on the global fine grid at
+    res + patch_bits — fx = ix * PATCH + pc, fy = iy * PATCH + pr of the
+    coarse cell (ix, iy). A pure projection that Catalyst folds into the
+    caller's own select."""
+    pb = 1 << patch_bits
+    return mosaic_cell_values(images, res, patch_bits).select(
+        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
+        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
+        "val",
+    )
 
 
 MOSAIC_SCHEMA = "cell long, patch binary, n_filled long"

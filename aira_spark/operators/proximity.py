@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
+from ..functions.cells import DEFAULT_RES
 
 
 def chamfer_offsets(cap: int) -> list[tuple[int, int, int]]:
@@ -63,30 +63,16 @@ def proximity_raster(
     """(fx, fy, dist34): exact capped 3-4 chamfer distance to the nearest
     feature cell (mosaic value >= thresh); dist34 = 0 on feature cells,
     positions farther than `cap` are absent."""
-    from .mosaic import mosaic_cell_values
+    from .focal import scatter
+    from .mosaic import fine_grid
 
     nf = 1 << (res + patch_bits)
-    vals = mosaic_cell_values(images, res, patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-    )
-    feats = fine.where(F.col("val") >= thresh)
+    feats = fine_grid(images, res, patch_bits).where(F.col("val") >= thresh)
     arms = ", ".join(
         f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w})"
         for dx, dy, w in chamfer_offsets(cap)
     )
-    scattered = feats.select(
-        "fx", "fy", F.expr(f"explode(array({arms}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        F.col("o.w").alias("w"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
+    scattered = scatter(feats, arms, nf).selectExpr("tx", "ty", "o.w")
     return (
         scattered.groupBy("tx", "ty")
         .agg(F.min("w").cast("long").alias("dist34"))

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
+from ..functions.cells import DEFAULT_RES
 from .kmeans import _floor_div
-from .mosaic import mosaic_cell_values
+from .mosaic import fine_grid
 
 
 def pyramid_levels(
@@ -45,12 +45,7 @@ def pyramid_levels(
     max-composited band-0 mosaic. level 0 is the fine grid itself
     (n_src = 1); level k groups 2^k x 2^k fine subcells; mean_e6 is the
     mean of the FILLED children in integer micros (floor)."""
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         "named_struct('level', CAST({k} AS BIGINT), "
         "'px', {px}, 'py', {py})".format(

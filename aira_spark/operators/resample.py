@@ -23,9 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
+from ..functions.cells import DEFAULT_RES
 from .kmeans import _floor_div
-from .mosaic import mosaic_cell_values
+from .mosaic import fine_grid
 
 # per-axis arms: target offset from 2*s, and the numerator of the /4 weight
 AXIS_ARMS = [(-1, 1), (0, 3), (1, 3), (2, 1)]
@@ -36,12 +36,7 @@ def upsample_bilinear(
 ) -> DataFrame:
     """(tx, ty, val_x16, val): bilinear 2x upsample; val_x16 is the exact
     interpolated value in sixteenths, val its floor."""
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     arms = ", ".join(
         f"named_struct('tx', 2 * fx + {ox}, 'ty', 2 * fy + {oy}, "
         f"'w', CAST({wx * wy} AS BIGINT))"

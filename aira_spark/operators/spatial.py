@@ -400,7 +400,6 @@ def knn_join(
     points: DataFrame,
     k: int,
     res: int = DEFAULT_RES,
-    ring_rounds: int = 1,
     metric: str = "euclidean",
     cleanup: bool = False,
 ) -> DataFrame:
@@ -417,9 +416,6 @@ def knn_join(
     is bounded by ring size x local density and the fallback by the (tiny)
     unfinished-query count. Deterministic tie-break: (dist, neighbor_id).
 
-    ring_rounds > 1 inserts extra radius-doubling ring rounds before the
-    brute-force fallback (useful when the fallback scan is the bottleneck).
-
     metric="haversine" ranks by great-circle km; the finalization bound then
     uses the spherical lower bounds for points outside the ring (latitude
     case: central angle >= lat diff; longitude case: sin(x) >= 2x/pi at the
@@ -427,8 +423,8 @@ def knn_join(
     column, so near-pole queries finalize conservatively and fall back to
     the exact scan when the bound cannot certify k neighbors.
 
-    CACHE LIFECYCLE: the operator persists the point projection and one
-    candidate/finished-id pair per ring round; like Spark's own .cache(),
+    CACHE LIFECYCLE: the operator persists the point projection and the
+    ring candidates and finished ids; like Spark's own .cache(),
     the CALLER owns their lifetime. cleanup=False (default) leaves them
     cached — identical repeated invocations then reuse them via logical-
     plan matching (measured ~40%% faster on a re-run), which suits one-shot
@@ -481,70 +477,66 @@ def knn_join(
         )
 
     handles = [pts, pending]  # every persisted frame, unpersisted on return
-    results = None
-    for round_i in range(ring_rounds):
-        ringed = pending.withColumn("cell", F.expr(f"explode({k_ring('qcell', radius)})"))
-        ranked = rank_candidates(ringed.join(pts, "cell")).persist()
-        handles.append(ranked)
-        if metric == "haversine":
-            from ..functions.geo import EARTH_RADIUS_KM as _R
+    ringed = pending.withColumn("cell", F.expr(f"explode({k_ring('qcell', radius)})"))
+    ranked = rank_candidates(ringed.join(pts, "cell")).persist()
+    handles.append(ranked)
+    if metric == "haversine":
+        from ..functions.geo import EARTH_RADIUS_KM as _R
 
-            # lat case: a point outside the ring in latitude differs by
-            # >= radius*cell_h deg, and central angle >= lat diff (exact)
-            lat_bound = _R * math.radians(radius * cell_h)
-            # lon case: the point's latitude can be up to (radius+1)*cell_h
-            # from qy (query anywhere in its cell, point anywhere in the
-            # outermost ring row), and its TRUE angular separation is
-            # min(planar dx, 360 - dx): planar dx >= radius*cell_w, but a
-            # wrapped point (dx > 180) can be as angular-close as
-            # 180 - |qx| deg — cap the exclusion angle by that, so near the
-            # antimeridian the bound shrinks and queries fall back to the
-            # exact scan instead of certifying unsoundly
-            # clamp at 90 (not an arbitrary 89.9): points can sit above any
-            # sub-90 clamp, and cos(90) -> 0 bound -> no certification ->
-            # exact fallback, which is the sound behavior at the pole
-            phi_max = f"least(abs(qy_) + {sql_double((radius + 1) * cell_h)}, 90.0D)"
-            lon_excl_deg = f"least({sql_double(radius * cell_w)}, 180.0D - abs(qx_))"
-            lon_bound = (
-                f"{sql_double(2.0 * _R / math.pi)} * cos(radians({phi_max}))"
-                f" * radians({lon_excl_deg})"
-            )
-            # STRICT bound: an outside-ring point can sit at distance exactly
-            # equal to the exclusion bound, and with kth_dist == bound it
-            # would win the (dist, neighbor_id) tie-break whenever its id is
-            # smaller — certifying on <= would then diverge from the exact
-            # top-k. Strict < also closes the pole case: lon_bound -> 0 at
-            # |lat| = 90, and 0 < 0 is false, so co-located polar points fall
-            # back to the exact scan instead of certifying unsoundly.
-            safe_cond = f"kth_dist < least({sql_double(lat_bound)}, {lon_bound})"
-        else:
-            safe_cond = f"kth_dist < {sql_double(float(radius) * safe_per_ring)}"
-        done_ids = (
-            ranked.groupBy("query_id")
-            .agg(
-                F.expr("count(*) AS n_found"),
-                F.expr("max(dist) AS kth_dist"),
-                F.expr("min(qy) AS qy_"),
-                F.expr("min(qx) AS qx_"),
-            )
-            .where(f"n_found >= {k} AND {safe_cond}")
-            .select("query_id")
-            .persist()
+        # lat case: a point outside the ring in latitude differs by
+        # >= radius*cell_h deg, and central angle >= lat diff (exact)
+        lat_bound = _R * math.radians(radius * cell_h)
+        # lon case: the point's latitude can be up to (radius+1)*cell_h
+        # from qy (query anywhere in its cell, point anywhere in the
+        # outermost ring row), and its TRUE angular separation is
+        # min(planar dx, 360 - dx): planar dx >= radius*cell_w, but a
+        # wrapped point (dx > 180) can be as angular-close as
+        # 180 - |qx| deg — cap the exclusion angle by that, so near the
+        # antimeridian the bound shrinks and queries fall back to the
+        # exact scan instead of certifying unsoundly
+        # clamp at 90 (not an arbitrary 89.9): points can sit above any
+        # sub-90 clamp, and cos(90) -> 0 bound -> no certification ->
+        # exact fallback, which is the sound behavior at the pole
+        phi_max = f"least(abs(qy_) + {sql_double((radius + 1) * cell_h)}, 90.0D)"
+        lon_excl_deg = f"least({sql_double(radius * cell_w)}, 180.0D - abs(qx_))"
+        lon_bound = (
+            f"{sql_double(2.0 * _R / math.pi)} * cos(radians({phi_max}))"
+            f" * radians({lon_excl_deg})"
         )
-        handles.append(done_ids)
-        finished = ranked.join(F.broadcast(done_ids), "query_id", "left_semi").select(
-            "query_id", "neighbor_id", "rank", "dist"
+        # STRICT bound: an outside-ring point can sit at distance exactly
+        # equal to the exclusion bound, and with kth_dist == bound it
+        # would win the (dist, neighbor_id) tie-break whenever its id is
+        # smaller — certifying on <= would then diverge from the exact
+        # top-k. Strict < also closes the pole case: lon_bound -> 0 at
+        # |lat| = 90, and 0 < 0 is false, so co-located polar points fall
+        # back to the exact scan instead of certifying unsoundly.
+        safe_cond = f"kth_dist < least({sql_double(lat_bound)}, {lon_bound})"
+    else:
+        safe_cond = f"kth_dist < {sql_double(float(radius) * safe_per_ring)}"
+    done_ids = (
+        ranked.groupBy("query_id")
+        .agg(
+            F.expr("count(*) AS n_found"),
+            F.expr("max(dist) AS kth_dist"),
+            F.expr("min(qy) AS qy_"),
+            F.expr("min(qx) AS qx_"),
         )
-        results = finished if results is None else results.unionByName(finished)
-        pending = pending.join(F.broadcast(done_ids), "query_id", "left_anti")
-        radius = min(n, radius * 2)
+        .where(f"n_found >= {k} AND {safe_cond}")
+        .select("query_id")
+        .persist()
+    )
+    handles.append(done_ids)
+    finished = ranked.join(F.broadcast(done_ids), "query_id", "left_semi").select(
+        "query_id", "neighbor_id", "rank", "dist"
+    )
+    pending = pending.join(F.broadcast(done_ids), "query_id", "left_anti")
 
     # exact fallback: broadcast the unfinished queries against every point —
     # one extra scan of pts, zero shuffles of the point side
     fallback = rank_candidates(
         pts.join(F.broadcast(pending.drop("qcell")), how="cross")
     ).select("query_id", "neighbor_id", "rank", "dist")
-    out = results.unionByName(fallback) if results is not None else fallback
+    out = finished.unionByName(fallback)
     if cleanup:
         # materialize the (queries x k)-row result, then release every
         # persisted intermediate — the handles are unreachable from the

@@ -115,33 +115,15 @@ def flow_direction(
     focal_mean — one scatter + one agg, no join, pixels never shuffle."""
     from pyspark.sql import functions as F
 
-    from .focal import OFFSETS
-    from .mosaic import mosaic_cell_values
-    from ..functions.cells import cell_ix, cell_iy
+    from .focal import WINDOW_ARMS, scatter
+    from .mosaic import fine_grid
 
     nf = 1 << (res + patch_bits)
-    vals = mosaic_cell_values(images, res, patch_bits)
-    fine = vals.select(
-        (cell_ix(F.col("cell")) * (1 << patch_bits) + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * (1 << patch_bits) + F.col("pr")).alias("fy"),
-        "val",
-    )
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
     # the scatter target sees this source at the INVERSE offset, so the
     # code stored is the source's position in the TARGET's 3x3 window
-    scattered = fine.select(
-        "fx", "fy", "val", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "val",
-        ((1 - F.col("o.dy")) * 3 + (1 - F.col("o.dx"))).alias("code"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
+    scattered = scatter(
+        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+    ).selectExpr("tx", "ty", "val", "(1 - o.dy) * 3 + (1 - o.dx) AS code")
     return (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -544,20 +526,14 @@ def viewshed(
     depends on corpus size."""
     from pyspark.sql import functions as F
 
-    from ..functions.cells import cell_ix, cell_iy
-    from .mosaic import mosaic_cell_values
+    from .mosaic import fine_grid
 
-    pb = 1 << patch_bits
     nf = 1 << (res + patch_bits)
     # the fine grid feeds FOUR subtrees (observers, targets, both anti-join
     # arms); localCheckpoint pins the one decode pass instead of replaying
     # the Arrow decode per subtree (the flow_accumulation device) — the
     # grid is bounded by the cell resolution, never by corpus size
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    ).localCheckpoint(eager=True)
+    fine = fine_grid(images, res, patch_bits).localCheckpoint(eager=True)
     obs = fine.where(
         (F.col("fx") % lattice == 0) & (F.col("fy") % lattice == 0)
     ).select(

@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .focal import OFFSETS
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .focal import OFFSETS, WINDOW_ARMS, scatter
+from .mosaic import fine_grid
 
 PEAK_MIN = 32    # tophat >= 32 of 255: a "small bright feature" flag
 
@@ -37,21 +37,9 @@ PEAK_MIN = 32    # tophat >= 32 of 255: a "small bright feature" flag
 def _focal_fold(df: DataFrame, fold, nf: int) -> DataFrame:
     """One complete-window focal stage: (fx, fy, v) -> (fx, fy, fold(v))
     restricted to targets with all 9 window cells present."""
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})" for dx, dy in OFFSETS
-    )
-    scattered = df.select(
-        "fx", "fy", "v", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("fx") + F.col("o.dx")).alias("tx"),
-        (F.col("fy") + F.col("o.dy")).alias("ty"),
-        "v",
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
-    )
     return (
-        scattered.groupBy("tx", "ty")
+        scatter(df, WINDOW_ARMS, nf)
+        .groupBy("tx", "ty")
         .agg(F.count("*").alias("n"), fold(F.col("v")).alias("v"))
         .where(F.col("n") == 9)
         .select(F.col("tx").alias("fx"), F.col("ty").alias("fy"), "v")
@@ -64,11 +52,8 @@ def tophat(
     """(fx, fy, val, opening, tophat, peak): 3x3 grayscale top-hat of the
     mosaic fine grid; only cells where the double-window is complete."""
     nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        F.col("val").cast("long").alias("v"),
+    fine = fine_grid(images, res, patch_bits).selectExpr(
+        "fx", "fy", "CAST(val AS BIGINT) AS v"
     ).localCheckpoint(eager=True)   # reused: erode input + center join
     eroded = _focal_fold(fine, F.min, nf)
     opened = _focal_fold(eroded, F.max, nf)

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 SEED_ENC = 1 << 20
 
@@ -45,7 +45,6 @@ def voronoi_census(
     carrying (seed_id bigint, x double, y double in degrees); empty
     regions ship n_cells = 0 with -1 extremes."""
     nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
     chk = seeds.agg(
         F.max("seed_id").alias("mx"), F.min("seed_id").alias("mn")
     ).first()
@@ -62,11 +61,7 @@ def voronoi_census(
         f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}),"
         f" 0), {nf - 1}) AS BIGINT) AS sy",
     )
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
-    )
+    fine = fine_grid(images, res, patch_bits)
     assigned = (
         fine.crossJoin(F.broadcast(sg))
         .selectExpr(

@@ -366,17 +366,13 @@ def run_streaming_density(
     batch fold per (tx, ty) reproduces batch point_density bit-for-bit, so
     the same DuckDB oracle checks the streaming path."""
     from ..functions.cells import cell_from_xy, cell_ix, cell_iy
-    from ..operators.focal import DENSITY_KERNEL
+    from ..operators.focal import DENSITY_ARMS, scatter
 
     nf = 1 << res
     stage = tempfile.mkdtemp(prefix="aira_sdens_")
     src = points.select("point_id", "x", "y")
     src.repartition(_n_batches()).write.mode("overwrite").parquet(stage)
 
-    offs = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w})"
-        for (dx, dy), w in sorted(DENSITY_KERNEL.items())
-    )
     cells = (
         spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 1)
@@ -387,17 +383,8 @@ def run_streaming_density(
             cell_iy(F.col("cell")).alias("gy"),
         )
     )
-    scattered = cells.select(
-        "gx", "gy", F.expr(f"explode(array({offs}))").alias("o")
-    ).select(
-        (F.col("gx") + F.col("o.dx")).alias("tx"),
-        (F.col("gy") + F.col("o.dy")).alias("ty"),
-        F.col("gx").alias("sx"),
-        F.col("gy").alias("sy"),
-        F.col("o.w").alias("w"),
-    ).where(
-        (F.col("tx") >= 0) & (F.col("tx") < nf)
-        & (F.col("ty") >= 0) & (F.col("ty") < nf)
+    scattered = scatter(cells, DENSITY_ARMS, nf, "gx", "gy").selectExpr(
+        "tx", "ty", "gx AS sx", "gy AS sy", "o.w"
     )
     state = scattered.groupBy("tx", "ty", "sx", "sy").agg(
         F.sum("w").cast("long").alias("wsum")

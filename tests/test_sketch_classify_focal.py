@@ -640,6 +640,25 @@ def test_point_density_grid_edge_clips(spark):
     assert got[(0, 0)] == 4 and got[(1, 1)] == 1
 
 
+def test_scatter_clips_targets_at_all_four_grid_edges(spark):
+    """scatter keeps exactly the in-grid targets of a corner source: the
+    3x3 window of each corner of an 8 x 8 grid has 4 cells inside it. The
+    oracle rasters never reach the world edge, so this pins both bounds
+    of the [0, n) clip."""
+    from aira_spark.operators.focal import WINDOW_ARMS, scatter
+
+    n = 8
+    corners = [(0, 0), (n - 1, 0), (0, n - 1), (n - 1, n - 1)]
+    df = spark.createDataFrame(corners, "fx long, fy long")
+    got: dict[tuple[int, int], set[tuple[int, int]]] = {}
+    for r in scatter(df, WINDOW_ARMS, n).collect():
+        got.setdefault((r["fx"], r["fy"]), set()).add((r["tx"], r["ty"]))
+    for cx, cy in corners:
+        near_x = {cx, 1 if cx == 0 else n - 2}
+        near_y = {cy, 1 if cy == 0 else n - 2}
+        assert got[(cx, cy)] == {(x, y) for x in near_x for y in near_y}
+
+
 # ------------------------------------------------------- HLL set algebra
 
 
