@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from aira_spark.sources.tables import read_table  # noqa: E402
+
 CELL_RES = 7
 _N = 1 << CELL_RES
 _PACK = "CAST(7 AS BIGINT) * 288230376151711744"
@@ -130,23 +132,39 @@ def _fine_xy_sql(nf: int) -> tuple[str, str]:
     )
 
 
-def _fine_cte_sql(modulo: int = 8, patch_bits: int = 4) -> str:
-    """Full WITH prefix ending in `fine(fx, fy, val)` — the max-composited
-    mosaic fine grid recomputed from first principles (pixel formula
-    (r*7 + c*13 + k) % 256), shared by the raster-stack oracles."""
-    nf = 1 << (CELL_RES + patch_bits)
-    fix, fiy = _fine_xy_sql(nf)
-    return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % {modulo} = 0),
+def _pixel_ctes(
+    modulo: int = 8, carry: str = "", epoch: bool = False, weighted: bool = False
+) -> str:
+    """CTE chain `img, dims, meta, sel, rws, pxs, vals` (no WITH): one `vals`
+    row per synthesized pixel of the k % modulo == 0 images, with its value
+    (r*7 + c*13 + k) % 256 and centre (x, y). `carry` is a select-list
+    prefix of extra `pxs` columns; `epoch` adds the two-epoch split
+    (k % 16) // 8 to `sel` and carries it; `weighted` adds the mosaic-blend
+    edge weight `wt`."""
+    split = ", (k % 16) // 8 AS epoch" if epoch else ""
+    if epoch:
+        carry = "epoch, " + carry
+    wt = "\n         1 + LEAST(r, c, h - 1 - r, w - 1 - c) AS wt," if weighted else ""
+    return f"""{_IMG_CTE},
+sel AS (SELECT *{split} FROM meta WHERE k % {modulo} = 0),
 rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
 pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
 vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
+  SELECT {carry}(r * 7 + c * 13 + k) % 256 AS val,{wt}
          cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
          (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
   FROM pxs
-),
+)"""
+
+
+def _fine_cte_sql(modulo: int = 8, patch_bits: int = 4) -> str:
+    """Full WITH prefix ending in `fine(fx, fy, val)` — the max-composited
+    mosaic fine grid recomputed from first principles, shared by the
+    raster-stack oracles."""
+    nf = 1 << (CELL_RES + patch_bits)
+    fix, fiy = _fine_xy_sql(nf)
+    return f"""
+WITH {_pixel_ctes(modulo)},
 fine AS (SELECT {fix} AS fx, {fiy} AS fy, CAST(MAX(val) AS BIGINT) AS val
          FROM vals GROUP BY 1, 2)"""
 
@@ -205,7 +223,7 @@ def _images(spark: SparkSession, sf_dir: str, modulo: int | None = None) -> Data
 def _docs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.dedup import with_duplicates
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
     return with_duplicates(docs)
@@ -262,7 +280,7 @@ def q_ratio_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.functions.ratiofns import ratio_sort_cols
     from aira_spark.operators.chunks import with_meta
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = read_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("k")
     )
     e18 = 10**18
@@ -368,7 +386,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.spatial import knn_join
     from aira_spark.sources.vectors import points_table
 
-    queries = spark.read.parquet(f"{sf_dir}/supplier.parquet").selectExpr(
+    queries = read_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS query_id", f"{_KNN_QX} AS x", f"{_KNN_QY} AS y"
     )
     pts = points_table(spark, sf_dir)
@@ -477,7 +495,7 @@ def q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     an independent hash split — a pure zero-shuffle projection+filter."""
     from aira_spark.operators.curation import stratified_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
     return stratified_sample(docs, _SAMPLE_RATES, _SAMPLE_DEFAULT).select(
@@ -494,7 +512,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT, so the score is engine-exact."""
     from aira_spark.operators.rank import bm25_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     queries = spark.createDataFrame(_BM25_QUERIES, "query_id long, term string")
@@ -529,7 +547,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the shared predicate text."""
     from aira_spark.operators.text import repetition_filter
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     f = repetition_filter(docs)
     ints = [
         "doc_id", "n_words", "n_distinct", "top_word_cnt", "n_bigrams",
@@ -542,7 +560,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -562,8 +580,8 @@ def q_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
     rev = (
         o.groupBy("o_custkey")
         .agg(F.sum(F.expr(_PRICE_CENTS)).alias("revenue_cents"))
@@ -586,7 +604,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = read_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             "event_type",
@@ -610,7 +628,7 @@ def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by corpus_clean's quality_pass), language heuristic, fingerprint."""
     from aira_spark.operators.text import text_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return text_features(docs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -626,7 +644,7 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text analysis family, SURVEY.md §2; oracle evaluates identical SQL)."""
     from aira_spark.operators.text import doc_fingerprints
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return doc_fingerprints(docs, k=8, w=4).select(
         "doc_id", "doc_hash", F.col("fp").cast("long").alias("fp")
     )
@@ -653,7 +671,7 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming path."""
     from aira_spark.streaming.events import run_streaming_hll
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     out = run_streaming_hll(spark, docs)
     # est is checked as integer fixed-point (est_e4): the double form passes
     # through libm ln and the driver's pandas canonicalizer floats non-BIGINT
@@ -675,7 +693,7 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same-formula DuckDB mirror."""
     from aira_spark.streaming.events import run_streaming_cms
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     out = run_streaming_cms(spark, docs)
     return out.select(
         "grp",
@@ -729,7 +747,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic recall, not formula parity."""
     from aira_spark.operators.dedup import simhash_dup_pairs, simhash_table
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     sig = simhash_table(docs, 16).select(
         F.lit("sig").alias("tag"),
         F.col("doc_id").cast("long").alias("a"),
@@ -789,7 +807,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.similarity import cosine_topk
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_table(spark, sf_dir, "embeddings")
         .withColumn("embedding", F.expr(_QUANT))
     )
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -988,7 +1006,7 @@ def q_within_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from aira_spark.sources.vectors import points_table
 
-    queries = spark.read.parquet(f"{sf_dir}/supplier.parquet").selectExpr(
+    queries = read_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS query_id", f"{_KNN_QX} AS x", f"{_KNN_QY} AS y"
     )
     pts = points_table(spark, sf_dir)
@@ -1129,7 +1147,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — no float-sign risk) and the same verification."""
     from aira_spark.operators.similarity import embedding_near_dup_pairs_sql
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     # inject near-dups so the result is non-trivial
@@ -1151,7 +1169,7 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays as the pytest-gated alternative."""
     from aira_spark.operators.similarity import lsh_ann_topk_sql
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     return lsh_ann_topk_sql(emb, k=5, n_planes=6, n_tables=4).select(
@@ -1172,7 +1190,7 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.similarity import ivf_ann_topk_seeded
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .withColumn("embedding", F.expr(_QUANT))
     )
@@ -1195,7 +1213,7 @@ def q_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.spatial import idw_interpolate
     from aira_spark.sources.vectors import points_table
 
-    queries = spark.read.parquet(f"{sf_dir}/supplier.parquet").selectExpr(
+    queries = read_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS query_id", f"{_KNN_QX} AS x", f"{_KNN_QY} AS y"
     )
     pts = points_table(spark, sf_dir)
@@ -1280,7 +1298,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     backfill ordering bug fails the compare instead of being mirrored."""
     from aira_spark.operators.asof import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "click").select(
         "user_id", "event_id", "ts", "value"
     )
@@ -1390,7 +1408,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_dups(spark, sf_dir).filter(
         ~((F.col("doc_id") < 1_000_000) & (F.col("doc_id") % 17 == 0))
     )
-    bench = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+    bench = read_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 17 == 0
     )
     return decontaminate(corpus, bench, k=13).select(
@@ -1407,7 +1425,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     512-token context windows — all exact integers."""
     from aira_spark.operators.packing import pack_sequences
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     # tok_start localizes any residual driver-side diff to the input columns
     # (n_tok/shard) vs the window arithmetic; straddles ships as BIGINT (the
     # driver-canon-safe palette: strings + BIGINT only in checked columns)
@@ -1428,7 +1446,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups injected (vec_id % 9 bumped) so the result is non-trivial."""
     from aira_spark.operators.similarity import semantic_dup_pairs
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     bumped = emb.filter(F.col("vec_id") % 9 == 0).withColumn(
@@ -1452,10 +1470,10 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     256 integers per group, so the shuffle never scales with vocabulary."""
     from aira_spark.operators.sketch import hll_distinct
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
+    li = read_table(spark, sf_dir, "lineitem").selectExpr(
         "concat('rf:', l_returnflag) AS grp", "CAST(l_partkey AS STRING) AS v"
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    docs = read_table(spark, sf_dir, "documents").selectExpr(
         "source AS grp", "explode(split(text, ' ')) AS v"
     ).where("length(v) > 0")
     out = hll_distinct(li.unionAll(docs))
@@ -1537,7 +1555,7 @@ def q_hll_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 256-register tables, never on the corpus."""
     from aira_spark.operators.sketch import hll_set_estimates
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    docs = read_table(spark, sf_dir, "documents").selectExpr(
         "source AS grp", "explode(split(text, ' ')) AS v"
     ).where("length(v) > 0")
     return hll_set_estimates(docs).select(
@@ -1616,7 +1634,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode+agg to train, one broadcast left join to score, no Python."""
     from aira_spark.operators.lm import lm_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return lm_scores(docs)
 
 
@@ -1628,7 +1646,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     every assignment + per-cluster stat matches hash-exact."""
     from aira_spark.operators.kmeans import kmeans_summary
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return kmeans_summary(emb, k=8, rounds=4).select(
         "kind",
         F.col("a").cast("long").alias("a"),
@@ -1646,7 +1664,7 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely in SQL (unrolled per-round CTE chain, the PageRank device)."""
     from aira_spark.operators.bpe import bpe_summary
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bpe_summary(docs, n_merges=50).select(
         "kind",
         F.col("rk").cast("long").alias("rk"),
@@ -1665,7 +1683,7 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.multimodal import png_roundtrip_stats
 
     keys = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        read_table(spark, sf_dir, "part")
         .selectExpr("p_partkey AS k")
         .where("p_partkey % 13 = 0")
     )
@@ -1695,7 +1713,7 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.multimodal import jpeg_roundtrip_stats
 
     keys = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        read_table(spark, sf_dir, "part")
         .selectExpr("p_partkey AS k")
         .where("p_partkey % 11 = 0")
     )
@@ -1717,7 +1735,7 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.multimodal import audio_roundtrip_stats
 
     keys = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        read_table(spark, sf_dir, "part")
         .selectExpr("p_partkey AS k")
         .where("p_partkey % 17 = 0")
     )
@@ -1738,7 +1756,7 @@ def q_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.multimodal import video_roundtrip_stats
 
     keys = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        read_table(spark, sf_dir, "part")
         .selectExpr("p_partkey AS k")
         .where("p_partkey % 23 = 0")
     )
@@ -1751,7 +1769,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never shuffles."""
     from aira_spark.operators.rank import inverted_index
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # postings serialize to a comma-joined STRING: array columns are the one
     # schema the driver's pandas canonicalizer cannot sort/hash
     # (TypeError: unhashable type 'list', CORRECTNESS_r03); the list is
@@ -1776,7 +1794,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     est >= true sketch guarantee is pinned by pytest."""
     from aira_spark.operators.sketch import cms_point_estimates
 
-    pairs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pairs = read_table(spark, sf_dir, "documents").selectExpr(
         "source AS grp", "explode(split(text, ' ')) AS v"
     ).where("length(v) > 0")
     wl = spark.createDataFrame([(t,) for t in CMS_WATCHLIST], "term string")
@@ -1855,7 +1873,7 @@ def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.trajectory import od_flows
 
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_table(spark, sf_dir, "events")
         .selectExpr(
             "user_id", "ts", "event_id", f"{_EV_X} AS x", f"{_EV_Y} AS y"
         )
@@ -1873,7 +1891,7 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-text PMI micros (operators/cooccur.py)."""
     from aira_spark.operators.cooccur import pmi_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     return pmi_pairs(docs, window=3, min_count=3)
@@ -1886,7 +1904,7 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF/LSH/brute-force family."""
     from aira_spark.operators.pq import pq_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return pq_topk(emb, query_pred="vec_id < 8", m_sub=4, k_codes=8, topk=10)
 
 
@@ -1905,7 +1923,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     user set (operators/funnel.py)."""
     from aira_spark.operators.funnel import funnel_counts
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
     return funnel_counts(ev)
@@ -1917,7 +1935,7 @@ def q_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/vocab.py)."""
     from aira_spark.operators.vocab import vocab_census
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
+    docs = read_table(spark, sf_dir, "documents").select("text")
     return vocab_census(docs, top_n=30)
 
 
@@ -1935,7 +1953,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, the surviving vocabulary broadcasts (operators/tfidf.py)."""
     from aira_spark.operators.tfidf import tfidf_weights
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     return tfidf_weights(docs, min_df=5, max_df_frac="0.5")
@@ -1956,7 +1974,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast registry) + exact Levenshtein refine (operators/fuzzy.py)."""
     from aira_spark.operators.fuzzy import fuzzy_join
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     dirty = part.selectExpr(
         "CAST(p_partkey AS BIGINT) AS rec_id", f"{_FUZZY_DEL} AS dirty_name"
     )
@@ -1984,7 +2002,7 @@ def _cell_day_events(
 ) -> DataFrame:
     from aira_spark.functions.cells import cell_from_xy
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         f"{_EV_X} AS x", f"{_EV_Y} AS y",
         "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT) AS day",
         "CAST(FLOOR(value * 100.0) AS BIGINT) AS cents",
@@ -2034,7 +2052,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite 111..333 segment code (operators/rfm.py)."""
     from aira_spark.operators.rfm import rfm_segments
 
-    return rfm_segments(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    return rfm_segments(read_table(spark, sf_dir, "orders"))
 
 
 def q_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2044,7 +2062,7 @@ def q_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.conversion import conversion_lags
 
     return conversion_lags(
-        spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        read_table(spark, sf_dir, "events").select(
             "user_id", "ts", "event_type"
         )
     )
@@ -2056,7 +2074,7 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     fuzzy_join (operators/fuzzy.py:sorted_neighborhood_pairs)."""
     from aira_spark.operators.fuzzy import sorted_neighborhood_pairs
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     recs = part.selectExpr(
         "CAST(p_partkey AS BIGINT) AS rec_id", "p_name AS name"
     ).unionByName(
@@ -2086,7 +2104,7 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.rank import bm25_scores, rrf_fusion
     from aira_spark.operators.tfidf import tfidf_weights
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     queries = spark.createDataFrame(_BM25_QUERIES, "query_id long, term string")
@@ -2121,7 +2139,7 @@ def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, unpivoted (operators/profile.py)."""
     from aira_spark.operators.profile import profile_table
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "event_id", "user_id", "event_type",
         "CASE WHEN event_id % 13 = 0 THEN NULL ELSE props END AS props",
         "CAST(ts AS STRING) AS ts",
@@ -2135,7 +2153,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/basket.py)."""
     from aira_spark.operators.basket import basket_pairs
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
+    li = read_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey AS order_id", "l_partkey AS item"
     )
     return basket_pairs(li, min_support=2)
@@ -2157,7 +2175,7 @@ def q_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.occupancy import session_occupancy
 
     return session_occupancy(
-        spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        read_table(spark, sf_dir, "events").select(
             "user_id", "event_id", "ts"
         ),
         gap_minutes=30,
@@ -2213,7 +2231,7 @@ def _trajectory_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mod = int(os.environ.get("SPARK_GRAFT_SEG_MOD", "15"))
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_table(spark, sf_dir, "events")
         .where(f"user_id % {mod} = 0")
         .selectExpr(
             "user_id",
@@ -2267,7 +2285,7 @@ def q_route_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter (operators/segments.py:route_proximity)."""
     from aira_spark.operators.segments import route_proximity
 
-    pts = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    pts = read_table(spark, sf_dir, "customer").selectExpr(
         "CAST(c_custkey AS BIGINT) AS point_id",
         "CAST((c_custkey * 48271) % 100000 AS BIGINT) AS pxq",
         "CAST((c_custkey * 69621) % 100000 AS BIGINT) AS pyq",
@@ -2288,7 +2306,7 @@ def q_rolling_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
             F.expr("unix_timestamp(ts) div 86400").alias("day"),
@@ -2326,7 +2344,7 @@ def q_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, so the schema is static and both engines emit identical
     columns); zero counts as literal 0 via coalesce."""
     df = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_table(spark, sf_dir, "events")
         .select(
             F.expr("unix_timestamp(ts) div 86400").alias("day"),
             "event_type",
@@ -2349,9 +2367,9 @@ def q_sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping sets with grouping_id; NULL group keys coalesced to '(all)'
     so the canon never sees NULL-vs-'None' ambiguity."""
     joined = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .join(
-            spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+            read_table(spark, sf_dir, "customer").selectExpr(
                 "c_custkey", "c_mktsegment"
             ),
             F.col("o_custkey") == F.col("c_custkey"),
@@ -2410,7 +2428,7 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/scd.py)."""
     from aira_spark.operators.scd import scd2_build
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "event_id", "ts", "event_type AS attr"
     )
     return scd2_build(ev)
@@ -2422,11 +2440,11 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sketch.py:bloom_probe)."""
     from aira_spark.operators.sketch import bloom_probe
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     build = li.where("l_quantity > 45").selectExpr(
         "CAST(l_partkey AS STRING) AS v"
     )
-    probe = spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(
+    probe = read_table(spark, sf_dir, "part").selectExpr(
         "CAST(p_partkey AS STRING) AS v"
     )
     return bloom_probe(build, probe)
@@ -2454,7 +2472,7 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     without touching the join (operators/sketch.py:cms_join_size)."""
     from aira_spark.operators.sketch import cms_join_size
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     a = li.selectExpr("CAST(l_partkey AS STRING) AS v")
     b = li.where("l_quantity > 25").selectExpr("CAST(l_partkey AS STRING) AS v")
     return cms_join_size(a, b)
@@ -2468,7 +2486,7 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.classify import classifier_scores
     from aira_spark.operators.quantiles import exact_quantiles
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     scores = classifier_scores(docs, use_arrow=True).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("logit_micros").cast("long").alias("logit_micros"),
@@ -2501,7 +2519,7 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.mixture import mixture_weights
 
     return mixture_weights(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("source", "text")
+        read_table(spark, sf_dir, "documents").select("source", "text")
     )
 
 
@@ -2528,7 +2546,7 @@ def q_co_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.functions.cells import cell_from_xy
     from aira_spark.operators.trajectory import co_location_pairs
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", f"{_EV_X} AS x", f"{_EV_Y} AS y",
         "CAST(date_trunc('hour', ts) AS STRING) AS hour",
     )
@@ -2556,7 +2574,7 @@ def q_trajectory_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/trajectory.py)."""
     from aira_spark.operators.trajectory import trajectory_lengths
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "ts", "event_id", f"{_EV_X} AS x", f"{_EV_Y} AS y"
     )
     return trajectory_lengths(ev)
@@ -2575,7 +2593,7 @@ def q_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mod = int(os.environ.get("SPARK_GRAFT_HAUS_MOD", "1"))
     pings = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_table(spark, sf_dir, "events")
         .where(f"user_id % {mod} = 0")
         .selectExpr(
             "user_id",
@@ -2593,7 +2611,7 @@ def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/trajectory.py:stay_points)."""
     from aira_spark.operators.trajectory import stay_points
 
-    pings = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pings = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "ts", "event_id",
         "CAST((event_id * 2654435761) % 350000000 AS BIGINT) AS ix",
         "CAST((event_id * 1013904223) % 170000000 AS BIGINT) AS iy",
@@ -2628,7 +2646,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     two operators' outputs; recall ships as floor fixed point)."""
     from aira_spark.operators.similarity import cosine_topk, lsh_ann_topk_sql
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     queries = emb.filter(F.col("vec_id") < 50).select(
@@ -2666,7 +2684,7 @@ def q_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids-only recall join as ann_recall, exact cosine both arms."""
     from aira_spark.operators.similarity import cosine_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     short = emb.withColumn("embedding", F.expr("slice(embedding, 1, 16)"))
@@ -2714,7 +2732,7 @@ def q_heading_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/trajectory.py:heading_census)."""
     from aira_spark.operators.trajectory import heading_census
 
-    pings = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pings = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "ts", "event_id",
         "CAST((event_id * 2654435761) % 350000000 AS BIGINT) AS ix",
         "CAST((event_id * 1013904223) % 170000000 AS BIGINT) AS iy",
@@ -2740,7 +2758,7 @@ def q_dp_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/simplify.py:dp_simplify)."""
     from aira_spark.operators.simplify import dp_simplify
 
-    pings = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pings = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "ts", "event_id",
         "CAST((event_id * 2654435761) % 350000000 AS BIGINT) AS ix",
         "CAST((event_id * 1013904223) % 170000000 AS BIGINT) AS iy",
@@ -2778,7 +2796,7 @@ def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = polygons_table(spark, sf_dir)
     tgt = polygons_table(spark, sf_dir, table="supplier", key="s_suppkey")
-    vals = spark.read.parquet(f"{sf_dir}/nation.parquet").selectExpr(
+    vals = read_table(spark, sf_dir, "nation").selectExpr(
         "'poly' || CAST(n_nationkey AS STRING) AS poly_id",
         "CAST(n_nationkey * 37 % 1000 + 100 AS BIGINT) AS val",
     )
@@ -2791,7 +2809,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes, deterministic tie-breaks (operators/similarity.py)."""
     from aira_spark.operators.similarity import knn_classify
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     queries = emb.filter(F.col("vec_id") % 25 == 0).select(
@@ -2818,7 +2836,7 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/gram.py)."""
     from aira_spark.operators.gram import gram_matrix
 
-    return gram_matrix(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return gram_matrix(read_table(spark, sf_dir, "embeddings"))
 
 
 def q_cell_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2838,7 +2856,7 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/quantiles.py)."""
     from aira_spark.operators.quantiles import exact_quantiles
 
-    vals = spark.read.parquet(f"{sf_dir}/orders.parquet").selectExpr(
+    vals = read_table(spark, sf_dir, "orders").selectExpr(
         f"{_PRICE_CENTS} AS v"
     )
     return exact_quantiles(vals)
@@ -2881,7 +2899,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/skyline.py)."""
     from aira_spark.operators.skyline import skyline
 
-    pts = spark.read.parquet(f"{sf_dir}/part.parquet").selectExpr(*_SKY_PTS)
+    pts = read_table(spark, sf_dir, "part").selectExpr(*_SKY_PTS)
     return skyline(pts, n_buckets=64)
 
 
@@ -2951,7 +2969,7 @@ def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/segments.py:map_match)."""
     from aira_spark.operators.segments import map_match
 
-    pts = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    pts = read_table(spark, sf_dir, "customer").selectExpr(
         "CAST(c_custkey AS BIGINT) AS point_id",
         "CAST((c_custkey * 48271) % 100000 AS BIGINT) AS pxq",
         "CAST((c_custkey * 69621) % 100000 AS BIGINT) AS pyq",
@@ -2966,7 +2984,7 @@ def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded at B rows so it ALWAYS broadcasts (operators/dsir.py)."""
     from aira_spark.operators.dsir import dsir_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
     return dsir_scores(docs)
@@ -3014,7 +3032,7 @@ def q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.transitions import event_transitions
 
     return event_transitions(
-        spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        read_table(spark, sf_dir, "events").select(
             "user_id", "event_id", "ts", "event_type"
         )
     )
@@ -3050,7 +3068,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # thin the stream (event_id % 37 = 0) so first-activity spreads across
     # weeks and the triangle has real staggered cohorts, not one block
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 37 == 0
     )
     return retention_cohorts(ev.select("user_id", "ts"))
@@ -3118,7 +3136,7 @@ def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.interval import interval_overlap
 
     return interval_overlap(
-        spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        read_table(spark, sf_dir, "events").select(
             "user_id", "ts"
         ),
         top_k=40,
@@ -3132,7 +3150,7 @@ def q_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.curation import source_quota
 
     return source_quota(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), cap=25
+        read_table(spark, sf_dir, "documents"), cap=25
     )
 
 
@@ -3143,7 +3161,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.lines import line_dedup
 
     return line_dedup(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        read_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
     )
@@ -3204,7 +3222,7 @@ def q_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the DuckDB oracle runs the identical SQL expression form)."""
     from aira_spark.operators.classify import classifier_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     out = classifier_scores(docs, use_arrow=True)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -3252,7 +3270,7 @@ def q_itemsets3(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/itemsets.py:frequent_triples)."""
     from aira_spark.operators.itemsets import frequent_triples
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
+    li = read_table(spark, sf_dir, "lineitem").selectExpr(
         "l_orderkey AS order_id",
         "CAST(128 DIV (1 + l_partkey % 128) AS BIGINT) AS item",
     )
@@ -3265,7 +3283,7 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents (operators/cusum.py:cusum_alarms)."""
     from aira_spark.operators.cusum import cusum_alarms
 
-    return cusum_alarms(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return cusum_alarms(read_table(spark, sf_dir, "events"))
 
 
 def q_convoy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3276,7 +3294,7 @@ def q_convoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/convoy.py:convoy_pairs)."""
     from aira_spark.operators.convoy import convoy_pairs
 
-    pings = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pings = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", "ts", "event_id",
         "CAST((event_id * 2654435761) % 350000000 AS BIGINT) AS ix",
         "CAST((event_id * 1013904223) % 170000000 AS BIGINT) AS iy",
@@ -3355,7 +3373,7 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gx, gy, ep, val, n = _emerging_grid_exprs()
     day = "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT)"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         f"{gx} AS gx", f"{gy} AS gy",
         f"CAST({ep.format(day=day)} AS BIGINT) AS epoch",
         f"{val} AS val",
@@ -3429,7 +3447,7 @@ def q_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     anisotropy diagnostic (operators/pca.py:pca_top1)."""
     from aira_spark.operators.pca import pca_top1
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.expr(_QUANT)
     )
     return pca_top1(emb, dim=64, rounds=8)
@@ -3450,7 +3468,7 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textrank.py:textrank)."""
     from aira_spark.operators.textrank import textrank
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     rounds = int(os.environ.get("SPARK_GRAFT_TEXTRANK_ROUNDS", "6"))
@@ -3524,7 +3542,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.spearman import spearman_rho
 
     spend = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_custkey",
             "CAST(floor(o_totalprice * 100.0) AS BIGINT) AS cents",
@@ -3532,7 +3550,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.sum("cents").cast("long").alias("spend"))
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    cust = read_table(spark, sf_dir, "customer").selectExpr(
         "c_mktsegment AS grp", "c_custkey AS id",
         "CAST(floor(c_acctbal * 100.0) AS BIGINT) AS xv",
     )
@@ -3579,7 +3597,7 @@ def q_voronoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest (operators/voronoi.py:voronoi_census)."""
     from aira_spark.operators.voronoi import voronoi_census
 
-    seeds = spark.read.parquet(f"{sf_dir}/supplier.parquet").selectExpr(
+    seeds = read_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS seed_id", f"{_KNN_QX} AS x", f"{_KNN_QY} AS y"
     )
     return voronoi_census(
@@ -3640,7 +3658,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplied margins (operators/silhouette.py:silhouette_census)."""
     from aira_spark.operators.silhouette import silhouette_census
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return silhouette_census(emb, k=8, rounds=4)
 
 
@@ -3669,12 +3687,12 @@ def q_prop_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.proptest import prop_test
 
     orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count("*").alias("n_ord"))
     )
     users = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .selectExpr(
             "c_mktsegment AS segment",
@@ -3762,7 +3780,7 @@ def q_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/ccf.py:ccf_pairs)."""
     from aira_spark.operators.ccf import ccf_pairs
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "event_type AS grp",
         "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT)"
         " AS day",
@@ -3786,7 +3804,7 @@ def q_gyration(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonneg-remainder centroid (operators/gyration.py:gyration)."""
     from aira_spark.operators.gyration import gyration
 
-    pings = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pings = read_table(spark, sf_dir, "events").selectExpr(
         "user_id", f"{_EV_X} AS x", f"{_EV_Y} AS y"
     )
     return gyration(pings)
@@ -3798,7 +3816,7 @@ def q_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     band (operators/readability.py:flesch_census)."""
     from aira_spark.operators.readability import flesch_census
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     return flesch_census(docs)
@@ -3811,11 +3829,11 @@ def q_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/chi2.py:chi2_census)."""
     from aira_spark.operators.chi2 import chi2_census
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("row_cat")
     )
     pairs = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .selectExpr("o_custkey", "o_orderpriority AS col_cat")
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .select("row_cat", "col_cat")
@@ -3839,11 +3857,11 @@ def q_mwu_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     z chain (operators/mwu.py:mwu_pairs)."""
     from aira_spark.operators.mwu import mwu_pairs
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("grp")
     )
     samples = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_custkey",
             "CAST(floor(o_totalprice * 100.0) AS BIGINT) AS v",
@@ -3860,7 +3878,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation, dense 9-digit spine (operators/benford.py)."""
     from aira_spark.operators.benford import benford_census
 
-    vals = spark.read.parquet(f"{sf_dir}/orders.parquet").selectExpr(
+    vals = read_table(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS grp",
         "CAST(floor(o_totalprice * 100.0) AS BIGINT) AS v",
     )
@@ -3875,7 +3893,7 @@ def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
     float ops in either engine."""
     from aira_spark.operators.sde import std_ellipse
 
-    pts = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    pts = read_table(spark, sf_dir, "events").selectExpr(
         "event_type AS grp",
         "CAST(((event_id * 2654435761) % 350000000) DIV 10000 AS BIGINT)"
         " AS xq",
@@ -3936,11 +3954,11 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributions (operators/kstest.py:ks_pairs)."""
     from aira_spark.operators.kstest import ks_pairs
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("grp")
     )
     samples = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_custkey",
             "CAST(floor(o_totalprice * 100.0) AS BIGINT) AS v",
@@ -3958,7 +3976,7 @@ def q_joincount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.functions.cells import cell_from_xy
     from aira_spark.operators.joincount import join_counts
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "event_type AS grp", f"{_EV_X} AS x", f"{_EV_Y} AS y"
     )
     cells = (
@@ -4035,7 +4053,7 @@ def q_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.functions.cells import cell_from_xy
     from aira_spark.operators.diversity import simpson_cells
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "event_type AS etype", f"{_EV_X} AS x", f"{_EV_Y} AS y"
     )
     return simpson_cells(
@@ -4050,7 +4068,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.functions.cells import cell_from_xy
     from aira_spark.operators.diversity import gini_cells
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+    ev = read_table(spark, sf_dir, "events").selectExpr(
         "event_type AS grp", f"{_EV_X} AS x", f"{_EV_Y} AS y",
         "CAST(FLOOR(value * 100.0) AS BIGINT) AS cents",
     )
@@ -4069,7 +4087,7 @@ def q_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.kendall import kendall_tau
 
     spend = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .selectExpr(
             "o_custkey",
             "CAST(floor(o_totalprice * 100.0) AS BIGINT) AS cents",
@@ -4077,7 +4095,7 @@ def q_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.sum("cents").cast("long").alias("spend"))
     )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    cust = read_table(spark, sf_dir, "customer").selectExpr(
         "c_mktsegment AS grp", "c_custkey AS id",
         "CAST(floor(c_acctbal * 100.0) AS BIGINT) AS xv",
     )
@@ -4125,7 +4143,7 @@ def q_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents x microseconds (operators/gapfill.py:twa_locf)."""
     from aira_spark.operators.gapfill import twa_locf
 
-    return twa_locf(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return twa_locf(read_table(spark, sf_dir, "events"))
 
 
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4135,7 +4153,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/heavyhitters.py:heavy_hitters)."""
     from aira_spark.operators.heavyhitters import heavy_hitters
 
-    items = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
+    items = read_table(spark, sf_dir, "lineitem").selectExpr(
         # integer Zipf-2: value j <- 1000 DIV (1 + u) over uniform u has
         # frequency ~ 1/j^2 — deterministic skew, no floats
         "CAST(1000 DIV (1 + (l_orderkey % 1000)) AS BIGINT) AS item"
@@ -4150,7 +4168,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.pii import pii_scrub
 
     return pii_scrub(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        read_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
     )
@@ -4162,7 +4180,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/gapfill.py:gap_fill_hourly)."""
     from aira_spark.operators.gapfill import gap_fill_hourly
 
-    return gap_fill_hourly(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return gap_fill_hourly(read_table(spark, sf_dir, "events"))
 
 
 def q_mosaic_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4585,16 +4603,7 @@ GROUP BY 1, 2, 3, 4, 5
 
 def _oracle_zonal_quantiles() -> str:
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes()},
 vc AS (
   SELECT {_sql_cell('x', 'y')} AS cell, val, COUNT(*) AS c
   FROM vals GROUP BY 1, 2
@@ -4957,16 +4966,7 @@ l{CELL_RES} AS (SELECT DISTINCT cell FROM cover),
 
 def _oracle_zonal_stats() -> str:
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-)
+WITH {_pixel_ctes()}
 SELECT {_sql_cell('x', 'y')} AS cell,
   CAST(COUNT(*) AS BIGINT) AS n_px, CAST(SUM(val) AS BIGINT) AS sum_px,
   CAST(MIN(val) AS BIGINT) AS min_px, CAST(MAX(val) AS BIGINT) AS max_px
@@ -4978,16 +4978,7 @@ def _oracle_zonal_by_polygon() -> str:
     from aira_spark.sources.vectors import polygon_edges_oracle_sql
 
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes()},
 cellstats AS (
   SELECT {_sql_cell('x', 'y')} AS cell,
     COUNT(*) AS n_px, SUM(val) AS sum_px, MIN(val) AS min_px, MAX(val) AS max_px
@@ -5288,16 +5279,7 @@ def _oracle_zonal_exact() -> str:
     from aira_spark.sources.vectors import polygon_edges_oracle_sql
 
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT k, r, c, (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes(carry="k, r, c, ")},
 edges AS ({polygon_edges_oracle_sql()}),
 bbox AS (
   SELECT poly_id, LEAST(MIN(ax), MIN(bx)) AS xmin, LEAST(MIN(ay), MIN(by)) AS ymin,
@@ -5381,16 +5363,7 @@ def _oracle_mosaic() -> str:
     nf = 1 << (CELL_RES + 4)  # fine grid: 16x16 subcells per cell
     fix, fiy = _fine_xy_sql(nf)
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes()},
 fine AS (SELECT val, {fix} AS fx, {fiy} AS fy FROM vals)
 SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
   CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
@@ -5813,16 +5786,7 @@ def _oracle_dp_simplify() -> str:
 
 def _oracle_zonal_majority() -> str:
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes()},
 vc AS (
   SELECT {_sql_cell('x', 'y')} AS cell, val, COUNT(*) AS c
   FROM vals GROUP BY 1, 2
@@ -6645,17 +6609,7 @@ def _oracle_mosaic_blend() -> str:
     nf = 1 << (CELL_RES + 4)
     fix, fiy = _fine_xy_sql(nf)
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         1 + LEAST(r, c, h - 1 - r, w - 1 - c) AS wt,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH {_pixel_ctes(weighted=True)},
 fine AS (SELECT val, wt, {fix} AS fx, {fiy} AS fy FROM vals)
 SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
   CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
@@ -6985,19 +6939,9 @@ def _fine2_cte_sql() -> str:
     classifiers on ONE epoch; see kappa.py's docstring)."""
     nf = 1 << (CELL_RES + 4)
     fix, fiy = _fine_xy_sql(nf)
-    fine2 = f"""{_IMG_CTE},
-sel AS (SELECT *, (k % 16) // 8 AS epoch FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT epoch, (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+    return f"""{_pixel_ctes(epoch=True)},
 fine2 AS (SELECT {fix} AS fx, {fiy} AS fy, epoch,
           CAST(MAX(val) AS BIGINT) AS val FROM vals GROUP BY 1, 2, 3)"""
-    return fine2
 
 
 def _oracle_change_census() -> str:
@@ -7083,16 +7027,7 @@ def _oracle_zonal_rollup() -> str:
         f"({_sql_ix('x')} // 4) * 536870912 + ({_sql_iy('y')} // 4))"
     )
     return f"""
-WITH {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-)
+WITH {_pixel_ctes()}
 SELECT {cell5} AS cell,
   CAST(COUNT(*) AS BIGINT) AS n_px, CAST(SUM(val) AS BIGINT) AS sum_px,
   CAST(MIN(val) AS BIGINT) AS min_px, CAST(MAX(val) AS BIGINT) AS max_px
@@ -7584,16 +7519,7 @@ def _oracle_raster_regions() -> str:
     # east/north adjacency edges -> transitive-closure CC (the
     # dedup_clusters oracle pattern) -> singleton backfill -> region agg
     return f"""
-WITH RECURSIVE {_IMG_CTE},
-sel AS (SELECT * FROM meta WHERE k % 8 = 0),
-rws AS (SELECT *, unnest(generate_series(0, h - 1)) AS r FROM sel),
-pxs AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws),
-vals AS (
-  SELECT (r * 7 + c * 13 + k) % 256 AS val,
-         cx + (CAST(c AS DOUBLE) + 0.5) * sx AS x,
-         (cy + h * sy) - (CAST(r AS DOUBLE) + 0.5) * sy AS y
-  FROM pxs
-),
+WITH RECURSIVE {_pixel_ctes()},
 cellstats AS (
   SELECT {_sql_cell('x', 'y')} AS cell, COUNT(*) AS n_px, SUM(val) AS sum_px
   FROM vals GROUP BY 1

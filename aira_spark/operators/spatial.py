@@ -432,6 +432,11 @@ def knn_join(
     cleanup=True eagerly materializes the small (queries x k) result via
     localCheckpoint and unpersists every intermediate before returning —
     use it from long-lived applications that call knn_join repeatedly.
+    The session (`session.get_spark`) lets AQE coalesce a persisted plan's
+    shuffle output, so the cached ranked and certified frames hold a few
+    coalesced partitions (at least defaultParallelism once they pass AQE's
+    coalescing threshold) instead of one per shuffle partition, and a
+    re-run schedules that many tasks per read.
     """
     import math
 

@@ -56,6 +56,12 @@ def get_spark(
         # expressions lose the Python call site; SQL-text expressions keep
         # their fragment context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # let AQE coalesce the shuffle output of a persisted plan as it does
+        # any other: by default a cached frame keeps all shuffle partitions,
+        # and every task reading it deserializes the whole (80-310 KB for
+        # kNN) plan for a few rows. Large caches still keep at least
+        # defaultParallelism partitions (parallelismFirst).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

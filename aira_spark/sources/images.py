@@ -32,6 +32,7 @@ from pyspark.sql import types as Ty
 
 from ..tiff import tags as T
 from ..tiff.encode import write_tiff
+from .tables import read_table
 
 # generation matrix: v -> (byteorder, layout_kind, compression, predictor,
 #                          planar, dtype, spp, big)
@@ -216,7 +217,7 @@ def synthesize_row(k: int) -> tuple:
 
 def images_table(spark: SparkSession, sf_dir: str, limit: int | None = None) -> DataFrame:
     """The images DataFrame, one image per `part` row (Arrow-batched synth)."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey")
+    part = read_table(spark, sf_dir, "part").select("p_partkey")
     if limit is not None:
         part = part.filter(F.col("p_partkey") < limit)
 

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import read_table
+
 EVENTS_JSON_SCHEMA = (
     "event_id long, ts string, user_id long, event_type string, "
     "value double, _corrupt string"
@@ -35,7 +37,7 @@ def write_events_jsonl(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     marker = f"{out_dir}/_SUCCESS"
     if os.path.exists(marker):
         return out_dir
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("string").alias("ts"),
         "user_id", "event_type", "value",

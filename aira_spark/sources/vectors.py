@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import read_table
+
 # --- shared SQL snippets (valid in both Spark SQL and DuckDB) ---
 
 # ~1/3 of points cluster near polygon centers (PIP hits), c_custkey%5==0 form a
@@ -61,7 +63,7 @@ DIRS = [
 def points_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(point_id long, x double, y double) from customer."""
     return (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .selectExpr(
             "c_custkey AS point_id",
             f"{POINT_X_SQL} AS x",
@@ -89,7 +91,7 @@ def polygons_table(
     arithmetic as polygon_edges_oracle_sql(key, table)).
 
     ring is closed (vertex 0 repeated at the end)."""
-    nation = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    nation = read_table(spark, sf_dir, table)
     verts = []
     for t, (dx, dy) in enumerate(DIRS):
         vx = F.expr(f"{poly_cx_sql(key)} + {poly_rv_sql(key, t)} * {dx!r}")

@@ -17,6 +17,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet, read_table
+
 
 def _run_to_table(
     spark: SparkSession, stream: DataFrame, prefix: str, mode: str, stage: str
@@ -99,7 +101,7 @@ def run_sessionize_stream(
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aira_sessions_")
     shutil.copy(src, os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
 
     stream = (
         spark.readStream.schema(schema)
@@ -140,8 +142,9 @@ def run_stateful_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aira_stateful_")
-    spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(src).schema
+    ev = read_parquet(spark, src)
+    ev.repartition(4).write.mode("overwrite").parquet(stage)
+    schema = ev.schema
 
     out_schema = Ty.StructType(
         [
@@ -208,7 +211,7 @@ def run_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aira_stream_")
     shutil.copy(src, os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
 
     stream = (
         spark.readStream.schema(schema)
@@ -411,8 +414,8 @@ def run_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aira_stream_")
     shutil.copy(src, os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(src).schema
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
+    schema = read_parquet(spark, src).schema
+    dim = read_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey AS user_id", "c_mktsegment AS mktsegment"
     )
 
@@ -449,10 +452,9 @@ def run_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds (session tz pinned UTC; exact integers, canon-safe)."""
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aira_sliding_")
-    spark.read.parquet(src).repartition(_n_batches()).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    schema = spark.read.parquet(src).schema
+    ev = read_parquet(spark, src)
+    ev.repartition(_n_batches()).write.mode("overwrite").parquet(stage)
+    schema = ev.schema
 
     stream = (
         spark.readStream.schema(schema)
@@ -526,7 +528,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(event_type) — one job per slice, both sides — rather
     than two filtered scans per slice."""
     src = f"{sf_dir}/events.parquet"
-    ev = spark.read.parquet(src).withColumn(
+    ev = read_parquet(spark, src).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     lo, hi = ev.agg(

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -20,3 +21,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_work(spark):
+    """count_work(run) -> (jobs, tasks): the Spark jobs `run()` starts and
+    the tasks they complete, counted through a job group and the status
+    tracker once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = itertools.count()
+
+    def count(run) -> tuple[int, int]:
+        group = f"count-work-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = 0
+        for job in jobs:
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                tasks += info.numCompletedTasks if info else 0
+        return len(jobs), tasks
+
+    return count

@@ -654,3 +654,20 @@ def test_spatial_join_plans_build_in_few_py4j_calls(spark, sf_dir):
     for q, budget in budgets.items():
         n = _py4j_calls(spark, lambda: getattr(em, q)(spark, sf_dir))
         assert n <= budget, f"{q}: {n} py4j calls > {budget}"
+
+
+def test_spatial_joins_run_within_job_and_task_budget(spark, sf_dir, count_work):
+    """A warm q_pip / q_knn / q_within_distance launches no schema-inference
+    job (each table file's schema is inferred once per session), and the
+    session lets AQE coalesce the shuffle output of kNN's persisted frames
+    (without it every cached partition is a task). Bounds are the counts at
+    the time of writing plus ~20%."""
+    import __spark_entry__ as em
+
+    budgets = {"q_pip": (2, 22), "q_knn": (15, 68), "q_within_distance": (3, 43)}
+    for q, (max_jobs, max_tasks) in budgets.items():
+        run = lambda: getattr(em, q)(spark, sf_dir).collect()  # noqa: E731
+        run()
+        jobs, tasks = count_work(run)
+        assert jobs <= max_jobs, f"{q}: {jobs} jobs > {max_jobs}"
+        assert tasks <= max_tasks, f"{q}: {tasks} tasks > {max_tasks}"
