@@ -11,7 +11,7 @@ Raster-operator contract: an operator that reads pixels decodes through
 chunks of a plane >= max_bands are never decompressed. An undecodable image
 (TiffError) is dropped there, in one place. Loops with another failure
 policy (dead-letter rows in full_decode_batches / verify_batches) or another
-output shape (the columnar warp/mosaic loops) keep their own. The raster
+output shape (warp's columnar loop) keep their own. The raster
 neighbourhood operators decode nothing themselves: they read the
 composited grid through `operators/mosaic.fine_grid` and scatter through
 `operators/focal.scatter`.

@@ -33,9 +33,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
+from .focal import WINDOW_ARMS, scatter
 from .mosaic import fine_grid
 
 ROOK = [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)]
+# the rook window as focal.scatter arms; is_center marks the (0, 0) arm
+ROOK_ARMS = ", ".join(
+    f"named_struct('dx', {dx}, 'dy', {dy}, "
+    f"'is_center', {str(dx == 0 and dy == 0).lower()})"
+    for dx, dy in ROOK
+)
 
 _D = "CAST({x} AS DOUBLE)"
 
@@ -80,20 +87,9 @@ def spatial_autocorr(
     """One row: (n, s_v, s_v2, w_pairs, s_wvv, s_wvp, s_wd2, moran_e6,
     geary_e6) — global Moran's I / Geary's C of the mosaic fine grid."""
     nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits)
-    arms = ", ".join(
-        f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
-        f"'is_center', {str(dx == 0 and dy == 0).lower()})"
-        for dx, dy in ROOK
-    )
-    scattered = fine.select(
-        "val", F.expr(f"explode(array({arms})) AS o")
-    ).where(
-        (F.col("o.tx") >= 0) & (F.col("o.tx") < nf)
-        & (F.col("o.ty") >= 0) & (F.col("o.ty") < nf)
-    )
+    scattered = scatter(fine_grid(images, res, patch_bits), ROOK_ARMS, nf)
     cells = (
-        scattered.groupBy("o.tx", "o.ty")
+        scattered.groupBy("tx", "ty")
         .agg(
             F.max(F.when(F.col("o.is_center"), F.col("val"))).alias("v"),
             F.sum(
@@ -230,23 +226,10 @@ def gi_hotspots(
     single-row aggregate BROADCAST back over the cells (metadata-sized);
     classification is a pure projection. Cells never pair with cells.
     """
-    from .focal import OFFSETS
-
     nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits)
-    arms = ", ".join(
-        f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
-        f"'is_center', {str(dx == 0 and dy == 0).lower()})"
-        for dx, dy in OFFSETS
-    )
-    scattered = fine.select(
-        "val", F.expr(f"explode(array({arms})) AS o")
-    ).where(
-        (F.col("o.tx") >= 0) & (F.col("o.tx") < nf)
-        & (F.col("o.ty") >= 0) & (F.col("o.ty") < nf)
-    )
+    scattered = scatter(fine_grid(images, res, patch_bits), WINDOW_ARMS, nf)
     cells = (
-        scattered.groupBy("o.tx", "o.ty")
+        scattered.groupBy("tx", "ty")
         .agg(
             F.max(F.when(F.col("o.is_center"), F.col("val"))).alias("v"),
             F.count("*").cast("long").alias("k_i"),
@@ -349,23 +332,10 @@ def lisa_clusters(
     Scale shape: identical to gi_hotspots — ONE 9-arm halo scatter of the
     grid-bounded mosaic rows + one hash agg, single-row totals broadcast,
     classification pure projection. Cells never pair with cells."""
-    from .focal import OFFSETS
-
     nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits)
-    arms = ", ".join(
-        f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
-        f"'is_center', {str(dx == 0 and dy == 0).lower()})"
-        for dx, dy in OFFSETS
-    )
-    scattered = fine.select(
-        "val", F.expr(f"explode(array({arms})) AS o")
-    ).where(
-        (F.col("o.tx") >= 0) & (F.col("o.tx") < nf)
-        & (F.col("o.ty") >= 0) & (F.col("o.ty") < nf)
-    )
+    scattered = scatter(fine_grid(images, res, patch_bits), WINDOW_ARMS, nf)
     cells = (
-        scattered.groupBy("o.tx", "o.ty")
+        scattered.groupBy("tx", "ty")
         .agg(
             F.max(F.when(F.col("o.is_center"), F.col("val"))).alias("v"),
             F.count(F.when(~F.col("o.is_center"), F.lit(1)))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_from_xy, cell_ix, cell_iy, k_ring
+from ..functions.cells import IX_SHIFT, cell_from_xy, cell_ix, cell_iy, k_ring
 from .dedup import duplicate_clusters
 
 
@@ -71,7 +71,7 @@ def _core_adjacency8(core: DataFrame, res: int) -> DataFrame:
     n = 1 << res
     ids = core.select(F.col("cell").cast("long").alias("cell")).distinct()
     ix, iy = cell_ix(F.col("cell")), cell_iy(F.col("cell"))
-    shift = 1 << 29  # packed ix stride (functions/cells.py layout)
+    shift = 1 << IX_SHIFT  # packed ix stride
     bumps = [
         (ix < n - 1, shift),            # E
         (iy < n - 1, 1),                # N

@@ -17,7 +17,7 @@ so the numerator is >= 0). Overflow: n <= 256, L <= 8e6, S <= 2.1e9 —
 nowhere near int64.
 
 Scale shape (100 TB): two chained hash aggs — fine values fold to
-(cell, bin, cnt) map-side (<= 16 rows per cell in the exchange regardless
+(gx, gy, bin, cnt) map-side (<= 16 rows per cell in the exchange regardless
 of pixel volume), then one agg to cells; the log table is a pure
 projection (element_at on a literal array), no join, no Python past the
 decode."""
@@ -29,8 +29,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import mosaic_cell_values
+from ..functions.cells import DEFAULT_RES
+from .mosaic import fine_grid
 
 N_BINS = 16          # val DIV 16: 4-bit luminance histogram
 FLAT_E6 = 500_000    # < 0.5 bits = "flat tile" curation flag
@@ -51,10 +51,10 @@ def patch_entropy(
     pb = 1 << patch_bits
     tab = _log2_e6_table(pb * pb)
     arr = "array(" + ", ".join(f"{v}L" for v in tab) + ")"
-    fine = mosaic_cell_values(images, res, patch_bits).select(
-        cell_ix(F.col("cell")).alias("gx"),
-        cell_iy(F.col("cell")).alias("gy"),
-        F.expr(f"val DIV {256 // N_BINS}").alias("bin"),
+    fine = fine_grid(images, res, patch_bits).selectExpr(
+        f"shiftright(fx, {patch_bits}) AS gx",
+        f"shiftright(fy, {patch_bits}) AS gy",
+        f"val DIV {256 // N_BINS} AS bin",
     )
     per_bin = fine.groupBy("gx", "gy", "bin").agg(
         F.count("*").cast("long").alias("cnt")

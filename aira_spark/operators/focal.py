@@ -8,11 +8,10 @@ scatter-aggregate: each filled fine-grid subcell sends its value to the 9
 positions whose 3x3 window contains it (a projection + posexplode of the 9
 constant offsets), and ONE hash aggregation per target position folds the
 contributions. Catalyst's partial aggregation combines contributions
-map-side, so when the grid is laid out by coarse cell (as
-mosaic_cell_values' agg already leaves it), the exchange carries roughly
-one partial row per target position per source partition — the 9x scatter
-blowup never crosses the wire, and pixel buffers are never shuffled at all
-(only (pos, sum, cnt) integer rows).
+map-side, so the exchange carries at most one partial row per target
+position per source partition (fine_grid's own (fx, fy) agg leaves every
+source position in exactly one partition) — pixel buffers are never
+shuffled at all (only (pos, sum, cnt) integer rows).
 
 Semantics: SPARSE-raster focal mean — the mean is over the FILLED subcells
 of the 3x3 window (count in [1, 9]); windows clip at the global grid edge;

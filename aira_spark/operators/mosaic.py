@@ -8,100 +8,79 @@ subcell — max-compositing is commutative/associative, so the result is
 independent of image order and partitioning (deterministic at any scale,
 and expressible as a plain hash aggregation for the oracle).
 
-Plan shape: the decode UDF emits per-(cell, pr, pc) partial maxima (already
-combined within each image), Catalyst's partial+final hash agg merges
-across images — pixels never shuffle, only (cell, subcell, val) rows. Patch
-assembly is a grouped-map applyInPandas per cell (the one UDF shape the
-input_hint allows beyond scalar/map batches), emitting the packed binary
-patch + fill count.
+Plan shape: the decode UDF (`udfs.map_decoded`) emits per-image partial
+maxima keyed by the fine-grid position (fx, fy) at res + patch_bits
+(already combined within each image), and Catalyst's partial+final hash
+agg merges them across images — pixels never shuffle, only (fx, fy, val)
+rows. That aggregate IS `fine_grid`; the (cell, pr, pc) split of
+`mosaic_cell_values` is a projection over it. Patch assembly is a
+grouped-map applyInPandas per cell (the one UDF shape the input_hint
+allows beyond scalar/map batches), emitting the packed binary patch +
+fill count.
 
 Contract for the raster neighbourhood operators (focal, terrain, texture,
 morphology): they read the composited raster through `fine_grid` — one
-(fx, fy, val) row per filled fine cell at res + patch_bits — and move
-values between neighbours through `focal.scatter`; only `mosaic_patches`
-and the mosaic query itself need the (cell, pr, pc) split.
+(fx, fy, val) row per filled fine cell — and move values between
+neighbours through `focal.scatter`; only `mosaic_patches` and the mosaic
+queries need the (cell, pr, pc) split.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-
-
-def mosaic_cell_values(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
-    """(cell, pr, pc, val): max-composited band-0 value per patch subcell.
-
-    Subcell (pr, pc) indexes the PATCH x PATCH grid inside the cell, row 0 at
-    the cell's SOUTH edge (consistent with the grid's y-up indexing).
-    """
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
-
-    fine_res = res + patch_bits
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.cells import np_cell_ix, np_cell_iy
-
-        for pdf in batches:
-            cols: dict[str, list[np.ndarray]] = {
-                "cell": [], "pr": [], "pc": [], "val": []
-            }
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                groups = pixel_cell_groups(m, px, fine_res)
-                if groups is None:
-                    continue
-                order, uniq, starts, ends = groups
-                vals = px[:, :, 0].astype(np.int64).ravel()[order]
-                # per-image partial max per fine cell (one row per subcell)
-                maxs = np.maximum.reduceat(vals, starts)
-                fx = np_cell_ix(uniq)
-                fy = np_cell_iy(uniq)
-                coarse_ix = fx >> patch_bits
-                coarse_iy = fy >> patch_bits
-                cols["cell"].append(
-                    (np.int64(res) << 58) + (coarse_ix << 29) + coarse_iy
-                )
-                cols["pr"].append((fy - (coarse_iy << patch_bits)).astype(np.int32))
-                cols["pc"].append((fx - (coarse_ix << patch_bits)).astype(np.int32))
-                cols["val"].append(maxs)
-            # columnar assembly — no per-element Python on the decode path
-            yield pd.DataFrame(
-                {
-                    k: (np.concatenate(v) if v else np.array([], dtype=np.int64))
-                    for k, v in cols.items()
-                }
-            )
-
-    partials = images.select("bytes").mapInPandas(
-        fn, schema="cell long, pr int, pc int, val long"
-    )
-    return partials.groupBy("cell", "pr", "pc").agg(F.max("val").alias("val"))
+from ..functions.cells import DEFAULT_RES, cell_pack, np_cell_ix, np_cell_iy
+from ..functions.udfs import map_decoded, pixel_cell_groups
 
 
 def fine_grid(
     images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
 ) -> DataFrame:
-    """(fx, fy, val): mosaic_cell_values on the global fine grid at
-    res + patch_bits — fx = ix * PATCH + pc, fy = iy * PATCH + pr of the
-    coarse cell (ix, iy). A pure projection that Catalyst folds into the
-    caller's own select."""
-    pb = 1 << patch_bits
-    return mosaic_cell_values(images, res, patch_bits).select(
-        (cell_ix(F.col("cell")) * pb + F.col("pc")).alias("fx"),
-        (cell_iy(F.col("cell")) * pb + F.col("pr")).alias("fy"),
-        "val",
+    """(fx, fy, val): max-composited band-0 value of every filled cell of
+    the global fine grid at res + patch_bits — fx = ix * PATCH + pc and
+    fy = iy * PATCH + pr of the coarse cell (ix, iy). fx/fy are BIGINT."""
+    fine_res = res + patch_bits
+
+    def per_image(rec, m, px):
+        groups = pixel_cell_groups(m, px, fine_res)
+        if groups is None:
+            return []
+        order, uniq, starts, _ends = groups
+        vals = px[:, :, 0].astype(np.int64).ravel()[order]
+        maxs = np.maximum.reduceat(vals, starts)
+        return zip(np_cell_ix(uniq).tolist(), np_cell_iy(uniq).tolist(),
+                   maxs.tolist())
+
+    partials = map_decoded(
+        images.select("bytes"), per_image, "fx long, fy long, val long",
+        max_bands=1,
+    )
+    return partials.groupBy("fx", "fy").agg(F.max("val").alias("val"))
+
+
+def _cell_split(res: int, patch_bits: int) -> list[Column]:
+    """(cell, pr, pc) of a fine-grid (fx, fy): the coarse cell and the
+    INT subcell inside it, row 0 at the cell's SOUTH edge."""
+    mask = (1 << patch_bits) - 1
+    return [
+        cell_pack(
+            res, F.shiftright("fx", patch_bits), F.shiftright("fy", patch_bits)
+        ).alias("cell"),
+        F.expr(f"CAST(fy & {mask} AS INT)").alias("pr"),
+        F.expr(f"CAST(fx & {mask} AS INT)").alias("pc"),
+    ]
+
+
+def mosaic_cell_values(
+    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
+) -> DataFrame:
+    """(cell, pr, pc, val): `fine_grid` split into the coarse cell and the
+    (pr, pc) subcell of its PATCH x PATCH grid."""
+    return fine_grid(images, res, patch_bits).select(
+        *_cell_split(res, patch_bits), "val"
     )
 
 
@@ -154,67 +133,41 @@ def mosaic_blend_values(
     end-to-end: weights and values are integers, the mean is floor
     division, and w_tot ships so the oracle pins the denominator too.
 
-    Plan shape: identical to mosaic_cell_values — per-image partial
-    (wv, w) sums per fine cell inside the decode UDF (reduceat over the
-    shared cell grouping), Catalyst partial+final hash agg across images;
-    pixels never shuffle, only (cell, pr, pc, wv, w) integer rows.
+    Plan shape: identical to fine_grid — per-image partial (wv, w) sums
+    per fine cell (fx, fy) inside the decode UDF (reduceat over the shared
+    cell grouping), Catalyst partial+final hash agg across images, then
+    the (cell, pr, pc) split; pixels never shuffle, only (fx, fy, wv, w)
+    integer rows.
     Budget: wv <= 255 * (1 + max_dim/2) * px_per_cell — mid-int64 at any
     realistic tile size."""
-    from ..functions.udfs import _decode_full, pixel_cell_groups
-    from ..tiff.meta import TiffError
-
     fine_res = res + patch_bits
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.cells import np_cell_ix, np_cell_iy
+    def per_image(rec, m, px):
+        groups = pixel_cell_groups(m, px, fine_res)
+        if groups is None:
+            return []
+        order, uniq, starts, _ends = groups
+        h, w = px.shape[:2]
+        ri = np.arange(h, dtype=np.int64)[:, None]
+        ci = np.arange(w, dtype=np.int64)[None, :]
+        wt = 1 + np.minimum(
+            np.minimum(ri, h - 1 - ri), np.minimum(ci, w - 1 - ci)
+        )
+        wts = np.broadcast_to(wt, (h, w)).ravel()[order]
+        vals = px[:, :, 0].astype(np.int64).ravel()[order]
+        wv = np.add.reduceat(wts * vals, starts)
+        ws = np.add.reduceat(wts, starts)
+        return zip(np_cell_ix(uniq).tolist(), np_cell_iy(uniq).tolist(),
+                   wv.tolist(), ws.tolist())
 
-        for pdf in batches:
-            cols: dict[str, list[np.ndarray]] = {
-                "cell": [], "pr": [], "pc": [], "wv": [], "w": []
-            }
-            for rec in pdf.itertuples(index=False):
-                try:
-                    m, px = _decode_full(rec.bytes, max_bands=1)
-                except TiffError:
-                    continue
-                groups = pixel_cell_groups(m, px, fine_res)
-                if groups is None:
-                    continue
-                order, uniq, starts, ends = groups
-                h, w = px.shape[:2]
-                ri = np.arange(h, dtype=np.int64)[:, None]
-                ci = np.arange(w, dtype=np.int64)[None, :]
-                wt = 1 + np.minimum(
-                    np.minimum(ri, h - 1 - ri), np.minimum(ci, w - 1 - ci)
-                )
-                wts = np.broadcast_to(wt, (h, w)).ravel()[order]
-                vals = px[:, :, 0].astype(np.int64).ravel()[order]
-                wv = np.add.reduceat(wts * vals, starts)
-                ws = np.add.reduceat(wts, starts)
-                fx = np_cell_ix(uniq)
-                fy = np_cell_iy(uniq)
-                coarse_ix = fx >> patch_bits
-                coarse_iy = fy >> patch_bits
-                cols["cell"].append(
-                    (np.int64(res) << 58) + (coarse_ix << 29) + coarse_iy
-                )
-                cols["pr"].append((fy - (coarse_iy << patch_bits)).astype(np.int32))
-                cols["pc"].append((fx - (coarse_ix << patch_bits)).astype(np.int32))
-                cols["wv"].append(wv)
-                cols["w"].append(ws)
-            yield pd.DataFrame(
-                {
-                    k: (np.concatenate(v) if v else np.array([], dtype=np.int64))
-                    for k, v in cols.items()
-                }
-            )
-
-    partials = images.select("bytes").mapInPandas(
-        fn, schema="cell long, pr int, pc int, wv long, w long"
+    partials = map_decoded(
+        images.select("bytes"), per_image, "fx long, fy long, wv long, w long",
+        max_bands=1,
     )
     return (
-        partials.groupBy("cell", "pr", "pc")
+        partials.groupBy("fx", "fy")
         .agg(F.sum("wv").alias("wv"), F.sum("w").alias("w_tot"))
+        .select(*_cell_split(res, patch_bits), "wv", "w_tot")
         .selectExpr(
             "CAST(cell AS BIGINT) AS cell",
             "CAST(pr AS BIGINT) AS pr",

@@ -48,17 +48,6 @@ def salt_column(df: DataFrame, key: str, hot: DataFrame, n_salt: int = 16,
     ).drop("_is_hot")
 
 
-def salted_repartition(df: DataFrame, key: str, n_salt: int = 16,
-                       threshold_frac: float = 0.01, uid: str | None = None,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition by (key, salt) so hot keys fan out over n_salt partitions."""
-    hot = hot_keys(df, key, threshold_frac)
-    salted = salt_column(df, key, hot, n_salt, uid)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key), F.col("salt"))
-    return salted.repartition(F.col(key), F.col("salt"))
-
-
 def replicate_for_salted_join(small: DataFrame, n_salt: int = 16) -> DataFrame:
     """Explode the broadcast side over all salt values so a salted big side can
     still equi-join on (key, salt) without losing matches."""

@@ -192,6 +192,34 @@ def oracle_flow_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
 BASIN_K = 1 << 30  # (fx, fy) -> single BIGINT node id; grids stay far below
 
 
+def flow_forest(
+    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
+) -> DataFrame:
+    """(node, parent): the D8 flow graph as a functional forest over
+    packed node ids fx*2^30+fy — each cell points at the neighbour its
+    flow_dir names, pits self-loop. Eager-checkpointed: the basins,
+    accumulation and Strahler rounds all read it many times."""
+    return flow_direction(images, res, patch_bits).selectExpr(
+        f"fx * {BASIN_K} + fy AS node",
+        # decode the 3x3 code back to the neighbor offset; pits self-loop
+        f"CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy "
+        f"ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir DIV 3 - 1) "
+        "END AS parent",
+    ).localCheckpoint(eager=True)
+
+
+def oracle_flow_forest_cte(name: str) -> str:
+    """DuckDB mirror of flow_forest: the CTE `name`(node, parent) over the
+    flow CTE of oracle_flow_ctes."""
+    return f"""{name} AS (
+  SELECT fx * {BASIN_K} + fy AS node,
+    CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy
+    ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir // 3 - 1)
+    END AS parent
+  FROM flow
+)"""
+
+
 def drainage_basins(
     images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4,
     max_rounds: int = 40,
@@ -212,14 +240,7 @@ def drainage_basins(
     round join already computes)."""
     from pyspark.sql import functions as F
 
-    flow = flow_direction(images, res, patch_bits)
-    p = flow.selectExpr(
-        f"fx * {BASIN_K} + fy AS node",
-        # decode the 3x3 code back to the neighbor offset; pits self-loop
-        f"CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy "
-        f"ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir DIV 3 - 1) "
-        "END AS parent",
-    ).localCheckpoint(eager=True)
+    p = flow_forest(images, res, patch_bits)
     for _ in range(max_rounds):
         q = p.selectExpr("node AS qnode", "parent AS qparent")
         nxt = (
@@ -253,13 +274,7 @@ def oracle_basins_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
     doubling) formulation."""
     return f"""
 WITH RECURSIVE {oracle_flow_ctes(fine_cte, res, patch_bits)},
-p AS (
-  SELECT fx * {BASIN_K} + fy AS node,
-    CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy
-    ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir // 3 - 1)
-    END AS parent
-  FROM flow
-),
+{oracle_flow_forest_cte("p")},
 roots AS (SELECT node FROM p WHERE parent = node),
 walk(node, cur) AS (
   SELECT node, parent FROM p
@@ -311,13 +326,7 @@ def flow_accumulation(
     """
     from pyspark.sql import functions as F
 
-    flow = flow_direction(images, res, patch_bits)
-    p = flow.selectExpr(
-        f"fx * {BASIN_K} + fy AS node",
-        f"CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy "
-        f"ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir DIV 3 - 1) "
-        "END AS parent",
-    ).localCheckpoint(eager=True)
+    p = flow_forest(images, res, patch_bits)
     edges = p.where("parent != node").selectExpr(
         "node AS child", "parent"
     ).localCheckpoint(eager=True)
@@ -381,13 +390,7 @@ def oracle_flow_acc_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
     recursion, so an agreement is evidence for the Jacobi fixpoint."""
     return f"""
 WITH RECURSIVE {oracle_flow_ctes(fine_cte, res, patch_bits)},
-p AS (
-  SELECT fx * {BASIN_K} + fy AS node,
-    CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy
-    ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir // 3 - 1)
-    END AS parent
-  FROM flow
-),
+{oracle_flow_forest_cte("p")},
 paths(u, cur) AS (
   SELECT node, node FROM p
   UNION
@@ -663,13 +666,7 @@ def strahler_order(
     shape; pixels never re-enter the loop."""
     from pyspark.sql import functions as F
 
-    flow = flow_direction(images, res, patch_bits)
-    p = flow.selectExpr(
-        f"fx * {BASIN_K} + fy AS node",
-        f"CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy "
-        f"ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir DIV 3 - 1) "
-        "END AS parent",
-    ).localCheckpoint(eager=True)
+    p = flow_forest(images, res, patch_bits)
     edges = p.where("parent != node").selectExpr(
         "node AS child", "parent"
     ).localCheckpoint(eager=True)
@@ -736,13 +733,7 @@ def oracle_strahler_sql(
     at the driver's sf0.01 slice — 8 leaves margin; past the fixpoint
     every further round is a no-op, so over-unrolling is harmless)."""
     parts = [f"""{oracle_flow_ctes(fine_cte, res, patch_bits)},
-par AS (
-  SELECT fx * {BASIN_K} + fy AS node,
-    CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy
-    ELSE (fx + flow_dir % 3 - 1) * {BASIN_K} + (fy + flow_dir // 3 - 1)
-    END AS parent
-  FROM flow
-),
+{oracle_flow_forest_cte("par")},
 e AS (SELECT node AS child, parent FROM par WHERE parent != node),
 o0 AS (SELECT node, CAST(1 AS BIGINT) AS o FROM par)"""]
     for i in range(1, rounds + 1):

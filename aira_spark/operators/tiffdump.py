@@ -8,7 +8,8 @@ Reference parity (SURVEY.md §2.1 K1/K2, S11):
 Spark-first shape: the walk happens once inside an Arrow-batched UDF and
 materializes a flat entries DataFrame — one row per (image_id, page, entry) —
 which then feeds stock sinks (`write.json`, `toJSON`, `show`) instead of a
-hand-rolled streaming JSON writer.  Like the CLI, Rationals are kept exact as
+hand-rolled streaming JSON writer; the terminal and JSON forms over local
+files are `python -m aira_spark tiffdump [--json]` (__main__.py).  Like the CLI, Rationals are kept exact as
 num/den and only divided at *print* time (tiffdump.rs:93-110), and value
 lists are truncated to `max_items` with a trailing ellipsis marker
 (tiffdump.rs:274-281).
@@ -117,25 +118,3 @@ def ifd_entries(images: DataFrame, max_items: int = 10) -> DataFrame:
 
     return images.select("image_id", "bytes").mapInPandas(fn, schema=ENTRY_SCHEMA)
 
-
-def dump_json(images: DataFrame, out_path: str, max_items: int = 10) -> None:
-    """K2: JSON dump of the full IFD structure (distributed sink)."""
-    ifd_entries(images, max_items).write.mode("overwrite").json(out_path)
-
-
-def dump_terminal(images: DataFrame, n: int = 200, max_items: int = 10) -> str:
-    """K1: terminal dump (driver-side formatting of a bounded sample)."""
-    rows = ifd_entries(images, max_items).limit(n).collect()
-    lines, last = [], (None, None)
-    for r in rows:
-        if (r.image_id, r.page) != last:
-            lines.append(f"== {r.image_id} directory {r.page} ==")
-            last = (r.image_id, r.page)
-        if r.error and r.tag is None:
-            lines.append(f"  <error: {r.error}>")
-        else:
-            lines.append(
-                # r["count"]: attribute access would hit Row.count (the method)
-                f"  {r.tag_name} ({r.tag}) {r.dtype_name}[{r['count']}] = {r.value}"
-            )
-    return "\n".join(lines)

@@ -75,6 +75,8 @@ OPERATORS = {
     "resize": _op("aira_spark.operators.multimodal", "resize_images", 8, 8),
     "patchify": _op("aira_spark.operators.multimodal", "patchify"),
     "transcode": _op("aira_spark.operators.multimodal", "transcode_stats"),
+    "fine_grid": _op("aira_spark.operators.mosaic", "fine_grid", RES),
+    "mosaic_blend": _op("aira_spark.operators.mosaic", "mosaic_blend_values", RES),
 }
 
 
