@@ -2621,9 +2621,9 @@ def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_strahler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Horton-Strahler stream order of the D8 flow forest — monotone
-    Jacobi rounds with a single-row stopping probe; per round two narrow
-    aggs + one lexicographic struct-MAX
-    (operators/terrain.py:strahler_order)."""
+    Jacobi rounds whose stopping total is observed inside each round's
+    checkpoint job; per round two narrow aggs + one lexicographic
+    struct-MAX (operators/terrain.py:strahler_order)."""
     from aira_spark.operators.terrain import strahler_order
 
     return strahler_order(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
@@ -3019,7 +3019,8 @@ def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_flow_acc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 flow accumulation (contributing cell count per fine-grid cell) —
-    monotone Jacobi rounds on the flow forest, single-row stopping probe
+    monotone Jacobi rounds on the flow forest, stopping total observed
+    inside each round's checkpoint job
     (operators/terrain.py:flow_accumulation)."""
     from aira_spark.operators.terrain import flow_accumulation
 

@@ -22,6 +22,7 @@ from pyspark.sql import types as Ty
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions import textfns as tf
+from .fixpoint import checkpoint_probe, fixpoint
 
 ENG = "spark"
 
@@ -233,41 +234,22 @@ def duplicate_clusters(
       log diameter); near-clique LSH duplicate graphs (diameter 2-3)
       converge before the jump ever runs and never pay its extra join.
       Each round shuffles (node, label) pairs only; at 10^12 scale this is
-      the standard large-graph CC pattern (no driver-side graph).
+      the standard large-graph CC pattern (no driver-side graph). The
+      rounds run on `fixpoint`, with `max_iters` its loud bound.
     """
     # localCheckpoint (not persist): edges appear in EVERY round's plan copy,
     # and the label plan doubles per round (labels joined twice) — truncating
     # the upstream lineage (the whole LSH pipeline) here keeps each copy tiny
-    edges = (
+    edges, n_edges = checkpoint_probe(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "count(*)",
     )
-    if edges.count() <= local_threshold:
+    if n_edges <= local_threshold:
         return _clusters_local(edges)
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
 
-    # Convergence probe: min-label propagation is MONOTONE (a node's label
-    # never increases), so the loop has converged exactly when the label
-    # total stops decreasing. Summing as DECIMAL(38,0) keeps the total
-    # exact for ~1e19 nodes x 2^63 labels, far past any real graph. One
-    # narrow agg job per round (it doubles as the persist materialization)
-    # replaces the previous labels-join-labels diff probe — same decision,
-    # one shuffle less per round.
-    def label_total(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("t")
-        ).collect()[0]["t"]
-
-    prev_total = label_total(labels)
-    converged = False
-    for rnd in range(max_iters):
+    def propagate(labels: DataFrame, rnd: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges["b"] == labels["node"])
             .groupBy(F.col("a").alias("node2"))
@@ -283,58 +265,46 @@ def duplicate_clusters(
             )
         )
         if rnd < jump_after:
-            new_labels = hop.select("node", F.col("l1").alias("label"))
-        else:
-            # pointer jump THROUGH THE FRESH GENERATION: l1 is always a node
-            # id in the same component (labels start as self and only take
-            # mins of component node ids), so l1-of-l1 is defined for every
-            # row, and because l1 already encodes this round's propagation,
-            # min(l1, l1[l1]) DOUBLES the distance per round (jumping via
-            # the previous generation — labels — only adds it; measured 28
-            # rounds vs ~12 on the sf0.1 grid-snake graph). Left join for
-            # the self-label rows (l1(l1) == l1 — coalesce is a no-op).
-            # localCheckpoint, NOT persist: new_labels references hop TWICE
-            # and hop references labels twice — without truncation the plan
-            # tree grows 4x per jump round and the optimizer stalls long
-            # before the every-5-rounds cadence fires.
-            hop = hop.localCheckpoint(eager=True)
-            jump = hop.select(
-                F.col("node").alias("jnode"), F.col("l1").alias("jlabel")
-            )
-            new_labels = hop.join(jump, hop["l1"] == jump["jnode"], "left").select(
-                "node",
-                F.least(F.col("l1"), F.coalesce(F.col("jlabel"), F.col("l1"))).alias(
-                    "label"
-                ),
-            )
-        if (rnd + 1) % 5 == 0:
-            # the label plan DOUBLES per hop round and TRIPLES per jump round
-            # (labels feeds the neighbor-min join, the carry-over join, and —
-            # when jumping — the pointer jump), and persist() does not
-            # truncate the logical plan — without periodic truncation a few
-            # rounds grow an exponential plan tree whose AQE explain string
-            # alone OOMs the driver. Checkpoint every 5 rounds bounds the
-            # tree at <= 3^5 copies of a (checkpoint-truncated) leaf — an
-            # eager checkpoint is a full materialization, so cadence trades
-            # plan-tree size against extra jobs (5 measured cheaper than 3).
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        total = label_total(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if total == prev_total:
-            converged = True
-            break
-        prev_total = total
-    if not converged:
-        # silent wrong labels are worse than an error: a component whose
-        # diameter exceeds max_iters would return split clusters
-        labels.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iters} rounds "
-            "(component diameter too large — raise max_iters)"
+            return hop.select("node", F.col("l1").alias("label"))
+        # pointer jump THROUGH THE FRESH GENERATION: l1 is always a node
+        # id in the same component (labels start as self and only take
+        # mins of component node ids), so l1-of-l1 is defined for every
+        # row, and because l1 already encodes this round's propagation,
+        # min(l1, l1[l1]) DOUBLES the distance per round (jumping via
+        # the previous generation — labels — only adds it; measured 28
+        # rounds vs ~12 on the sf0.1 grid-snake graph). Left join for
+        # the self-label rows (l1(l1) == l1 — coalesce is a no-op).
+        # localCheckpoint, NOT persist: new_labels references hop TWICE
+        # and hop references labels twice — without truncation the plan
+        # tree grows 4x per jump round and the optimizer stalls long
+        # before the every-5-rounds cadence fires.
+        hop = hop.localCheckpoint(eager=True)
+        jump = hop.select(
+            F.col("node").alias("jnode"), F.col("l1").alias("jlabel")
         )
+        return hop.join(jump, hop["l1"] == jump["jnode"], "left").select(
+            "node",
+            F.least(F.col("l1"), F.coalesce(F.col("jlabel"), F.col("l1"))).alias(
+                "label"
+            ),
+        )
+
+    # Convergence: min-label propagation is MONOTONE (a node's label never
+    # increases), so it has converged exactly when the label total repeats;
+    # DECIMAL(38,0) keeps the total exact far past any real graph. Cadence:
+    # persist() does not truncate the label plan, which doubles per hop
+    # round and triples per jump round (a few untruncated rounds grow a tree
+    # whose AQE explain string alone OOMs the driver), so every 5th round is
+    # checkpointed (<= 3^5 copies of a truncated leaf; 5 measured cheaper
+    # than 3). Checkpointing every round is slower: each round's run time
+    # doubles from about round 18 on a 3,000-node path graph.
+    labels = fixpoint(
+        edges.select(F.col("a").alias("node")).distinct()
+        .withColumn("label", F.col("node")),
+        propagate, "sum(CAST(label AS DECIMAL(38,0)))",
+        max_rounds=max_iters, name="duplicate_clusters", bound="max_iters",
+        until="repeat", checkpoint_every=5,
+    )
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     out = labels.join(sizes, "label").select(
         F.col("node").alias("doc_id"),

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import checkpoint_probe
+
 DAMP_NUM = 85
 DAMP_DEN = 100
 INIT_MICROS = 1_000_000
@@ -130,8 +132,8 @@ def bfs_hops(
     LEFT ANTI against the settled set → the next frontier at hop+1. Hop
     counts are exact integers, so every engine agrees regardless of join
     order. Scale shape: each round shuffles only (node) / (src, dst) ID
-    rows; the frontier localCheckpoints every round (it is also the early-
-    stop probe, so the materialization is free), keeping lineage flat; an
+    rows; the frontier localCheckpoints every round, keeping lineage flat,
+    and its size is observed in that same job (`checkpoint_probe`); an
     empty frontier short-circuits the remaining rounds on the driver — the
     standard Pregel-style superstep loop expressed as DataFrame ops."""
     dist = (
@@ -140,16 +142,16 @@ def bfs_hops(
     )
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, n_new = checkpoint_probe(
             edges.join(
                 frontier.withColumnRenamed("node", "src"), "src"
             )
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
+            .join(dist.select("node"), "node", "left_anti"),
+            "count(*)",
         )
-        if not nxt.take(1):
+        if n_new == 0:
             break
         dist = dist.unionByName(
             nxt.withColumn("hop", F.lit(h).cast("long"))
@@ -348,9 +350,9 @@ def k_core(
     peeling only ever REMOVES nodes, so an unchanged survivor COUNT
     between rounds proves an unchanged survivor SET (shrink-monotone:
     subset + equal cardinality = equality), which proves every remaining
-    round is a no-op. The loop therefore early-exits on a count probe
-    against the already-materialized checkpoint — the bfs_hops device —
-    with a result bit-identical to running all `rounds` rounds; the
+    round is a no-op. The loop therefore early-exits on a dropped count
+    observed inside the degree checkpoint's own job — the bfs_hops device
+    — with a result bit-identical to running all `rounds` rounds; the
     convergence depth never appears in the checked output.
     Non-convergence inside `rounds` is NOT silent: rows with core_deg < k
     remain in the output and any downstream gate (or the pytest fixpoint
@@ -383,13 +385,11 @@ def k_core(
     # degrees against the CURRENT survivor set, so on exit it IS the final
     # core_deg recount (survivors peeled to zero degree are omitted exactly
     # as the recount's groupBy omitted them).
-    deg = (
-        und.groupBy("a").agg(F.count("*").alias("core_deg"))
-        .localCheckpoint(eager=True)
+    n_dropped_sql = f"count_if(core_deg < {k})"
+    deg, n_dropped = checkpoint_probe(
+        und.groupBy("a").agg(F.count("*").alias("core_deg")), n_dropped_sql
     )
     for _ in range(rounds):
-        dropped = deg.where(F.col("core_deg") < k).select("a")
-        n_dropped = dropped.count()
         if n_dropped == 0:
             break  # provable fixpoint — remaining rounds are no-ops
         # broadcast only when the dropped set is measurably small: round 1
@@ -398,19 +398,19 @@ def k_core(
         # The count doubles as the fixpoint probe, so the bound is free;
         # past it, the plain equi-join shuffles ids only and AQE may still
         # convert later rounds back to broadcast as the set shrinks.
-        drop_b = dropped.selectExpr("a AS b")
+        drop_b = deg.where(F.col("core_deg") < k).selectExpr("a AS b")
         if n_dropped <= PEEL_BROADCAST_MAX:
             drop_b = F.broadcast(drop_b)
         dec = und.join(drop_b, "b").groupBy("a").agg(F.count("*").alias("d"))
-        deg = (
+        deg, n_dropped = checkpoint_probe(
             deg.where(F.col("core_deg") >= k)
             .join(dec, "a", "left")
             .select(
                 "a",
                 (F.col("core_deg") - F.coalesce(F.col("d"), F.lit(0)))
                 .alias("core_deg"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            n_dropped_sql,
         )
     return deg.where(F.col("core_deg") > 0).selectExpr(
         "CAST(a AS BIGINT) AS node", "CAST(core_deg AS BIGINT) AS core_deg"

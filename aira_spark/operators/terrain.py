@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions.cells import DEFAULT_RES
+from .fixpoint import fixpoint
 from .focal import GRAD_OFFSETS, focal_gradient
 
 # 45-degree sectors with boundaries at multiples of 45 degrees:
@@ -190,6 +191,11 @@ def oracle_flow_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
 
 
 BASIN_K = 1 << 30  # (fx, fy) -> single BIGINT node id; grids stay far below
+# the packed node id back to its fine-grid position
+NODE_FX_FY = (
+    f"CAST(node DIV {BASIN_K} AS BIGINT) AS fx",
+    f"CAST(node % {BASIN_K} AS BIGINT) AS fy",
+)
 
 
 def flow_forest(
@@ -236,32 +242,27 @@ def drainage_basins(
     find-roots for functional graphs as DataFrame self-joins on integer
     ids. Each round shuffles (node, parent) pairs only, localCheckpointed
     (the plan references the table twice per round); convergence = a round
-    that changes nothing (checked by the same monotone-free diff count the
-    round join already computes)."""
+    that changes nothing, counted inside that round's checkpoint job
+    (fixpoint's "zero" rule over `count_if(parent != old)`). max_rounds is
+    a loud guard: path length > 2^rounds is impossible on a real grid."""
     from pyspark.sql import functions as F
 
-    p = flow_forest(images, res, patch_bits)
-    for _ in range(max_rounds):
+    def double(p: DataFrame, _rnd: int) -> DataFrame:
         q = p.selectExpr("node AS qnode", "parent AS qparent")
-        nxt = (
-            p.join(q, p["parent"] == q["qnode"])
-            .selectExpr("node", "qparent AS parent", "parent AS old")
-        ).localCheckpoint(eager=True)
-        changed = nxt.where("parent != old").limit(1).count()
-        p = nxt.select("node", "parent")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"drainage_basins did not converge in {max_rounds} doubling "
-            "rounds (path length > 2^rounds — impossible on a real grid)"
+        return p.join(q, p["parent"] == q["qnode"]).selectExpr(
+            "node", "qparent AS parent", "parent AS old"
         )
+
+    p = fixpoint(
+        flow_forest(images, res, patch_bits), double,
+        "count_if(parent != old)", max_rounds=max_rounds,
+        name="drainage_basins", until="zero",
+    ).select("node", "parent")
     sizes = p.groupBy("parent").agg(F.count("*").cast("long").alias("basin_size"))
     return (
         p.join(sizes, "parent")
         .selectExpr(
-            f"CAST(node DIV {BASIN_K} AS BIGINT) AS fx",
-            f"CAST(node % {BASIN_K} AS BIGINT) AS fy",
+            *NODE_FX_FY,
             "CAST(parent AS BIGINT) AS basin",
             "basin_size",
         )
@@ -314,10 +315,11 @@ def flow_accumulation(
     rounds. acc_i is per-node non-decreasing and bounded by the fixpoint,
     so SUM(acc) over all nodes strictly increases until convergence — the
     stopping probe is ONE cheap single-row aggregate per round, no diff
-    join (cf. drainage_basins' changed-count probe). Descent height is
-    bounded by the number of distinct values on a descending path (<= 256
-    on byte-valued mosaics) and is far smaller on real terrain; max_rounds
-    is a loud guard, never a silent truncation.
+    join (cf. drainage_basins' changed-count probe), and it is read inside
+    the round's own checkpoint job (fixpoint's "repeat" rule). Descent
+    height is bounded by the number of distinct values on a descending
+    path (<= 256 on byte-valued mosaics) and is far smaller on real
+    terrain; max_rounds is a loud guard, never a silent truncation.
 
     Scale shape per round: one equi-join of (node, acc) BIGINT pairs
     against the static edge table + one hash agg on parent (map-side
@@ -335,52 +337,27 @@ def flow_accumulation(
     # is 1 + inflow with inflow = 0 when absent, so the per-round zero-fill
     # join against the node set folds into the edge-side left join, and the
     # monotone stopping probe reads SUM(s) on the sparse side (dense total
-    # = n_nodes + sparse total, so the stopping round is unchanged).
-    n_nodes = nodes.count()
-    inflow = None
-    prev_total = -1
-    for _ in range(max_rounds):
+    # = n_nodes + sparse total; a constant offset never changes the round
+    # at which the total repeats).
+    acc_sql = "CAST(1 + coalesce(s, 0) AS BIGINT)"
+
+    def jacobi(inflow: DataFrame | None, _rnd: int) -> DataFrame:
         if inflow is None:
-            child_acc = edges.select(
-                "parent", F.lit(1).cast("long").alias("a")
-            )
+            child_acc = edges.selectExpr("parent", "CAST(1 AS BIGINT) AS a")
         else:
             child_acc = edges.join(
                 inflow.withColumnRenamed("parent", "child"), "child", "left"
-            ).select(
-                "parent",
-                (F.lit(1) + F.coalesce(F.col("s"), F.lit(0)))
-                .cast("long")
-                .alias("a"),
-            )
-        inflow = (
-            child_acc.groupBy("parent")
-            .agg(F.sum("a").cast("long").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        total = n_nodes + (inflow.agg(F.sum("s")).collect()[0][0] or 0)
-        if total == prev_total:
-            break
-        prev_total = total
-    else:
-        raise RuntimeError(
-            f"flow_accumulation did not converge in {max_rounds} rounds "
-            "(descent path longer than max_rounds — impossible on a "
-            "byte-valued mosaic)"
-        )
+            ).selectExpr("parent", f"{acc_sql} AS a")
+        return child_acc.groupBy("parent").agg(F.sum("a").cast("long").alias("s"))
+
+    inflow = fixpoint(
+        None, jacobi, "sum(s)", max_rounds=max_rounds,
+        name="flow_accumulation", until="repeat",
+    )
     acc = nodes.join(
         inflow.withColumnRenamed("parent", "node"), "node", "left"
-    ).select(
-        "node",
-        (F.lit(1) + F.coalesce(F.col("s"), F.lit(0)))
-        .cast("long")
-        .alias("acc"),
-    )
-    return acc.selectExpr(
-        f"CAST(node DIV {BASIN_K} AS BIGINT) AS fx",
-        f"CAST(node % {BASIN_K} AS BIGINT) AS fy",
-        "CAST(acc AS BIGINT) AS acc",
-    )
+    ).selectExpr("node", f"{acc_sql} AS acc")
+    return acc.selectExpr(*NODE_FX_FY, "CAST(acc AS BIGINT) AS acc")
 
 
 def oracle_flow_acc_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
@@ -655,11 +632,11 @@ def strahler_order(
     Jacobi iteration from all-1s: each round recomputes every node from
     its inflows, so nodes at height h are final after h rounds and values
     only ever increase toward the least fixpoint (the flow_accumulation
-    convergence argument verbatim; SUM(order) is the single-row stopping
-    probe, max_rounds the loud guard). The per-round argmax "which child
-    order is maximal and how many children attain it" is ONE (parent,
-    order) count agg + ONE lexicographic struct-MAX — exact integers,
-    deterministic at any parallelism.
+    convergence argument verbatim; SUM(order), read inside each round's
+    checkpoint job, is the stopping probe, max_rounds the loud guard). The
+    per-round argmax "which child order is maximal and how many children
+    attain it" is ONE (parent, order) count agg + ONE lexicographic
+    struct-MAX — exact integers, deterministic at any parallelism.
 
     Scale shape per round: two narrow hash aggs over (node, order) BIGINT
     pairs against the static checkpointed edge list — the PageRank round
@@ -683,46 +660,28 @@ def strahler_order(
         "CAST(CASE WHEN t IS NULL THEN 1 "
         "WHEN t.c >= 2 THEN t.o + 1 ELSE t.o END AS BIGINT)"
     )
-    n_nodes = nodes.count()
-    top = None
-    prev_total = -1
-    for _ in range(max_rounds):
+
+    def jacobi(top: DataFrame | None, _rnd: int) -> DataFrame:
         if top is None:
-            child_ord = edges.select(
-                "parent", F.lit(1).cast("long").alias("o")
-            )
+            child_ord = edges.selectExpr("parent", "CAST(1 AS BIGINT) AS o")
         else:
             child_ord = edges.join(
                 top.withColumnRenamed("parent", "child"), "child", "left"
             ).selectExpr("parent", f"{case_o} AS o")
         oc = child_ord.groupBy("parent", "o").agg(F.count("*").alias("c"))
-        top = (
-            oc.groupBy("parent")
-            .agg(
-                F.max(F.struct(F.col("o").alias("o"), F.col("c").alias("c")))
-                .alias("t")
-            )
-            .localCheckpoint(eager=True)
+        return oc.groupBy("parent").agg(
+            F.max(F.struct(F.col("o").alias("o"), F.col("c").alias("c")))
+            .alias("t")
         )
-        extra = top.selectExpr(
-            "sum(CASE WHEN t.c >= 2 THEN t.o + 1 ELSE t.o END - 1) AS x"
-        ).collect()[0]["x"]
-        total = n_nodes + (extra or 0)
-        if total == prev_total:
-            break
-        prev_total = total
-    else:
-        raise RuntimeError(
-            f"strahler_order did not converge in {max_rounds} rounds"
-        )
+
+    top = fixpoint(
+        None, jacobi, "sum(CASE WHEN t.c >= 2 THEN t.o + 1 ELSE t.o END - 1)",
+        max_rounds=max_rounds, name="strahler_order", until="repeat",
+    )
     ordd = nodes.join(
         top.withColumnRenamed("parent", "node"), "node", "left"
     ).selectExpr("node", f"{case_o} AS o")
-    return ordd.selectExpr(
-        f"CAST(node DIV {BASIN_K} AS BIGINT) AS fx",
-        f"CAST(node % {BASIN_K} AS BIGINT) AS fy",
-        "CAST(o AS BIGINT) AS strahler",
-    )
+    return ordd.selectExpr(*NODE_FX_FY, "CAST(o AS BIGINT) AS strahler")
 
 
 def oracle_strahler_sql(

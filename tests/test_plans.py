@@ -671,3 +671,25 @@ def test_spatial_joins_run_within_job_and_task_budget(spark, sf_dir, count_work)
         jobs, tasks = count_work(run)
         assert jobs <= max_jobs, f"{q}: {jobs} jobs > {max_jobs}"
         assert tasks <= max_tasks, f"{q}: {tasks} tasks > {max_tasks}"
+
+
+def test_round_loops_read_their_stop_value_inside_the_checkpoint_job(
+    spark, sf_dir, count_work
+):
+    """A warm call of each early-stopping round loop runs no probe job of
+    its own: the stop value (basins' changed count, flow_acc's and
+    strahler's sparse totals, k_core's dropped count, dedup's edge count)
+    is observed inside the eager checkpoint each round already runs. The
+    bounds are the counts at the time of writing, with no slack: one
+    probe job per round coming back exceeds them."""
+    import __spark_entry__ as em
+
+    budgets = {
+        "q_basins": 17, "q_flow_acc": 28, "q_strahler": 21,
+        "q_k_core": 10, "q_dedup_clusters": 13,
+    }
+    for q, max_jobs in budgets.items():
+        run = lambda: getattr(em, q)(spark, sf_dir).collect()  # noqa: E731
+        run()
+        jobs, _ = count_work(run)
+        assert jobs <= max_jobs, f"{q}: {jobs} jobs > {max_jobs}"
