@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import key_bound
+
 
 def basket_pairs(
     items: DataFrame, min_support: int = 3, max_basket: int = 10_000
@@ -21,18 +23,11 @@ def basket_pairs(
     """(item_a, item_b, n_orders) for pairs co-present in >= min_support
     orders. `items` carries (order_id, item)."""
     pres = items.select("order_id", "item").distinct()
-    over = (
-        pres.groupBy("order_id").count()
-        .filter(F.col("count") > max_basket)
-        .limit(1).collect()
+    key_bound(
+        pres, ["order_id"], max_basket, "basket_pairs", "max_basket",
+        "the pair join would be quadratic in it — cap or split oversized "
+        "baskets upstream",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"basket_pairs: order {r['order_id']} holds {r['count']} items "
-            f"> max_basket={max_basket}; the pair join would be quadratic "
-            "in it — cap or split oversized baskets upstream"
-        )
     a = pres.selectExpr("order_id", "item AS item_a")
     b = pres.selectExpr("order_id", "item AS item_b")
     return (

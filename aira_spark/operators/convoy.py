@@ -22,10 +22,12 @@ a burst of pings inside a bucket collapses before anything is joined.
 The candidate join is an equi-join on (grid cell, bucket) where the grid
 pitch EQUALS `d` and the left side emits its 3x3 cell neighbourhood:
 every true pair matches on exactly one (cell_b, bucket) key — no
-post-join dedup exchange — and work is sum over buckets of occupied-cell
-products, never global pairs. Hot buckets raise loudly before the join
-is scheduled (the co_location guard device). Only (user, bucket, ix, iy)
-id rows ever shuffle; the run analysis is ONE pair-keyed exchange.
+post-join dedup exchange (`skew.grid_pairs`) — and work is sum over
+buckets of occupied-cell products, never global pairs. A (cell, bucket)
+group holding more than max_cell_users users raises a KeyBoundError
+before the join is scheduled (`skew.key_bound`, the guard
+co_location_pairs shares). Only (user, bucket, ix, iy) id rows ever
+shuffle; the run analysis is ONE pair-keyed exchange.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_NB = 512  # grid-cell id packing base for the gy axis (gy < 170e6/d)
+from .skew import grid_pairs
 
 
 def convoy_pairs(
@@ -66,64 +68,20 @@ def convoy_pairs(
             ),
         )
         .filter("rn = 1")
-        .select(
-            "user_id",
-            "b",
-            "ix",
-            "iy",
-            F.expr(f"ix DIV {d}").alias("gx"),
-            F.expr(f"iy DIV {d}").alias("gy"),
-        )
+        .select("user_id", "b", "ix", "iy")
         # pinned: consumed THREE times below (hot-cell guard probe + both
         # join sides) — without the pin each consumer re-runs the
         # row_number window over ALL pings (SURVEY §8 rule #4); the
         # pinned state is one row per (user, bucket), already reduced
         .localCheckpoint(eager=True)
     )
-    over = (
-        rep.groupBy("gx", "gy", "b").count()
-        .filter(F.col("count") > max_cell_users)
-        .limit(1).collect()
-    )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"convoy_pairs: grid bucket (gx={r['gx']}, gy={r['gy']}, "
-            f"b={r['b']}) holds {r['count']} users > max_cell_users="
-            f"{max_cell_users}; the candidate join would be quadratic in "
-            "it — use a finer pitch for hot areas"
-        )
-    # left side broadcasts its 3x3 neighbourhood; the right side sits in
-    # exactly one cell, so each true pair matches on one key — no dedup.
-    off = F.expr("explode(sequence(-1, 1))")
-    a = (
-        rep.select(
-            F.col("user_id").alias("user_a"), "b",
-            F.col("ix").alias("ax"), F.col("iy").alias("ay"),
-            "gx", "gy",
-        )
-        .withColumn("ox", off)
-        .withColumn("oy", off)
-        .select(
-            "user_a", "b", "ax", "ay",
-            ((F.col("gx") + F.col("ox")) * _NB + F.col("gy") + F.col("oy"))
-            .alias("g"),
-        )
-    )
-    bb = rep.select(
-        F.col("user_id").alias("user_b"), "b",
-        F.col("ix").alias("bx"), F.col("iy").alias("by"),
-        (F.col("gx") * _NB + F.col("gy")).alias("g"),
-    )
-    meets = (
-        a.join(bb, ["g", "b"])
-        .filter(F.col("user_a") < F.col("user_b"))
-        .filter(
-            (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
-            + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
-            <= F.lit(d).cast("long") * F.lit(d).cast("long")
-        )
-        .select("user_a", "user_b", "b")
+    meets = grid_pairs(
+        rep, d, "user_id", keys=("b",), bound=max_cell_users,
+        op="convoy_pairs", param="max_cell_users",
+        hint="the candidate join would be quadratic in it — use a finer "
+        "pitch for hot areas",
+    ).where(f"d2 <= CAST({d} AS BIGINT) * {d}").selectExpr(
+        "user_id_a AS user_a", "user_id_b AS user_b", "b"
     )
     wp = Window.partitionBy("user_a", "user_b").orderBy("b")
     runs = (

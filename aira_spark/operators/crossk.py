@@ -9,11 +9,12 @@ against the independence expectation pi*r^2 — attraction (stores chase
 customers, symbionts co-locate) scores above, repulsion (competitors,
 inhibition) below. The cross-type sibling of ripley.py's univariate K,
 sharing its devices: integer-microdegree quantization, squared-distance
-predicates, one grid-pitch-r_max candidate join with 3x3 emission (each
-geometric pair matches EXACTLY one key — the convoy device; the
-(mark_a < mark_b) class filter makes each unordered cross pair count
-once), every radius a conditional sum over the same candidates, and K
-as the floor fixed point (A * 1000 * n_pairs) DIV (n1 * n2).
+predicates, one grid-pitch-r_max candidate join with 3x3 emission
+(`skew.grid_pairs`: each geometric pair matches EXACTLY one key; its
+order column is the mark, so the (mark_a < mark_b) class filter makes
+each unordered cross pair count once), every radius a conditional sum
+over the same candidates, and K as the floor fixed point
+(A * 1000 * n_pairs) DIV (n1 * n2).
 
 Zero safety: class pairs with no close pairs still report n_pairs = 0 —
 the always-present per-mark census cross-joins into the bounded
@@ -21,15 +22,17 @@ the always-present per-mark census cross-joins into the bounded
 metadata-sized) and LEFT-joins the pair counts.
 
 Scale shape (100 TB): identical to ripley_k — only (id, mark, ix, iy)
-integer rows shuffle, the hot-cell guard raises loudly before any
-quadratic cell, radii never duplicate points."""
+integer rows shuffle, the hot-cell guard raises a KeyBoundError when one
+grid cell (all marks together: the join is keyed on the cell alone)
+holds more than max_cell_points points, radii never duplicate points."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ripley import _AREA, _NB, RADII_E6
+from .ripley import _AREA, RADII_E6
+from .skew import grid_pairs
 
 
 def cross_k(
@@ -41,55 +44,15 @@ def cross_k(
     unordered mark-class pair. `points` carries (point_id, mark, x, y)."""
     pitch = max(radii_e6)
     pts = points.selectExpr(
-        "point_id", "mark",
+        "mark",
         "CAST(floor(x * 1000000.0) AS BIGINT) AS ix",
         "CAST(floor(y * 1000000.0) AS BIGINT) AS iy",
-    ).selectExpr(
-        "point_id", "mark", "ix", "iy",
-        f"ix DIV {pitch} AS gx", f"iy DIV {pitch} AS gy",
     )
-    over = (
-        pts.groupBy("gx", "gy").count()
-        .filter(F.col("count") > max_cell_points)
-        .limit(1).collect()
-    )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"cross_k: grid cell (gx={r['gx']}, gy={r['gy']}) holds "
-            f"{r['count']} points > max_cell_points={max_cell_points}; "
-            "the candidate join would be quadratic in it — thin or "
-            "sub-sample the pattern first"
-        )
-    off = F.expr("explode(sequence(-1, 1))")
-    a = (
-        pts.select(
-            F.col("mark").alias("mark_a"),
-            F.col("ix").alias("ax"), F.col("iy").alias("ay"), "gx", "gy",
-        )
-        .withColumn("ox", off)
-        .withColumn("oy", off)
-        .select(
-            "mark_a", "ax", "ay",
-            ((F.col("gx") + F.col("ox")) * _NB + F.col("gy") + F.col("oy"))
-            .alias("g"),
-        )
-    )
-    b = pts.select(
-        F.col("mark").alias("mark_b"),
-        F.col("ix").alias("bx"), F.col("iy").alias("by"),
-        (F.col("gx") * _NB + F.col("gy")).alias("g"),
-    )
-    cand = (
-        a.join(b, "g")
-        .filter(F.col("mark_a") < F.col("mark_b"))
-        .select(
-            "mark_a", "mark_b",
-            (
-                (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
-                + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
-            ).alias("d2"),
-        )
+    cand = grid_pairs(
+        pts, pitch, "mark", bound=max_cell_points,
+        op="cross_k", param="max_cell_points",
+        hint="the candidate join would be quadratic in it — thin or "
+        "sub-sample the pattern first",
     )
     pc = cand.groupBy("mark_a", "mark_b").agg(
         *[

@@ -23,6 +23,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions import textfns as tf
 from .fixpoint import checkpoint_probe, fixpoint
+from .skew import key_bound
 
 ENG = "spark"
 
@@ -443,7 +444,7 @@ def phash_dup_pairs(images: DataFrame, max_hamming: int = 2) -> DataFrame:
 
 def ngram_jaccard_pairs(
     docs: DataFrame, k: int = 3, threshold: float = 0.3,
-    max_block: int | None = 100_000,
+    max_block: int = 100_000,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs within (lang, source) blocks — the
     non-probabilistic baseline the LSH path approximates.
@@ -452,33 +453,19 @@ def ngram_jaccard_pairs(
     if any (lang, source) block exceeds max_block rows the operator raises
     loudly instead of silently launching an O(n^2) join (at corpus scale a
     single (en, web) block is most of the table). Route oversized corpora
-    through minhash_lsh_pairs and keep this as the exact verifier; pass
-    max_block=None only for bounded test inputs.
+    through minhash_lsh_pairs and keep this as the exact verifier.
     """
     sh = tf.shingles("text", k, ENG)
     d = docs.selectExpr("doc_id", "lang", "source", f"{sh} AS sh")
-    if max_block is not None:
-        # metadata-sized agg (one row per block); the action is the price of
-        # failing loudly before the quadratic join is ever scheduled
-        over = (
-            # NULL-keyed rows never join (equi-join drops NULL keys), so an
-            # oversized NULL block is harmless — exclude it from the guard
-            # or the operator refuses an input it would process cheaply
-            docs.filter(F.col("lang").isNotNull() & F.col("source").isNotNull())
-            .groupBy("lang", "source")
-            .count()
-            .filter(F.col("count") > max_block)
-            .limit(1)
-            .collect()
-        )
-        if over:
-            r = over[0]
-            raise RuntimeError(
-                f"ngram_jaccard_pairs: block (lang={r['lang']}, source="
-                f"{r['source']}) has {r['count']} rows > max_block={max_block}; "
-                "all-pairs within it would be quadratic — use minhash_lsh_pairs "
-                "for candidate generation instead"
-            )
+    # NULL-keyed rows never join (equi-join drops NULL keys), so an
+    # oversized NULL block is harmless — exclude it from the guard or the
+    # operator refuses an input it would process cheaply
+    key_bound(
+        docs.where("lang IS NOT NULL AND source IS NOT NULL"),
+        ["lang", "source"], max_block, "ngram_jaccard_pairs", "max_block",
+        "all-pairs within it would be quadratic — use minhash_lsh_pairs "
+        "for candidate generation instead",
+    )
     a = d.select("lang", "source", F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = d.select("lang", "source", F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jac = F.expr(tf.jaccard_words("sh_a", "sh_b", ENG))
@@ -510,13 +497,11 @@ def cross_modal_dup_pairs(
     'stock photo' — must be routed to a frequency filter first)."""
     img_pairs = phash_dup_pairs(images, max_hamming)
     cap = images.selectExpr("image_id", "md5(caption) AS ch")
-    biggest = cap.groupBy("ch").count().agg(F.max("count")).collect()[0][0]
-    if biggest is not None and biggest > max_caption_group:
-        raise ValueError(
-            f"caption group of {biggest} rows exceeds max_caption_group="
-            f"{max_caption_group}; frequency-filter boilerplate captions "
-            "before pairwise comparison"
-        )
+    key_bound(
+        cap, ["ch"], max_caption_group, "cross_modal_dup_pairs",
+        "max_caption_group",
+        "frequency-filter boilerplate captions before pairwise comparison",
+    )
     a, b = cap.alias("a"), cap.alias("b")
     cap_pairs = (
         a.join(b, "ch")
@@ -542,7 +527,7 @@ def cross_modal_dup_pairs(
 
 def containment_pairs(
     docs: DataFrame, k: int = 3, threshold_ppm: int = 800_000,
-    max_gram_df: int | None = 10_000,
+    max_gram_df: int = 10_000,
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared, n_a, n_b, cont_ppm): ASYMMETRIC near-dup —
     containment of the smaller k-gram set in the larger, |A∩B| / min(|A|,
@@ -565,20 +550,11 @@ def containment_pairs(
         .distinct()
         .localCheckpoint(eager=True)  # reused 3x below (join x2 + counts)
     )
-    if max_gram_df is not None:
-        over = (
-            g.groupBy("gram").count()
-            .filter(F.col("count") > max_gram_df)
-            .limit(1).collect()
-        )
-        if over:
-            r = over[0]
-            raise RuntimeError(
-                f"containment_pairs: gram {r['gram']!r} appears in "
-                f"{r['count']} docs > max_gram_df={max_gram_df}; the gram "
-                "join would be quadratic in its df — stoplist boilerplate "
-                "grams upstream or raise the guard for bounded inputs"
-            )
+    key_bound(
+        g, ["gram"], max_gram_df, "containment_pairs", "max_gram_df",
+        "the gram join would be quadratic in its df — stoplist boilerplate "
+        "grams upstream or raise the guard for bounded inputs",
+    )
     n = g.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_grams"))
     shared = (
         g.select(F.col("doc_id").alias("doc_a"), "gram")

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import key_bound
+
 ENC = 1 << 32
 CHI2_95_DF6_E3 = 12_592  # 12.592 * 1000, the df=6 95% critical value
 
@@ -42,6 +44,12 @@ def dow_seasonality(
     """(cell, n, chi2_num, top_dow, top_cnt, weekly) per cell from
     `events` carrying (cell, day, cents) — counts only, values ignored;
     weekly = 1 when 1000*chi2_num > 12592*n."""
+    # n, the per-cell event count, bounds 1000*chi2_num
+    key_bound(
+        events, ["cell"], max_cell_events, "dow_seasonality",
+        "max_cell_events",
+        "1000*chi2_num would overflow int64 — pre-aggregate or widen",
+    )
     counts = (
         events.selectExpr("cell", "day % 7 AS dow")
         .groupBy("cell", "dow")
@@ -54,15 +62,6 @@ def dow_seasonality(
             F.col("cnt") * F.lit(ENC) + (F.lit(ENC - 1) - F.col("dow"))
         ).alias("key"),
     )
-    over = (
-        per_cell.where(f"n > {max_cell_events}").limit(1).collect()
-    )
-    if over:
-        raise RuntimeError(
-            f"dow_seasonality: cell {over[0]['cell']} holds "
-            f"{over[0]['n']} events > max_cell_events={max_cell_events}; "
-            "1000*chi2_num would overflow int64 — pre-aggregate or widen"
-        )
     return per_cell.selectExpr(
         "CAST(cell AS BIGINT) AS cell",
         "n",

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .skew import key_bound
+
 OUT_SCHEMA = (
     "grp string, n bigint, n0 bigint, tie_x bigint, tie_y bigint, "
     "tie_xy bigint, concordant bigint, discordant bigint, tau_b_e6 bigint"
@@ -67,20 +69,12 @@ def kendall_tau(
     import math
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    over = (
-        pairs.groupBy("grp").count()
-        .filter(F.col("count") > max_group_rows)
-        .limit(1).collect()
+    key_bound(
+        pairs, ["grp"], max_group_rows, "kendall_tau", "max_group_rows",
+        "a single task would own it — use a blocked triangular self-join "
+        "for groups this size",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"kendall_tau: group {r['grp']!r} holds {r['count']} rows > "
-            f"max_group_rows={max_group_rows}; a single task would own it "
-            "— use a blocked triangular self-join for groups this size"
-        )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         grp = pdf["grp"].iloc[0]

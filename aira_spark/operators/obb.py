@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .hull import GROUP_RES, convex_hulls, oracle_hull_sql
+from .skew import key_bound
 
 PKEY = 1 << 32
 
@@ -48,18 +49,11 @@ def obb(
     dt_num/sqrt(d2) and dn_num/sqrt(d2)). Clusters with < 2 hull
     vertices emit zeros."""
     h = convex_hulls(points, res).localCheckpoint(eager=True)
-    over = (
-        h.groupBy("grp").count().filter(F.col("count") > max_hull)
-        .limit(1).collect()
+    key_bound(
+        h, ["grp"], max_hull, "obb", "max_hull",
+        "the O(h^3) pair-projection join would blow up — use ordered-edge "
+        "rotating calipers for hulls this size",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"obb: cluster {r['grp']} holds {r['count']} hull vertices > "
-            f"max_hull={max_hull}; the O(h^3) pair-projection join would "
-            "blow up — use ordered-edge rotating calipers for hulls this "
-            "size"
-        )
     a = h.selectExpr("grp", "point_id AS ia", "qx AS ax", "qy AS ay")
     b = h.selectExpr("grp", "point_id AS ib", "qx AS bx", "qy AS by")
     pairs = (

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .entropy import _log2_e6_table
+from .skew import key_bound
 
 ENC = 1 << 32
 MAX_N = 1024
@@ -55,17 +56,11 @@ def perm_entropy(events: DataFrame) -> DataFrame:
     ).localCheckpoint(eager=True)  # reused by the guard and the windows
     # guard BEFORE any element_at is planned: n_triples <= n_days - 2,
     # and an out-of-table index would throw an opaque ANSI error first
-    over = (
-        daily.groupBy("cell").count()
-        .filter(F.col("count") > MAX_N + 2)
-        .limit(1).collect()
+    key_bound(
+        daily, ["cell"], MAX_N + 2, "perm_entropy", "MAX_N + 2",
+        f"more days than the {MAX_N}-entry log2 table covers — widen "
+        "MAX_N for calendars this long",
     )
-    if over:
-        raise RuntimeError(
-            f"perm_entropy: cell {over[0]['cell']} holds "
-            f"{over[0]['count']} days > the {MAX_N}-entry log2 table "
-            "budget; widen MAX_N for calendars this long"
-        )
     trip = daily.selectExpr(
         "cell", "day", "y AS c",
         "lag(y, 1) OVER (PARTITION BY cell ORDER BY day) AS b",

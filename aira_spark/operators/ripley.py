@@ -20,14 +20,15 @@ identical in both engines (A = 64800 deg^2, the world rectangle; budget:
 64800 * 2000 * n_pairs stays mid-int64 for n_pairs up to 7e10).
 
 Scale shape (100 TB): ONE candidate join at grid pitch = r_max with 3x3
-neighbourhood emission (each true pair matches exactly one key — the
-convoy device, no post-join dedup), every radius answered from the same
-candidate set as conditional sums (points are never duplicated
-per-radius), and the zero-pair safety net is a LEFT join from the
-always-present per-mark point census — a mark with no close pairs still
-reports n_pairs = 0 instead of silently dropping. Only
-(id, mark, ix, iy) rows ever shuffle; the hot-cell guard raises loudly
-when a single grid cell would go quadratic beyond the cap.
+neighbourhood emission, keyed on (cell, mark) (`skew.grid_pairs`: each
+true pair matches exactly one key, no post-join dedup), every radius
+answered from the same candidate set as conditional sums (points are
+never duplicated per-radius), and the zero-pair safety net is a LEFT
+join from the always-present per-mark point census — a mark with no
+close pairs still reports n_pairs = 0 instead of silently dropping. Only
+(id, mark, ix, iy) rows ever shuffle; the hot-cell guard raises a
+KeyBoundError when one (grid cell, mark) group — the unit the join is
+keyed on — holds more than max_cell_points points.
 """
 
 from __future__ import annotations
@@ -35,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_NB = 512  # grid id packing base (gy < 170e6 / pitch)
+from .skew import grid_pairs
+
 _AREA = 360 * 180  # world rectangle, square degrees
 
 RADII_E6 = (1_000_000, 2_000_000, 4_000_000, 8_000_000)
@@ -55,52 +57,12 @@ def ripley_k(
         "mark",
         "CAST(floor(x * 1000000.0) AS BIGINT) AS ix",
         "CAST(floor(y * 1000000.0) AS BIGINT) AS iy",
-    ).selectExpr(
-        "point_id", "mark", "ix", "iy",
-        f"ix DIV {pitch} AS gx", f"iy DIV {pitch} AS gy",
     )
-    over = (
-        pts.groupBy("gx", "gy").count()
-        .filter(F.col("count") > max_cell_points)
-        .limit(1).collect()
-    )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"ripley_k: grid cell (gx={r['gx']}, gy={r['gy']}) holds "
-            f"{r['count']} points > max_cell_points={max_cell_points}; "
-            "the candidate join would be quadratic in it — thin or "
-            "sub-sample the pattern first"
-        )
-    off = F.expr("explode(sequence(-1, 1))")
-    a = (
-        pts.select(
-            F.col("point_id").alias("ida"), "mark",
-            F.col("ix").alias("ax"), F.col("iy").alias("ay"), "gx", "gy",
-        )
-        .withColumn("ox", off)
-        .withColumn("oy", off)
-        .select(
-            "ida", "mark", "ax", "ay",
-            ((F.col("gx") + F.col("ox")) * _NB + F.col("gy") + F.col("oy"))
-            .alias("g"),
-        )
-    )
-    b = pts.select(
-        F.col("point_id").alias("idb"), "mark",
-        F.col("ix").alias("bx"), F.col("iy").alias("by"),
-        (F.col("gx") * _NB + F.col("gy")).alias("g"),
-    )
-    cand = (
-        a.join(b, ["g", "mark"])
-        .filter(F.col("ida") < F.col("idb"))
-        .select(
-            "mark",
-            (
-                (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
-                + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
-            ).alias("d2"),
-        )
+    cand = grid_pairs(
+        pts, pitch, "point_id", keys=("mark",), bound=max_cell_points,
+        op="ripley_k", param="max_cell_points",
+        hint="the candidate join would be quadratic in it — thin or "
+        "sub-sample the pattern first",
     )
     pc = cand.groupBy("mark").agg(
         *[

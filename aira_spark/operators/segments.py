@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import key_bound
+
 BIN = 10_000  # 1-degree bins over the 1e-4-deg grid
 
 
@@ -94,18 +96,10 @@ def segment_intersections(
         .withColumn("bin", F.expr("gx * 1024 + gy"))
         .drop("gx", "gy")
     )
-    hot = (
-        binned.groupBy("bin")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bin)
-        .take(1)
+    key_bound(
+        binned, ["bin"], max_bin, "segment_intersections", "max_bin",
+        "refine the binning resolution before scheduling quadratic work",
     )
-    if hot:
-        raise ValueError(
-            f"segment_intersections: bin {hot[0]['bin']} holds "
-            f"{hot[0]['n']} segments (> max_bin={max_bin}); refine the "
-            "binning resolution before scheduling quadratic work"
-        )
     a = binned.selectExpr(
         "bin", "seg_id AS seg_a", "user_id AS ua",
         "axq", "ayq", "bxq", "byq",
@@ -210,17 +204,10 @@ def _proximity_pairs(
         .withColumn("bin", F.expr("gx * 1024 + gy"))
         .drop("gx", "gy")
     )
-    hot = (
-        binned.groupBy("bin")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bin)
-        .take(1)
+    key_bound(
+        binned, ["bin"], max_bin, "route_proximity", "max_bin",
+        "refine the binning",
     )
-    if hot:
-        raise ValueError(
-            f"route_proximity: bin {hot[0]['bin']} holds {hot[0]['n']} "
-            f"segments (> max_bin={max_bin}); refine the binning"
-        )
     pts = points.withColumn(
         "bin", F.expr(f"(pxq div {BIN}) * 1024 + (pyq div {BIN})")
     )

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .skew import key_bound
+
 _RHO = (
     "CASE WHEN n >= 2 AND var_xn > 0 AND var_yn > 0 THEN "
     "FLOOR(1000000.0 * cov_n / "
@@ -66,19 +68,11 @@ def spearman_rho(
     """(grp, n, cov_n, var_xn, var_yn, rho_e6) from `pairs` carrying
     (grp string, id, xv bigint, yv bigint); cov/var are the exact integer
     numerators n*Sxy - Sx*Sy over DOUBLED average ranks."""
-    over = (
-        pairs.groupBy("grp").count()
-        .filter(F.col("count") > max_group_rows)
-        .limit(1).collect()
+    key_bound(
+        pairs, ["grp"], max_group_rows, "spearman_rho", "max_group_rows",
+        "doubled-rank moments would overflow int64 — use a doubles-based "
+        "variant for groups this size",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"spearman_rho: group {r['grp']!r} holds {r['count']} rows > "
-            f"max_group_rows={max_group_rows}; doubled-rank moments would "
-            "overflow int64 — use a doubles-based variant for groups this "
-            "size"
-        )
     rx = _doubled_ranks(pairs, "xv", "dx")
     ry = _doubled_ranks(pairs, "yv", "dy")
     ranked = pairs.join(rx, ["grp", "xv"]).join(ry, ["grp", "yv"])

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import DEFAULT_RES
+from .skew import key_bound
 
 
 def od_flows(events: DataFrame) -> DataFrame:
@@ -185,22 +185,12 @@ def co_location_pairs(
     device; at planet scale those buckets need a finer grid or sampling,
     decided upstream, not silently here). Only (user, cell, hour) id rows
     shuffle."""
-    from pyspark.sql import functions as F
-
     pres = events.select("user_id", "cell", "hour").distinct()
-    over = (
-        pres.groupBy("cell", "hour").count()
-        .filter(F.col("count") > max_group)
-        .limit(1).collect()
+    key_bound(
+        pres, ["cell", "hour"], max_group, "co_location_pairs", "max_group",
+        "the pair join would be quadratic in it — use a finer grid for hot "
+        "areas",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"co_location_pairs: bucket (cell={r['cell']}, hour="
-            f"{r['hour']}) holds {r['count']} users > max_group="
-            f"{max_group}; the pair join would be quadratic in it — use a "
-            "finer grid for hot areas"
-        )
     a = pres.selectExpr("user_id AS user_a", "cell", "hour")
     b = pres.selectExpr("user_id AS user_b", "cell", "hour")
     return (
@@ -263,8 +253,6 @@ def hausdorff_join(
     into the two ping joins; only id+coord rows ever shuffle. Directed
     maxes are two map-side-combined agg chains over the same distance
     relation."""
-    from pyspark.sql import functions as F
-
     # pts feeds FIVE subtrees (cells twice, both ping joins, sizes);
     # localCheckpoint pins the scan+distinct once instead of replaying it
     # per subtree — id+coord rows only, linear in the input
@@ -278,19 +266,12 @@ def hausdorff_join(
         F.shiftright(F.col("ix"), shift).alias("cx"),
         F.shiftright(F.col("iy"), shift).alias("cy"),
     ).distinct()
-    over = (
-        cells.groupBy("cx", "cy").count()
-        .filter(F.col("count") > max_cell_users)
-        .limit(1).collect()
+    key_bound(
+        cells, ["cx", "cy"], max_cell_users, "hausdorff_join",
+        "max_cell_users",
+        "the candidate join would be quadratic in it — raise `shift` "
+        "resolution or pre-partition hot regions",
     )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"hausdorff_join: cell ({r['cx']},{r['cy']}) holds "
-            f"{r['count']} users > max_cell_users={max_cell_users}; the "
-            "candidate join would be quadratic in it — raise `shift` "
-            "resolution or pre-partition hot regions"
-        )
     pairs = (
         cells.selectExpr("user_id AS user_a", "cx", "cy")
         .join(cells.selectExpr("user_id AS user_b", "cx", "cy"), ["cx", "cy"])

@@ -17,19 +17,20 @@ point e3 with an exact BIGINT sum of squared value differences.
 
 Scale shape (100 TB): ONE candidate join at grid pitch = r_max with 3x3
 neighbourhood emission (each close pair matches exactly one key — the
-convoy/ripley device, `operators/ripley.py:22`), every lag answered from
-the same candidate set, so points are never duplicated per bin; the bin
+ripley/convoy device, `skew.grid_pairs`), every lag answered from the
+same candidate set, so points are never duplicated per bin; the bin
 spine LEFT-joins the census so empty lags report n_pairs = 0 instead of
 vanishing (a hole in the variogram reads as structure — it must be
 visibly empty). Only (id, ix, iy, v) rows shuffle; the hot-cell guard
-raises loudly before a dense cell goes quadratic."""
+raises a KeyBoundError before a grid cell holding more than
+max_cell_points points goes quadratic."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_NB = 512  # grid id packing base (shared with ripley.py)
+from .skew import grid_pairs
 
 
 def semivariogram(
@@ -46,53 +47,18 @@ def semivariogram(
         "point_id", "CAST(v AS BIGINT) AS v",
         "CAST(floor(x * 1000000.0) AS BIGINT) AS ix",
         "CAST(floor(y * 1000000.0) AS BIGINT) AS iy",
-    ).selectExpr(
-        "point_id", "v", "ix", "iy",
-        f"ix DIV {pitch} AS gx", f"iy DIV {pitch} AS gy",
-    )
-    over = (
-        pts.groupBy("gx", "gy").count()
-        .filter(F.col("count") > max_cell_points)
-        .limit(1).collect()
-    )
-    if over:
-        r = over[0]
-        raise RuntimeError(
-            f"semivariogram: grid cell (gx={r['gx']}, gy={r['gy']}) holds "
-            f"{r['count']} points > max_cell_points={max_cell_points}; "
-            "the candidate join would be quadratic in it — shrink r_max "
-            "(lag_e6 * n_bins) or thin the samples first"
-        )
-    off = F.expr("explode(sequence(-1, 1))")
-    a = (
-        pts.select(
-            F.col("point_id").alias("ida"), F.col("v").alias("va"),
-            F.col("ix").alias("ax"), F.col("iy").alias("ay"), "gx", "gy",
-        )
-        .withColumn("ox", off)
-        .withColumn("oy", off)
-        .select(
-            "ida", "va", "ax", "ay",
-            ((F.col("gx") + F.col("ox")) * _NB + F.col("gy") + F.col("oy"))
-            .alias("g"),
-        )
-    )
-    b = pts.select(
-        F.col("point_id").alias("idb"), F.col("v").alias("vb"),
-        F.col("ix").alias("bx"), F.col("iy").alias("by"),
-        (F.col("gx") * _NB + F.col("gy")).alias("g"),
     )
     binned = (
-        a.join(b, "g")
-        .filter(F.col("ida") < F.col("idb"))
-        .selectExpr(
-            "(ax - bx) * (ax - bx) + (ay - by) * (ay - by) AS d2",
-            "(va - vb) * (va - vb) AS sq",
+        grid_pairs(
+            pts, pitch, "point_id", carry=("v",), bound=max_cell_points,
+            op="semivariogram", param="max_cell_points",
+            hint="the candidate join would be quadratic in it — shrink "
+            "r_max (lag_e6 * n_bins) or thin the samples first",
         )
         .selectExpr(
             f"CAST(FLOOR(SQRT(CAST(d2 AS DOUBLE))) AS BIGINT)"
             f" DIV {lag_e6} AS lag_bin",
-            "sq",
+            "(v_a - v_b) * (v_a - v_b) AS sq",
         )
         .where(f"lag_bin < {n_bins}")
         .groupBy("lag_bin")

@@ -305,10 +305,12 @@ def main() -> None:
                            "rows only, zero pre-agg exchanges"),
         ("convoy", "one rep per (user, bucket) before any join; "
                    "(cell, bucket) equi-join at pitch d, 3x3 emission = "
-                   "single-key match; pair-keyed run census"),
-        ("ripley_k", "one candidate join at pitch r_max serves all radii "
-                     "as conditional sums; LEFT join keeps zero-pair "
-                     "marks; ids+coords only in exchanges"),
+                   "single-key match (skew.grid_pairs); pair-keyed run "
+                   "census"),
+        ("ripley_k", "one (cell, mark) candidate join at pitch r_max "
+                     "(skew.grid_pairs) serves all radii as conditional "
+                     "sums; LEFT join keeps zero-pair marks; ids+coords "
+                     "only in exchanges"),
         ("theilsen", "daily roll-up folds the stream map-side before any "
                      "pair forms; per-cell pair fan-out calendar-bounded; "
                      "rank+count share one window partition"),
@@ -318,9 +320,10 @@ def main() -> None:
         ("joincount", "marks pre-aggregated to one row per observed cell; "
                       "neighbour probe is pure id arithmetic; single "
                       "(grp, cell) equi-join bounded by 2n pairs"),
-        ("variogram", "one candidate join at pitch r_max serves all lag "
-                      "bins; bin spine LEFT join keeps empty lags "
-                      "visible; ids+coords+values only in exchanges"),
+        ("variogram", "one candidate join at pitch r_max "
+                      "(skew.grid_pairs) serves all lag bins; bin spine "
+                      "LEFT join keeps empty lags visible; "
+                      "ids+coords+values only in exchanges"),
         ("qa_flags", "bit decode fused into the chunk-enumeration "
                      "projection (no exchange added); single per-image "
                      "map-combined agg; pixels never read"),
@@ -477,8 +480,9 @@ def main() -> None:
                          "in the exchange); literal log2 table, no join"),
         ("cross_k", "one grid-pitch-r_max candidate join with 3x3 "
                     "emission (each geometric pair matches exactly one "
-                    "key); all radii answered as conditional sums; "
-                    "id-only integer exchanges, hot-cell guard"),
+                    "key, skew.grid_pairs); all radii answered as "
+                    "conditional sums; id-only integer exchanges, "
+                    "hot-cell guard (skew.key_bound)"),
         ("skeleton", "2K chained constant-9-arm focal scatters over the "
                      "SHRINKING mask, map-side-combined 0/1 slots, "
                      "localCheckpointed per iteration; one final "
