@@ -157,11 +157,13 @@ vals AS (
 )"""
 
 
-def _fine_cte_sql(modulo: int = 8, patch_bits: int = 4) -> str:
+def _fine_cte_sql(modulo: int = 8) -> str:
     """Full WITH prefix ending in `fine(fx, fy, val)` — the max-composited
     mosaic fine grid recomputed from first principles, shared by the
     raster-stack oracles."""
-    nf = 1 << (CELL_RES + patch_bits)
+    from aira_spark.operators.mosaic import PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_pixel_ctes(modulo)},
@@ -902,7 +904,7 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aira_spark.operators.mosaic import mosaic_cell_values
 
     return mosaic_cell_values(
-        _images(spark, sf_dir, modulo=8), CELL_RES, patch_bits=4
+        _images(spark, sf_dir, modulo=8), CELL_RES
     ).select(
         F.col("cell").cast("long").alias("cell"),
         F.col("pr").cast("long").alias("pr"),
@@ -920,7 +922,7 @@ def q_warp(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave holes there)."""
     from aira_spark.operators.warp import warp_census
 
-    return warp_census(_images(spark, sf_dir, modulo=8), patch_bits=3).select(
+    return warp_census(_images(spark, sf_dir, modulo=8)).select(
         F.col("wx").cast("long").alias("wx"),
         F.col("wy").cast("long").alias("wy"),
         F.col("n_cells").cast("long").alias("n_cells"),
@@ -1495,7 +1497,7 @@ def q_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, only (pos, sum, cnt) integer rows)."""
     from aira_spark.operators.focal import focal_mean
 
-    return focal_mean(_images(spark, sf_dir, modulo=8), CELL_RES, patch_bits=4)
+    return focal_mean(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1828,7 +1830,7 @@ def q_focal_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
     where all four cardinal neighbors are filled."""
     from aira_spark.operators.focal import focal_gradient
 
-    return focal_gradient(_images(spark, sf_dir, modulo=8), CELL_RES, patch_bits=4)
+    return focal_gradient(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1838,9 +1840,7 @@ def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection mirrored by q_overview_select)."""
     from aira_spark.operators.pyramid import pyramid_levels
 
-    return pyramid_levels(
-        _images(spark, sf_dir, modulo=8), CELL_RES, patch_bits=4, levels=3
-    )
+    return pyramid_levels(_images(spark, sf_dir, modulo=8), CELL_RES, levels=3)
 
 
 def q_contours(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1849,7 +1849,7 @@ def q_contours(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/contours.py) — the raster->vector contour step."""
     from aira_spark.operators.contours import contour_cases
 
-    return contour_cases(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return contour_cases(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1858,7 +1858,7 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row aggregate of exact BIGINTs (operators/autocorr.py)."""
     from aira_spark.operators.autocorr import spatial_autocorr
 
-    return spatial_autocorr(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return spatial_autocorr(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 _EV_X = "CAST((event_id * 2654435761) % 350000000 AS DOUBLE) / 1000000.0 - 178.0"
@@ -1914,7 +1914,7 @@ def q_terrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/terrain.py)."""
     from aira_spark.operators.terrain import terrain_census
 
-    return terrain_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return terrain_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1944,7 +1944,7 @@ def q_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stencil as one scatter + one agg (operators/resample.py)."""
     from aira_spark.operators.resample import upsample_bilinear
 
-    return upsample_bilinear(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return upsample_bilinear(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2565,7 +2565,7 @@ def q_basins(spark: SparkSession, sf_dir: str) -> DataFrame:
     forest, O(log path) rounds (operators/terrain.py:drainage_basins)."""
     from aira_spark.operators.terrain import drainage_basins
 
-    return drainage_basins(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return drainage_basins(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_trajectory_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2626,7 +2626,7 @@ def q_strahler(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-MAX (operators/terrain.py:strahler_order)."""
     from aira_spark.operators.terrain import strahler_order
 
-    return strahler_order(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return strahler_order(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2909,7 +2909,7 @@ def q_flow_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/terrain.py)."""
     from aira_spark.operators.terrain import flow_direction
 
-    return flow_direction(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return flow_direction(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2919,7 +2919,7 @@ def q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/autocorr.py:gi_hotspots)."""
     from aira_spark.operators.autocorr import gi_hotspots
 
-    return gi_hotspots(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return gi_hotspots(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_box_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2939,7 +2939,7 @@ def q_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/proximity.py)."""
     from aira_spark.operators.proximity import proximity_raster
 
-    return proximity_raster(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return proximity_raster(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2949,7 +2949,7 @@ def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/terrain.py:hillshade_census)."""
     from aira_spark.operators.terrain import hillshade_census
 
-    return hillshade_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return hillshade_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3024,7 +3024,7 @@ def q_flow_acc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/terrain.py:flow_accumulation)."""
     from aira_spark.operators.terrain import flow_accumulation
 
-    return flow_accumulation(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return flow_accumulation(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3048,7 +3048,7 @@ def q_change_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = _images(spark, sf_dir)
     kmod = F.expr("CAST(substr(image_id, 4) AS BIGINT) % 16")
     return change_census(
-        imgs.filter(kmod == 0), imgs.filter(kmod == 8), CELL_RES, 4
+        imgs.filter(kmod == 0), imgs.filter(kmod == 8), CELL_RES
     )
 
 
@@ -3058,7 +3058,7 @@ def q_focal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted list and two exact order statistics (operators/focal.py)."""
     from aira_spark.operators.focal import focal_median
 
-    return focal_median(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return focal_median(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3204,7 +3204,7 @@ def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius^2 per ray (operators/terrain.py:viewshed)."""
     from aira_spark.operators.terrain import viewshed
 
-    return viewshed(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return viewshed(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3388,9 +3388,7 @@ def q_dist_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/disttrans.py:distance_transform)."""
     from aira_spark.operators.disttrans import distance_transform
 
-    return distance_transform(
-        _images(spark, sf_dir, modulo=8), CELL_RES, 4
-    )
+    return distance_transform(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_harris(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3399,7 +3397,7 @@ def q_harris(spark: SparkSession, sf_dir: str) -> DataFrame:
     focal scatter-aggregates (operators/harris.py:harris_corners)."""
     from aira_spark.operators.harris import harris_corners
 
-    return harris_corners(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return harris_corners(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_patch_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3408,7 +3406,7 @@ def q_patch_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/entropy.py:patch_entropy)."""
     from aira_spark.operators.entropy import patch_entropy
 
-    return patch_entropy(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return patch_entropy(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_kde(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3460,7 +3458,7 @@ def q_hog(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/hog.py:hog_census)."""
     from aira_spark.operators.hog import hog_census
 
-    return hog_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return hog_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3491,7 +3489,7 @@ def q_lbp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/lbp.py:lbp_census)."""
     from aira_spark.operators.lbp import lbp_census
 
-    return lbp_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return lbp_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3522,7 +3520,7 @@ def q_tophat(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/tophat.py:tophat)."""
     from aira_spark.operators.tophat import tophat
 
-    return tophat(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return tophat(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3567,7 +3565,7 @@ def q_hough(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-theta encoded-argmax peaks (operators/hough.py:hough_lines)."""
     from aira_spark.operators.hough import hough_lines
 
-    return hough_lines(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return hough_lines(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3601,9 +3599,7 @@ def q_voronoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = read_table(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey AS seed_id", f"{_KNN_QX} AS x", f"{_KNN_QY} AS y"
     )
-    return voronoi_census(
-        _images(spark, sf_dir, modulo=8), seeds, CELL_RES, 4
-    )
+    return voronoi_census(_images(spark, sf_dir, modulo=8), seeds, CELL_RES)
 
 
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3621,7 +3617,7 @@ def q_canny(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout (operators/canny.py:canny_edges)."""
     from aira_spark.operators.canny import canny_edges
 
-    return canny_edges(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return canny_edges(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3641,7 +3637,7 @@ def q_skeleton(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/1 integer arithmetic (operators/skeleton.py:skeleton_census)."""
     from aira_spark.operators.skeleton import skeleton_census
 
-    return skeleton_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return skeleton_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_glcm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3650,7 +3646,7 @@ def q_glcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     LCM-cleared weights) (operators/glcm.py:glcm_census)."""
     from aira_spark.operators.glcm import glcm_census
 
-    return glcm_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return glcm_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3669,7 +3665,7 @@ def q_euler(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/euler.py:euler_census)."""
     from aira_spark.operators.euler import euler_census
 
-    return euler_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return euler_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_dow_season(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3732,7 +3728,7 @@ def q_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/kappa.py:agreement_census)."""
     from aira_spark.operators.kappa import agreement_census
 
-    return agreement_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return agreement_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_bilateral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3741,7 +3737,7 @@ def q_bilateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     division (operators/bilateral.py:bilateral)."""
     from aira_spark.operators.bilateral import bilateral
 
-    return bilateral(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return bilateral(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_lacunarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3750,7 +3746,7 @@ def q_lacunarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/lacunarity.py:lacunarity_census)."""
     from aira_spark.operators.lacunarity import lacunarity_census
 
-    return lacunarity_census(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return lacunarity_census(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_hull_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3796,7 +3792,7 @@ def q_focal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     class) and a changed-cell flag (operators/focal.py:focal_majority)."""
     from aira_spark.operators.focal import focal_majority
 
-    return focal_majority(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return focal_majority(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_gyration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3849,7 +3845,7 @@ def q_lisa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/autocorr.py:lisa_clusters)."""
     from aira_spark.operators.autocorr import lisa_clusters
 
-    return lisa_clusters(_images(spark, sf_dir, modulo=8), CELL_RES, 4)
+    return lisa_clusters(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_mwu_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4190,9 +4186,7 @@ def q_mosaic_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer blend + denominator (operators/mosaic.py:mosaic_blend_values)."""
     from aira_spark.operators.mosaic import mosaic_blend_values
 
-    return mosaic_blend_values(
-        _images(spark, sf_dir, modulo=8), CELL_RES, patch_bits=4
-    )
+    return mosaic_blend_values(_images(spark, sf_dir, modulo=8), CELL_RES)
 
 
 def q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5361,13 +5355,15 @@ FROM vals GROUP BY 1, 2
 
 
 def _oracle_mosaic() -> str:
-    nf = 1 << (CELL_RES + 4)  # fine grid: 16x16 subcells per cell
+    from aira_spark.operators.mosaic import PATCH, PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_pixel_ctes()},
 fine AS (SELECT val, {fix} AS fx, {fiy} AS fy FROM vals)
-SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
-  CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
+SELECT ({_PACK} + (fx // {PATCH}) * 536870912 + (fy // {PATCH})) AS cell,
+  CAST(fy % {PATCH} AS BIGINT) AS pr, CAST(fx % {PATCH} AS BIGINT) AS pc,
   CAST(MAX(val) AS BIGINT) AS val
 FROM fine GROUP BY 1, 2, 3
 """
@@ -5376,7 +5372,9 @@ FROM fine GROUP BY 1, 2, 3
 def _oracle_focal_mean() -> str:
     # the shared fine grid, then the 9-offset scatter + agg;
     # HAVING bool_or(is_center) mirrors the Spark max(is_center) filter
-    nf = 1 << (CELL_RES + 4)
+    from aira_spark.operators.mosaic import PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     return _fine_cte_sql() + f""",
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty, val,
@@ -5496,7 +5494,9 @@ def _oracle_approx_distinct() -> str:
 def _oracle_focal_gradient() -> str:
     # the shared fine grid; scatter weights mirror operators/focal.py
     # GRAD_OFFSETS with the sign flip applied there
-    nf = 1 << (CELL_RES + 4)
+    from aira_spark.operators.mosaic import PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     return _fine_cte_sql() + f""",
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty,
@@ -5528,7 +5528,7 @@ def _oracle_contours() -> str:
 def _oracle_autocorr() -> str:
     from aira_spark.operators.autocorr import oracle_autocorr_sql
 
-    return oracle_autocorr_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_autocorr_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_od_flows() -> str:
@@ -5561,7 +5561,7 @@ def _oracle_pq_ann() -> str:
 def _oracle_terrain() -> str:
     from aira_spark.operators.terrain import oracle_terrain_sql
 
-    return oracle_terrain_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_terrain_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_funnel() -> str:
@@ -5609,7 +5609,7 @@ def _oracle_otsu() -> str:
 def _oracle_viewshed() -> str:
     from aira_spark.operators.terrain import oracle_viewshed_sql
 
-    return oracle_viewshed_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_viewshed_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_hausdorff() -> str:
@@ -5682,7 +5682,7 @@ LEFT JOIN hits h ON h.query_id = g.query_id
 def _oracle_strahler() -> str:
     from aira_spark.operators.terrain import oracle_strahler_sql
 
-    return oracle_strahler_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_strahler_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_stretch() -> str:
@@ -6093,19 +6093,19 @@ def _oracle_emerging_hotspots() -> str:
 def _oracle_dist_transform() -> str:
     from aira_spark.operators.disttrans import oracle_distance_transform_sql
 
-    return oracle_distance_transform_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_distance_transform_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_harris() -> str:
     from aira_spark.operators.harris import oracle_harris_sql
 
-    return oracle_harris_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_harris_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_patch_entropy() -> str:
     from aira_spark.operators.entropy import oracle_patch_entropy_sql
 
-    return oracle_patch_entropy_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_patch_entropy_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_kde() -> str:
@@ -6143,7 +6143,7 @@ def _oracle_pca() -> str:
 def _oracle_hog() -> str:
     from aira_spark.operators.hog import oracle_hog_sql
 
-    return oracle_hog_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_hog_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_textrank() -> str:
@@ -6164,7 +6164,7 @@ def _oracle_mad_outliers() -> str:
 def _oracle_lbp() -> str:
     from aira_spark.operators.lbp import oracle_lbp_sql
 
-    return oracle_lbp_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_lbp_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_dispersion() -> str:
@@ -6187,7 +6187,7 @@ def _oracle_adamic_adar() -> str:
 def _oracle_tophat() -> str:
     from aira_spark.operators.tophat import oracle_tophat_sql
 
-    return oracle_tophat_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_tophat_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_exact_substr() -> str:
@@ -6214,7 +6214,7 @@ def _oracle_spearman() -> str:
 def _oracle_hough() -> str:
     from aira_spark.operators.hough import oracle_hough_sql
 
-    return oracle_hough_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_hough_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_modularity() -> str:
@@ -6239,7 +6239,7 @@ def _oracle_voronoi() -> str:
         f"SELECT s_suppkey AS seed_id, {_KNN_QX} AS x, {_KNN_QY} AS y "
         "FROM supplier"
     )
-    return oracle_voronoi_sql(_fine_cte_sql(modulo=8), seeds_sql, CELL_RES, 4)
+    return oracle_voronoi_sql(_fine_cte_sql(modulo=8), seeds_sql, CELL_RES)
 
 
 def _oracle_runs_test() -> str:
@@ -6251,13 +6251,13 @@ def _oracle_runs_test() -> str:
 def _oracle_canny() -> str:
     from aira_spark.operators.canny import oracle_canny_sql
 
-    return oracle_canny_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_canny_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_lacunarity() -> str:
     from aira_spark.operators.lacunarity import oracle_lacunarity_sql
 
-    return oracle_lacunarity_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_lacunarity_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_hull_diameter() -> str:
@@ -6287,13 +6287,13 @@ def _oracle_perm_entropy() -> str:
 def _oracle_skeleton() -> str:
     from aira_spark.operators.skeleton import oracle_skeleton_sql
 
-    return oracle_skeleton_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_skeleton_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_glcm() -> str:
     from aira_spark.operators.glcm import oracle_glcm_sql
 
-    return oracle_glcm_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_glcm_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_silhouette() -> str:
@@ -6305,7 +6305,7 @@ def _oracle_silhouette() -> str:
 def _oracle_euler() -> str:
     from aira_spark.operators.euler import oracle_euler_sql
 
-    return oracle_euler_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_euler_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_dow_season() -> str:
@@ -6367,7 +6367,7 @@ def _oracle_ccf() -> str:
 def _oracle_focal_majority() -> str:
     from aira_spark.operators.focal import oracle_focal_majority_sql
 
-    return oracle_focal_majority_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_focal_majority_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_gyration() -> str:
@@ -6397,7 +6397,7 @@ def _oracle_chi2() -> str:
 def _oracle_lisa() -> str:
     from aira_spark.operators.autocorr import oracle_lisa_sql
 
-    return oracle_lisa_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_lisa_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_mwu_drift() -> str:
@@ -6607,13 +6607,15 @@ def _oracle_gap_fill() -> str:
 
 
 def _oracle_mosaic_blend() -> str:
-    nf = 1 << (CELL_RES + 4)
+    from aira_spark.operators.mosaic import PATCH, PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     fix, fiy = _fine_xy_sql(nf)
     return f"""
 WITH {_pixel_ctes(weighted=True)},
 fine AS (SELECT val, wt, {fix} AS fx, {fiy} AS fy FROM vals)
-SELECT ({_PACK} + (fx // 16) * 536870912 + (fy // 16)) AS cell,
-  CAST(fy % 16 AS BIGINT) AS pr, CAST(fx % 16 AS BIGINT) AS pc,
+SELECT ({_PACK} + (fx // {PATCH}) * 536870912 + (fy // {PATCH})) AS cell,
+  CAST(fy % {PATCH} AS BIGINT) AS pr, CAST(fx % {PATCH} AS BIGINT) AS pc,
   CAST(SUM(wt * val) // SUM(wt) AS BIGINT) AS val,
   CAST(SUM(wt) AS BIGINT) AS w_tot
 FROM fine GROUP BY 1, 2, 3
@@ -6704,7 +6706,7 @@ def _oracle_basins() -> str:
     # oracle_basins_sql needs WITH RECURSIVE in front
     fine = _fine_cte_sql(modulo=8).strip()
     assert fine.startswith("WITH")
-    return oracle_basins_sql(fine[len("WITH"):].strip(), CELL_RES, 4)
+    return oracle_basins_sql(fine[len("WITH"):].strip(), CELL_RES)
 
 
 def _oracle_trajectory_lengths() -> str:
@@ -6861,13 +6863,13 @@ def _oracle_skyline() -> str:
 def _oracle_flow_dir() -> str:
     from aira_spark.operators.terrain import oracle_flow_sql
 
-    return oracle_flow_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_flow_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_hotspots() -> str:
     from aira_spark.operators.autocorr import oracle_hotspots_sql
 
-    return oracle_hotspots_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_hotspots_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_box_filter() -> str:
@@ -6883,13 +6885,13 @@ px AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws)"""
 def _oracle_proximity() -> str:
     from aira_spark.operators.proximity import oracle_proximity_sql
 
-    return oracle_proximity_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_proximity_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_hillshade() -> str:
     from aira_spark.operators.terrain import oracle_hillshade_sql
 
-    return oracle_hillshade_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_hillshade_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_stream_stream_join() -> str:
@@ -6923,7 +6925,7 @@ def _oracle_flow_acc() -> str:
     # oracle_flow_acc_sql prepends WITH RECURSIVE itself
     fine = _fine_cte_sql(modulo=8).strip()
     assert fine.startswith("WITH")
-    return oracle_flow_acc_sql(fine[len("WITH"):].strip(), CELL_RES, 4)
+    return oracle_flow_acc_sql(fine[len("WITH"):].strip(), CELL_RES)
 
 
 def _oracle_transitions() -> str:
@@ -6938,7 +6940,9 @@ def _fine2_cte_sql() -> str:
     change_census oracle (the kappa oracle deliberately dropped the
     cross-epoch framing — it uses _fine_cte_sql(modulo=8) to compare two
     classifiers on ONE epoch; see kappa.py's docstring)."""
-    nf = 1 << (CELL_RES + 4)
+    from aira_spark.operators.mosaic import PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     fix, fiy = _fine_xy_sql(nf)
     return f"""{_pixel_ctes(epoch=True)},
 fine2 AS (SELECT {fix} AS fx, {fiy} AS fy, epoch,
@@ -6948,25 +6952,25 @@ fine2 AS (SELECT {fix} AS fx, {fiy} AS fy, epoch,
 def _oracle_change_census() -> str:
     from aira_spark.operators.change import oracle_change_sql
 
-    return oracle_change_sql(_fine2_cte_sql(), patch_bits=4)
+    return oracle_change_sql(_fine2_cte_sql())
 
 
 def _oracle_warp() -> str:
     from aira_spark.operators.warp import oracle_warp_sql
 
-    return oracle_warp_sql(_IMG_CTE, modulo=8, patch_bits=3)
+    return oracle_warp_sql(_IMG_CTE, modulo=8)
 
 
 def _oracle_kappa() -> str:
     from aira_spark.operators.kappa import oracle_kappa_sql
 
-    return oracle_kappa_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_kappa_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_bilateral() -> str:
     from aira_spark.operators.bilateral import oracle_bilateral_sql
 
-    return oracle_bilateral_sql(_fine_cte_sql(modulo=8), CELL_RES, 4)
+    return oracle_bilateral_sql(_fine_cte_sql(modulo=8), CELL_RES)
 
 
 def _oracle_fuzzy_join() -> str:
@@ -6992,7 +6996,9 @@ px AS (SELECT *, unnest(generate_series(0, w - 1)) AS c FROM rws)"""
 def _oracle_focal_median() -> str:
     # fine grid + 9-offset scatter as focal_mean; the fold is list_sort +
     # 1-based order-statistic indexing (exact integers, no .5 medians)
-    nf = 1 << (CELL_RES + 4)
+    from aira_spark.operators.mosaic import PATCH_BITS
+
+    nf = 1 << (CELL_RES + PATCH_BITS)
     return f"""{_fine_cte_sql(modulo=8)},
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty, val,

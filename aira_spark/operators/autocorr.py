@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
 from .focal import WINDOW_ARMS, scatter
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 ROOK = [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)]
 # the rook window as focal.scatter arms; is_center marks the (0, 0) arm
@@ -81,13 +81,11 @@ _FINAL_SELECT = (
 )
 
 
-def spatial_autocorr(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def spatial_autocorr(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """One row: (n, s_v, s_v2, w_pairs, s_wvv, s_wvp, s_wd2, moran_e6,
     geary_e6) — global Moran's I / Geary's C of the mosaic fine grid."""
-    nf = 1 << (res + patch_bits)
-    scattered = scatter(fine_grid(images, res, patch_bits), ROOK_ARMS, nf)
+    nf = 1 << (res + PATCH_BITS)
+    scattered = scatter(fine_grid(images, res), ROOK_ARMS, nf)
     cells = (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -126,11 +124,9 @@ def spatial_autocorr(
     )
 
 
-def oracle_autocorr_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_autocorr_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val)."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({dx}, {dy}, {str(dx == 0 and dy == 0).lower()})"
         for dx, dy in ROOK
@@ -204,9 +200,7 @@ def _gi_class_case(cast: str) -> str:
     )
 
 
-def gi_hotspots(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def gi_hotspots(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, k_i, s_i, num, gi_class): local Getis-Ord Gi* hot/cold-spot
     classification of every fine-grid cell — the LOCAL companion to the
     global Moran/Geary statistic above, and the standard "where are the
@@ -226,8 +220,8 @@ def gi_hotspots(
     single-row aggregate BROADCAST back over the cells (metadata-sized);
     classification is a pure projection. Cells never pair with cells.
     """
-    nf = 1 << (res + patch_bits)
-    scattered = scatter(fine_grid(images, res, patch_bits), WINDOW_ARMS, nf)
+    nf = 1 << (res + PATCH_BITS)
+    scattered = scatter(fine_grid(images, res), WINDOW_ARMS, nf)
     cells = (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -261,12 +255,10 @@ def gi_hotspots(
     )
 
 
-def oracle_hotspots_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_hotspots_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val): the
     identical scatter/totals algebra with HUGEINT as the 128-bit widener."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({dx}, {dy}, {str(dx == 0 and dy == 0).lower()})"
         for dx in (-1, 0, 1) for dy in (-1, 0, 1)
@@ -311,9 +303,7 @@ _LISA_CASE = (
 )
 
 
-def lisa_clusters(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def lisa_clusters(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, k_i, a_num, b_num, lisa_d, quad): Anselin 1995 LOCAL
     Moran's I cluster map of every fine-grid cell — the quadrant
     companion to gi_hotspots' Gi* (Gi* says hot-or-cold; LISA separates
@@ -332,8 +322,8 @@ def lisa_clusters(
     Scale shape: identical to gi_hotspots — ONE 9-arm halo scatter of the
     grid-bounded mosaic rows + one hash agg, single-row totals broadcast,
     classification pure projection. Cells never pair with cells."""
-    nf = 1 << (res + patch_bits)
-    scattered = scatter(fine_grid(images, res, patch_bits), WINDOW_ARMS, nf)
+    nf = 1 << (res + PATCH_BITS)
+    scattered = scatter(fine_grid(images, res), WINDOW_ARMS, nf)
     cells = (
         scattered.groupBy("tx", "ty")
         .agg(
@@ -370,13 +360,11 @@ def lisa_clusters(
     )
 
 
-def oracle_lisa_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_lisa_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical scatter (self excluded from the neighbor fold), totals and
     HUGEINT once-divided product."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({dx}, {dy}, {str(dx == 0 and dy == 0).lower()})"
         for dx in (-1, 0, 1) for dy in (-1, 0, 1)

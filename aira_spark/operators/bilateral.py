@@ -55,12 +55,10 @@ def range_table() -> list[int]:
     ]
 
 
-def bilateral(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def bilateral(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, val, smoothed) for every complete-window fine cell."""
     tab = "array({})".format(", ".join(str(v) for v in range_table()))
-    fine = fine_grid(images, res, patch_bits).select(
+    fine = fine_grid(images, res).select(
         "fx", "fy",
         # loud in-row guard (zero extra jobs): the 256-entry Gaussian range
         # table can only index |v_i - v11| for u8 values — a band value
@@ -108,9 +106,7 @@ def bilateral(
     )
 
 
-def oracle_bilateral_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_bilateral_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT window formulation (8 self-joins), the identical literal
     range table as a VALUES lookup per term."""

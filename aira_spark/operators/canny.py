@@ -63,14 +63,12 @@ NBR8 = [
 ]
 
 
-def canny_edges(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def canny_edges(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, mag2, direction, edge_class) for every NMS survivor with
     mag2 >= LO2; edge_class in 'strong' (>= HI2), 'linked' (weak,
     reached from a strong cell within K_ROUNDS 8-steps through weak),
     'dropped' (weak, unreached)."""
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     # stage 1+2: gradient + direction via one 5-arm scatter
     arms5 = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, 'tag', '{tag}')"
@@ -168,9 +166,7 @@ def canny_edges(
     )
 
 
-def oracle_canny_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_canny_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) — an
     INDEPENDENT formulation: neighbor JOINS instead of scatter slots,
     EXISTS-based linking rounds, identical literals throughout."""

@@ -20,26 +20,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH, fine_grid
 
 
-def _fine(images: DataFrame, res: int, patch_bits: int, epoch: int) -> DataFrame:
-    return fine_grid(images, res, patch_bits).select(
+def _fine(images: DataFrame, res: int, epoch: int) -> DataFrame:
+    return fine_grid(images, res).select(
         "fx", "fy", "val", F.lit(epoch).alias("epoch")
     )
 
 
 def change_census(
-    images_a: DataFrame,
-    images_b: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
+    images_a: DataFrame, images_b: DataFrame, res: int = DEFAULT_RES,
 ) -> DataFrame:
     """(cx, cy, n_appeared, n_gone, n_changed, n_same, sum_abs_delta) per
     coarse cell: epoch A -> epoch B transition census of the two mosaics."""
-    u = _fine(images_a, res, patch_bits, 0).unionByName(
-        _fine(images_b, res, patch_bits, 1)
-    )
+    u = _fine(images_a, res, 0).unionByName(_fine(images_b, res, 1))
     folded = (
         u.groupBy("fx", "fy")
         .agg(
@@ -49,8 +44,8 @@ def change_census(
     )
     return (
         folded.select(
-            (F.col("fx") / (1 << patch_bits)).cast("long").alias("cx"),
-            (F.col("fy") / (1 << patch_bits)).cast("long").alias("cy"),
+            (F.col("fx") / PATCH).cast("long").alias("cx"),
+            (F.col("fy") / PATCH).cast("long").alias("cy"),
             F.when(F.col("val_a").isNull(), 1).otherwise(0).alias("ap"),
             F.when(F.col("val_b").isNull(), 1).otherwise(0).alias("go"),
             F.when(
@@ -75,10 +70,9 @@ def change_census(
     )
 
 
-def oracle_change_sql(fine2_cte: str, patch_bits: int = 4) -> str:
+def oracle_change_sql(fine2_cte: str) -> str:
     """DuckDB mirror over a CTE chain ending in fine2(fx, fy, epoch, val) —
     the per-epoch max-composited fine grids."""
-    pb = 1 << patch_bits
     return f"""
 WITH {fine2_cte},
 folded AS (
@@ -87,7 +81,7 @@ folded AS (
     MAX(CASE WHEN epoch = 1 THEN val END) AS val_b
   FROM fine2 GROUP BY 1, 2
 )
-SELECT CAST(fx // {pb} AS BIGINT) AS cx, CAST(fy // {pb} AS BIGINT) AS cy,
+SELECT CAST(fx // {PATCH} AS BIGINT) AS cx, CAST(fy // {PATCH} AS BIGINT) AS cy,
   CAST(SUM(CASE WHEN val_a IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_appeared,
   CAST(SUM(CASE WHEN val_b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_gone,
   CAST(SUM(CASE WHEN val_a IS NOT NULL AND val_b IS NOT NULL

@@ -43,13 +43,12 @@ SEGS_CASE_SQL = "CASE WHEN {c} IN (0, 15) THEN 0 WHEN {c} IN (5, 10) THEN 2 ELSE
 def contour_cases(
     images: DataFrame,
     res: int = DEFAULT_RES,
-    patch_bits: int = 4,
     thresholds: tuple[int, ...] = DEFAULT_THRESHOLDS,
 ) -> DataFrame:
     """(threshold, case_id, n_cells, n_segments): marching-squares census
     of the mosaic fine grid at each iso level; n_segments counts contour
     segments crossing blocks of that case."""
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     arms = ", ".join(
         f"named_struct('ax', fx - {dx}, 'ay', fy - {dy}, "
         f"'bit', CAST({bit} AS BIGINT))"

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .mosaic import PATCH_BITS, fine_grid
+
 # (dx, dy, chamfer weight): 10 rook, 14 diagonal, 0 self
 W_OFFS = [
     (0, 0, 0),
@@ -38,17 +40,14 @@ W_OFFS = [
 
 
 def distance_transform(
-    images: DataFrame, res: int, patch_bits: int = 4,
-    seed_min_val: int = 192, rounds: int = 6,
+    images: DataFrame, res: int, seed_min_val: int = 192, rounds: int = 6,
 ) -> DataFrame:
     """(fx, fy, val, dist10): chamfer distance (x10 fixed point) from
     every occupied fine-grid cell to its nearest seed cell (val >=
     seed_min_val), -1 where no seed is reachable within `rounds`."""
-    from .mosaic import fine_grid
-
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     # static: re-joined every round
-    fine = fine_grid(images, res, patch_bits).localCheckpoint(eager=True)
+    fine = fine_grid(images, res).localCheckpoint(eager=True)
     occupied = fine.select("fx", "fy")
     dist = fine.selectExpr(
         "fx", "fy",
@@ -84,12 +83,11 @@ def distance_transform(
 
 
 def oracle_distance_transform_sql(
-    fine_cte: str, res: int, patch_bits: int = 4,
-    seed_min_val: int = 192, rounds: int = 6,
+    fine_cte: str, res: int, seed_min_val: int = 192, rounds: int = 6,
 ) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     one MATERIALIZED relaxation CTE per round (the sssp unroll)."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(f"({dx}, {dy}, {w})" for dx, dy, w in W_OFFS)
     parts = [
         f"d0 AS MATERIALIZED (SELECT fx, fy, CAST(0 AS BIGINT) AS d "

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH, PATCH_BITS, fine_grid
 
 N_BINS = 16          # val DIV 16: 4-bit luminance histogram
 FLAT_E6 = 500_000    # < 0.5 bits = "flat tile" curation flag
@@ -42,18 +42,15 @@ def _log2_e6_table(n_max: int) -> list[int]:
     return [math.floor(math.log2(k) * 1_000_000) for k in range(1, n_max + 1)]
 
 
-def patch_entropy(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def patch_entropy(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, n_fine, n_bins, h_e6, flat): exact fixed-point Shannon
     entropy (bits x 1e6) of the 16-bin value histogram of every coarse
     cell's occupied fine subcells."""
-    pb = 1 << patch_bits
-    tab = _log2_e6_table(pb * pb)
+    tab = _log2_e6_table(PATCH * PATCH)
     arr = "array(" + ", ".join(f"{v}L" for v in tab) + ")"
-    fine = fine_grid(images, res, patch_bits).selectExpr(
-        f"shiftright(fx, {patch_bits}) AS gx",
-        f"shiftright(fy, {patch_bits}) AS gy",
+    fine = fine_grid(images, res).selectExpr(
+        f"shiftright(fx, {PATCH_BITS}) AS gx",
+        f"shiftright(fy, {PATCH_BITS}) AS gy",
         f"val DIV {256 // N_BINS} AS bin",
     )
     per_bin = fine.groupBy("gx", "gy", "bin").agg(
@@ -85,17 +82,14 @@ def patch_entropy(
     )
 
 
-def oracle_patch_entropy_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_patch_entropy_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical two-level histogram fold and literal log2 table."""
-    pb = 1 << patch_bits
-    tab = _log2_e6_table(pb * pb)
+    tab = _log2_e6_table(PATCH * PATCH)
     arr = "[" + ", ".join(str(v) for v in tab) + "]"
     return f"""{fine_cte},
 bins AS (
-  SELECT fx // {pb} AS gx, fy // {pb} AS gy, val // {256 // N_BINS} AS bin
+  SELECT fx // {PATCH} AS gx, fy // {PATCH} AS gy, val // {256 // N_BINS} AS bin
   FROM fine
 ),
 per_bin AS (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH, fine_grid
 
 MASK_MIN = 128
 
@@ -36,15 +36,12 @@ MASK_MIN = 128
 _QUAD = [("a", 0, 0), ("b", 1, 0), ("c", 0, 1), ("d", 1, 1)]
 
 
-def euler_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def euler_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, v, e, f, chi) per coarse cell over the val >= MASK_MIN
     mask, plus the global fold row (gx = gy = -1); chi = v - e + f =
     components - holes for the whole-mask row."""
-    pb = 1 << patch_bits
     mask = (
-        fine_grid(images, res, patch_bits)
+        fine_grid(images, res)
         .where(F.col("val") >= MASK_MIN)
         .select("fx", "fy")
     )
@@ -65,7 +62,7 @@ def euler_census(
     )
     census = (
         anchors.selectExpr(
-            f"fx DIV {pb} AS gx", f"fy DIV {pb} AS gy", "v", "e", "f"
+            f"fx DIV {PATCH} AS gx", f"fy DIV {PATCH} AS gy", "v", "e", "f"
         )
         .groupBy("gx", "gy")
         .agg(
@@ -92,13 +89,10 @@ def euler_census(
     )
 
 
-def oracle_euler_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_euler_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT formulation: LEFT self-joins for the quad corners
     instead of the scatter."""
-    pb = 1 << patch_bits
     return f"""{fine_cte},
 mk AS (SELECT fx, fy FROM fine WHERE val >= {MASK_MIN}),
 an AS (
@@ -113,7 +107,7 @@ an AS (
   LEFT JOIN mk d ON d.fx = m.fx + 1 AND d.fy = m.fy + 1
 ),
 cen AS (
-  SELECT fx // {pb} AS gx, fy // {pb} AS gy,
+  SELECT fx // {PATCH} AS gx, fy // {PATCH} AS gy,
     CAST(SUM(v) AS BIGINT) AS v, CAST(SUM(e) AS BIGINT) AS e,
     CAST(SUM(f) AS BIGINT) AS f
   FROM an GROUP BY 1, 2

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES, cell_ix, cell_iy
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 # the 3x3 window as scatter arms; is_center marks the (0, 0) arm
@@ -63,15 +63,13 @@ def scatter(
     )
 
 
-def focal_mean(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def focal_mean(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, n_nbrs, sum_val, focal_mean): 3x3 focal mean of the
-    max-composited mosaic at the fine grid (res + patch_bits), mean taken
+    max-composited mosaic at the fine grid (res + PATCH_BITS), mean taken
     over the filled neighbors present in each window."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     scattered = scatter(
-        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+        fine_grid(images, res), WINDOW_ARMS, nf
     ).selectExpr("tx", "ty", "val", "o.is_center")
     return (
         scattered.groupBy("tx", "ty")
@@ -169,9 +167,7 @@ GRAD_ARMS = ", ".join(
 )
 
 
-def focal_gradient(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def focal_gradient(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, gx, gy, grad2): central-difference gradient of the mosaic
     fine grid — gx = val(E) - val(W), gy = val(N) - val(S), grad2 = gx^2 +
     gy^2 (the integer square of the slope magnitude; map-algebra slope /
@@ -183,9 +179,9 @@ def focal_gradient(
     subcell scatters (weighted) contributions to the 5 stencil targets, one
     hash agg folds them map-side; the required-neighbor check is a counter
     folded in the same agg — no join against the filled set."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     scattered = scatter(
-        fine_grid(images, res, patch_bits), GRAD_ARMS, nf
+        fine_grid(images, res), GRAD_ARMS, nf
     ).selectExpr(
         "tx", "ty",
         "CAST(o.wx AS BIGINT) * val AS cx", "CAST(o.wy AS BIGINT) * val AS cy",
@@ -210,9 +206,7 @@ def focal_gradient(
     )
 
 
-def focal_median(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def focal_median(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, n_nbrs, med_lo, med_hi, med_x2): EXACT 3x3 focal median of
     the mosaic fine grid — the edge-preserving smoother (salt-and-pepper
     denoise) next to focal_mean's linear one.
@@ -224,9 +218,9 @@ def focal_median(
     upper order statistics at ranks (n+1) DIV 2 and n DIV 2 + 1 (equal for
     odd n); med_x2 = med_lo + med_hi is twice the textbook median, kept in
     exact integers so every engine agrees bit-for-bit (no .5 floats)."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     scattered = scatter(
-        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+        fine_grid(images, res), WINDOW_ARMS, nf
     ).selectExpr("tx", "ty", "val", "o.is_center")
     return (
         scattered.groupBy("tx", "ty")
@@ -247,9 +241,7 @@ def focal_median(
     )
 
 
-def focal_majority(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def focal_majority(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, n_nbrs, center_cls, mode_cls, mode_cnt, changed): EXACT
     3x3 focal MAJORITY of the 2-bit class grid (cls = val DIV 64) — the
     categorical-raster smoother (land-cover / segmentation cleanup) next
@@ -266,8 +258,8 @@ def focal_majority(
     COUNTS instead of value lists — partials combine map-side and the
     exchange payload is <= 4 small rows per target cell regardless of
     data volume; two chained hash aggs, no window, no Python."""
-    nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits).selectExpr(
+    nf = 1 << (res + PATCH_BITS)
+    fine = fine_grid(images, res).selectExpr(
         "fx", "fy", "val DIV 64 AS cls"
     )
     scattered = scatter(fine, WINDOW_ARMS, nf).selectExpr(
@@ -300,12 +292,10 @@ def focal_majority(
     )
 
 
-def oracle_focal_majority_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_focal_majority_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical scatter, per-class counts and encoded-key argmax."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({dx}, {dy}, {str(dx == 0 and dy == 0).lower()})"
         for dx, dy in OFFSETS

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH, fine_grid
 
 N_LEVELS = 8  # val DIV 32
 HOM_LCM = math.lcm(*[1 + d * d for d in range(N_LEVELS)])  # 408850
@@ -46,14 +46,11 @@ _HOM_W = "CASE " + " ".join(
 ) + " END"
 
 
-def glcm_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def glcm_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, n_pairs, contrast_num, energy_num, hom_num) per coarse
     cell over horizontally adjacent fine-cell 8-level pairs; only cells
     with >= 1 adjacent pair emit."""
-    pb = 1 << patch_bits
-    fine = fine_grid(images, res, patch_bits).select(
+    fine = fine_grid(images, res).select(
         "fx", "fy", (F.col("val") / 32).cast("long").alias("g"),
     )
     arms = (
@@ -71,7 +68,7 @@ def glcm_census(
     )
     counts = (
         pairs.selectExpr(
-            f"fx DIV {pb} AS gx", f"fy DIV {pb} AS gy", "ga", "gb"
+            f"fx DIV {PATCH} AS gx", f"fy DIV {PATCH} AS gy", "ga", "gb"
         )
         .groupBy("gx", "gy", "ga", "gb")
         .agg(F.count("*").cast("long").alias("c"))
@@ -92,17 +89,14 @@ def glcm_census(
     )
 
 
-def oracle_glcm_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_glcm_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT adjacency formulation (self-JOIN on fx+1 instead of the
     scatter), identical quantization, weights and numerators."""
-    pb = 1 << patch_bits
     return f"""{fine_cte},
 lv AS (SELECT fx, fy, CAST(val // 32 AS BIGINT) AS g FROM fine),
 pr AS (
-  SELECT a.fx // {pb} AS gx, a.fy // {pb} AS gy,
+  SELECT a.fx // {PATCH} AS gx, a.fy // {PATCH} AS gy,
     a.g AS ga, b.g AS gb
   FROM lv a JOIN lv b ON b.fx = a.fx + 1 AND b.fy = a.fy
 ),

@@ -34,20 +34,18 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
 from .focal import GRAD_ARMS, GRAD_OFFSETS, OFFSETS, WINDOW_ARMS, scatter
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 
-def harris_corners(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def harris_corners(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, n_win, sxx, syy, sxy, r20, is_peak, corner): exact-integer
     Harris response (x20 fixed point, k = 1/20) with strict 3x3 non-max
     suppression over the mosaic fine grid."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
 
     # stage 1: central-difference gradient (focal_gradient's stencil)
     grad = (
-        scatter(fine_grid(images, res, patch_bits), GRAD_ARMS, nf)
+        scatter(fine_grid(images, res), GRAD_ARMS, nf)
         .selectExpr(
             "tx", "ty",
             "CAST(o.wx AS BIGINT) * val AS cx",
@@ -123,12 +121,10 @@ def harris_corners(
     )
 
 
-def oracle_harris_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_harris_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical gradient / tensor / NMS scatter-aggregate chain."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     grad_offs = ", ".join(
         f"({dx}, {dy}, {-wx}, {-wy})"
         for (dx, dy), (wx, wy) in GRAD_OFFSETS.items()

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
 from .focal import focal_gradient
+from .mosaic import PATCH, PATCH_BITS
 
 # one formula, two engines: octant of (gx, gy) counterclockwise from +x,
 # boundaries resolved by the CASE order; (0,0) -> -1 (flat)
@@ -39,17 +40,14 @@ OCTANT_SQL = """CASE
 END"""
 
 
-def hog_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def hog_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, obin, cnt, energy): per coarse cell, the count and summed
     squared gradient magnitude of its fine-grid gradient cells in each of
     8 orientation octants (+ the -1 flat bin)."""
-    pb = 1 << patch_bits
-    grad = focal_gradient(images, res, patch_bits)
+    grad = focal_gradient(images, res)
     binned = grad.selectExpr(
-        f"fx DIV {pb} AS cgx",
-        f"fy DIV {pb} AS cgy",
+        f"fx DIV {PATCH} AS cgx",
+        f"fy DIV {PATCH} AS cgy",
         f"CAST({OCTANT_SQL} AS BIGINT) AS obin",
         "grad2",
     )
@@ -66,13 +64,10 @@ def hog_census(
     )
 
 
-def oracle_hog_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_hog_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     focal_gradient's stencil + the VERBATIM octant CASE."""
-    nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
+    nf = 1 << (res + PATCH_BITS)
     return f"""{fine_cte},
 gsc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty,
@@ -90,7 +85,7 @@ grad AS (
   FROM gsc GROUP BY 1, 2 HAVING bool_or(is_c) AND COUNT(*) = 5
 ),
 binned AS (
-  SELECT fx // {pb} AS cgx, fy // {pb} AS cgy,
+  SELECT fx // {PATCH} AS cgx, fy // {PATCH} AS cgy,
          CAST({OCTANT_SQL} AS BIGINT) AS obin, grad2
   FROM grad
 )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 E6 = 1_000_000
 ENC = 1 << 32
@@ -57,7 +57,6 @@ def trig_table(n_theta: int) -> list[tuple[int, int, int]]:
 def hough_lines(
     images: DataFrame,
     res: int = DEFAULT_RES,
-    patch_bits: int = 4,
     n_theta: int = 12,
     rho_q: int = 4,
     mask_min: int = 192,
@@ -67,20 +66,20 @@ def hough_lines(
     min_votes, is_peak = 1 on each theta's arg-max bin (smallest-bin tie
     break); peak bins ship even below min_votes so every theta with any
     vote emits exactly one peak row."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     # encode bound, CHECKED not assumed (the voronoi rule): the encoded
     # argmax votes*2^32 + (2^32-1-bin) overflows int64 at votes >= 2^31,
     # and votes per (theta, rho_bin) is structurally <= n_on_pixels <= nf^2
     # (each theta's bins partition the mask), so nf^2 < 2^31 is sufficient
-    if 2 * (res + patch_bits) >= 31:
+    if 2 * (res + PATCH_BITS) >= 31:
         raise ValueError(
-            f"hough_lines: res+patch_bits={res + patch_bits} makes the "
-            f"fine grid nf^2 = 2^{2 * (res + patch_bits)} >= 2^31 possible "
+            f"hough_lines: res+PATCH_BITS={res + PATCH_BITS} makes the "
+            f"fine grid nf^2 = 2^{2 * (res + PATCH_BITS)} >= 2^31 possible "
             "votes per bin — the votes*2^32 argmax encode would overflow "
             "int64; widen the encode or coarsen the grid"
         )
     off = 2 * nf * E6  # |rho_fp| <= 2*(nf-1)*1e6 < off: shift is total
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     arms = ", ".join(
         f"named_struct('t', CAST({t} AS BIGINT), 'rb', "
         f"(fx * CAST({c} AS BIGINT) + fy * CAST({s} AS BIGINT) + {off})"
@@ -128,7 +127,6 @@ def hough_lines(
 def oracle_hough_sql(
     fine_cte: str,
     res: int = DEFAULT_RES,
-    patch_bits: int = 4,
     n_theta: int = 12,
     rho_q: int = 4,
     mask_min: int = 192,
@@ -137,7 +135,7 @@ def oracle_hough_sql(
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical literal trig table via VALUES, same offset-then-divide
     binning and encoded per-theta argmax."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     off = 2 * nf * E6
     tab = ", ".join(f"({t}, {c}, {s})" for t, c, s in trig_table(n_theta))
     return f"""{fine_cte},

@@ -37,15 +37,12 @@ N_CLS_DIV = 64  # 4 classes
 
 
 def agreement_census(
-    images: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    max_cells: int = 2_900_000_000,
+    images: DataFrame, res: int = DEFAULT_RES, max_cells: int = 2_900_000_000,
 ) -> DataFrame:
     """(class_a, class_b, cnt, kappa_num, kappa_den): one confusion row
     per observed (pointwise, focal-mean) class pair over complete-window
     cells, plus the fold row (-1, -1, N, N*diag - pe, N^2 - pe)."""
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     arms = ", ".join(
         f"named_struct('tx', fx + {dx}, 'ty', fy + {dy}, "
         f"'is_c', {str(dx == 0 and dy == 0).lower()})"
@@ -107,9 +104,7 @@ def agreement_census(
     ).unionByName(fold)
 
 
-def oracle_kappa_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_kappa_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT window formulation: 8 LEFT self-joins for the 3x3 sum
     instead of the scatter; identical quantizers and kappa fold."""

@@ -20,7 +20,7 @@ integers (Spark DIV = DuckDB // on nonneg, the textrank rule). Overflow
 is GUARDED, not assumed: 1e6 * N * sum_m2 <= 1e6 * nf^2 * occupied for
 every scale r, so the operator raises loudly when the occupied-cell
 count exceeds min(max_occupied, 2^63 / (1e6 * nf^2)) — the cap is
-DERIVED from nf, so a res/patch_bits bump tightens it automatically;
+DERIVED from nf, so a res bump tightens it automatically;
 the escalation is DECIMAL widening.
 
 Scale shape (100 TB): ONE constant fan-out explode (|SCALES| arms per
@@ -34,26 +34,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 SCALES = (1, 2, 4, 8)
 E6 = 1_000_000
 
 
 def lacunarity_census(
-    images: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    max_occupied: int = 1_000_000,
+    images: DataFrame, res: int = DEFAULT_RES, max_occupied: int = 1_000_000,
 ) -> DataFrame:
     """(box_size, n_boxes, occ_boxes, sum_m, sum_m2, lac_e6) — one row
     per dyadic scale over the occupancy mask of the fine grid."""
-    nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits).select("fx", "fy")
+    nf = 1 << (res + PATCH_BITS)
+    fine = fine_grid(images, res).select("fx", "fy")
     # derive the guard from nf instead of trusting the fixed default: the
     # worst case at scale r is 1e6 * N * sum_m2 <= 1e6 * (nf/r)^2 * occ * r^2
     # = 1e6 * nf^2 * occ, so occ must stay under 2^63 / (1e6 * nf^2) —
-    # a res/patch_bits bump tightens the cap automatically
+    # a res bump tightens the cap automatically
     safe_occupied = (1 << 63) // (E6 * nf * nf)
     cap = min(max_occupied, safe_occupied)
     occ = fine.agg(F.count("*").alias("n")).first()["n"]
@@ -94,12 +91,10 @@ def lacunarity_census(
     )
 
 
-def oracle_lacunarity_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_lacunarity_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val):
     identical dyadic tiling, sums and single floor division."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     tab = ", ".join(f"({r})" for r in SCALES)
     return f"""{fine_cte},
 sc AS (SELECT * FROM (VALUES {tab}) AS sc(r)),

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
 from .focal import scatter
-from .mosaic import fine_grid
+from .mosaic import PATCH, PATCH_BITS, fine_grid
 
 # bit k -> offset from the CENTER to the neighbor (compass CCW from east)
 LBP_OFFS = [
@@ -33,20 +33,17 @@ LBP_OFFS = [
 ]
 
 
-def lbp_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def lbp_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, code, cnt): per coarse cell, the histogram of 8-bit LBP
     codes of its fine subcells with complete 8-neighborhoods."""
-    nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
+    nf = 1 << (res + PATCH_BITS)
     # source s reaches target t = s - off_k carrying arm k; arm 8 = center
     arms = ", ".join(
         f"named_struct('dx', {-dx}, 'dy', {-dy}, 'k', {k})"
         for k, (dx, dy) in enumerate(LBP_OFFS)
     ) + ", named_struct('dx', 0, 'dy', 0, 'k', 8)"
     scattered = scatter(
-        fine_grid(images, res, patch_bits), arms, nf
+        fine_grid(images, res), arms, nf
     ).selectExpr("tx", "ty", "val", "o.k")
     slots = [
         F.max(F.when(F.col("k") == kk, F.col("val"))).alias(f"v{kk}")
@@ -62,7 +59,7 @@ def lbp_census(
     )
     return (
         ring.selectExpr(
-            f"tx DIV {pb} AS cgx", f"ty DIV {pb} AS cgy",
+            f"tx DIV {PATCH} AS cgx", f"ty DIV {PATCH} AS cgy",
             f"CAST({code} AS BIGINT) AS code",
         )
         .groupBy("cgx", "cgy", "code")
@@ -74,13 +71,10 @@ def lbp_census(
     )
 
 
-def oracle_lbp_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_lbp_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical scatter, slot fold and bit assembly."""
-    nf = 1 << (res + patch_bits)
-    pb = 1 << patch_bits
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({-dx}, {-dy}, {k})" for k, (dx, dy) in enumerate(LBP_OFFS)
     ) + ", (0, 0, 8)"
@@ -103,7 +97,7 @@ ring AS (
   FROM sc GROUP BY 1, 2
 ),
 codes AS (
-  SELECT tx // {pb} AS cgx, ty // {pb} AS cgy,
+  SELECT tx // {PATCH} AS cgx, ty // {PATCH} AS cgy,
     CAST({code} AS BIGINT) AS code
   FROM ring WHERE n_contrib = 9
 )

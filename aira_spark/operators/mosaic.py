@@ -2,14 +2,14 @@
 
 The classic raster mosaic (multiple scenes covering the same area merged
 into a seamless layer) as DataFrames: each cell of the grid gets a
-PATCH x PATCH raster (PATCH = 2^patch_bits subcells) where every patch
-pixel is the MAX of all source-pixel values whose center falls inside that
-subcell — max-compositing is commutative/associative, so the result is
+PATCH x PATCH raster (PATCH = 2^PATCH_BITS subcells, fixed) where every
+patch pixel is the MAX of all source-pixel values whose center falls inside
+that subcell — max-compositing is commutative/associative, so the result is
 independent of image order and partitioning (deterministic at any scale,
 and expressible as a plain hash aggregation for the oracle).
 
 Plan shape: the decode UDF (`udfs.map_decoded`) emits per-image partial
-maxima keyed by the fine-grid position (fx, fy) at res + patch_bits
+maxima keyed by the fine-grid position (fx, fy) at res + PATCH_BITS
 (already combined within each image), and Catalyst's partial+final hash
 agg merges them across images — pixels never shuffle, only (fx, fy, val)
 rows. That aggregate IS `fine_grid`; the (cell, pr, pc) split of
@@ -35,14 +35,17 @@ from pyspark.sql import functions as F
 from ..functions.cells import DEFAULT_RES, cell_pack, np_cell_ix, np_cell_iy
 from ..functions.udfs import map_decoded, pixel_cell_groups
 
+# the one fine-grid patch size: every raster neighbourhood operator and
+# its oracle reads the mosaic at res + PATCH_BITS
+PATCH_BITS = 4
+PATCH = 1 << PATCH_BITS
 
-def fine_grid(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+
+def fine_grid(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, val): max-composited band-0 value of every filled cell of
-    the global fine grid at res + patch_bits — fx = ix * PATCH + pc and
+    the global fine grid at res + PATCH_BITS — fx = ix * PATCH + pc and
     fy = iy * PATCH + pr of the coarse cell (ix, iy). fx/fy are BIGINT."""
-    fine_res = res + patch_bits
+    fine_res = res + PATCH_BITS
 
     def per_image(rec, m, px):
         groups = pixel_cell_groups(m, px, fine_res)
@@ -61,42 +64,34 @@ def fine_grid(
     return partials.groupBy("fx", "fy").agg(F.max("val").alias("val"))
 
 
-def _cell_split(res: int, patch_bits: int) -> list[Column]:
+def _cell_split(res: int) -> list[Column]:
     """(cell, pr, pc) of a fine-grid (fx, fy): the coarse cell and the
     INT subcell inside it, row 0 at the cell's SOUTH edge."""
-    mask = (1 << patch_bits) - 1
+    mask = PATCH - 1
     return [
         cell_pack(
-            res, F.shiftright("fx", patch_bits), F.shiftright("fy", patch_bits)
+            res, F.shiftright("fx", PATCH_BITS), F.shiftright("fy", PATCH_BITS)
         ).alias("cell"),
         F.expr(f"CAST(fy & {mask} AS INT)").alias("pr"),
         F.expr(f"CAST(fx & {mask} AS INT)").alias("pc"),
     ]
 
 
-def mosaic_cell_values(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def mosaic_cell_values(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(cell, pr, pc, val): `fine_grid` split into the coarse cell and the
     (pr, pc) subcell of its PATCH x PATCH grid."""
-    return fine_grid(images, res, patch_bits).select(
-        *_cell_split(res, patch_bits), "val"
-    )
+    return fine_grid(images, res).select(*_cell_split(res), "val")
 
 
 MOSAIC_SCHEMA = "cell long, patch binary, n_filled long"
 
 
-def mosaic_patches(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def mosaic_patches(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(cell, patch, n_filled): the composited PATCH x PATCH raster per cell,
     packed row-major uint8 (values clipped to [0, 255]; unfilled subcells =
     0). Assembly is applyInPandas over the per-cell subcell rows."""
-    patch = 1 << patch_bits
-
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.zeros((patch, patch), dtype=np.uint8)
+        arr = np.zeros((PATCH, PATCH), dtype=np.uint8)
         pr = pdf["pr"].to_numpy()
         pc = pdf["pc"].to_numpy()
         arr[pr, pc] = np.clip(pdf["val"].to_numpy(), 0, 255).astype(np.uint8)
@@ -109,14 +104,14 @@ def mosaic_patches(
         )
 
     return (
-        mosaic_cell_values(images, res, patch_bits)
+        mosaic_cell_values(images, res)
         .groupBy("cell")
         .applyInPandas(assemble, schema=MOSAIC_SCHEMA)
     )
 
 
 def mosaic_blend_values(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
+    images: DataFrame, res: int = DEFAULT_RES
 ) -> DataFrame:
     """(cell, pr, pc, val, w_tot): FEATHERED mosaic — the seam-hiding
     compositor every production mosaic service runs where max/last-wins
@@ -140,7 +135,7 @@ def mosaic_blend_values(
     integer rows.
     Budget: wv <= 255 * (1 + max_dim/2) * px_per_cell — mid-int64 at any
     realistic tile size."""
-    fine_res = res + patch_bits
+    fine_res = res + PATCH_BITS
 
     def per_image(rec, m, px):
         groups = pixel_cell_groups(m, px, fine_res)
@@ -167,7 +162,7 @@ def mosaic_blend_values(
     return (
         partials.groupBy("fx", "fy")
         .agg(F.sum("wv").alias("wv"), F.sum("w").alias("w_tot"))
-        .select(*_cell_split(res, patch_bits), "wv", "w_tot")
+        .select(*_cell_split(res), "wv", "w_tot")
         .selectExpr(
             "CAST(cell AS BIGINT) AS cell",
             "CAST(pr AS BIGINT) AS pr",

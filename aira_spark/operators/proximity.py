@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
+from .mosaic import PATCH_BITS, fine_grid
 
 
 def chamfer_offsets(cap: int) -> list[tuple[int, int, int]]:
@@ -56,7 +57,6 @@ def chamfer_offsets(cap: int) -> list[tuple[int, int, int]]:
 def proximity_raster(
     images: DataFrame,
     res: int = DEFAULT_RES,
-    patch_bits: int = 4,
     thresh: int = 200,
     cap: int = 12,
 ) -> DataFrame:
@@ -64,10 +64,9 @@ def proximity_raster(
     feature cell (mosaic value >= thresh); dist34 = 0 on feature cells,
     positions farther than `cap` are absent."""
     from .focal import scatter
-    from .mosaic import fine_grid
 
-    nf = 1 << (res + patch_bits)
-    feats = fine_grid(images, res, patch_bits).where(F.col("val") >= thresh)
+    nf = 1 << (res + PATCH_BITS)
+    feats = fine_grid(images, res).where(F.col("val") >= thresh)
     arms = ", ".join(
         f"named_struct('dx', {dx}, 'dy', {dy}, 'w', {w})"
         for dx, dy, w in chamfer_offsets(cap)
@@ -85,11 +84,7 @@ def proximity_raster(
 
 
 def oracle_proximity_sql(
-    fine_cte: str,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    thresh: int = 200,
-    cap: int = 12,
+    fine_cte: str, res: int = DEFAULT_RES, thresh: int = 200, cap: int = 12,
 ) -> str:
     """DuckDB mirror, independently formulated as a pairwise MIN-join:
     candidate targets are the Chebyshev floor(cap/3) box around each
@@ -97,7 +92,7 @@ def oracle_proximity_sql(
     takes the min closed-form distance over ALL features in its box —
     a join-per-pair decomposition, not the scatter-fold."""
     r = cap // 3
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     return f"""{fine_cte},
 feats AS (SELECT fx, fy FROM fine WHERE val >= {thresh}),
 box AS (

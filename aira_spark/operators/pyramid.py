@@ -36,16 +36,13 @@ from .mosaic import fine_grid
 
 
 def pyramid_levels(
-    images: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    levels: int = 3,
+    images: DataFrame, res: int = DEFAULT_RES, levels: int = 3,
 ) -> DataFrame:
     """(level, px, py, n_src, sum_val, mean_e6): overview stack of the
     max-composited band-0 mosaic. level 0 is the fine grid itself
     (n_src = 1); level k groups 2^k x 2^k fine subcells; mean_e6 is the
     mean of the FILLED children in integer micros (floor)."""
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     arms = ", ".join(
         "named_struct('level', CAST({k} AS BIGINT), "
         "'px', {px}, 'py', {py})".format(

@@ -31,12 +31,10 @@ from .mosaic import fine_grid
 AXIS_ARMS = [(-1, 1), (0, 3), (1, 3), (2, 1)]
 
 
-def upsample_bilinear(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def upsample_bilinear(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(tx, ty, val_x16, val): bilinear 2x upsample; val_x16 is the exact
     interpolated value in sixteenths, val its floor."""
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     arms = ", ".join(
         f"named_struct('tx', 2 * fx + {ox}, 'ty', 2 * fy + {oy}, "
         f"'w', CAST({wx * wy} AS BIGINT))"

@@ -173,7 +173,7 @@ def within_expr(d: int) -> str:
 
 
 def _proximity_pairs(
-    segs: DataFrame, points: DataFrame, d: int, max_bin: int = 200_000
+    segs: DataFrame, points: DataFrame, d: int, max_bin: int, op: str
 ) -> DataFrame:
     """(seg_id, point_id, axq, ayq, bxq, byq, pxq, pyq): every pair within
     exact grid distance `d`, coords still attached (they rode the explode
@@ -181,7 +181,8 @@ def _proximity_pairs(
     `d`, covered with the same coarse bins as segment_intersections,
     equi-joined against the point's single bin (a proven superset: a
     point within d of the segment lies inside the expanded bbox). The
-    exact refine is the shared within_expr predicate — a JVM filter."""
+    exact refine is the shared within_expr predicate — a JVM filter.
+    The hot-bin guard reports under the calling operator's name `op`."""
     binned = (
         segs.withColumn(
             "gx",
@@ -205,7 +206,7 @@ def _proximity_pairs(
         .drop("gx", "gy")
     )
     key_bound(
-        binned, ["bin"], max_bin, "route_proximity", "max_bin",
+        binned, ["bin"], max_bin, op, "max_bin",
         "refine the binning",
     )
     pts = points.withColumn(
@@ -220,7 +221,8 @@ def route_proximity(
 ) -> DataFrame:
     """(seg_id, point_id): every (segment, point) pair within exact grid
     distance `d` — the corridor / points-near-route query."""
-    return _proximity_pairs(segs, points, d, max_bin).select(
+    pairs = _proximity_pairs(segs, points, d, max_bin, "route_proximity")
+    return pairs.select(
         F.col("seg_id").cast("long").alias("seg_id"),
         F.col("point_id").cast("long").alias("point_id"),
     )
@@ -284,7 +286,7 @@ def map_match(
     filters/projections; the argmin is ONE hash agg of a lexicographic
     (dq2, seg_id) struct MIN — map-side combinable, no window, no join
     back. Candidate pairs are id+coord rows only."""
-    pairs = _proximity_pairs(segs, points, d, max_bin=max_bin)
+    pairs = _proximity_pairs(segs, points, d, max_bin, "map_match")
     scored = pairs.selectExpr(
         "point_id", "seg_id", f"{snap_dq2_expr('spark')} AS dq2"
     )

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH, fine_grid
 
 MASK_MIN = 128
 K_ROUNDS = 4
@@ -92,15 +92,12 @@ def _thin_once(mask: DataFrame, sub: int) -> DataFrame:
     return g.where(f"NOT ({_sub_cond(sub)})").select("fx", "fy")
 
 
-def skeleton_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def skeleton_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(gx, gy, n_mask, n_skel) per coarse cell: bright-mask size before
     thinning and surviving skeleton size after K_ROUNDS full Zhang-Suen
     iterations."""
-    pb = 1 << patch_bits
     mask = (
-        fine_grid(images, res, patch_bits)
+        fine_grid(images, res)
         .where(F.col("val") >= MASK_MIN)
         .select("fx", "fy")
         .localCheckpoint(eager=True)
@@ -110,10 +107,10 @@ def skeleton_census(
         cur = _thin_once(cur, 1)
         cur = _thin_once(cur, 2).localCheckpoint(eager=True)
     before = mask.selectExpr(
-        f"fx DIV {pb} AS gx", f"fy DIV {pb} AS gy"
+        f"fx DIV {PATCH} AS gx", f"fy DIV {PATCH} AS gy"
     ).groupBy("gx", "gy").agg(F.count("*").cast("long").alias("n_mask"))
     after = cur.selectExpr(
-        f"fx DIV {pb} AS gx", f"fy DIV {pb} AS gy"
+        f"fx DIV {PATCH} AS gx", f"fy DIV {PATCH} AS gy"
     ).groupBy("gx", "gy").agg(F.count("*").cast("long").alias("n_skel"))
     return (
         before.join(after, ["gx", "gy"], "left")
@@ -124,13 +121,10 @@ def skeleton_census(
     )
 
 
-def oracle_skeleton_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_skeleton_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val):
     identical subiterations via the 3x3 VALUES-offset scatter and
     conditional 0/1 slots, 2*K_ROUNDS materialized mask CTEs."""
-    pb = 1 << patch_bits
     offs = ", ".join(f"({dx}, {dy}, '{p}')" for p, dx, dy in P_OFFS)
     parts = [
         f"m0 AS MATERIALIZED (SELECT fx, fy FROM fine WHERE val >= "
@@ -159,12 +153,12 @@ def oracle_skeleton_sql(
     return f"""{fine_cte},
 {','.join(parts)}
 ,bef AS (
-  SELECT fx // {pb} AS gx, fy // {pb} AS gy,
+  SELECT fx // {PATCH} AS gx, fy // {PATCH} AS gy,
     CAST(COUNT(*) AS BIGINT) AS n_mask
   FROM m0 GROUP BY 1, 2
 ),
 aft AS (
-  SELECT fx // {pb} AS gx, fy // {pb} AS gy,
+  SELECT fx // {PATCH} AS gx, fy // {PATCH} AS gy,
     CAST(COUNT(*) AS BIGINT) AS n_skel
   FROM m{n} GROUP BY 1, 2
 )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from ..functions.cells import DEFAULT_RES
 from .fixpoint import fixpoint
 from .focal import GRAD_OFFSETS, focal_gradient
+from .mosaic import PATCH_BITS, fine_grid
 
 # 45-degree sectors with boundaries at multiples of 45 degrees:
 # E=[0,45), NE=[45,90), N=[90,135), NW=[135,180), W=[180,225),
@@ -49,14 +50,12 @@ SLOPE_CASE = """CASE
   ELSE 'steep' END"""
 
 
-def terrain_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def terrain_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(aspect, slope_class, n_cells, sum_grad2): census of the gradient
     field over all fully-stenciled fine-grid cells."""
     from pyspark.sql import functions as F
 
-    g = focal_gradient(images, res, patch_bits)
+    g = focal_gradient(images, res)
     return (
         g.selectExpr(
             f"{ASPECT_CASE} AS aspect", f"{SLOPE_CASE} AS slope_class",
@@ -70,12 +69,11 @@ def terrain_census(
     )
 
 
-def oracle_terrain_sql(fine_cte: str, res: int = DEFAULT_RES,
-                       patch_bits: int = 4) -> str:
+def oracle_terrain_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     gradient scatter (GRAD_OFFSETS, scatter weights negated exactly as
     focal.focal_gradient does), then the shared classification text."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(
         f"({dx},{dy},{-wx},{-wy})"
         for (dx, dy), (wx, wy) in GRAD_OFFSETS.items()
@@ -100,9 +98,7 @@ SELECT {ASPECT_CASE} AS aspect, {SLOPE_CASE} AS slope_class,
 FROM grad GROUP BY 1, 2"""
 
 
-def flow_direction(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def flow_direction(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, val, flow_dir, drop_val): D8 steepest-descent flow direction
     over the mosaic fine grid — the hydrology primitive (watershed/flow-
     accumulation input) next to the aspect census.
@@ -117,13 +113,12 @@ def flow_direction(
     from pyspark.sql import functions as F
 
     from .focal import WINDOW_ARMS, scatter
-    from .mosaic import fine_grid
 
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     # the scatter target sees this source at the INVERSE offset, so the
     # code stored is the source's position in the TARGET's 3x3 window
     scattered = scatter(
-        fine_grid(images, res, patch_bits), WINDOW_ARMS, nf
+        fine_grid(images, res), WINDOW_ARMS, nf
     ).selectExpr("tx", "ty", "val", "(1 - o.dy) * 3 + (1 - o.dx) AS code")
     return (
         scattered.groupBy("tx", "ty")
@@ -153,10 +148,10 @@ def flow_direction(
     )
 
 
-def oracle_flow_ctes(fine_cte: str, res: int, patch_bits: int = 4) -> str:
+def oracle_flow_ctes(fine_cte: str, res: int) -> str:
     """CTE chain (no final SELECT) ending in flow(fx, fy, val, flow_dir,
     drop_val) — shared by the flow_dir and basins oracles."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     return f"""{fine_cte},
 sc AS (
   SELECT fx + o.dx AS tx, fy + o.dy AS ty, val,
@@ -182,10 +177,10 @@ flow AS (
 )"""
 
 
-def oracle_flow_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
+def oracle_flow_sql(fine_cte: str, res: int) -> str:
     """DuckDB mirror over a CTE chain ending in fine(fx, fy, val)."""
     return (
-        oracle_flow_ctes(fine_cte, res, patch_bits)
+        oracle_flow_ctes(fine_cte, res)
         + "\nSELECT fx, fy, val, flow_dir, drop_val FROM flow\n"
     )
 
@@ -198,14 +193,12 @@ NODE_FX_FY = (
 )
 
 
-def flow_forest(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def flow_forest(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(node, parent): the D8 flow graph as a functional forest over
     packed node ids fx*2^30+fy — each cell points at the neighbour its
     flow_dir names, pits self-loop. Eager-checkpointed: the basins,
     accumulation and Strahler rounds all read it many times."""
-    return flow_direction(images, res, patch_bits).selectExpr(
+    return flow_direction(images, res).selectExpr(
         f"fx * {BASIN_K} + fy AS node",
         # decode the 3x3 code back to the neighbor offset; pits self-loop
         f"CASE WHEN flow_dir = -1 THEN fx * {BASIN_K} + fy "
@@ -227,8 +220,7 @@ def oracle_flow_forest_cte(name: str) -> str:
 
 
 def drainage_basins(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4,
-    max_rounds: int = 40,
+    images: DataFrame, res: int = DEFAULT_RES, max_rounds: int = 40,
 ) -> DataFrame:
     """(fx, fy, basin, basin_size): every fine-grid position labeled with
     the PIT its steepest-descent path terminates at (basin = the pit's
@@ -254,7 +246,7 @@ def drainage_basins(
         )
 
     p = fixpoint(
-        flow_forest(images, res, patch_bits), double,
+        flow_forest(images, res), double,
         "count_if(parent != old)", max_rounds=max_rounds,
         name="drainage_basins", until="zero",
     ).select("node", "parent")
@@ -269,12 +261,12 @@ def drainage_basins(
     )
 
 
-def oracle_basins_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
+def oracle_basins_sql(fine_cte: str, res: int) -> str:
     """DuckDB mirror: parent pointers from the shared flow chain, then a
     RECURSIVE walk to each node's root — an independent (linear, not
     doubling) formulation."""
     return f"""
-WITH RECURSIVE {oracle_flow_ctes(fine_cte, res, patch_bits)},
+WITH RECURSIVE {oracle_flow_ctes(fine_cte, res)},
 {oracle_flow_forest_cte("p")},
 roots AS (SELECT node FROM p WHERE parent = node),
 walk(node, cur) AS (
@@ -295,8 +287,7 @@ FROM basin b JOIN sizes s ON s.basin = b.basin
 
 
 def flow_accumulation(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4,
-    max_rounds: int = 64,
+    images: DataFrame, res: int = DEFAULT_RES, max_rounds: int = 64,
 ) -> DataFrame:
     """(fx, fy, acc): D8 flow accumulation — for every fine-grid cell the
     number of cells (ITSELF included, so acc >= 1) whose steepest-descent
@@ -328,7 +319,7 @@ def flow_accumulation(
     """
     from pyspark.sql import functions as F
 
-    p = flow_forest(images, res, patch_bits)
+    p = flow_forest(images, res)
     edges = p.where("parent != node").selectExpr(
         "node AS child", "parent"
     ).localCheckpoint(eager=True)
@@ -360,13 +351,13 @@ def flow_accumulation(
     return acc.selectExpr(*NODE_FX_FY, "CAST(acc AS BIGINT) AS acc")
 
 
-def oracle_flow_acc_sql(fine_cte: str, res: int, patch_bits: int = 4) -> str:
+def oracle_flow_acc_sql(fine_cte: str, res: int) -> str:
     """DuckDB mirror, independently formulated: enumerate every (cell,
     cell-on-its-descent-path) pair with a RECURSIVE walk seeded at (node,
     node) — acc(v) is then a plain COUNT per path cell, not a subtree
     recursion, so an agreement is evidence for the Jacobi fixpoint."""
     return f"""
-WITH RECURSIVE {oracle_flow_ctes(fine_cte, res, patch_bits)},
+WITH RECURSIVE {oracle_flow_ctes(fine_cte, res)},
 {oracle_flow_forest_cte("p")},
 paths(u, cur) AS (
   SELECT node, node FROM p
@@ -408,9 +399,7 @@ HS_NUM = (
 )
 
 
-def hillshade_census(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def hillshade_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(shade_band, n_cells, sum_num): Lambertian hillshade banding census
     over all fully-stenciled fine-grid cells — GDAL `hillshade` parity
     without a single float: the band of cos(N, L) is decided by exact
@@ -423,7 +412,7 @@ def hillshade_census(
     the census is one map-side-combined agg over <= 4 keys."""
     from pyspark.sql import functions as F
 
-    g = focal_gradient(images, res, patch_bits)
+    g = focal_gradient(images, res)
     return (
         g.selectExpr(f"{HS_NUM} AS num", "grad2")
         .selectExpr(f"{HILLSHADE_CASE} AS shade_band", "num")
@@ -435,11 +424,10 @@ def hillshade_census(
     )
 
 
-def oracle_hillshade_sql(fine_cte: str, res: int = DEFAULT_RES,
-                         patch_bits: int = 4) -> str:
+def oracle_hillshade_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror: the focal_gradient scatter (as oracle_terrain_sql)
     then the SAME shared numerator + banding CASE text."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     from .focal import GRAD_OFFSETS
 
     offs = ", ".join(
@@ -474,7 +462,6 @@ VS_DIRS = [(1, 0), (-1, 0), (0, 1), (0, -1), (1, 1), (1, -1), (-1, 1), (-1, -1)]
 def viewshed(
     images: DataFrame,
     res: int = DEFAULT_RES,
-    patch_bits: int = 4,
     radius: int = 6,
     lattice: int = 4,
 ) -> DataFrame:
@@ -506,14 +493,12 @@ def viewshed(
     depends on corpus size."""
     from pyspark.sql import functions as F
 
-    from .mosaic import fine_grid
-
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     # the fine grid feeds FOUR subtrees (observers, targets, both anti-join
     # arms); localCheckpoint pins the one decode pass instead of replaying
     # the Arrow decode per subtree (the flow_accumulation device) — the
     # grid is bounded by the cell resolution, never by corpus size
-    fine = fine_grid(images, res, patch_bits).localCheckpoint(eager=True)
+    fine = fine_grid(images, res).localCheckpoint(eager=True)
     obs = fine.where(
         (F.col("fx") % lattice == 0) & (F.col("fy") % lattice == 0)
     ).select(
@@ -572,15 +557,11 @@ def viewshed(
 
 
 def oracle_viewshed_sql(
-    fine_cte: str,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    radius: int = 6,
-    lattice: int = 4,
+    fine_cte: str, res: int = DEFAULT_RES, radius: int = 6, lattice: int = 4,
 ) -> str:
     """DuckDB mirror over the fine(fx, fy, val) CTE: identical observer
     sublattice, ray explode, cross-multiplied blocker NOT EXISTS."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     dirs = ", ".join(f"({dx}, {dy})" for dx, dy in VS_DIRS)
     return f"""{fine_cte},
 obs AS (
@@ -617,10 +598,7 @@ ON a.ox = b.ox AND a.oy = b.oy"""
 
 
 def strahler_order(
-    images: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
-    max_rounds: int = 64,
+    images: DataFrame, res: int = DEFAULT_RES, max_rounds: int = 64,
 ) -> DataFrame:
     """(fx, fy, strahler): Horton-Strahler stream order of every cell of
     the D8 flow forest — the hydrology network classifier (order-1 rills
@@ -643,7 +621,7 @@ def strahler_order(
     shape; pixels never re-enter the loop."""
     from pyspark.sql import functions as F
 
-    p = flow_forest(images, res, patch_bits)
+    p = flow_forest(images, res)
     edges = p.where("parent != node").selectExpr(
         "node AS child", "parent"
     ).localCheckpoint(eager=True)
@@ -684,14 +662,12 @@ def strahler_order(
     return ordd.selectExpr(*NODE_FX_FY, "CAST(o AS BIGINT) AS strahler")
 
 
-def oracle_strahler_sql(
-    fine_cte: str, res: int, patch_bits: int = 4, rounds: int = 8
-) -> str:
+def oracle_strahler_sql(fine_cte: str, res: int, rounds: int = 8) -> str:
     """DuckDB mirror: the same Jacobi rounds UNROLLED (the k_core device);
     `rounds` must be >= the forest height at the checked scale (height 5
     at the driver's sf0.01 slice — 8 leaves margin; past the fixpoint
     every further round is a no-op, so over-unrolling is harmless)."""
-    parts = [f"""{oracle_flow_ctes(fine_cte, res, patch_bits)},
+    parts = [f"""{oracle_flow_ctes(fine_cte, res)},
 {oracle_flow_forest_cte("par")},
 e AS (SELECT node AS child, parent FROM par WHERE parent != node),
 o0 AS (SELECT node, CAST(1 AS BIGINT) AS o FROM par)"""]

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
 from .focal import OFFSETS, WINDOW_ARMS, scatter
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 PEAK_MIN = 32    # tophat >= 32 of 255: a "small bright feature" flag
 
@@ -46,13 +46,11 @@ def _focal_fold(df: DataFrame, fold, nf: int) -> DataFrame:
     )
 
 
-def tophat(
-    images: DataFrame, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> DataFrame:
+def tophat(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(fx, fy, val, opening, tophat, peak): 3x3 grayscale top-hat of the
     mosaic fine grid; only cells where the double-window is complete."""
-    nf = 1 << (res + patch_bits)
-    fine = fine_grid(images, res, patch_bits).selectExpr(
+    nf = 1 << (res + PATCH_BITS)
+    fine = fine_grid(images, res).selectExpr(
         "fx", "fy", "CAST(val AS BIGINT) AS v"
     ).localCheckpoint(eager=True)   # reused: erode input + center join
     eroded = _focal_fold(fine, F.min, nf)
@@ -70,12 +68,10 @@ def tophat(
     )
 
 
-def oracle_tophat_sql(
-    fine_cte: str, res: int = DEFAULT_RES, patch_bits: int = 4
-) -> str:
+def oracle_tophat_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical complete-window MIN then MAX folds + the center join."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     offs = ", ".join(f"({dx}, {dy})" for dx, dy in OFFSETS)
 
     def stage(src: str, fold: str, out: str) -> str:

@@ -30,21 +30,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import DEFAULT_RES
-from .mosaic import fine_grid
+from .mosaic import PATCH_BITS, fine_grid
 
 SEED_ENC = 1 << 20
 
 
 def voronoi_census(
-    images: DataFrame,
-    seeds: DataFrame,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
+    images: DataFrame, seeds: DataFrame, res: int = DEFAULT_RES,
 ) -> DataFrame:
     """(seed_id, n_cells, sum_val, d2_min, d2_max) per seed from `seeds`
     carrying (seed_id bigint, x double, y double in degrees); empty
     regions ship n_cells = 0 with -1 extremes."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     chk = seeds.agg(
         F.max("seed_id").alias("mx"), F.min("seed_id").alias("mn")
     ).first()
@@ -61,7 +58,7 @@ def voronoi_census(
         f"CAST(LEAST(GREATEST(FLOOR((y - (-90.0)) / 180.0 * {float(nf)}),"
         f" 0), {nf - 1}) AS BIGINT) AS sy",
     )
-    fine = fine_grid(images, res, patch_bits)
+    fine = fine_grid(images, res)
     assigned = (
         fine.crossJoin(F.broadcast(sg))
         .selectExpr(
@@ -97,15 +94,12 @@ def voronoi_census(
 
 
 def oracle_voronoi_sql(
-    fine_cte: str,
-    seeds_sql: str,
-    res: int = DEFAULT_RES,
-    patch_bits: int = 4,
+    fine_cte: str, seeds_sql: str, res: int = DEFAULT_RES,
 ) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) and a
     subquery yielding seeds (seed_id, x, y): identical snap, encoded
     argmin and zero-region left join."""
-    nf = 1 << (res + patch_bits)
+    nf = 1 << (res + PATCH_BITS)
     return f"""{fine_cte},
 sg AS (
   SELECT CAST(seed_id AS BIGINT) AS seed_id,

@@ -25,8 +25,8 @@ Shape: one mapInPandas decode pass (pixels never cross an exchange — only
 (tx, ty, val) target-cell rows, one per covered target pixel per scene),
 then MAX-composite hash agg on the target position (commutative /
 associative — scene- and partition-order independent, the mosaic
-argument), then a bounded per-PATCH census (patch = 2^patch_bits square of
-target pixels) so the full-resolution warp never leaves the cluster. The
+argument), then a bounded per-patch census (patch = 2^WARP_PATCH_BITS square
+of target pixels) so the full-resolution warp never leaves the cluster. The
 agg key is the target grid position: no skew (a hot AOI spreads over many
 target cells), partial aggregation combines map-side, and both
 aggregations reuse one shuffle's partitioning at any cluster size.
@@ -59,6 +59,8 @@ Y0 = -90.0
 # dyadic-rational target pixel sizes (exact double literals both engines)
 DEFAULT_TSX = 1.0 / 128.0  # 0.0078125 deg
 DEFAULT_TSY = 3.0 / 512.0  # 0.005859375 deg
+# census patch side, in target pixels: warp's own grid, not mosaic.PATCH_BITS
+WARP_PATCH_BITS = 3
 
 
 def warp_cell_values(
@@ -128,12 +130,12 @@ def warp_census(
     images: DataFrame,
     tsx: float = DEFAULT_TSX,
     tsy: float = DEFAULT_TSY,
-    patch_bits: int = 3,
 ) -> DataFrame:
-    """(wx, wy, n_cells, sum_val, min_val, max_val) per 2^patch_bits-square
-    patch of the common target grid — the bounded public face of the warp
-    (counts prove footprint coverage; sum/min/max fingerprint the values)."""
-    pb = 1 << patch_bits
+    """(wx, wy, n_cells, sum_val, min_val, max_val) per 8 x 8 patch
+    (2^WARP_PATCH_BITS target pixels a side) of the common target grid —
+    the bounded public face of the warp (counts prove footprint coverage;
+    sum/min/max fingerprint the values)."""
+    pb = 1 << WARP_PATCH_BITS
     vals = warp_cell_values(images, tsx, tsy)
     return (
         vals.groupBy(
@@ -154,13 +156,12 @@ def oracle_warp_sql(
     modulo: int = 8,
     tsx: float = DEFAULT_TSX,
     tsy: float = DEFAULT_TSY,
-    patch_bits: int = 3,
 ) -> str:
     """DuckDB mirror over the closed-form image catalog (a WITH body ending
     in meta(k, w, h, sx, sy, cx, cy, ...)) — regenerates every covered
     target pixel per scene via the identical inverse-map expression tree
     and the synthetic pixel formula (r*7 + c*13 + k) % 256."""
-    pb = 1 << patch_bits
+    pb = 1 << WARP_PATCH_BITS
     return f"""
 WITH {img_cte},
 sel AS (SELECT * FROM meta WHERE k % {modulo} = 0),

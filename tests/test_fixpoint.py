@@ -91,7 +91,7 @@ def test_terrain_guard_raises_at_max_rounds(spark, sf_dir, op):
 
     images = em._images(spark, sf_dir, modulo=8)
     with pytest.raises(RuntimeError, match=f"{op} did not converge.*max_rounds"):
-        getattr(terrain, op)(images, em.CELL_RES, 4, max_rounds=1)
+        getattr(terrain, op)(images, em.CELL_RES, max_rounds=1)
 
 
 def test_duplicate_clusters_guard_raises_at_max_iters(spark):

@@ -265,6 +265,15 @@ def _route(spark, n, bound):
     return route_proximity(_segs(spark, n), points, d=1, max_bin=bound)
 
 
+def _map_match(spark, n, bound):
+    from aira_spark.operators.segments import map_match
+
+    points = spark.createDataFrame(
+        [(1, 2, 3)], "point_id long, pxq long, pyq long"
+    )
+    return map_match(_segs(spark, n), points, d=1, max_bin=bound)
+
+
 # (operator name in the message, parameter, bound, run(spark, n, bound))
 CONTRACT = [
     ("convoy_pairs", "max_cell_users", BOUND, _convoy),
@@ -284,6 +293,7 @@ CONTRACT = [
     ("dow_seasonality", "max_cell_events", BOUND, _dow),
     ("segment_intersections", "max_bin", BOUND, _segments),
     ("route_proximity", "max_bin", BOUND, _route),
+    ("map_match", "max_bin", BOUND, _map_match),
 ]
 
 

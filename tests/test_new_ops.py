@@ -620,11 +620,11 @@ def test_mosaic_patch_assembly(spark, images):
 
     vals = {
         (r.cell, r.pr, r.pc): r.val
-        for r in mosaic_cell_values(images, res=7, patch_bits=4).collect()
+        for r in mosaic_cell_values(images, res=7).collect()
     }
     patches = {
         r.cell: (bytes(r.patch), r.n_filled)
-        for r in mosaic_patches(images, res=7, patch_bits=4).collect()
+        for r in mosaic_patches(images, res=7).collect()
     }
     assert set(patches) == {c for c, _, _ in vals}
     for cell, (buf, n_filled) in patches.items():
@@ -641,7 +641,7 @@ def test_mosaic_patch_assembly(spark, images):
     doubled = images.unionByName(images)
     vals2 = {
         (r.cell, r.pr, r.pc): r.val
-        for r in mosaic_cell_values(doubled, res=7, patch_bits=4).collect()
+        for r in mosaic_cell_values(doubled, res=7).collect()
     }
     assert vals2 == vals
 

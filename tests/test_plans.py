@@ -398,7 +398,7 @@ def test_focal_scatter_single_extra_agg(spark, sf_dir):
     import __spark_entry__ as em
     from aira_spark.operators.focal import focal_mean
 
-    df = focal_mean(em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4)
+    df = focal_mean(em._images(spark, sf_dir, modulo=8), em.CELL_RES)
     s = plan_string(df)
     assert shuffle_count(df) == 2, s  # mosaic agg + focal agg
     assert "Join" not in s and "CartesianProduct" not in s, s

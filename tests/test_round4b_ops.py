@@ -12,7 +12,7 @@ def _fine_grid(spark, sf_dir, modulo=8):
     from aira_spark.operators.mosaic import mosaic_cell_values
 
     images = em._images(spark, sf_dir, modulo=modulo)
-    vals = mosaic_cell_values(images, em.CELL_RES, patch_bits=4).collect()
+    vals = mosaic_cell_values(images, em.CELL_RES).collect()
     filled = {}
     for r in vals:
         fx = int(np_cell_ix(np.int64(r["cell"]))) * 16 + r["pc"]
@@ -32,7 +32,7 @@ def test_pyramid_matches_brute_force(spark, sf_dir):
     got = {
         (r["level"], r["px"], r["py"]): (r["n_src"], r["sum_val"], r["mean_e6"])
         for r in pyramid_levels(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4, levels=3
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES, levels=3
         ).collect()
     }
     want = {}
@@ -54,7 +54,7 @@ def test_pyramid_level_zero_is_fine_grid(spark, sf_dir):
     lvl0 = [
         r
         for r in pyramid_levels(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4, levels=1
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES, levels=1
         ).collect()
         if r["level"] == 0
     ]
@@ -79,7 +79,7 @@ def test_contours_match_brute_force(spark, sf_dir):
     got = {
         (r["threshold"], r["case_id"]): (r["n_cells"], r["n_segments"])
         for r in contour_cases(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     want = {}
@@ -122,7 +122,7 @@ def test_autocorr_matches_brute_force(spark, sf_dir):
 
     filled = _fine_grid(spark, sf_dir)
     r = spatial_autocorr(
-        em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+        em._images(spark, sf_dir, modulo=8), em.CELL_RES
     ).collect()[0]
     n = len(filled)
     vs = list(filled.values())
@@ -154,7 +154,7 @@ def test_autocorr_no_join_scatter_agg(spark, sf_dir):
     from aira_spark.operators.autocorr import spatial_autocorr
     from tests.test_plans import count_in_plan, plan_string, shuffle_count
 
-    df = spatial_autocorr(em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4)
+    df = spatial_autocorr(em._images(spark, sf_dir, modulo=8), em.CELL_RES)
     s = plan_string(df)
     assert "Join" not in s and "CartesianProduct" not in s, s
     assert shuffle_count(df) <= 3, s  # mosaic + cell agg + single-row agg
@@ -351,8 +351,8 @@ def test_terrain_census_totals(spark, sf_dir):
     from aira_spark.operators.terrain import terrain_census
 
     imgs = em._images(spark, sf_dir, modulo=8)
-    g = focal_gradient(imgs, em.CELL_RES, 4).collect()
-    rows = terrain_census(imgs, em.CELL_RES, 4).collect()
+    g = focal_gradient(imgs, em.CELL_RES).collect()
+    rows = terrain_census(imgs, em.CELL_RES).collect()
     assert sum(r["n_cells"] for r in rows) == len(g)
     assert sum(r["sum_grad2"] for r in rows) == sum(r["grad2"] for r in g)
 
@@ -440,7 +440,7 @@ def test_upsample_matches_numpy_bilinear(spark, sf_dir):
     got = {
         (r["tx"], r["ty"]): (r["val_x16"], r["val"])
         for r in upsample_bilinear(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
 
@@ -485,7 +485,7 @@ def test_pyramid_single_extra_agg_no_join(spark, sf_dir):
     from aira_spark.operators.pyramid import pyramid_levels
     from tests.test_plans import count_in_plan, plan_string, shuffle_count
 
-    df = pyramid_levels(em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4, 3)
+    df = pyramid_levels(em._images(spark, sf_dir, modulo=8), em.CELL_RES, 3)
     s = plan_string(df)
     assert shuffle_count(df) == 2, s  # mosaic agg + pyramid agg
     assert "Join" not in s and "CartesianProduct" not in s, s
@@ -683,7 +683,7 @@ def test_focal_median_matches_brute_force(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): (r["n_nbrs"], r["med_lo"], r["med_hi"], r["med_x2"])
         for r in focal_median(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert set(got) == set(filled)
@@ -826,7 +826,7 @@ def test_change_census_matches_brute_force(spark, sf_dir):
 
     kmod = F.expr("CAST(substr(image_id, 4) AS BIGINT) % 16")
     fb = {}
-    for r in mosaic_cell_values(imgs.filter(kmod == 8), em.CELL_RES, 4).collect():
+    for r in mosaic_cell_values(imgs.filter(kmod == 8), em.CELL_RES).collect():
         fx = int(np_cell_ix(np.int64(r["cell"]))) * 16 + r["pc"]
         fy = int(np_cell_iy(np.int64(r["cell"]))) * 16 + r["pr"]
         fb[(fx, fy)] = r["val"]
@@ -903,7 +903,7 @@ def test_flow_dir_matches_brute_force(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): (r["val"], r["flow_dir"], r["drop_val"])
         for r in flow_direction(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert set(got) == set(filled)
@@ -1426,7 +1426,7 @@ def test_basins_match_brute_force(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): (r["basin"], r["basin_size"])
         for r in drainage_basins(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert set(got) == set(filled)
@@ -1441,7 +1441,7 @@ def test_basins_pits_label_themselves(spark, sf_dir):
     pits = {
         (r["fx"], r["fy"])
         for r in flow_direction(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
         if r["flow_dir"] == -1
     }

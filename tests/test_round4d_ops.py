@@ -44,7 +44,7 @@ def test_flow_acc_matches_brute_force(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): r["acc"]
         for r in flow_accumulation(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert got == want
@@ -96,16 +96,16 @@ def test_flow_acc_conservation(spark, sf_dir):
     images = em._images(spark, sf_dir, modulo=8)
     acc = {
         (r["fx"], r["fy"]): r["acc"]
-        for r in flow_accumulation(images, em.CELL_RES, 4).collect()
+        for r in flow_accumulation(images, em.CELL_RES).collect()
     }
     pits = {
         (r["fx"], r["fy"])
-        for r in flow_direction(images, em.CELL_RES, 4).collect()
+        for r in flow_direction(images, em.CELL_RES).collect()
         if r["flow_dir"] == -1
     }
     basin_sizes = {
         r["basin"]: r["basin_size"]
-        for r in drainage_basins(images, em.CELL_RES, 4).collect()
+        for r in drainage_basins(images, em.CELL_RES).collect()
     }
     for (fx, fy) in pits:
         assert acc[(fx, fy)] == basin_sizes[fx * BASIN_K + fy]
@@ -157,7 +157,7 @@ def test_hotspots_match_exact_integer_mirror(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): (r["k_i"], r["s_i"], r["num"], r["gi_class"])
         for r in gi_hotspots(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert set(got) == set(filled)
@@ -395,7 +395,7 @@ def test_proximity_matches_brute_force(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): r["dist34"]
         for r in proximity_raster(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert got == want
@@ -477,7 +477,7 @@ def test_hillshade_census_matches_brute_force(spark, sf_dir):
     got = {
         r["shade_band"]: (r["n_cells"], r["sum_num"])
         for r in hillshade_census(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert got == want
@@ -991,7 +991,7 @@ def test_viewshed_matches_brute_force(spark, sf_dir):
         )
         want[(ox, oy)] = (zo, len(cands), n_vis)
     rows = viewshed(
-        em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+        em._images(spark, sf_dir, modulo=8), em.CELL_RES
     ).collect()
     got = {
         (r["ox"], r["oy"]): (r["z_obs"], r["n_tgt"], r["n_vis"])
@@ -1934,7 +1934,7 @@ def test_strahler_matches_recursive_mirror(spark, sf_dir):
     got = {
         (r["fx"], r["fy"]): r["strahler"]
         for r in strahler_order(
-            em._images(spark, sf_dir, modulo=8), em.CELL_RES, 4
+            em._images(spark, sf_dir, modulo=8), em.CELL_RES
         ).collect()
     }
     assert got == want

@@ -170,7 +170,7 @@ def test_mosaic_blend_order_independent_and_bounded(spark, sf_dir):
     import __spark_entry__ as em
 
     imgs = _sf_images(spark, sf_dir)
-    out = mosaic_blend_values(imgs, em.CELL_RES, 4)
+    out = mosaic_blend_values(imgs, em.CELL_RES)
     rows = out.collect()
     assert rows
     for r in rows:
@@ -182,7 +182,7 @@ def test_mosaic_blend_order_independent_and_bounded(spark, sf_dir):
     again = {
         (r["cell"], r["pr"], r["pc"]): (r["val"], r["w_tot"])
         for r in mosaic_blend_values(
-            imgs.repartition(7), em.CELL_RES, 4
+            imgs.repartition(7), em.CELL_RES
         ).collect()
     }
     assert {

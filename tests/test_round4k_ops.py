@@ -1352,7 +1352,7 @@ def test_lisa_quadrants_hand_grid(spark):
     rows = {
         (r["fx"], r["fy"]): (r["k_i"], r["a_num"], r["b_num"], r["lisa_d"],
                              r["quad"])
-        for r in lisa_clusters(df, res=1, patch_bits=4).collect()
+        for r in lisa_clusters(df, res=1).collect()
     }
     assert len(rows) == 1024
     # python mirror over the same fine grid
@@ -1592,7 +1592,7 @@ def test_focal_majority_hand_grid(spark):
     got = {
         (r["fx"], r["fy"]): (r["n_nbrs"], r["center_cls"], r["mode_cls"],
                              r["mode_cnt"], r["changed"])
-        for r in focal_majority(df, res=1, patch_bits=4).collect()
+        for r in focal_majority(df, res=1).collect()
     }
     assert len(got) == 1024
     vals = {}
@@ -1759,8 +1759,7 @@ def test_distance_transform_hand_grid(spark):
     df = spark.createDataFrame(img, "image_id string, bytes binary")
     got = {
         (r["fx"], r["fy"]): r["dist10"]
-        for r in distance_transform(df, res=1, patch_bits=4,
-                                    rounds=6).collect()
+        for r in distance_transform(df, res=1, rounds=6).collect()
     }
     assert len(got) == 1024
     # python mirror: bounded-round chamfer relaxation (NOT full Dijkstra —
@@ -1808,7 +1807,7 @@ def test_harris_corners_hand_grid(spark):
     got = {
         (r["fx"], r["fy"]): (r["n_win"], r["sxx"], r["syy"], r["sxy"],
                              r["r20"], r["is_peak"], r["corner"])
-        for r in harris_corners(df, res=1, patch_bits=4).collect()
+        for r in harris_corners(df, res=1).collect()
     }
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
     grad = {}
@@ -1879,7 +1878,7 @@ def test_patch_entropy_hand_grid(spark):
     df = spark.createDataFrame(img, "image_id string, bytes binary")
     got = {
         (r["gx"], r["gy"]): (r["n_fine"], r["n_bins"], r["h_e6"], r["flat"])
-        for r in patch_entropy(df, res=1, patch_bits=4).collect()
+        for r in patch_entropy(df, res=1).collect()
     }
     assert len(got) == 4
     # python mirror with the identical floor table
@@ -2176,7 +2175,7 @@ def test_hog_octant_classification(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["gx"], r["gy"], r["obin"]): (r["cnt"], r["energy"])
-           for r in hog_census(df, res=1, patch_bits=4).collect()}
+           for r in hog_census(df, res=1).collect()}
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
     from collections import defaultdict
     exp = defaultdict(lambda: [0, 0])
@@ -2324,7 +2323,7 @@ def test_lbp_census_hand_grid(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["gx"], r["gy"], r["code"]): r["cnt"]
-           for r in lbp_census(df, res=1, patch_bits=4).collect()}
+           for r in lbp_census(df, res=1).collect()}
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
     from collections import defaultdict
     exp = defaultdict(int)
@@ -2471,7 +2470,7 @@ def test_tophat_small_feature_vs_block(spark):
         "image_id string, bytes binary")
     got = {(r["fx"], r["fy"]): (r["val"], r["opening"], r["tophat"],
                                 r["peak"])
-           for r in tophat(df, res=1, patch_bits=4).collect()}
+           for r in tophat(df, res=1).collect()}
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
 
     def fold(src, f):
@@ -2653,7 +2652,7 @@ def test_hough_lines_full_python_mirror(spark):
         "image_id string, bytes binary")
     got = {(r["theta"], r["rho_bin"]): (r["votes"], r["is_peak"])
            for r in hough_lines(
-               df, res=1, patch_bits=4, n_theta=12, rho_q=4,
+               df, res=1, n_theta=12, rho_q=4,
                mask_min=192, min_votes=8).collect()}
 
     nf, off = 32, 2 * 32 * E6
@@ -2830,7 +2829,7 @@ def test_voronoi_census_hand_raster(spark):
     )
     got = {r["seed_id"]: (r["n_cells"], r["sum_val"], r["d2_min"],
                           r["d2_max"])
-           for r in voronoi_census(df, seeds, res=1, patch_bits=4)
+           for r in voronoi_census(df, seeds, res=1)
            .collect()}
 
     def snap(v, lo, span):
@@ -2878,7 +2877,7 @@ def test_voronoi_seed_id_encode_guard(spark):
         [(SEED_ENC + 1, 0.0, 0.0)], "seed_id long, x double, y double"
     )
     try:
-        voronoi_census(df, seeds, res=1, patch_bits=4)
+        voronoi_census(df, seeds, res=1)
         assert False, "expected RuntimeError"
     except RuntimeError as e:
         assert "seed ids" in str(e)
@@ -2980,7 +2979,7 @@ def test_canny_full_python_mirror(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["fx"], r["fy"]): (r["mag2"], r["direction"], r["edge_class"])
-           for r in canny_edges(df, res=1, patch_bits=4).collect()}
+           for r in canny_edges(df, res=1).collect()}
 
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
 
@@ -3053,7 +3052,7 @@ def test_lacunarity_full_grid_and_stripes(spark):
     # fully occupied 32x32 -> every box full -> Lambda = 1 exactly
     full = img(np.full((32, 32), 7, dtype=np.uint8))
     got = {r["box_size"]: r.asDict()
-           for r in lacunarity_census(full, res=1, patch_bits=4)
+           for r in lacunarity_census(full, res=1)
            .collect()}
     for r in SCALES:
         g = got[r]
@@ -3071,7 +3070,7 @@ def test_lacunarity_full_grid_and_stripes(spark):
     # need a SPARSE fixture; use a half-image instead).
     half = np.full((16, 32), 7, dtype=np.uint8)   # bottom half occupied
     goth = {r["box_size"]: r.asDict()
-            for r in lacunarity_census(img(half), res=1, patch_bits=4)
+            for r in lacunarity_census(img(half), res=1)
             .collect()}
     cells = {(c, 31 - rr) for rr in range(16) for c in range(32)}
     for r in SCALES:
@@ -3287,7 +3286,7 @@ def test_skeleton_thick_bar_thins_to_line(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["gx"], r["gy"]): (r["n_mask"], r["n_skel"])
-           for r in skeleton_census(df, res=1, patch_bits=4).collect()}
+           for r in skeleton_census(df, res=1).collect()}
 
     mask = {(c, 31 - r) for r in range(32) for c in range(32)
             if a[r, c] >= 128}
@@ -3355,7 +3354,7 @@ def test_glcm_flat_checker_gradient(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["gx"], r["gy"]): r.asDict()
-           for r in glcm_census(df, res=1, patch_bits=4).collect()}
+           for r in glcm_census(df, res=1).collect()}
 
     lv = {(c, 31 - r): int(a[r, c]) // 32
           for r in range(32) for c in range(32)}
@@ -3452,7 +3451,7 @@ def test_euler_islands_minus_lakes(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["gx"], r["gy"]): (r["v"], r["e"], r["f"], r["chi"])
-           for r in euler_census(df, res=1, patch_bits=4).collect()}
+           for r in euler_census(df, res=1).collect()}
 
     mask = {(c, 31 - r) for r in range(32) for c in range(32)
             if a[r, c] >= 128}
@@ -3636,7 +3635,7 @@ def test_kappa_flat_vs_gradient_mirror(spark):
 
     flat = np.full((32, 32), 100, dtype=np.uint8)
     got = {(r["class_a"], r["class_b"]): r.asDict()
-           for r in agreement_census(img(flat), res=1, patch_bits=4)
+           for r in agreement_census(img(flat), res=1)
            .collect()}
     fold = got[(-1, -1)]
     assert fold["cnt"] == 30 * 30                  # complete windows
@@ -3647,7 +3646,7 @@ def test_kappa_flat_vs_gradient_mirror(spark):
     stripe = np.full((32, 32), 32, dtype=np.uint8)   # class 0
     stripe[:, 16:] = 224                             # class 3
     got2 = {(r["class_a"], r["class_b"]): r.asDict()
-            for r in agreement_census(img(stripe), res=1, patch_bits=4)
+            for r in agreement_census(img(stripe), res=1)
             .collect()}
     val = {(c, 31 - r): int(stripe[r, c])
            for r in range(32) for c in range(32)}
@@ -3705,7 +3704,7 @@ def test_bilateral_preserves_edges_smooths_noise(spark):
                  (0.0, 0.0, 0.0, -180.0, 90.0, 0.0)))))],
         "image_id string, bytes binary")
     got = {(r["fx"], r["fy"]): (r["val"], r["smoothed"])
-           for r in bilateral(df, res=1, patch_bits=4).collect()}
+           for r in bilateral(df, res=1).collect()}
 
     val = {(c, 31 - r): int(a[r, c]) for r in range(32) for c in range(32)}
     rt = range_table()

@@ -160,7 +160,7 @@ def test_focal_mean_matches_numpy_dense_grid(spark, sf_dir):
     from aira_spark.operators.mosaic import mosaic_cell_values
 
     images = em._images(spark, sf_dir, modulo=4)
-    vals = mosaic_cell_values(images, em.CELL_RES, patch_bits=4).collect()
+    vals = mosaic_cell_values(images, em.CELL_RES).collect()
     nf = 1 << (em.CELL_RES + 4)
     filled: dict[tuple[int, int], int] = {}
     for r in vals:
@@ -169,7 +169,7 @@ def test_focal_mean_matches_numpy_dense_grid(spark, sf_dir):
         filled[(fx, fy)] = r["val"]
     got = {
         (r["fx"], r["fy"]): (r["n_nbrs"], r["sum_val"], r["focal_mean"])
-        for r in focal_mean(images, em.CELL_RES, patch_bits=4).collect()
+        for r in focal_mean(images, em.CELL_RES).collect()
     }
     assert set(got) == set(filled)
     for (fx, fy) in filled:
@@ -350,7 +350,7 @@ def test_focal_gradient_matches_numpy(spark, sf_dir):
     from aira_spark.operators.mosaic import mosaic_cell_values
 
     images = em._images(spark, sf_dir, modulo=4)
-    vals = mosaic_cell_values(images, em.CELL_RES, patch_bits=4).collect()
+    vals = mosaic_cell_values(images, em.CELL_RES).collect()
     nf = 1 << (em.CELL_RES + 4)
     filled: dict[tuple[int, int], int] = {}
     for r in vals:
@@ -359,7 +359,7 @@ def test_focal_gradient_matches_numpy(spark, sf_dir):
         filled[(fx, fy)] = r["val"]
     got = {
         (r["fx"], r["fy"]): (r["gx"], r["gy"], r["grad2"])
-        for r in focal_gradient(images, em.CELL_RES, patch_bits=4).collect()
+        for r in focal_gradient(images, em.CELL_RES).collect()
     }
     expect = {}
     for (fx, fy) in filled:

@@ -45,8 +45,10 @@ def _brute_warp(keys):
     return grid, per_image
 
 
-def _census(grid, patch_bits=3):
-    pb = 1 << patch_bits
+def _census(grid):
+    from aira_spark.operators.warp import WARP_PATCH_BITS
+
+    pb = 1 << WARP_PATCH_BITS
     out: dict[tuple[int, int], list] = {}
     for (tx, ty), v in grid.items():
         key = (tx // pb, ty // pb)
@@ -102,10 +104,10 @@ def test_warp_composite_is_order_independent(spark, sf_dir):
 
     imgs = em._images(spark, sf_dir, modulo=8)
     single = {
-        tuple(r) for r in warp_census(imgs, patch_bits=3).collect()
+        tuple(r) for r in warp_census(imgs).collect()
     }
     doubled = {
         tuple(r)
-        for r in warp_census(imgs.unionByName(imgs), patch_bits=3).collect()
+        for r in warp_census(imgs.unionByName(imgs)).collect()
     }
     assert single == doubled
