@@ -6105,7 +6105,7 @@ def _oracle_harris() -> str:
 def _oracle_patch_entropy() -> str:
     from aira_spark.operators.entropy import oracle_patch_entropy_sql
 
-    return oracle_patch_entropy_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_patch_entropy_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_kde() -> str:
@@ -6251,7 +6251,7 @@ def _oracle_runs_test() -> str:
 def _oracle_canny() -> str:
     from aira_spark.operators.canny import oracle_canny_sql
 
-    return oracle_canny_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_canny_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_lacunarity() -> str:
@@ -6287,13 +6287,13 @@ def _oracle_perm_entropy() -> str:
 def _oracle_skeleton() -> str:
     from aira_spark.operators.skeleton import oracle_skeleton_sql
 
-    return oracle_skeleton_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_skeleton_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_glcm() -> str:
     from aira_spark.operators.glcm import oracle_glcm_sql
 
-    return oracle_glcm_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_glcm_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_silhouette() -> str:
@@ -6305,7 +6305,7 @@ def _oracle_silhouette() -> str:
 def _oracle_euler() -> str:
     from aira_spark.operators.euler import oracle_euler_sql
 
-    return oracle_euler_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_euler_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_dow_season() -> str:
@@ -6964,13 +6964,13 @@ def _oracle_warp() -> str:
 def _oracle_kappa() -> str:
     from aira_spark.operators.kappa import oracle_kappa_sql
 
-    return oracle_kappa_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_kappa_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_bilateral() -> str:
     from aira_spark.operators.bilateral import oracle_bilateral_sql
 
-    return oracle_bilateral_sql(_fine_cte_sql(modulo=8), CELL_RES)
+    return oracle_bilateral_sql(_fine_cte_sql(modulo=8))
 
 
 def _oracle_fuzzy_join() -> str:

@@ -30,7 +30,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from ..tiff import tags as T
 from ..tiff.meta import TiffError, decode_metadata, geotransform, pixel_chunks
 from ..tiff.pixels import decode_chunk, psnr
-from .cells import DEFAULT_RES, np_cell_from_xy
+from .cells import DEFAULT_RES, np_cell_from_xy, np_cell_iy, np_cell_ix, np_cell_pack
 
 META_SCHEMA = Ty.StructType(
     [
@@ -356,27 +356,31 @@ def pixel_world_coords(m: dict, h: int, w: int):
 
 
 def pixel_cell_groups(m: dict, px: np.ndarray, res: int):
-    """Shared georeference + cell-grouping scaffolding: pixel-center world
-    coords from the GeoTIFF transform, cell ids, and the stable-sort /
-    unique / reduceat bounds every per-cell aggregator reuses.
+    """Pixel-center cell groups from the GeoTIFF transform: (order,
+    uniq_cells, starts, ends), the reduceat bounds every per-cell aggregator
+    reuses, or None without a geotransform. `arr.ravel()[order]` aligns any
+    per-pixel value array with the group bounds.
 
-    Returns (order, uniq_cells, starts, ends) or None when the image has no
-    geotransform. `arr.ravel()[order]` aligns any per-pixel value array with
-    the group bounds."""
+    A pixel's cell column ix depends only on its x and its row iy only on
+    its y, and every (ix, iy) pair occurs: its group is rank(ix) * len(uy) +
+    rank(iy), a group's size is its column count times its row count, and the
+    one per-pixel step is a stable sort of that key (uint16, a radix sort, up
+    to 65,536 groups)."""
     h, w = px.shape[:2]
     xs, ys, _sv, _tv = pixel_world_coords(m, h, w)
     if xs is None:
         return None
-    cell = np_cell_from_xy(
-        np.broadcast_to(xs[None, :], (h, w)),
-        np.broadcast_to(ys[:, None], (h, w)),
-        res,
-    ).ravel()
-    order = np.argsort(cell, kind="stable")
-    cs = cell[order]
-    uniq, starts = np.unique(cs, return_index=True)
-    ends = np.append(starts[1:], len(cs))
-    return order, uniq, starts, ends
+    (ux, rank_x, count_x), (uy, rank_y, count_y) = (
+        np.unique(v, return_inverse=True, return_counts=True)
+        for v in (np_cell_ix(np_cell_from_xy(xs, 0, res)), np_cell_iy(np_cell_from_xy(0, ys, res)))
+    )
+    key_dtype = np.uint16 if len(ux) * len(uy) <= 1 << 16 else np.int64
+    key = rank_y.astype(key_dtype)[:, None] + (rank_x * len(uy)).astype(key_dtype)
+    order = np.argsort(key.ravel(), kind="stable")
+    uniq = np_cell_pack(res, np.repeat(ux, len(uy)), np.tile(uy, len(ux)))
+    sizes = np.outer(count_x, count_y).ravel()
+    ends = np.cumsum(sizes)
+    return order, uniq, ends - sizes, ends
 
 
 def reduce_by_cell(vals: np.ndarray, groups) -> list[tuple]:

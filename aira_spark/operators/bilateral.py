@@ -106,7 +106,7 @@ def bilateral(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_bilateral_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_bilateral_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT window formulation (8 self-joins), the identical literal
     range table as a VALUES lookup per term."""

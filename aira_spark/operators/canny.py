@@ -166,7 +166,7 @@ def canny_edges(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_canny_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_canny_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) — an
     INDEPENDENT formulation: neighbor JOINS instead of scatter slots,
     EXISTS-based linking rounds, identical literals throughout."""

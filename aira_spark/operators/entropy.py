@@ -82,7 +82,7 @@ def patch_entropy(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_patch_entropy_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_patch_entropy_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH clause ending in fine(fx, fy, val):
     identical two-level histogram fold and literal log2 table."""
     tab = _log2_e6_table(PATCH * PATCH)

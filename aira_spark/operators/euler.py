@@ -89,7 +89,7 @@ def euler_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_euler_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_euler_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT formulation: LEFT self-joins for the quad corners
     instead of the scatter."""

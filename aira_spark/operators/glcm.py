@@ -89,7 +89,7 @@ def glcm_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_glcm_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_glcm_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT adjacency formulation (self-JOIN on fx+1 instead of the
     scatter), identical quantization, weights and numerators."""

@@ -104,7 +104,7 @@ def agreement_census(
     ).unionByName(fold)
 
 
-def oracle_kappa_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_kappa_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val) —
     INDEPENDENT window formulation: 8 LEFT self-joins for the 3x3 sum
     instead of the scatter; identical quantizers and kappa fold."""

@@ -29,7 +29,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 DEFAULT_ZOOM = 4
 
@@ -71,23 +70,15 @@ def xyz_tiles(images: DataFrame, zoom: int = DEFAULT_ZOOM) -> DataFrame:
     """(image_id, x_tile, y_tile, quadkey): the slippy-map tile of every
     valid image's footprint center at `zoom`. Rows without a decodable
     geotransform are dropped (they have no footprint)."""
-    from .chunks import with_meta
+    from .chunks import footprint, with_meta
 
-    m = F.col("meta")
-    wm = with_meta(images).where(
-        m["error"].isNull() & m["scale_x"].isNotNull()
-    )
-    cx = (
-        (m["tie_x"] - m["tie_i"] * m["scale_x"])
-        + m["width"].cast("double") * m["scale_x"] / 2.0
-    )
-    cy = (
-        (m["tie_y"] + m["tie_j"] * m["scale_y"])
-        - m["height"].cast("double") * m["scale_y"] / 2.0
-    )
     xt, yt, qk = _xyz_exprs("lat", "lon", zoom)
     return (
-        wm.select("image_id", cx.alias("lon"), cy.alias("lat"))
+        footprint(with_meta(images)).selectExpr(
+            "image_id",
+            "fp_xmin + CAST(meta.width AS DOUBLE) * meta.scale_x / 2.0D AS lon",
+            "fp_ymax - CAST(meta.height AS DOUBLE) * meta.scale_y / 2.0D AS lat",
+        )
         .selectExpr("image_id", f"{xt} AS x_tile", f"{yt} AS y_tile")
         .selectExpr("image_id", "x_tile", "y_tile", f"{qk} AS quadkey")
     )

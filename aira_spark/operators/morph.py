@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.cells import cell_ix, cell_iy, k_ring
 
 
-def dilate_cover(
-    cover: DataFrame, k: int, res: int, cell_col: str = "cell"
-) -> DataFrame:
+def dilate_cover(cover: DataFrame, k: int, cell_col: str = "cell") -> DataFrame:
     """Buffer the cover by k rings: distinct union of every cell's clamped
     k-ring. Returns a single `cell` column (a SET of cells)."""
     return (
@@ -66,24 +64,24 @@ def erode_cover(
 def close_cover(cover: DataFrame, k: int, res: int) -> DataFrame:
     """Morphological closing (dilate then erode): fills holes/gaps up to
     ~k cells without growing the overall footprint."""
-    return erode_cover(dilate_cover(cover, k, res), k, res)
+    return erode_cover(dilate_cover(cover, k), k, res)
 
 
 def open_cover(cover: DataFrame, k: int, res: int) -> DataFrame:
     """Morphological opening (erode then dilate): removes specks/spurs
     thinner than ~k cells without shrinking the overall footprint."""
-    return dilate_cover(erode_cover(cover, k, res), k, res)
+    return dilate_cover(erode_cover(cover, k, res), k)
 
 
 def morph_summary(cover: DataFrame, k: int, res: int) -> DataFrame:
     """(op, cell) union frame over dilate/erode/close/open of one cover —
     the driver-checkable shape (STRING + BIGINT)."""
-    dil = dilate_cover(cover, k, res)
+    dil = dilate_cover(cover, k)
     arms = [
         dil.selectExpr("'dilate' AS op", "cell"),
         erode_cover(cover, k, res).selectExpr("'erode' AS op", "cell"),
         erode_cover(dil, k, res).selectExpr("'close' AS op", "cell"),
-        dilate_cover(erode_cover(cover, k, res), k, res).selectExpr(
+        dilate_cover(erode_cover(cover, k, res), k).selectExpr(
             "'open' AS op", "cell"
         ),
     ]

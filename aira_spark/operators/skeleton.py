@@ -121,7 +121,7 @@ def skeleton_census(images: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     )
 
 
-def oracle_skeleton_sql(fine_cte: str, res: int = DEFAULT_RES) -> str:
+def oracle_skeleton_sql(fine_cte: str) -> str:
     """DuckDB mirror over a WITH chain ending in fine(fx, fy, val):
     identical subiterations via the 3x3 VALUES-offset scatter and
     conditional 0/1 slots, 2*K_ROUNDS materialized mask CTEs."""

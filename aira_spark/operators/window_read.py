@@ -4,11 +4,12 @@ The reference exposes chunk-level random access — `Metadata::chunks()` +
 `Seek` lets a caller read just the chunks intersecting a requested window
 (/root/reference/crates/aira-tiff/src/metadata.rs:138-144,246-255; SURVEY.md
 §4 "chunk-level random access / windowed reads"). In Spark that becomes
-*plan-level pruning*: the chunk rectangles are pure column arithmetic
-(operators/chunks.py), the world-space window predicate filters each image's
-chunk ids in the JVM, and only images with a selected chunk are sent to the
-Arrow decode UDF, each once with its selected ids — so the expensive Python
-stage decodes exactly the chunks a windowed read would seek to.
+*plan-level pruning*: the chunk rectangles are pure SQL arithmetic
+(operators/chunks.py), the world-space window predicate selects each image's
+chunk ids in the JVM per grid column and row, and only images with a
+selected chunk are sent to the Arrow decode UDF, each once with its selected
+ids — so the expensive Python stage decodes exactly the chunks a windowed
+read would seek to.
 
 At 100 TB scale this is the difference between decoding the full archive and
 decoding the window: the selection runs below the decode (the decode UDF sees
@@ -21,11 +22,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from .chunks import chunk_rect, footprint
+from ..functions.cells import sql_double
+from .chunks import GRID_NX, chunk_span, footprint
 
 WINDOW_READ_SCHEMA = Ty.StructType(
     [
@@ -111,27 +113,31 @@ def window_read(
     the same footprint, and the window semantics are defined on the image
     grid, not the sample planes.
 
-    The selection is pure JVM column arithmetic over one row per image: the
-    selected chunk ids become an array column, images with none are dropped,
-    and the decode UDF receives each remaining image's bytes once.
+    The selection is JVM SQL over one row per image, per axis: chunk i sits
+    at grid column i % nx and row i DIV nx, so the x extents of the nx
+    columns and the y extents of the ny rows are tested apart (nx + ny
+    tests, not nx * ny) and the ids are the row-major product of the hit rows
+    and columns. Images with none drop out; the decode UDF gets each other
+    image's bytes once.
     """
-    m = F.col("meta")
-
-    def hit(i: Column) -> Column:
-        ox, oy, size_x, size_y = chunk_rect(i, m)
-        return (
-            (F.col("fp_xmin") + ox.cast("double") * m["scale_x"] < F.lit(x1))
-            & (F.col("fp_xmin") + (ox + size_x).cast("double") * m["scale_x"] > F.lit(x0))
-            & (F.col("fp_ymax") - (oy + size_y).cast("double") * m["scale_y"] < F.lit(y1))
-            & (F.col("fp_ymax") - oy.cast("double") * m["scale_y"] > F.lit(y0))
-        )
-
-    # decode_metadata guarantees 1 <= expected_chunks <= n_chunks, and every
-    # band-0 chunk of the grid has a non-empty rectangle
-    ids = F.filter(F.sequence(F.lit(0), m["expected_chunks"] - 1), hit)
-    sel = (
-        footprint(with_meta_df)
-        .select("image_id", "bytes", ids.alias("chunk_ids"))
-        .filter(F.size("chunk_ids") > 0)
+    (ox, size_x), (oy, size_y) = chunk_span("wr_c", "x"), chunk_span("wr_r", "y")
+    col_hit = (
+        f"fp_xmin + CAST({ox} AS DOUBLE) * meta.scale_x < {sql_double(x1)}"
+        f" AND fp_xmin + CAST({ox} + {size_x} AS DOUBLE) * meta.scale_x > {sql_double(x0)}"
     )
-    return sel.mapInPandas(_decode_selected_batches, schema=WINDOW_READ_SCHEMA)
+    row_hit = (
+        f"fp_ymax - CAST({oy} + {size_y} AS DOUBLE) * meta.scale_y < {sql_double(y1)}"
+        f" AND fp_ymax - CAST({oy} AS DOUBLE) * meta.scale_y > {sql_double(y0)}"
+    )
+    # decode_metadata guarantees expected_chunks >= 1, so both sequences
+    # ascend; the hit columns bind to wr_cs once per image, not once per row
+    cols = f"filter(sequence(0L, {GRID_NX} - 1), wr_c -> {col_hit})"
+    rows = f"filter(sequence(0L, meta.expected_chunks DIV {GRID_NX} - 1), wr_r -> {row_hit})"
+    ids = (
+        f"transform(array({cols}), wr_cs -> flatten(transform({rows}, wr_r -> "
+        f"transform(wr_cs, wr_c -> CAST(wr_r * {GRID_NX} + wr_c AS INT)))))[0]"
+    )
+    sel = footprint(with_meta_df).selectExpr("image_id", "bytes", f"{ids} AS chunk_ids")
+    return sel.where("size(chunk_ids) > 0").mapInPandas(
+        _decode_selected_batches, schema=WINDOW_READ_SCHEMA
+    )

@@ -154,3 +154,66 @@ def test_full_decode_rows_match_meta_row_and_stitch():
     )
     assert chunk["meta"]["width"] == 16 + 3 * 8
     assert chunk["zonal"] == []
+
+
+def _argsort_cell_groups(m, px, res):
+    """Reference grouping: stable argsort and unique over the h x w cell ids."""
+    import numpy as np
+
+    from aira_spark.functions.cells import np_cell_from_xy
+    from aira_spark.functions.udfs import pixel_world_coords
+
+    h, w = px.shape[:2]
+    xs, ys, _sv, _tv = pixel_world_coords(m, h, w)
+    if xs is None:
+        return None
+    cell = np_cell_from_xy(
+        np.broadcast_to(xs[None, :], (h, w)),
+        np.broadcast_to(ys[:, None], (h, w)),
+        res,
+    ).ravel()
+    order = np.argsort(cell, kind="stable")
+    uniq, starts = np.unique(cell[order], return_index=True)
+    return order, uniq, starts, np.append(starts[1:], len(cell))
+
+
+def _large_geo_image():
+    """A 320 x 300 image whose every pixel has a cell of its own at res 14
+    (96,000 groups: past the 16-bit rank key)."""
+    import numpy as np
+
+    from aira_spark.tiff.encode import write_tiff
+
+    px = (np.arange(320 * 300) % 251).astype(np.uint8).reshape(300, 320, 1)
+    return write_tiff(px, geo=((0.05, 0.05, 0.0), (0.0, 0.0, 0.0, -10.0, 7.5, 0.0)))
+
+
+@pytest.mark.parametrize("res", [6, 8, 10, 12, 14])
+def test_pixel_cell_groups_match_argsort_reference(res):
+    """The rank-key grouping returns the same (order, uniq, starts, ends)
+    arrays as a stable argsort + unique over the per-pixel cell ids, for every
+    synthetic variant and for an image with more than 65,536 groups."""
+    import numpy as np
+
+    from aira_spark.functions.udfs import _decode_full, pixel_cell_groups
+
+    bufs = [raw for _, raw in VALID] + [synthesize_row(k)[1] for k in (37, 58, 111)]
+    bufs.append(_large_geo_image())
+    n_groups = 0
+    for buf in bufs:
+        m, px = _decode_full(buf)
+        got, want = pixel_cell_groups(m, px, res), _argsort_cell_groups(m, px, res)
+        for g, e in zip(got, want):
+            assert g.dtype == e.dtype and np.array_equal(g, e)
+        n_groups = max(n_groups, len(got[1]))
+    assert (n_groups > 1 << 16) == (res == 14)
+
+
+def test_pixel_cell_groups_without_geotransform_is_none():
+    import numpy as np
+
+    from aira_spark.functions.udfs import _decode_full, pixel_cell_groups
+    from aira_spark.tiff.encode import write_tiff
+
+    m, px = _decode_full(write_tiff(np.zeros((8, 8, 1), np.uint8)))
+    assert pixel_cell_groups(m, px, 7) is None

@@ -29,9 +29,9 @@ def _xy(rows):
 
 def test_dilate_single_cell_interior_and_corner(spark):
     # interior cell -> full 3x3; corner (0,0) -> clamped 2x2
-    got = _xy(dilate_cover(_cover(spark, [(5, 5)]), 1, RES).collect())
+    got = _xy(dilate_cover(_cover(spark, [(5, 5)]), 1).collect())
     assert got == sorted((x, y) for x in (4, 5, 6) for y in (4, 5, 6))
-    got = _xy(dilate_cover(_cover(spark, [(0, 0)]), 1, RES).collect())
+    got = _xy(dilate_cover(_cover(spark, [(0, 0)]), 1).collect())
     assert got == [(0, 0), (0, 1), (1, 0), (1, 1)]
 
 

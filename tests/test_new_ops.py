@@ -4,6 +4,7 @@ streaming sessionize / stateful-totals operators vs in-process oracles."""
 from __future__ import annotations
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -268,6 +269,65 @@ def test_window_read_planar_selects_band0_chunks_only(spark, k):
     got = _window_got(_one_image_df(spark, row), *win)
     assert {i for _, i in got} == set(range(m["expected_chunks"]))
     assert got == _serial_window([row[:2]], *win)
+
+
+def _sweep_windows(rects: dict, seed: int) -> list[tuple]:
+    """Seeded windows over one image's band-0 chunk rectangles: the whole
+    image, exactly the footprint, windows that miss it, windows whose edges
+    lie on chunk edges, windows that straddle a footprint edge, and random
+    windows around the image."""
+    rng = random.Random(seed)
+    xs = sorted({v for r in rects.values() for v in (r[0], r[2])})
+    ys = sorted({v for r in rects.values() for v in (r[1], r[3])})
+    fx0, fx1, fy0, fy1 = xs[0], xs[-1], ys[0], ys[-1]
+    dx, dy = fx1 - fx0, fy1 - fy0
+    wins = [
+        (fx0 - 1.0, fy0 - 1.0, fx1 + 1.0, fy1 + 1.0),
+        (fx0, fy0, fx1, fy1),
+        (fx1, fy0, fx1 + dx, fy1),  # touches the right edge only
+        (fx0 - dx, fy1 + dy / 4, fx1 + dx, fy1 + dy),  # above the image
+    ]
+    for _ in range(3):
+        (a, b), (c, d) = sorted(rng.sample(xs, 2)), sorted(rng.sample(ys, 2))
+        wins.append((a, c, b, d))
+        wins.append((rng.choice(xs), fy0 - dy / 3, fx1 + dx / 3, rng.choice(ys)))
+        wins.append((fx0 - dx / 2, rng.uniform(fy0, fy1), rng.uniform(fx0, fx1), fy1 + dy / 2))
+        x0, y0 = rng.uniform(fx0 - dx, fx1), rng.uniform(fy0 - dy, fy1)
+        wins.append((x0, y0, x0 + rng.uniform(0.0, dx), y0 + rng.uniform(0.0, dy)))
+    return wins
+
+
+@pytest.mark.parametrize("k", [4, 23, 5, 9, 10])  # tiled, tiled, strips, planar
+def test_window_read_per_axis_selection_matches_per_chunk(spark, k):
+    """window_read's per-axis chunk selection picks exactly the chunks the
+    per-chunk brute force (_serial_window) picks, on tiled, strip (nx = 1)
+    and planar images, for windows on chunk edges, over the whole image,
+    straddling the footprint edge and missing the image. Each window reads
+    the image's cached metadata row, tagged with the window's index, and the
+    reads run as one union."""
+    from functools import reduce
+
+    from aira_spark.operators.window_read import window_read
+
+    row, m, rects = _chunk_rects(k)
+    wins = _sweep_windows({i: r for i, r in rects.items() if i < m["expected_chunks"]}, 1800 + k)
+    wm = with_meta(_one_image_df(spark, row).coalesce(1)).cache()
+    reads = [
+        window_read(wm.withColumn("image_id", F.lit(str(j))), *win)
+        for j, win in enumerate(wins)
+    ]
+    got = {
+        (r.image_id, r.chunk_idx): (r.n_px, r.sum_px)
+        for r in reduce(lambda a, b: a.union(b), reads).collect()
+    }
+    wm.unpersist()
+    want = {
+        (str(j), i): v
+        for j, win in enumerate(wins)
+        for (_, i), v in _serial_window([row[:2]], *win).items()
+    }
+    assert got == want
+    assert 0 < len({j for j, _ in want}) < len(wins)
 
 
 def test_cell_partitioned_layout_prunes(spark, images, tmp_path_factory):

@@ -7,6 +7,9 @@ around the chunk arithmetic, and bounded shuffle counts.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from pyspark.sql import functions as F
 
 from aira_spark.plans.inspect import (
@@ -654,6 +657,64 @@ def test_spatial_join_plans_build_in_few_py4j_calls(spark, sf_dir):
     for q, budget in budgets.items():
         n = _py4j_calls(spark, lambda: getattr(em, q)(spark, sf_dir))
         assert n <= budget, f"{q}: {n} py4j calls > {budget}"
+
+
+def test_decode_path_plans_build_in_few_py4j_calls(spark, sf_dir):
+    """Building the decode-path plans stays within a py4j budget: chunk_rect,
+    the window's per-axis chunk selection and the footprint are SQL text
+    behind one where and one selectExpr per builder, not chains of
+    withColumn calls that each re-analyse a plan carrying the meta struct.
+    Bounds are the counts at the time of writing plus ~20%."""
+    import __spark_entry__ as em
+    from aira_spark.operators.chunks import cell_cover, chunks_df, with_meta
+    from aira_spark.operators.window_read import window_read
+
+    images = em._images(spark, sf_dir)
+    budgets = {
+        "window_read": (lambda: window_read(with_meta(images), *em._WIN), 90),
+        "chunks_df": (lambda: chunks_df(with_meta(images)), 50),
+        "cell_cover": (lambda: cell_cover(with_meta(images)), 48),
+    }
+    for name, (build, budget) in budgets.items():
+        build()
+        n = _py4j_calls(spark, build)
+        assert n <= budget, f"{name}: {n} py4j calls > {budget}"
+
+
+def _column_chain_calls(source: str) -> list[tuple[int, str]]:
+    """(line, what) of every withColumn call and every Column-API
+    F.filter / F.sequence call in `source`."""
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            name, owner = node.func.attr, getattr(node.func.value, "id", None)
+            if name.startswith("withColumn") or (owner == "F" and name in ("filter", "sequence")):
+                hits.append((node.lineno, name))
+    return hits
+
+
+def test_column_chain_guard_sees_each_spelling():
+    src = (
+        "df.withColumn('a', x)\n"
+        "df.withColumns({'a': x})\n"
+        "F.filter(F.sequence(F.lit(0), n), hit)\n"
+        "df.selectExpr('filter(sequence(0, n), wr_c -> wr_c > 0)').where('a')\n"
+    )
+    assert _column_chain_calls(src) == [
+        (1, "withColumn"), (2, "withColumns"), (3, "filter"), (3, "sequence")
+    ]
+
+
+def test_decode_path_builders_are_sql_text():
+    """The decode-path builders (chunk enumeration, footprint, cell cover and
+    the window's chunk selection) build their plans as SQL text: no
+    withColumn chain and no Column-API lambda over a chunk sequence."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "aira_spark" / "operators"
+    hits = {
+        name: _column_chain_calls((root / name).read_text())
+        for name in ("chunks.py", "window_read.py")
+    }
+    assert hits == {"chunks.py": [], "window_read.py": []}, hits
 
 
 def test_spatial_joins_run_within_job_and_task_budget(spark, sf_dir, count_work):
